@@ -1,30 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SCALE-ADAPTIVE partitioning (round-16 optimization, guide
-      // §2.2): size post-shuffle partitions by DATA (the 64 MB
-      // advisory target), not by core count — Spark's own docs
-      // recommend parallelismFirst=false; the default true splits
-      // kilobyte-scale shuffles into #cores tasks whose fixed
-      // per-task cost (ser/deser, scheduler, codegen instance) IS the
-      // cost at lifecycle scale, and at 100 TB the advisory target
-      // governs identically. canChangeCachedPlanOutputPartitioning
-      // lets AQE apply the same rule under persist(): cached plans
-      // otherwise pin pre-AQE partition counts and every consumer
-      // stage re-pays #cores empty tasks (measured: lake_apply_changes
-      // 588 tasks / 94 task-seconds of pure overhead → 51 / 4.4).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: JIT/codegen/parquet-footer costs land here, not on
     // whichever query happens to sort first

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: print the formatted physical plan (and optionally time
   * a noop-write execution) of one named query from SparkEntry.
@@ -10,15 +9,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1 && !args(1).startsWith("--")) args(1) else "/root/testdata/sf0.1"
     val run = args.contains("--run")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     // comma-separated names: one JVM amortizes across a plan-dump
     // sweep (plans/rN evidence); each query's plan is delimited

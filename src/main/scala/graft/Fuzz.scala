@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.ColumnFunctions._
 
@@ -33,11 +32,7 @@ import graft.functions.ColumnFunctions._
 object Fuzz {
   def main(args: Array[String]): Unit = {
     val Array(inputParquet, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .appName("graft-fuzz")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
+    val spark = Harness.session()
     try {
       val in = spark.read.parquet(inputParquet)
       val p = lit(HashP)

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (round-16 optimization): run named queries with a
   * listener that counts Spark JOBS/stages/tasks and folds task
@@ -16,23 +15,10 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bench-shaped session: the same scale-adaptive partition
-      // sizing as Bench (see the rationale there)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     // A/B knobs for overhead experiments (dev tool only)
-    val b = sys.env.get("GRAFT_PROFILE_CONF").map(_.split(";").filter(_.contains("="))
-      .foldLeft(b0) { (acc, kv) =>
-        val Array(k, v) = kv.split("=", 2); acc.config(k, v)
-      }).getOrElse(b0)
-    val spark = b.getOrCreate()
+    val spark = Harness.session(sys.env.get("GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v })
     spark.sparkContext.setLogLevel("WARN")
     // GRAFT_PROFILE_WINDOW_STACKS=1: print the driver stack at every
     // "No Partition Defined" warning — the only way to attribute an

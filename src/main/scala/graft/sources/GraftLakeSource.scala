@@ -28,21 +28,25 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Architecture: this file is METADATA-ONLY. The [[GraftLakeScanBuilder]]
   * receives Spark's pushed filters ([[SupportsPushDownFilters]]) and
   * required columns ([[SupportsPushDownRequiredColumns]]), routes the
-  * numeric ranges into the SAME two-level manifest prune the library
-  * path uses ([[LakeTable.planV2]] → `prunePlan`, identical
-  * `PlanAudit` counts by construction), and returns Spark's own
-  * vectorized [[ParquetScan]] over the surviving files — whole-stage
-  * codegen, columnar batches, and parquet row-group pushdown all come
-  * from the engine, exactly as a Spark-first design wants. At 100 TB
-  * the scan-side cost model is unchanged from the library path: the
-  * prune runs on manifest metadata (distributed past
+  * numeric ranges into the lake's ONE read planner — [[LakeTable.planV2]]
+  * plans through the same `planScan` and `prunePlan` as every library
+  * read (identical `PlanAudit` counts by construction) — and returns
+  * Spark's own vectorized [[ParquetScan]] over the surviving files —
+  * whole-stage codegen, columnar batches, and parquet row-group
+  * pushdown all come from the engine, exactly as a Spark-first design
+  * wants. At 100 TB the scan-side cost model is unchanged from the
+  * library path: the prune runs on manifest metadata (distributed past
   * `DistributedPlanThreshold`), never on data files.
   *
-  * Scope (refused loudly in [[LakeTable.planV2]], with the fold that
-  * lifts the restriction named in the error): snapshots carrying live
-  * merge-on-read delete files, and field-id renames — both need
-  * row-level assembly that belongs to `LakeTable.read`. Additive
-  * schema evolution and drops read fine through the V2 path.
+  * Scope: ONE servability rule of the plan (`LakeTable.v2Refusal`)
+  * names the snapshots a file-level scan cannot serve — live
+  * merge-on-read delete files, field-id renames, files predating a
+  * defaulted column, mixed hive/unpartitioned layouts and partial
+  * hive-layout manifests, all row-level assembly that belongs to
+  * `LakeTable.read`. [[LakeTable.planV2]] refuses them with that reason
+  * (naming the fold that lifts it), and [[MorReadLiftRule]] lifts the
+  * same snapshots onto the library read. Additive schema evolution and
+  * drops read fine through the V2 path.
   */
 class GraftLakeSource extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.CreatableRelationProvider {

@@ -1660,12 +1660,14 @@ object LakeDmlStrategy extends SparkStrategy {
 }
 
 /** READ-LIFT for snapshots needing ROW-LEVEL assembly (round 14): a
-  * SQL read of a graftlake table whose snapshot carries live
-  * merge-on-read delete manifests, a field-id rename, or files
-  * predating a defaulted column used to REFUSE through the V2 scan
-  * ([[LakeTable.planV2]]'s contract — a file-level scan cannot apply
-  * them; "compact first"). This resolution rule lifts exactly those
-  * relations onto the LIBRARY read: [[LakeTable.read]]'s analyzed
+  * SQL read of a graftlake table whose snapshot the V2 file scan
+  * cannot serve — live merge-on-read delete manifests, a field-id
+  * rename, files predating a defaulted column, mixed or partial
+  * hive-layout manifests — used to REFUSE through the V2 scan. The
+  * lake's ONE servability rule (`LakeTable.v2Refusal`, the same one
+  * [[LakeTable.planV2]] throws) is evaluated ONCE per relation, and
+  * this resolution rule lifts exactly the refused relations onto the
+  * LIBRARY read: [[LakeTable.read]]'s analyzed
   * plan substitutes for the relation, output-aliased onto the
   * relation's attribute ids so every parent operator resolves
   * unchanged — SELECTs, joins, aggregates, and VERSION/TIMESTAMP AS
@@ -1733,13 +1735,13 @@ class MorReadLiftRule(spark: SparkSession) extends Rule[LogicalPlan] {
         r.table match {
           case t: GraftLakeTable =>
             val path = t.tablePath
-            t.pinnedVersion.orElse(LakeTable.latestVersion(path)) match {
-              case Some(v) if LakeTable.needsRowAssembly(path, v) &&
-                  aggMark.get(r) == "defer" => r
-              case Some(v) if LakeTable.needsRowAssembly(path, v) &&
-                  aggMark.get(r) == "count-only" &&
-                  LakeTable.countServableMoR(path, v) => r
-              case Some(v) if LakeTable.needsRowAssembly(path, v) =>
+            // the servability decision, once per relation
+            t.pinnedVersion.orElse(LakeTable.latestVersion(path))
+                .flatMap(v => LakeTable.v2Refusal(spark, path, v).map(v -> _)) match {
+              case Some(_) if aggMark.get(r) == "defer" => r
+              case Some((_, refusal)) if refusal.countable &&
+                  aggMark.get(r) == "count-only" => r
+              case Some((v, _)) =>
                 val lib = LakeTable.read(spark, path, Some(v))
                   .queryExecution.analyzed
                 val byName = lib.output

@@ -2262,8 +2262,8 @@ object LakeTable {
               val addedData = added.filter(r => r.kind == "data" && r.nFiles > 0)
               val phantom = addedData.nonEmpty && (conflictFilter match {
                 case None => true
-                case Some(f) => !assemblePruned(spark, Nil, addedData,
-                    Nil, Nil, Nil, schFor(path, head)).filter(f).isEmpty
+                case Some(f) => !assemble(spark, ScanPlan(path, head,
+                    schFor(path, head), addedData, addedData)).filter(f).isEmpty
               })
               if (phantom) throw new IllegalStateException(
                 s"$op at $path: $k=serializable and a concurrent commit " +
@@ -2324,7 +2324,7 @@ object LakeTable {
     val cons = activeConstraints(path) // BEFORE staging (TOCTOU guard)
     enforceConstraints(df, path) // CHECKs gate WAP batches too
     val staged = writeDataFiles(df, path)
-    audit(readFiles(spark, staged)) match {
+    audit(assemble(spark, ScanPlan(path, -1, None, Nil, Nil, staged))) match {
       case None =>
         // the manifest is written only AFTER the audit passes — a
         // rejected batch leaves zero metadata. Field ids are assigned
@@ -2534,15 +2534,125 @@ object LakeTable {
     * Pushdown and pruning apply unchanged (plain parquet scans);
     * schema evolution on read comes from the allowMissingColumns
     * union across commit generations. */
-  def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
+  def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame =
+    assemble(spark, planScan(spark, path, version))
+
+  // ---- the lake read planner: planScan → prune → assemble ----
+
+  /** The snapshot a read serves: `version`, else the latest. The ONE
+    * version resolution of every read and metadata surface — a version
+    * never committed, or since expired, refuses by name. */
+  private def resolveVersion(path: String, version: Option[Int]): Int = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no snapshots at $path"))
-    if (!Files.exists(Paths.get(s"${metaDir(path)}/v$v")))
+    if (!snapshotLive(path, v))
       throw new IllegalArgumentException(
         s"no such snapshot version $v at $path (expired or never committed); " +
           s"latest is ${latestVersion(path).getOrElse(-1)}")
-    assembleWithDeletes(spark, listRefs(path, v), schFor(path, v))
+    v
   }
+
+  private val DeleteKinds = Set("delete", "posdel", "dv")
+
+  /** One planned read: the snapshot's manifest list (`refs`, in list
+    * order) split by kind, its current schema, and what the prune
+    * kept — data manifests read WHOLE plus explicit file entries.
+    * Unpruned, `whole` is every data manifest. */
+  private final case class ScanPlan(
+      path: String, version: Int, current: Option[Sch],
+      refs: Seq[ManifestRef], whole: Seq[ManifestRef],
+      kept: Seq[ManifestEntry] = Nil) {
+    def data: Seq[ManifestRef] = refs.filterNot(r => DeleteKinds(r.kind))
+    def live: Seq[ManifestRef] = data.filter(_.nFiles > 0)
+    def deletes: Seq[ManifestRef] = refs.filter(r => DeleteKinds(r.kind))
+    def eq: Seq[ManifestRef] = refs.filter(_.kind == "delete")
+    def pos: Seq[ManifestRef] = refs.filter(_.kind == "posdel")
+    def dv: Seq[ManifestRef] = refs.filter(_.kind == "dv")
+    /** the prune kept no data file */
+    def empty: Boolean = kept.isEmpty && !whole.exists(_.nFiles > 0)
+    def unpruned: ScanPlan = copy(whole = data, kept = Nil)
+    /** an explicit file selection (maintenance rewrites, the diff) */
+    def only(entries: Seq[ManifestEntry]): ScanPlan = copy(whole = Nil, kept = entries)
+    /** live data manifests in hive layout (`col=value` commit subdirs) */
+    lazy val hive: Seq[ManifestRef] = live.filter(r => hiveLayoutDir(r.base))
+  }
+
+  /** A prune narrows an unpruned plan to the files a read must touch,
+    * recording its [[PlanAudit]]; it may only drop FILES, never rows. */
+  private type Prune = (SparkSession, ScanPlan) => ScanPlan
+
+  /** Plan a read of `path` at `version`: resolve the version, split the
+    * list by kind, apply the caller's prune. Every read surface —
+    * library reads, the V2 scan, the read-lift decision, DML
+    * classification, maintenance rewrites and the change feed — plans
+    * here. */
+  private def planScan(
+      spark: SparkSession, path: String, version: Option[Int],
+      prune: Prune = (_, p) => p): ScanPlan = {
+    val v = resolveVersion(path, version)
+    val refs = listRefs(path, v)
+    prune(spark, ScanPlan(path, v, schFor(path, v), refs,
+      refs.filterNot(r => DeleteKinds(r.kind))))
+  }
+
+  /** Assemble a plan into one frame — the ONE read assembler. Whole
+    * manifests scan their commit dir ([[refScan]]), explicit entries
+    * their file lists grouped per commit dir; every frame projects to
+    * the current schema by field id and the union null-extends across
+    * generations. With no delete and no `meta` that union IS the read.
+    * Otherwise each frame rides its commit sequence (plus the scan-time
+    * file path and row index when position deletes, DVs or `meta` need
+    * them) and the deletes apply: position deletes, deletion vectors,
+    * then equality deletes under the sequence rule. `meta` keeps the
+    * file identity riding (DML classification, lineage); `lineageCols`
+    * keeps the physical lineage columns; `suppressed` serves the rows
+    * the equality deletes REMOVE instead of the rows they keep
+    * ([[convertEqualityDeletes]]). A prune that kept nothing serves the
+    * snapshot's schema with zero rows. */
+  private def assemble(
+      spark: SparkSession, plan: ScanPlan,
+      meta: Boolean = false, lineageCols: Boolean = false,
+      suppressed: Boolean = false): DataFrame =
+    if (plan.empty && plan.live.nonEmpty)
+      assemble(spark, plan.unpruned, meta, lineageCols, suppressed).limit(0)
+    else keepLineageCols.withValue(lineageCols) {
+      val cur = plan.current
+      val whole = plan.whole.filter(_.nFiles > 0)
+      def union(parts: Iterable[DataFrame]): DataFrame =
+        if (parts.isEmpty) spark.emptyDataFrame
+        else parts.reduce(_.unionByName(_, allowMissingColumns = true))
+      if (plan.deletes.isEmpty && !meta)
+        union(plan.kept.groupBy(_.base).map { case (base, es) =>
+            projectToCurrent(fileScan(spark, base, es), es.head.cols, cur) } ++
+          whole.map(r => projectToCurrent(refScan(spark, r), r.cols, cur)))
+      else {
+        val (pos, dv, eq) = (plan.pos, plan.dv, plan.eq)
+        val withPos = pos.nonEmpty || dv.nonEmpty || meta
+        def tagged(scan: DataFrame, cols: Map[String, Int], seq: Int) =
+          projectToCurrent(if (withPos) posMeta(scan) else scan, cols, cur)
+            .withColumn(SeqCol, lit(seq))
+        // entries group per (commit dir, sequence): a CONSOLIDATED
+        // manifest's entries pin different commit sequences, and MoR
+        // subtraction must stay sequence-exact across the fold
+        def files(es: Seq[ManifestEntry]) =
+          es.groupBy(e => (e.base, e.seq)).map { case ((base, sq), g) =>
+            tagged(fileScan(spark, base, g), g.head.cols, sq) }
+        val parts = files(plan.kept) ++ whole.flatMap(r =>
+          if (r.partial) files(readManifest(r))
+          else Seq(tagged(refScan(spark, r), r.cols, r.seq)))
+        if (parts.isEmpty) spark.emptyDataFrame
+        else {
+          val all = union(parts)
+          val afterPos = if (pos.nonEmpty) applyPosDeletes(spark, all, pos) else all
+          val afterDv = if (dv.nonEmpty) applyDvDeletes(spark, afterPos, dv) else afterPos
+          val afterEq =
+            if (eq.nonEmpty) applyMorDeletes(spark, afterDv, eq, cur,
+              if (suppressed) "left_semi" else "left_anti")
+            else afterDv.drop(SeqCol)
+          if (meta) afterEq else afterEq.drop(FpCol, RiCol)
+        }
+      }
+    }
 
   /** Project a manifest's frame from its WRITE-TIME column names to
     * the CURRENT schema by field id (the metadata-only rename/drop
@@ -2680,31 +2790,6 @@ object LakeTable {
     }
   }
 
-  /** Data manifests minus merge-on-read delete keys: the Iceberg v2
-    * equality-delete read shape. Delete files are tiny key lists, so
-    * the subtraction is an anti-join the planner broadcasts; the data
-    * scan itself is untouched (pushdown/pruning intact). */
-  private def assembleWithDeletes(
-      spark: SparkSession, refs: Seq[ManifestRef],
-      current: Option[Sch],
-      keepMeta: Boolean = false): DataFrame = {
-    val (eq, rest) = refs.partition(_.kind == "delete")
-    val (pos, rest2) = rest.partition(_.kind == "posdel")
-    val (dv, data) = rest2.partition(_.kind == "dv")
-    if (eq.isEmpty && pos.isEmpty && dv.isEmpty && !keepMeta)
-      readRefs(spark, data, current)
-    else {
-      val tagged = taggedReadRefs(spark, data, current,
-        withPos = pos.nonEmpty || dv.nonEmpty || keepMeta)
-      val afterPos = if (pos.nonEmpty) applyPosDeletes(spark, tagged, pos) else tagged
-      val afterDv = if (dv.nonEmpty) applyDvDeletes(spark, afterPos, dv) else afterPos
-      val afterEq =
-        if (eq.nonEmpty) applyMorDeletes(spark, afterDv, eq, current)
-        else afterDv.drop(SeqCol)
-      if (keepMeta) afterEq else afterEq.drop(FpCol, RiCol)
-    }
-  }
-
   private val FpCol = "__graft_fp" // scan-time file path (position deletes)
   private val RiCol = "__graft_ri" // scan-time row index within the file
 
@@ -2830,13 +2915,18 @@ object LakeTable {
       // would count their rows twice. Grouped per ENTRY base — a
       // consolidated manifest spans commit dirs, and each group needs
       // its own basePath for layout-column handling
-      readManifest(ref).groupBy(_.base).map { case (base, es) =>
-        dropHidden(spark.read
-          .option("mergeSchema", "true")
-          .option("basePath", base)
-          .parquet(es.map(_.file): _*))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      readManifest(ref).groupBy(_.base).map { case (base, es) => fileScan(spark, base, es) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
     else dropHidden(cachedSchemaScan(spark, ref.base))
+
+  /** One parquet read over explicit entries of one commit dir: basePath
+    * reconstructs layout columns, mergeSchema spans the files'
+    * write-time schemas. */
+  private def fileScan(spark: SparkSession, base: String, es: Seq[ManifestEntry]): DataFrame =
+    dropHidden(spark.read
+      .option("mergeSchema", "true")
+      .option("basePath", base)
+      .parquet(es.map(_.file): _*))
 
   /** Commit-dir scans with the inferred schema MEMOIZED per dir
     * (round-16 optimization, guide §2.4/§1.2): `spark.read.parquet`
@@ -2892,19 +2982,17 @@ object LakeTable {
   /** User-facing lineage columns of [[readWithLineage]]. */
   private[graft] val RowIdCol = "_row_id"
   private[graft] val LusCol = "_last_updated_sequence_number"
-  /** Scoped flag: inside [[withLineageCols]] scans KEEP the physical
-    * lineage columns instead of dropping them with the other hidden
-    * columns — the lineage read/rewrite paths wrap their frame
-    * CONSTRUCTION in it (plan building is driver-side + synchronous,
-    * so the dynamic scope is exact) without threading a parameter
-    * through every assembly helper. */
+  /** Scoped flag: while set, scans KEEP the physical lineage columns
+    * instead of dropping them with the other hidden columns —
+    * [[assemble]]`(lineageCols = true)` wraps its frame CONSTRUCTION in
+    * it (plan building is driver-side + synchronous, so the dynamic
+    * scope is exact) without threading a parameter through every
+    * scan helper. */
   private val keepLineageCols = new scala.util.DynamicVariable[Boolean](false)
-  private def withLineageCols[A](body: => A): A =
-    keepLineageCols.withValue(true)(body)
 
   /** Strip reconstructed hidden-partition columns — they are layout,
     * not data (the `__p_` prefix is reserved for this). Lineage
-    * physicals survive only inside [[withLineageCols]]. */
+    * physicals survive only under [[keepLineageCols]]. */
   private def dropHidden(df: DataFrame): DataFrame = {
     val keep: Set[String] =
       if (keepLineageCols.value) Set(LineageRid, LineageLus) else Set.empty
@@ -3013,10 +3101,8 @@ object LakeTable {
         }
         broadcast(rows.toDF("__graft_lf", "__graft_lb", "__graft_ls"))
       } else {
-        def mname(r: ManifestRef) =
-          Paths.get(r.manifest).getFileName.toString
         val refDf = broadcast(live
-          .map(r => (mname(r), r.firstRowId, r.seq))
+          .map(r => (manifestName(r), r.firstRowId, r.seq))
           .toDF("__graft_mn", "__graft_fr", "__graft_rs"))
         val ent = entriesFrameOf(spark, live,
             "file STRING, rows LONG, frid LONG, seq INT")
@@ -3058,15 +3144,18 @@ object LakeTable {
 
   /** The ONE id-preservation projection every lineage-preserving DML
     * rewrite shares: attach the computed lineage, RE-MATERIALIZE it
-    * under the physical column names, and drop the scan-meta columns.
-    * `extraSel` lets UPDATE/MERGE override the last-updated rule. */
+    * under the physical column names, and drop the scan-meta columns
+    * (unless `keepMeta`: binpack's bin join still needs them). */
   private def materializeLineage(
       spark: SparkSession, df: DataFrame, live: Seq[ManifestRef],
-      entriesOf: ManifestRef => Seq[ManifestEntry], path: String): DataFrame =
-    attachLineage(spark, df, live, entriesOf, path)
+      entriesOf: ManifestRef => Seq[ManifestEntry], path: String,
+      keepMeta: Boolean = false): DataFrame = {
+    val m = attachLineage(spark, df, live, entriesOf, path)
       .withColumn(LineageRid, col(RowIdCol))
       .withColumn(LineageLus, col(LusCol))
-      .drop(RowIdCol, LusCol, FpCol, RiCol, SeqCol)
+      .drop(RowIdCol, LusCol)
+    if (keepMeta) m else m.drop(FpCol, RiCol, SeqCol)
+  }
 
   /** The table's next unassigned row id at `version`; presence of the
     * sidecar IS the lineage-enabled flag (carried by every commit). */
@@ -3118,104 +3207,27 @@ object LakeTable {
     * follow-up). */
   def readWithLineage(
       spark: SparkSession, path: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    require(nextRowIdOf(path, v).isDefined,
-      s"row lineage is not enabled at $path — " +
+      version: Option[Int] = None): DataFrame =
+    lineageRead(spark, planScan(spark, path, version))
+
+  /** [[readWithLineage]] of a plan — pruned by the lineage diff to its
+    * churn files, so only the changed files are listed in the scan at
+    * all. The id map still derives over ALL live manifests (ids must be
+    * globally consistent — one metadata job past the plan threshold,
+    * inside [[attachLineage]]); the data read is O(kept files). */
+  private def lineageRead(spark: SparkSession, plan: ScanPlan): DataFrame = {
+    require(nextRowIdOf(plan.path, plan.version).isDefined,
+      s"row lineage is not enabled at ${plan.path} — " +
         "LakeTable.enableRowLineage(spark, path) first")
-    val refs = listRefs(path, v)
-    val (eq, rest) = refs.partition(_.kind == "delete")
-    val (pos, rest2) = rest.partition(_.kind == "posdel")
-    val (dv, data) = rest2.partition(_.kind == "dv")
-    val current = schFor(path, v)
-    val live = data.filter(_.nFiles > 0)
     // an empty snapshot still honors the contract's two lineage
     // columns, so `select("_row_id")` and the lineage CDC never
     // face a zero-column frame
-    if (live.isEmpty) return spark.emptyDataFrame
+    if (plan.live.isEmpty) spark.emptyDataFrame
       .withColumn(RowIdCol, lit(null).cast("long"))
       .withColumn(LusCol, lit(null).cast("long"))
-    val tagged = withLineageCols {
-      taggedReadRefs(spark, live, current, withPos = true)
-    }
-    val mm = manifestMemo()
-    val withL = attachLineage(spark, tagged, live, mm, path)
-    val p1 = if (pos.nonEmpty) applyPosDeletes(spark, withL, pos) else withL
-    val p2 = if (dv.nonEmpty) applyDvDeletes(spark, p1, dv) else p1
-    val p3 = if (eq.nonEmpty) applyMorDeletes(spark, p2, eq, current)
-      else p2.drop(SeqCol)
-    p3.drop(FpCol, RiCol, LineageRid, LineageLus)
-  }
-
-  /** [[readWithLineage]] restricted AT PLAN TIME to the entries of
-    * the churn files — the lineage diff's file-delta prefilter: only
-    * the changed files are listed in the scan at all (a post-scan
-    * row filter would still read every carried file). The lineage id
-    * map still derives over ALL live manifests (ids must be globally
-    * consistent — one metadata job past the plan threshold, inside
-    * [[attachLineage]]); the data read is O(changed files). */
-  private def readWithLineageSubset(
-      spark: SparkSession, path: String, v: Int,
-      otherLive: Set[String], scope: DiffScope): DataFrame = {
-    val refs = listRefs(path, v)
-    val (eq, rest) = refs.partition(_.kind == "delete")
-    val (pos, rest2) = rest.partition(_.kind == "posdel")
-    val (dv, data) = rest2.partition(_.kind == "dv")
-    val current = schFor(path, v)
-    val live = data.filter(_.nFiles > 0)
-    val mm = manifestMemo()
-    val kept = churnEntries(spark, live, otherLive, scope)
-    if (kept.isEmpty) // zero churn on this side: schema-ful empty
-      return readWithLineage(spark, path, Some(v)).limit(0)
-    val tagged = withLineageCols {
-      taggedRead(spark, kept, current, withPos = true)
-    }
-    val withL = attachLineage(spark, tagged, live, mm, path)
-    val p1 = if (pos.nonEmpty) applyPosDeletes(spark, withL, pos) else withL
-    val p2 = if (dv.nonEmpty) applyDvDeletes(spark, p1, dv) else p1
-    val p3 = if (eq.nonEmpty) applyMorDeletes(spark, p2, eq, current)
-      else p2.drop(SeqCol)
-    p3.drop(FpCol, RiCol, LineageRid, LineageLus)
-  }
-
-  /** Assemble data manifests into one frame (schema evolution via the
-    * allowMissingColumns union across commit generations, rename/drop
-    * via per-manifest field-id projection). */
-  private def readRefs(
-      spark: SparkSession, refs: Seq[ManifestRef],
-      current: Option[Sch]): DataFrame = {
-    val live = refs.filter(_.nFiles > 0)
-    // empty snapshot: no data file carries a schema, so the honest
-    // answer is an empty zero-column frame (Delta would serve the
-    // metadata schema here; this format keeps schema in the files)
-    if (live.isEmpty) spark.emptyDataFrame
-    else live.map(r => projectToCurrent(refScan(spark, r), r.cols, current))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Data manifests with their commit sequence riding as a column
-    * (one literal per manifest — its entries share the sequence);
-    * withPos additionally rides each row's (file path, row index)
-    * from the scan's `_metadata`, for position-delete subtraction. */
-  private def taggedReadRefs(
-      spark: SparkSession, refs: Seq[ManifestRef],
-      current: Option[Sch],
-      withPos: Boolean = false): DataFrame = {
-    val live = refs.filter(_.nFiles > 0)
-    if (live.isEmpty) spark.emptyDataFrame
-    else live.map { r =>
-      if (r.partial)
-        // a partial manifest may be CONSOLIDATED (entries pinning
-        // different commit seqs) — the entry-grouped read tags each
-        // (base, seq) group with ITS sequence, so MoR subtraction
-        // stays seq-exact across the fold
-        taggedRead(spark, readManifest(r), current, withPos)
-      else {
-        val scan = if (withPos) posMeta(refScan(spark, r)) else refScan(spark, r)
-        projectToCurrent(scan, r.cols, current).withColumn(SeqCol, lit(r.seq))
-      }
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    else attachLineage(spark, assemble(spark, plan, meta = true, lineageCols = true),
+        plan.live, manifestMemo(), plan.path)
+      .drop(FpCol, RiCol, LineageRid, LineageLus)
   }
 
   /** Ride the scan's hidden `_metadata` as plain columns (projection-
@@ -3228,20 +3240,18 @@ object LakeTable {
     * removes a key only from data files with sequence < s — so a
     * commit that ships a delete file AND fresh data (merge-on-read
     * UPSERT) replaces old rows without deleting its own. The input
-    * frame must carry `_seq`; the anti-join condition compares it. */
-  /** The (key column names, distinct key tuples ⨯ their delete
-    * sequence) union of a snapshot's equality-delete manifests — the
-    * input both [[applyMorDeletes]]' anti-join and
-    * [[convertEqualityDeletes]]' semi-join consume, ONE definition so
-    * the two can never disagree on which rows an equality delete
-    * suppresses. A delete file's COLUMN LIST is its key: one column
-    * for the single-key writers (deleteMoR/upsertMoR), n columns for
-    * the composite-key MoR MERGE (Iceberg v2 equality-delete files
-    * are multi-column — the (l_orderkey, l_linenumber) CDC-ingest
-    * shape). */
-  private def morDeleteKeys(
-      spark: SparkSession, del: Seq[ManifestRef],
-      current: Option[Sch]): (Seq[String], DataFrame) = {
+    * frame must carry `_seq`; the join condition compares it against
+    * the union of the equality-delete manifests' (distinct key tuples ⨯
+    * delete sequence). `how` = "left_anti" serves the rows the deletes
+    * keep, "left_semi" the rows they suppress ([[convertEqualityDeletes]])
+    * — ONE definition, so the two can never disagree. A delete file's
+    * COLUMN LIST is its key: one column for the single-key writers
+    * (deleteMoR/upsertMoR), n columns for the composite-key MoR MERGE
+    * (Iceberg v2 equality-delete files are multi-column — the
+    * (l_orderkey, l_linenumber) CDC-ingest shape). */
+  private def applyMorDeletes(
+      spark: SparkSession, dataWithSeq: DataFrame,
+      del: Seq[ManifestRef], current: Option[Sch], how: String): DataFrame = {
     // one key column LIST per table (upsert's contract); the NAMES
     // ride in each delete file's own schema. NOTHING enforces the
     // contract at write time (deleteMoR/upsertMoR/mergeMoR take key
@@ -3264,14 +3274,8 @@ object LakeTable {
     require(keyLists.size == 1,
       "merge-on-read delete files must all share ONE key column list " +
         s"per table; found $keyLists")
-    (keyLists.head, groups.map(_._2).reduce(_.unionByName(_)))
-  }
-
-  private def applyMorDeletes(
-      spark: SparkSession, dataWithSeq: DataFrame,
-      del: Seq[ManifestRef],
-      current: Option[Sch] = None): DataFrame = {
-    val (keyNames, keys) = morDeleteKeys(spark, del, current)
+    val keyNames = keyLists.head
+    val keys = groups.map(_._2).reduce(_.unionByName(_))
     dataWithSeq
       // null-SAFE key equality per column: a NULL-keyed row selected
       // by the delete predicate must be removed exactly as CoW
@@ -3283,76 +3287,8 @@ object LakeTable {
             dataWithSeq(k) <=> keys(s"__graft_dkey$i")
           }.reduce(_ && _) &&
           keys("__graft_dseq") > dataWithSeq(SeqCol),
-        "left_anti")
+        how)
       .drop(SeqCol)
-  }
-
-  /** Assemble a DataFrame from PRUNED manifest entries — the
-    * explicit-file-list read path used when stats skipping kept only
-    * part of a commit dir (and by write-audit-publish's staged read).
-    * Entries of one base share one manifest, hence one field-id
-    * mapping — projected like the whole-dir path. */
-  private def readFiles(
-      spark: SparkSession, entries: Seq[ManifestEntry],
-      current: Option[Sch] = None): DataFrame =
-    if (entries.isEmpty) spark.emptyDataFrame
-    else entries.groupBy(_.base).map { case (base, es) =>
-      projectToCurrent(
-        dropHidden(spark.read
-          .option("mergeSchema", "true")
-          .option("basePath", base)
-          .parquet(es.map(_.file): _*)),
-        es.head.cols, current)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** Pruned entries with their commit sequence riding as a column
-    * (grouped per (base, seq) — entries of one manifest share both). */
-  private def taggedRead(
-      spark: SparkSession, data: Seq[ManifestEntry],
-      current: Option[Sch] = None,
-      withPos: Boolean = false): DataFrame =
-    if (data.isEmpty) spark.emptyDataFrame
-    else data.groupBy(e => (e.base, e.seq)).map { case ((base, sq), es) =>
-      val scan = dropHidden(spark.read
-        .option("mergeSchema", "true")
-        .option("basePath", base)
-        .parquet(es.map(_.file): _*))
-      projectToCurrent(if (withPos) posMeta(scan) else scan, es.head.cols, current)
-        .withColumn(SeqCol, lit(sq))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** Assemble a PRUNED scan — explicit file entries plus whole
-    * manifests — and apply every delete representation. ONE
-    * definition shared by [[readWhere]], [[readWhereEquals]] and the
-    * binpack fold, so the prune paths can never diverge on delete
-    * semantics. */
-  private def assemblePruned(
-      spark: SparkSession,
-      kept: Seq[ManifestEntry], fullRefs: Seq[ManifestRef],
-      eqRefs: Seq[ManifestRef], posRefs: Seq[ManifestRef],
-      dvRefs: Seq[ManifestRef],
-      current: Option[Sch],
-      // keep the scan-time file identity columns riding (the DML
-      // classification consumer) — mirrors assembleWithDeletes
-      keepMeta: Boolean = false): DataFrame = {
-    def assemble(parts: Seq[DataFrame]): DataFrame =
-      parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    if (eqRefs.isEmpty && posRefs.isEmpty && dvRefs.isEmpty && !keepMeta)
-      assemble(Seq(
-        if (kept.nonEmpty) Some(readFiles(spark, kept, current)) else None,
-        if (fullRefs.nonEmpty) Some(readRefs(spark, fullRefs, current)) else None).flatten)
-    else {
-      val withPos = posRefs.nonEmpty || dvRefs.nonEmpty || keepMeta
-      val tagged = assemble(Seq(
-        if (kept.nonEmpty) Some(taggedRead(spark, kept, current, withPos)) else None,
-        if (fullRefs.nonEmpty)
-          Some(taggedReadRefs(spark, fullRefs, current, withPos)) else None).flatten)
-      val p1 = if (posRefs.nonEmpty) applyPosDeletes(spark, tagged, posRefs) else tagged
-      val p1b = if (dvRefs.nonEmpty) applyDvDeletes(spark, p1, dvRefs) else p1
-      val p2 = if (eqRefs.nonEmpty) applyMorDeletes(spark, p1b, eqRefs, current)
-        else p1b.drop(SeqCol)
-      if (keepMeta) p2 else p2.drop(FpCol, RiCol)
-    }
   }
 
   /** Does a stats/ranges map admit a match for every predicate box
@@ -3426,16 +3362,6 @@ object LakeTable {
     lastPlanAudit = a
     auditByPath.put(normAuditPath(tablePath), a)
   }
-  private def tableOfManifest(m: String): String = {
-    val i = m.indexOf("/_graft_meta/")
-    val base = if (i >= 0) m.substring(0, i) else m
-    // manifests ADOPTED from a CTAS/RTAS stage live under the table's
-    // _graft_staging forever; the audit must land on the TABLE, not
-    // the staging dir nobody queries (round-8 review catch). Branch
-    // manifests are NOT folded: a branch is its own queryable root.
-    val j = base.indexOf("/_graft_staging/")
-    if (j >= 0) base.substring(0, j) else base
-  }
   private[graft] def auditOf(path: String): PlanAudit =
     auditByPath.getOrDefault(normAuditPath(path), PlanAudit(0, 0, 0, 0, false))
 
@@ -3458,7 +3384,6 @@ object LakeTable {
       preds: Seq[(String, Double, Double)],
       nameFor: (ManifestRef, String) => String): (Seq[ManifestRef], Seq[ManifestEntry]) = {
     import spark.implicits._
-    def name(r: ManifestRef): String = Paths.get(r.manifest).getFileName.toString
     // each manifest's stats are keyed by ITS write-time column names
     // (field-id schema evolution) — the per-manifest predicate-key
     // translation rides in as an array column, joined in BEFORE the
@@ -3477,7 +3402,7 @@ object LakeTable {
           .map(p => hiddenColName(t) -> bucketOf(p._2.toLong, t.param).toString)
       }
     val refDf = refs.map(r =>
-      (name(r), r.kind, r.seq,
+      (manifestName(r), r.kind, r.seq,
         preds.map { case (c, _, _) => nameFor(r, c) }, bucketCons(r)))
       .toDF("mname", "kind", "seq", "pnames", "hcons")
     val entries = entriesFrameOf(spark, refs,
@@ -3502,15 +3427,24 @@ object LakeTable {
           element_at(bounds, 2) >= lower && element_at(bounds, 1) <= upper,
           lit(true)))
     }
+    wholeOrListed(refs, kept)
+  }
+
+  /** The survivors of a distributed prune (`kept`: one row per kept
+    * entry with its manifest's file name, kind and seq), as planning
+    * collects them: job 1 counts survivors per manifest; a manifest
+    * keeping ≥90% of its files is read WHOLE from its list row, and
+    * job 2 collects per-file rows only for the selectively-pruned
+    * rest. Shared by [[distributedPlan]] and [[bloomPrune]]. */
+  private def wholeOrListed(refs: Seq[ManifestRef], kept: DataFrame)
+      : (Seq[ManifestRef], Seq[ManifestEntry]) = {
     val counts = kept.groupBy("mname").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val survivors = refs.filter(r => counts.getOrElse(name(r), 0L) > 0L)
+    val survivors = refs.filter(r => counts.getOrElse(manifestName(r), 0L) > 0L)
     val (full, partial) = survivors.partition(r =>
-      counts(name(r)) * 10L >= r.nFiles * 9L)
+      counts(manifestName(r)) * 10L >= r.nFiles * 9L)
     if (partial.isEmpty) return (full, Nil)
-    val byName = partial.map(r => name(r) -> r).toMap
-    // only the PARTIAL manifests' per-file rows reach the driver —
-    // full manifests are planned whole from their list row
+    val byName = partial.map(r => manifestName(r) -> r).toMap
     val collected = kept
       .filter(col("mname").isInCollection(byName.keys.toSeq))
       .select("file", "base", "kind", "seq", "mname")
@@ -3519,6 +3453,11 @@ object LakeTable {
         r.getString(2), r.getInt(3), byName(r.getString(4)).cols))
     (full, collected)
   }
+
+  /** A manifest's file name — a UUID, unique by construction, which is
+    * how distributed planning joins entries back to their list rows. */
+  private def manifestName(r: ManifestRef): String =
+    Paths.get(r.manifest).getFileName.toString
 
   /** A canonical default literal's numeric value, when it has one —
     * int/long/double literals parse directly; anything else (strings,
@@ -3543,17 +3482,16 @@ object LakeTable {
     * driver-side under [[DistributedPlanThreshold]], one Spark job
     * past it. ONE definition so the two paths can never diverge on
     * skip behavior, and [[lastPlanAudit]] counts are identical by
-    * construction. Returns (whole manifests, pruned explicit
-    * entries). */
+    * construction. Keeps whole manifests plus pruned explicit
+    * entries. */
   private def prunePlan(
-      spark: SparkSession, dataRefs: Seq[ManifestRef],
-      current: Option[Sch],
       preds: Seq[(String, Double, Double)],
       // false = stop after the manifest-range level and plan every
       // surviving manifest whole (the V2 hive-layout path, where
       // partition-dir pruning belongs to Spark's file index, not to
       // entry stats)
-      entryLevel: Boolean = true): (Seq[ManifestRef], Seq[ManifestEntry]) = {
+      entryLevel: Boolean = true)(spark: SparkSession, p: ScanPlan): ScanPlan = {
+    val (dataRefs, current) = (p.data, p.current)
     // current name of a predicate column → its WRITE-TIME name in a
     // manifest: Some(name) to consult stats under that name; None when
     // the field-id mapping PROVES the manifest predates (or dropped)
@@ -3637,14 +3575,10 @@ object LakeTable {
         readManifest(r).filter(e =>
           admits(e.stats, named) && hiddenAdmits(r, e.file, named))
       })
-    val audit = PlanAudit(
+    recordAudit(p.path, PlanAudit(
       dataRefs.size, candidates.size, claimed,
-      fullRefs.map(_.nFiles).sum + kept.size.toLong, distributed, fullRefs.size)
-    dataRefs.headOption match {
-      case Some(r) => recordAudit(tableOfManifest(r.manifest), audit)
-      case None => lastPlanAudit = audit
-    }
-    (fullRefs, kept)
+      fullRefs.map(_.nFiles).sum + kept.size.toLong, distributed, fullRefs.size))
+    p.copy(whole = fullRefs, kept = kept)
   }
 
   /** What the V2 connector scans: explicit data files plus whole
@@ -3664,124 +3598,85 @@ object LakeTable {
       // join-cardinality model sees real distinct counts
       ndv: Map[String, Long] = Map.empty)
 
-  /** File-level planning for the DataSourceV2 read path
-    * ([[GraftLakeSource]]). Runs [[prunePlan]] — so pushdown-driven
-    * skipping and [[lastPlanAudit]] match the library path exactly —
-    * then flattens the survivors to paths. The V2 scan hands Spark's
-    * parquet reader a concrete file set, so it REFUSES snapshots
-    * whose read requires row-level assembly a bare file scan cannot
-    * express: merge-on-read delete files (fold them with [[compact]]
-    * first) and field-id RENAMES (per-file projection). Additive
-    * schema evolution and drops are fine — missing columns
-    * null-extend, dropped ids are simply absent from the read
-    * schema. */
-  /** Does snapshot `v` need ROW-LEVEL assembly to read — live
-    * merge-on-read delete manifests, a field-id rename, or files
-    * predating a defaulted column? Exactly the conditions [[planV2]]
-    * refuses; the read-lift rule ([[graft.sources.MorReadLiftRule]])
-    * uses this to decide when a SQL read must route through
-    * [[read]] instead of the file-level V2 scan. One manifest-list
-    * read per call — the same O(1) metadata cost every plan-time
-    * decision in this file pays (NOT memoized: a dropped-and-
-    * recreated path would serve a stale answer). */
-  private[sources] def needsRowAssembly(path: String, v: Int): Boolean =
-    listRefs(path, v).exists(r => r.kind != "data" && r.nFiles > 0) ||
-      needsProjectionAssembly(path, v)
+  /** Why a file-level scan (the V2 connector) cannot serve a snapshot
+    * — the ONE statement of what [[planV2]] refuses and
+    * [[MorReadLiftRule]] lifts onto the library read. A bare file scan
+    * cannot apply live merge-on-read delete manifests, project a
+    * field-id RENAME per file, fill a DEFAULT into files predating its
+    * column, reconcile hive-partitioned with unpartitioned commit dirs,
+    * or keep partition values when a hive-layout manifest covers only
+    * part of its dir (binpack re-manifest). Additive evolution and
+    * drops are fine — missing columns null-extend, dropped ids are
+    * absent from the read schema. `countable`: only position deletes or
+    * DVs stand in the way, which the METADATA plane still subtracts
+    * exactly for count-only aggregates ([[metadataAggregate]]). */
+  private[sources] final case class V2Refusal(reason: String, countable: Boolean)
 
-  /** The PROJECTION-side reasons a V2 file scan cannot serve `v`:
-    * field-id renames, files predating a defaulted column, or mixed
-    * hive/unpartitioned layouts — the non-delete half of
-    * [[needsRowAssembly]]. */
-  private[sources] def needsProjectionAssembly(path: String, v: Int): Boolean = {
-    val refs = listRefs(path, v)
-    val dataRefs = refs.filter(_.kind == "data")
-    val current = schFor(path, v)
-    val live = dataRefs.filter(_.nFiles > 0)
-    dataRefs.exists(r => r.cols.exists { case (n, id) =>
-        current.flatMap(_.cols.find(_._1 == id)).exists(_._2 != n) }) ||
-      current.exists(sch => sch.defaults.keys.exists(id =>
-        dataRefs.exists(r =>
-          r.nFiles > 0 && !r.cols.values.exists(_ == id)))) ||
-      // hive-partitioned mixed with unpartitioned commits: the V2
-      // scan would need one file index owning both layouts at once
-      (live.exists(r => hiveLayoutDir(r.base)) &&
-        live.exists(r => !hiveLayoutDir(r.base)))
+  private def v2Refusal(p: ScanPlan): Option[V2Refusal] = {
+    val at = s"graftlake V2 read at ${p.path} v${p.version}"
+    val dels = p.deletes.filter(_.nFiles > 0)
+    val renamed = for {
+      r <- p.data.iterator; (n, id) <- r.cols.iterator
+      (_, cur) <- p.current.flatMap(_.cols.find(_._1 == id)) if cur != n
+    } yield s"$at: files under ${r.base} store column '$cur' (field id $id) as " +
+      s"'$n' — the rename is resolved by per-file projection, a library-read " +
+      "feature; LakeTable.compact(...) rewrites to current names, or read " +
+      "through LakeTable.read"
+    val predating = for {
+      sch <- p.current.iterator; (id, d) <- sch.defaults.iterator
+      n <- sch.cols.collectFirst { case (i, nm) if i == id => nm }.iterator
+      r <- p.live.iterator if !r.cols.values.exists(_ == id)
+    } yield s"$at: files under ${r.base} predate column '$n' (field id $id, " +
+      s"default $d) — constant fill is a library-read feature; " +
+      "LakeTable.compact(...) materializes defaults, or read through LakeTable.read"
+    // lazy: the hive-layout probe lists commit dirs
+    def mixed = Iterator(p.hive).filter(h => h.nonEmpty && h.size < p.live.size)
+      .map(h => s"$at: snapshot mixes hive-partitioned commit dirs (${h.size}) " +
+        s"with unpartitioned ones (${p.live.size - h.size}) — partition " +
+        "inference cannot reconcile the layouts; compact the table or read " +
+        "through LakeTable.read")
+    def partialHive = Iterator(p.hive).filter(_.exists(_.partial))
+      .map(_ => s"$at: a hive-partitioned manifest covers only part of its " +
+        "commit dir (binpack re-manifest) — the explicit file list would lose " +
+        "partition values; read through LakeTable.read")
+    val projection = (renamed ++ predating ++ mixed ++ partialHive).nextOption()
+    val deletion = Option.when(dels.nonEmpty)(
+      s"$at: the snapshot carries ${dels.size} merge-on-read delete " +
+        "manifest(s) a file-level scan cannot apply — " +
+        "LakeTable.compact(...) folds them, or read through LakeTable.read")
+    deletion.orElse(projection).map(V2Refusal(_,
+      countable = projection.isEmpty && !dels.exists(_.kind == "delete")))
   }
 
-  /** Can the METADATA plane still answer count-only aggregates at
-    * `v`? Position deletes and DVs subtract exactly from manifest
-    * counts ([[metadataAggregate]]); equality deletes and projection
-    * assembly cannot be counted from metadata. The read-lift rule
-    * keeps count-only reads on the V2 pushdown exactly here — a
-    * metadata-only count must not regress to a lifted table scan. */
-  private[sources] def countServableMoR(path: String, v: Int): Boolean =
-    !listRefs(path, v).exists(r => r.kind == "delete" && r.nFiles > 0) &&
-      !needsProjectionAssembly(path, v)
+  /** [[v2Refusal]] of snapshot `v` — what the read-lift rule consults,
+    * once per relation. */
+  private[sources] def v2Refusal(
+      spark: SparkSession, path: String, v: Int): Option[V2Refusal] =
+    v2Refusal(planScan(spark, path, Some(v)))
 
+  /** File-level planning for the DataSourceV2 read path
+    * ([[GraftLakeSource]]): refuses what [[v2Refusal]] names, runs
+    * [[prunePlan]] — so pushdown-driven skipping and [[lastPlanAudit]]
+    * match the library path exactly — then flattens the survivors to
+    * paths. HIVE-partitioned commits (overwritePartitioned: `col=value`
+    * subdirs carrying the values, files without the column) are planned
+    * as WHOLE dirs — an explicit leaf-file list would read the
+    * partition column back as null; Spark's file index then owns both
+    * partition-value reconstruction and partition pruning (the
+    * connector forwards partition filters into the listing). Hidden
+    * `__p_…` layout dirs are NOT hive partitioning — their values are
+    * derived layout, dropped on read. */
   private[sources] def planV2(
       spark: SparkSession, path: String, v: Int,
       preds: Seq[(String, Double, Double)]): V2Plan = {
-    require(Files.exists(Paths.get(s"${metaDir(path)}/v$v")),
-      s"no such snapshot version $v at $path (expired or never committed); " +
-        s"latest is ${latestVersion(path).getOrElse(-1)}")
-    val (eqRefs, rest0) = listRefs(path, v).partition(_.kind == "delete")
-    val (posRefs, rest1) = rest0.partition(_.kind == "posdel")
-    val (dvRefs, dataRefs) = rest1.partition(_.kind == "dv")
-    if (eqRefs.nonEmpty || posRefs.nonEmpty || dvRefs.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"graftlake V2 read at $path v$v: the snapshot carries " +
-          s"${eqRefs.size + posRefs.size + dvRefs.size} merge-on-read delete " +
-          "manifest(s) a file-level scan cannot apply — " +
-          "LakeTable.compact(...) folds them, or read through LakeTable.read")
-    val current = schFor(path, v)
-    for {
-      r <- dataRefs; (n, id) <- r.cols
-      (_, cur) <- current.flatMap(_.cols.find(_._1 == id)) if cur != n
-    } throw new UnsupportedOperationException(
-      s"graftlake V2 read at $path v$v: files under ${r.base} store column " +
-        s"'$cur' (field id $id) as '$n' — the rename is resolved by per-file " +
-        "projection, a library-read feature; LakeTable.compact(...) rewrites " +
-        "to current names, or read through LakeTable.read")
-    // DEFAULTED columns (S9d): a live manifest that predates the
-    // field id needs the constant filled per file — row-level
-    // assembly, same contract as renames. A file-level scan would
-    // silently serve null where the declared answer is the default.
-    for {
-      sch <- current.toSeq; (id, d) <- sch.defaults
-      n <- sch.cols.collectFirst { case (i, nm) if i == id => nm }
-      r <- dataRefs if r.nFiles > 0 && !r.cols.values.exists(_ == id)
-    } throw new UnsupportedOperationException(
-      s"graftlake V2 read at $path v$v: files under ${r.base} predate column " +
-        s"'$n' (field id $id, default $d) — constant fill is a library-read " +
-        "feature; LakeTable.compact(...) materializes defaults, or read " +
-        "through LakeTable.read")
-    // HIVE-partitioned commits (overwritePartitioned: `col=value`
-    // subdirs carrying the values, files without the column) must be
-    // planned as WHOLE dirs — an explicit leaf-file list would read
-    // the partition column back as null. Spark's file index then owns
-    // both partition-value reconstruction and partition pruning (the
-    // connector forwards partition filters into the listing). Hidden
-    // `__p_…` layout dirs are NOT hive partitioning — their values
-    // are derived layout, dropped on read.
-    def hivePartitioned(r: ManifestRef): Boolean = hiveLayoutDir(r.base)
-    val live = dataRefs.filter(_.nFiles > 0)
-    val (hive, plain) = live.partition(hivePartitioned)
-    if (hive.nonEmpty && plain.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"graftlake V2 read at $path v$v: snapshot mixes hive-partitioned " +
-          s"commit dirs (${hive.size}) with unpartitioned ones (${plain.size}) — " +
-          "partition inference cannot reconcile the layouts; compact the table " +
-          "or read through LakeTable.read")
-    if (hive.exists(_.partial))
-      throw new UnsupportedOperationException(
-        s"graftlake V2 read at $path v$v: a hive-partitioned manifest covers " +
-          "only part of its commit dir (binpack re-manifest) — the explicit " +
-          "file list would lose partition values; read through LakeTable.read")
-    val (fullRefs, kept) =
-      prunePlan(spark, dataRefs, current, preds, entryLevel = hive.isEmpty)
-    val (whole, listed) = fullRefs.partition(r => !r.partial && r.pspec.isEmpty)
+    val plan = planScan(spark, path, Some(v), { (s, p) =>
+      v2Refusal(p).foreach(r => throw new UnsupportedOperationException(r.reason))
+      prunePlan(preds, entryLevel = p.hive.isEmpty)(s, p)
+    })
+    val current = plan.current
+    val (whole, listed) = plan.whole.partition(r => !r.partial && r.pspec.isEmpty)
     val listedEntries = listed.flatMap(readManifest)
-    val all = kept ++ listedEntries
+    val all = plan.kept ++ listedEntries
     // exact survivor stats: only when the plan is fully file-listed
     // (whole-dir and distributed plans skip per-entry metadata by
     // design — conservative None, Spark falls back to listing sizes)
@@ -4113,29 +4008,38 @@ object LakeTable {
   def readWhere(
       spark: SparkSession, path: String,
       preds: Seq[(String, Double, Double)],
-      version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val (eqRefs, rest0) = listRefs(path, v).partition(_.kind == "delete")
-    val (posRefs, rest1) = rest0.partition(_.kind == "posdel")
-    val (dvRefs, dataRefs) = rest1.partition(_.kind == "dv")
-    val current = schFor(path, v)
-    val (fullRefs, kept) = prunePlan(spark, dataRefs, current, preds)
+      version: Option[Int] = None): DataFrame =
     // merge-on-read deletes apply AFTER the file skip: pruning only
     // decides which data files are touched, never which rows survive
-    val base =
-      if (fullRefs.isEmpty && kept.isEmpty) read(spark, path, Some(v)).filter(lit(false))
-      else assemblePruned(spark, kept, fullRefs, eqRefs, posRefs, dvRefs, current)
+    prunedRead(spark, planScan(spark, path, version, prunePlan(preds)),
+      preds.map { case (column, lower, upper) =>
+        column -> { (dt: org.apache.spark.sql.types.DataType) =>
+          if (!dt.isInstanceOf[org.apache.spark.sql.types.NumericType])
+            throw new IllegalArgumentException(
+              s"readWhere supports numeric columns; '$column' is $dt")
+          col(column) >= lower && col(column) <= upper
+        }
+      })
+
+  /** The row filter over a pruned plan, shared by every skipping read:
+    * each (column, condition-by-type) applies to the assembled plan.
+    * When no kept file carries the column (every survivor predates it)
+    * nothing can match, but the read's SCHEMA must not depend on which
+    * files the prune kept (round-2 ADVICE — a consumer selecting the
+    * column must see the same schema either way): the column is
+    * null-extended from the full snapshot's schema before the empty
+    * filter. Dotted columns are struct paths (S16b): they filter
+    * correctly but never prune (manifest stats cover top-level columns
+    * only; missing stats keep the file) — a vanished top column
+    * null-extends whole, a vanished subfield via withField. */
+  private def prunedRead(
+      spark: SparkSession, plan: ScanPlan,
+      conds: Seq[(String, org.apache.spark.sql.types.DataType => org.apache.spark.sql.Column)])
+      : DataFrame = {
     // full-snapshot schema, resolved lazily: only consulted when a
-    // predicate column is absent from the kept files, to keep the
-    // pruned read's schema LAYOUT-INDEPENDENT (round-2 ADVICE — a
-    // consumer selecting the predicate column must see the same
-    // schema whether or not the skip dropped every file that has it)
-    lazy val fullSchema = readRefs(spark, dataRefs, current).schema
-    // resolve a possibly-dotted predicate path against a schema —
-    // nested paths (S16b) filter correctly but never prune (manifest
-    // stats cover top-level numerics only; missing stats = keep file,
-    // so a renamed nested path can never falsely skip data)
+    // condition column is absent from the kept files
+    lazy val fullSchema =
+      assemble(spark, plan.copy(refs = plan.data).unpruned).schema
     def pathType(schema: org.apache.spark.sql.types.StructType, column: String)
         : Option[org.apache.spark.sql.types.DataType] =
       column.split('.').toSeq.foldLeft(
@@ -4144,44 +4048,22 @@ object LakeTable {
           st.fields.find(_.name == seg).map(_.dataType)
         case _ => None
       }
-    preds.foldLeft(base) { case (df, (column, lower, upper)) =>
-      if (column.contains(".")) pathType(df.schema, column) match {
-        case Some(dt) if dt.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-          df.filter(col(column) >= lower && col(column) <= upper)
-        case Some(dt) => throw new IllegalArgumentException(
-          s"readWhere supports numeric columns; '$column' is $dt")
+    conds.foldLeft(assemble(spark, plan)) { case (df, (column, cond)) =>
+      pathType(df.schema, column) match {
+        case Some(dt) => df.filter(cond(dt))
         case None =>
-          // no surviving file carries the nested path → nothing can
-          // match, but the pruned read's SCHEMA must stay layout-
-          // independent like the top-level branch: null-extend the
-          // missing path from the full-snapshot schema before the
-          // empty filter (whole struct when the top column vanished,
-          // withField when only the subfield did)
           val top = column.takeWhile(_ != '.')
-          val rest = column.drop(top.length + 1)
           val extended = pathType(fullSchema, column) match {
-            case Some(dt) if !df.columns.contains(top) =>
+            case Some(_) if !df.columns.contains(top) =>
               fullSchema.find(_.name == top).map(f =>
                 df.withColumn(top, lit(null).cast(f.dataType))).getOrElse(df)
             case Some(dt) =>
-              df.withColumn(top, col(top).withField(rest, lit(null).cast(dt)))
-            case None => df // path nowhere in the snapshot
+              df.withColumn(top, col(top).withField(
+                column.drop(top.length + 1), lit(null).cast(dt)))
+            case None => df // column nowhere in the snapshot
           }
           extended.filter(lit(false))
       }
-      else if (!df.columns.contains(column)) {
-        // every surviving file predates the column → it is null (or
-        // absent) on all rows, so nothing can satisfy the interval;
-        // null-extend so the schema matches the unpruned read's
-        fullSchema.find(_.name == column) match {
-          case Some(f) =>
-            df.withColumn(column, lit(null).cast(f.dataType)).filter(lit(false))
-          case None => df.filter(lit(false)) // column nowhere in snapshot
-        }
-      } else if (!df.schema(column).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]) {
-        throw new IllegalArgumentException(
-          s"readWhere supports numeric columns; '$column' is ${df.schema(column).dataType}")
-      } else df.filter(col(column) >= lower && col(column) <= upper)
     }
   }
 
@@ -4277,9 +4159,8 @@ object LakeTable {
       spark: SparkSession, path: String, variantCol: String,
       jsonPath: String, lower: Double, upper: Double,
       version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val tpe = shredDeclsOf(path, v).collectFirst {
+    val plan = planScan(spark, path, version)
+    val tpe = shredDeclsOf(path, plan.version).collectFirst {
       case (c, jp, t) if c == variantCol && jp == jsonPath => t
     }.getOrElse(throw new IllegalArgumentException(
       s"readWhereVariant at $path: path '$jsonPath' of '$variantCol' is " +
@@ -4289,17 +4170,12 @@ object LakeTable {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"readWhereVariant needs a numeric shred type; '$jsonPath' is $tpe")
     val statCol = shredColName(variantCol, jsonPath)
-    val (eqRefs, rest0) = listRefs(path, v).partition(_.kind == "delete")
-    val (posRefs, rest1) = rest0.partition(_.kind == "posdel")
-    val (dvRefs, dataRefs) = rest1.partition(_.kind == "dv")
-    val current = schFor(path, v)
-    val (fullRefs, kept) =
-      prunePlan(spark, dataRefs, current, Seq((statCol, lower, upper)))
-    val base =
-      if (fullRefs.isEmpty && kept.isEmpty) read(spark, path, Some(v)).filter(lit(false))
-      else assemblePruned(spark, kept, fullRefs, eqRefs, posRefs, dvRefs, current)
-    val vg = try_variant_get(col(variantCol), jsonPath, tpe).cast("double")
-    base.filter(vg >= lower && vg <= upper)
+    prunedRead(spark,
+      prunePlan(Seq((statCol, lower, upper)))(spark, plan),
+      Seq(variantCol -> { _ =>
+        val vg = try_variant_get(col(variantCol), jsonPath, tpe).cast("double")
+        vg >= lower && vg <= upper
+      }))
   }
 
   /** Morton/Z-ORDER clustered rewrite over N ≥ 2 dimensions: each
@@ -4367,9 +4243,9 @@ object LakeTable {
     val spark = df.sparkSession
     val base = observedBase(spark, path)
     val lineage = nextRowIdOf(path, base).isDefined
-    val refs = listRefs(path, base)
-    val cur = withLineageColsIf(lineage)(
-      assembleWithDeletes(spark, refs, schFor(path, base), keepMeta = true))
+    val plan = planScan(spark, path, Some(base))
+    val refs = plan.refs
+    val cur = assemble(spark, plan, meta = true, lineageCols = lineage)
     val srcKeys = df.select(col(keyCol).as("__graft_uk")).distinct()
     // files holding ≥1 colliding key — the ONLY data rewritten. The
     // collected frame is O(#files) planning metadata.
@@ -4392,7 +4268,7 @@ object LakeTable {
           .join(srcKeys, col(keyCol) === col("__graft_uk"), "left_anti")
         if (!lineage) surv.drop(FpCol, RiCol, SeqCol)
         else materializeLineage(spark, surv,
-          refs.filter(r => r.kind == "data" && r.nFiles > 0), mm, path)
+          plan.live, mm, path)
       }
     commitValidated(spark, path, base, refs,
       carryManifests(path, refs, touched, mm)
@@ -4630,9 +4506,9 @@ object LakeTable {
     // value; a key-level rule would mis-bump it); INSERTed rows
     // carry no physical and derive fresh ids — v3 inheritance
     if (notMatchedBySource.isEmpty && evolveColumns.isEmpty) {
-      val refs = listRefs(path, base)
-      val cur = withLineageColsIf(lineage)(
-        assembleWithDeletes(spark, refs, schFor(path, base), keepMeta = true))
+      val plan = planScan(spark, path, Some(base))
+      val refs = plan.refs
+      val cur = assemble(spark, plan, meta = true, lineageCols = lineage)
       val srcKeys = source.select(keyCols.zipWithIndex.map {
         case (k, i) => col(k).as(s"__graft_mk$i")
       }: _*).distinct()
@@ -4657,7 +4533,7 @@ object LakeTable {
         else if (!lineage)
           rowsInFiles(cur, touched).drop(FpCol, RiCol, SeqCol)
         else materializeLineage(spark, rowsInFiles(cur, touched),
-          refs.filter(r => r.kind == "data" && r.nFiles > 0), mm, path)
+          plan.live, mm, path)
       }
       val (survivors, inserts, affected) =
         mergeRows(targetTouched, source, keyCols, matched, notMatchedInsert,
@@ -4784,8 +4660,7 @@ object LakeTable {
     * of a snapshot, straight from the list — metadata-only. */
   def manifests(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, version)
     listRefs(path, v)
       .map(r => (r.manifest, r.base, r.kind, r.seq, r.nFiles))
       .toDF("manifest", "base", "kind", "seq", "n_files")
@@ -4813,8 +4688,7 @@ object LakeTable {
   def partitions(
       spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, version)
     val all = listRefs(path, v)
     require(!all.exists(r => r.kind == "delete" && r.nFiles > 0),
       s"$path v$v carries merge-on-read EQUALITY delete manifests — their " +
@@ -5090,8 +4964,7 @@ object LakeTable {
     * manifests' JSON (never a driver loop — the 10⁷-file posture). */
   def files(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, version)
     val refs = listRefs(path, v).filter(_.nFiles > 0)
     if (refs.isEmpty)
       return Seq.empty[(String, String, String, Int)].toDF("file", "base", "kind", "seq")
@@ -5151,11 +5024,10 @@ object LakeTable {
     * 10³ snapshots costs one read, not 10³. */
   def allFiles(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    def mname(r: ManifestRef) = Paths.get(r.manifest).getFileName.toString
     val vs = liveVersions(path)
     val perV = vs.map(v => v -> listRefs(path, v).filter(_.nFiles > 0))
     val pairs = perV.flatMap { case (v, rs) =>
-      rs.map(r => (v, mname(r), r.kind, r.seq)) }
+      rs.map(r => (v, manifestName(r), r.kind, r.seq)) }
     val distinctRefs = perV.flatMap(_._2)
       .groupBy(_.manifest).map(_._2.head).toSeq
     if (distinctRefs.isEmpty)
@@ -5195,8 +5067,7 @@ object LakeTable {
   def entries(
       spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, version)
     val refs = listRefs(path, v).filter(_.nFiles > 0)
     if (refs.isEmpty)
       return spark.createDataFrame(
@@ -5262,8 +5133,7 @@ object LakeTable {
   def positionDeletes(
       spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, version)
     val refs = listRefs(path, v)
     val plain = (c: org.apache.spark.sql.Column) =>
       regexp_replace(c, "^file:(//)?", "")
@@ -5330,12 +5200,10 @@ object LakeTable {
       spark: SparkSession, path: String, column: String,
       bits: Int = 4096, k: Int = 3): Int = {
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
-    val (del, data) = refs.partition(_.kind != "data")
-    val live = data.filter(_.nFiles > 0)
+    val plan = planScan(spark, path, Some(base))
+    val (live, current) = (plan.live, plan.current)
     require(live.nonEmpty, s"no data to bloom at $path")
     val key = bloomKey(path, base, column)
-    val current = schFor(path, base)
     // ONE distributed job: per file, the distinct bloom bit positions
     // of the column's values (bounded by `bits` per file)
     // refScan honors partial (binpack) manifests — a whole-dir read
@@ -5369,8 +5237,8 @@ object LakeTable {
         .copy(seq = r.seq, pspec = r.pspec, partial = r.partial,
           firstRowId = r.firstRowId)
     }
-    commitValidated(spark, path, base, listRefs(path, base),
-      rebloomed ++ del, "bloom")
+    commitValidated(spark, path, base, plan.refs,
+      rebloomed ++ plan.deletes, "bloom")
   }
 
   /** EQUALITY point-lookup scan through the per-file blooms: a file
@@ -5382,22 +5250,22 @@ object LakeTable {
     * stats skip. Merge-on-read deletes apply after the skip. */
   def readWhereEquals(
       spark: SparkSession, path: String, column: String, value: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val (eqRefs, rest0) = listRefs(path, v).partition(_.kind == "delete")
-    val (posRefs, rest1) = rest0.partition(_.kind == "posdel")
-    val (dvRefs, dataRefs) = rest1.partition(_.kind == "dv")
-    val current = schFor(path, v)
-    val key = bloomKey(path, v, column)
-    val live = dataRefs.filter(_.nFiles > 0)
+      version: Option[Int] = None): DataFrame =
+    prunedRead(spark, planScan(spark, path, version, bloomPrune(column, value)),
+      Seq(column -> (_ => col(column) === value)))
+
+  /** The bloom prune behind [[readWhereEquals]]: below the plan
+    * threshold a driver-side probe over the entries; past it ONE Spark
+    * job evaluates the same probes against the manifests' bloom JSON
+    * (identical xxhash64 expression — the 10⁷-file posture, mirroring
+    * [[prunePlan]]'s distributed plan, with the same ≥90%-kept
+    * whole-manifest fallback). */
+  private def bloomPrune(column: String, value: String)(
+      spark: SparkSession, p: ScanPlan): ScanPlan = {
+    val key = bloomKey(p.path, p.version, column)
+    val live = p.live
     val claimed = live.map(_.nFiles).sum
     val distributed = claimed > DistributedPlanThreshold
-    // below the threshold: driver-side probe over the entries; past
-    // it: ONE Spark job evaluates the same probes against the
-    // manifests' bloom JSON (identical xxhash64 expression — the
-    // 10⁷-file posture, mirroring readWhere's distributed plan,
-    // with the same ≥90%-kept whole-manifest fallback)
     val (fullRefs, kept) =
       if (!distributed)
         (Nil, live.flatMap(readManifest).filter { e =>
@@ -5410,8 +5278,7 @@ object LakeTable {
         })
       else {
         import spark.implicits._
-        def mname(r: ManifestRef) = Paths.get(r.manifest).getFileName.toString
-        val refDf = live.map(r => (mname(r), r.kind, r.seq))
+        val refDf = live.map(r => (manifestName(r), r.kind, r.seq))
           .toDF("mname", "kind", "seq")
         val arr = try_element_at(col("bloom"), lit(key))
         val positions = slice(arr, lit(3), greatest(size(arr) - 2, lit(0)))
@@ -5420,32 +5287,16 @@ object LakeTable {
             sequence(lit(0), element_at(arr, lit(2)).cast("int") - 1),
             j => array_contains(positions,
               pmod(xxhash64(lit(value), j), element_at(arr, lit(1))))))
-        val keptDf = entriesFrameOf(spark, live,
-          "file STRING, base STRING, bloom MAP<STRING, ARRAY<LONG>>")
+        wholeOrListed(live, entriesFrameOf(spark, live,
+            "file STRING, base STRING, bloom MAP<STRING, ARRAY<LONG>>")
           .withColumn("mname", element_at(split(input_file_name(), "/"), -1))
           .join(broadcast(refDf), Seq("mname"))
-          .filter(keepCond)
-        val counts = keptDf.groupBy("mname").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val survivors = live.filter(r => counts.getOrElse(mname(r), 0L) > 0L)
-        val (full, partialRefs) = survivors.partition(r =>
-          counts(mname(r)) * 10L >= r.nFiles * 9L)
-        val byName = partialRefs.map(r => mname(r) -> r).toMap
-        val collected = if (partialRefs.isEmpty) Nil else keptDf
-          .filter(col("mname").isInCollection(byName.keys.toSeq))
-          .select("file", "base", "kind", "seq", "mname").collect().toSeq
-          .map(r => ManifestEntry(r.getString(0), r.getString(1), Map.empty,
-            r.getString(2), r.getInt(3), byName(r.getString(4)).cols))
-        (full, collected)
+          .filter(keepCond))
       }
-    recordAudit(path, PlanAudit(
-      dataRefs.size, dataRefs.size, claimed,
+    recordAudit(p.path, PlanAudit(
+      p.data.size, p.data.size, claimed,
       fullRefs.map(_.nFiles).sum + kept.size.toLong, distributed, fullRefs.size))
-    val base =
-      if (fullRefs.isEmpty && kept.isEmpty) read(spark, path, Some(v)).filter(lit(false))
-      else assemblePruned(spark, kept, fullRefs, eqRefs, posRefs, dvRefs, current)
-    if (!base.columns.contains(column)) base.filter(lit(false))
-    else base.filter(col(column) === value)
+    p.copy(whole = fullRefs, kept = kept)
   }
 
   // ---- per-file NDV sketches (Iceberg's Puffin-stats analogue) ----
@@ -5500,11 +5351,9 @@ object LakeTable {
       lgK: Int = 12): Int = {
     require(columns.nonEmpty, "analyzeNdv needs at least one column")
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
-    val (del, data) = refs.partition(_.kind != "data")
-    val live = data.filter(_.nFiles > 0)
+    val plan = planScan(spark, path, Some(base))
+    val (live, current) = (plan.live, plan.current)
     require(live.nonEmpty, s"no data to analyze at $path")
-    val current = schFor(path, base)
     // refScan honors partial (binpack) manifests, as withBloom
     val scan = live.map { r =>
         projectToCurrent(
@@ -5571,8 +5420,8 @@ object LakeTable {
         } else analyzeManifestDistributed(
           spark, path, r, aggDf, columns, keys, empty, plainF)
       }
-      commitValidated(spark, path, base, listRefs(path, base),
-        analyzed ++ del, "analyze")
+      commitValidated(spark, path, base, plan.refs,
+        analyzed ++ plan.deletes, "analyze")
     } finally if (bigRefs.nonEmpty) aggDf.unpersist()
   }
 
@@ -5645,8 +5494,7 @@ object LakeTable {
       spark: SparkSession, path: String, column: String,
       version: Option[Int] = None): Long = {
     import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, version)
     val refs = listRefs(path, v)
     val mor = refs.filter(r => r.kind != "data" && r.nFiles > 0)
     require(mor.isEmpty,
@@ -6004,7 +5852,8 @@ object LakeTable {
     requireDeterministic(predicate, "DELETE")
     val base = observedBase(spark, path)
     val matches = coalesce(predicate, lit(false))
-    val refs = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val refs = plan.refs
     // classification reads the VISIBLE state with each row's file
     // identity riding from the scan's _metadata (the position-delete
     // plumbing — survives the MoR anti-joins where input_file_name
@@ -6016,8 +5865,7 @@ object LakeTable {
     // files, to split them into fully-matched (drop) vs boundary
     // (rewrite).
     val lineage = nextRowIdOf(path, base).isDefined
-    withLineageColsIf(lineage)(
-      classificationFrame(spark, path, base, refs, predicate)) match {
+    classificationFrame(spark, plan, predicate, lineage) match {
       case None => commitValidated(spark, path, base, refs, refs, "delete",
         conflictFilter = Some(matches))
       case Some(cur) =>
@@ -6038,7 +5886,7 @@ object LakeTable {
           val raw = rowsInFiles(cur, boundary).filter(!matches)
           if (!lineage) raw.drop(FpCol, RiCol, SeqCol)
           else materializeLineage(spark, raw,
-            refs.filter(r => r.kind == "data" && r.nFiles > 0), mm, path)
+            plan.live, mm, path)
         }
         val rewritten =
           if (boundary.isEmpty) None
@@ -6114,7 +5962,8 @@ object LakeTable {
     val cons = activeConstraints(path)
     enforceConstraints(df, path)
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val refs = plan.refs
     val spec = partitionSpecOf(path)
     val fresh =
       if (spec.nonEmpty) stageHidden(df, path, spec).toSeq
@@ -6123,8 +5972,7 @@ object LakeTable {
     require(consNow.toSet.subsetOf(cons.toSet),
       s"CHECK constraints changed concurrently at $path during REPLACE WHERE")
     val lineage = nextRowIdOf(path, base).isDefined
-    withLineageColsIf(lineage)(
-      classificationFrame(spark, path, base, refs, predicate)) match {
+    classificationFrame(spark, plan, predicate, lineage) match {
       case None =>
         commitValidated(spark, path, base, refs, refs ++ fresh, "replace_where",
           conflictFilter = Some(matches))
@@ -6142,7 +5990,7 @@ object LakeTable {
           val raw = rowsInFiles(cur, boundary).filter(!matches)
           if (!lineage) raw.drop(FpCol, RiCol, SeqCol)
           else materializeLineage(spark, raw,
-            refs.filter(r => r.kind == "data" && r.nFiles > 0), mm, path)
+            plan.live, mm, path)
         }
         val rewritten =
           if (boundary.isEmpty) None
@@ -6231,30 +6079,16 @@ object LakeTable {
     * None = every data manifest is refuted (or the table is empty):
     * nothing can match, the DML is a carry-forward commit. */
   private def classificationFrame(
-      spark: SparkSession, path: String, base: Int,
-      refs: Seq[ManifestRef],
-      pred: org.apache.spark.sql.Column): Option[DataFrame] = {
-    val (morRefs, dataRefs) = refs.partition(_.kind != "data")
-    val live = dataRefs.filter(_.nFiles > 0)
-    val current = schFor(path, base)
-    if (impliedIntervals(pred).isEmpty)
-      return if (live.isEmpty) None
-      else Some(assembleWithDeletes(spark, live ++ morRefs, current,
-        keepMeta = true))
+      spark: SparkSession, plan: ScanPlan,
+      pred: org.apache.spark.sql.Column, lineage: Boolean): Option[DataFrame] = {
     // FILE-granular pass 0 — the same two-level (manifest ranges →
     // per-entry stats, distributed past the plan threshold) prune the
     // reads use; refuted files never reach the scan and carry by
     // construction
-    val (fullRefs, kept) =
-      prunePlan(spark, live, current, impliedIntervals(pred))
-    if (fullRefs.isEmpty && kept.isEmpty) None
-    else {
-      val eq = morRefs.filter(_.kind == "delete")
-      val pos = morRefs.filter(_.kind == "posdel")
-      val dv = morRefs.filter(_.kind == "dv")
-      Some(assemblePruned(spark, kept, fullRefs, eq, pos, dv, current,
-        keepMeta = true))
-    }
+    val intervals = impliedIntervals(pred)
+    val pruned = if (intervals.isEmpty) plan else prunePlan(intervals)(spark, plan)
+    if (pruned.empty) None
+    else Some(assemble(spark, pruned, meta = true, lineageCols = lineage))
   }
 
   /** `_metadata.file_path` spells `file:` URIs while manifests store
@@ -6379,10 +6213,10 @@ object LakeTable {
       predicate: org.apache.spark.sql.Column): Int = {
     requireDeterministic(predicate, "UPDATE")
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val refs = plan.refs
     val lineage = nextRowIdOf(path, base).isDefined
-    withLineageColsIf(lineage)(
-      classificationFrame(spark, path, base, refs, predicate)) match {
+    classificationFrame(spark, plan, predicate, lineage) match {
       case None =>
         // every manifest refuted: column names still validate (a
         // typo'd SET must refuse, matched rows or not); pre-field-id
@@ -6411,7 +6245,7 @@ object LakeTable {
           }
           if (!lineage) tr.select(selCols: _*)
           else attachLineage(spark, tr,
-              refs.filter(r => r.kind == "data" && r.nFiles > 0), mm, path)
+              plan.live, mm, path)
             .select(selCols ++ Seq(
               col(RowIdCol).as(LineageRid),
               when(p, lit(null).cast("long")).otherwise(col(LusCol))
@@ -6443,11 +6277,11 @@ object LakeTable {
       predicate: org.apache.spark.sql.Column): Int = {
     requireDeterministic(predicate, "UPDATE")
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val refs = plan.refs
     val lineage = nextRowIdOf(path, base).isDefined
     val p = coalesce(predicate, lit(false))
-    withLineageColsIf(lineage)(
-      classificationFrame(spark, path, base, refs, predicate)) match {
+    classificationFrame(spark, plan, predicate, lineage) match {
       case None =>
         val names = schFor(path, base).map(_.cols.map(_._2))
           .getOrElse(read(spark, path, Some(base)).columns.toSeq)
@@ -6472,7 +6306,7 @@ object LakeTable {
             val selCols = visible.map(c => set.get(c).map(_.as(c)).getOrElse(col(c)))
             if (!lineage) matched.select(selCols: _*)
             else attachLineage(spark, matched,
-                refs.filter(r => r.kind == "data" && r.nFiles > 0), mm, path)
+                plan.live, mm, path)
               .select(selCols ++ Seq(
                 col(RowIdCol).as(LineageRid),
                 lit(null).cast("long").as(LineageLus)): _*)
@@ -6489,7 +6323,7 @@ object LakeTable {
     * instead of rewriting every surviving data file (copy-on-write
     * [[delete]]), commit the DELETED KEYS as a delete file; readers
     * subtract them with an anti-join at scan time
-    * ([[assembleWithDeletes]]), and [[compact]] folds them into a
+    * ([[assemble]]), and [[compact]] folds them into a
     * clean data-only snapshot. Write cost is O(deleted keys), not
     * O(table) — the only delete shape that holds when a 100 TB table
     * loses a few rows. Prior snapshots are untouched, so time travel
@@ -6517,11 +6351,12 @@ object LakeTable {
       predicate: org.apache.spark.sql.Column): Int = {
     require(keyCols.nonEmpty, s"deleteMoR at $path needs at least one key column")
     val base = observedBase(spark, path)
-    val prev = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val prev = plan.refs
     // the same pass-0 manifest prune as CoW [[delete]]: a refuted
     // commit contributes no keys, so it never reaches the scan; a
     // refuted-everywhere predicate is a pure carry-forward commit
-    val keys = classificationFrame(spark, path, base, prev, predicate)
+    val keys = classificationFrame(spark, plan, predicate, lineage = false)
       .map(_.filter(coalesce(predicate, lit(false)))
         .select(keyCols.map(col): _*).distinct())
     commitValidated(spark, path, base, prev,
@@ -6544,10 +6379,11 @@ object LakeTable {
       spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column): Int = {
     val base = observedBase(spark, path)
-    val prev = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val prev = plan.refs
     // pass-0 manifest prune as CoW [[delete]] (file identity still
     // rides per surviving candidate — the vintage-pinning contract)
-    val keys = classificationFrame(spark, path, base, prev, predicate)
+    val keys = classificationFrame(spark, plan, predicate, lineage = false)
       .map(_.filter(coalesce(predicate, lit(false)))
         .select(col(FpCol).as("file_path"), col(RiCol).as("row_index")))
     commitValidated(spark, path, base, prev,
@@ -6567,13 +6403,14 @@ object LakeTable {
       spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column): Int = {
     val base = observedBase(spark, path)
-    val prev = listRefs(path, base)
+    val plan = planScan(spark, path, Some(base))
+    val prev = plan.refs
     // pass-0 manifest prune as CoW [[delete]]; a refuted-everywhere
     // predicate carries every ref forward with no vector staged
     // commitValidated like its positional sibling (the round-13
     // revalidation had missed this arm): positions pin file identity,
     // so a provably-disjoint racer append rides along unchanged
-    val keys = classificationFrame(spark, path, base, prev, predicate)
+    val keys = classificationFrame(spark, plan, predicate, lineage = false)
       .getOrElse(return commitValidated(spark, path, base, prev, prev,
         "mor_dv_delete", conflictFilter = Some(coalesce(predicate, lit(false)))))
       .filter(coalesce(predicate, lit(false)))
@@ -6623,23 +6460,15 @@ object LakeTable {
     * No-op carry when no equality delete is live. */
   def convertEqualityDeletes(spark: SparkSession, path: String): Int = {
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
-    val (eq, keep) = refs.partition(r => r.kind == "delete" && r.nFiles > 0)
+    val plan = planScan(spark, path, Some(base))
+    val (eq, keep) = plan.refs.partition(r => r.kind == "delete" && r.nFiles > 0)
     if (eq.isEmpty)
-      return commitRefs(spark, path, base, refs, "convert_eqdeletes")
-    val current = schFor(path, base)
-    val dataRefs = refs.filter(r => r.kind == "data" && r.nFiles > 0)
-    if (dataRefs.isEmpty) // keys with nothing to suppress: retire them
+      return commitRefs(spark, path, base, plan.refs, "convert_eqdeletes")
+    if (plan.live.isEmpty) // keys with nothing to suppress: retire them
       return commitRefs(spark, path, base, keep, "convert_eqdeletes")
-    val (keyNames, keys) = morDeleteKeys(spark, eq, current)
-    val data = taggedReadRefs(spark, dataRefs, current, withPos = true)
-    val matched = data
-      .join(keys,
-        keyNames.zipWithIndex.map { case (k, i) =>
-            data(k) <=> keys(s"__graft_dkey$i")
-          }.reduce(_ && _) &&
-          keys("__graft_dseq") > data(SeqCol),
-        "left_semi")
+    // the rows the equality deletes suppress, with their file identity
+    val matched = assemble(spark, plan.copy(refs = plan.data ++ eq),
+        meta = true, suppressed = true)
       .select(col(FpCol).as("file_path"), col(RiCol).as("row_index"))
     commitRefs(spark, path, base,
       keep ++ stageManifest(dvBitmapsOf(matched), path, kind = "dv"),
@@ -6764,9 +6593,6 @@ object LakeTable {
       .withColumnRenamed(RowIdCol, LineageRid)
       .withColumnRenamed(LusCol, LineageLus)
 
-  private def withLineageColsIf[A](b: Boolean)(body: => A): A =
-    if (b) withLineageCols(body) else body
-
   def compact(spark: SparkSession, path: String, numFiles: Int = 1): Int = {
     val base = observedBase(spark, path)
     val prev = listRefs(path, base)
@@ -6801,24 +6627,10 @@ object LakeTable {
       // "compact yesterday's partition, not the 100 TB table".
       preds: Seq[(String, Double, Double)] = Nil): Int = {
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
-    val (eq, rest) = refs.partition(_.kind == "delete")
-    val (pos, rest2) = rest.partition(_.kind == "posdel")
-    val (dvs, data) = rest2.partition(_.kind == "dv")
-    val del = eq ++ pos ++ dvs
-    val current = schFor(path, base)
+    val plan = planScan(spark, path, Some(base))
     def sizeOf(e: ManifestEntry): Long =
       if (e.bytes >= 0) e.bytes else Files.size(Paths.get(e.file))
-    val perRef = data.filter(_.nFiles > 0).map(r => r -> readManifest(r))
-    val selected: ManifestEntry => Boolean =
-      if (preds.isEmpty) _ => true
-      else {
-        val (fullRefs, kept) = prunePlan(spark, data, current, preds)
-        val files = (fullRefs.flatMap(r =>
-          perRef.collectFirst { case (pr, es) if pr == r => es }
-            .getOrElse(readManifest(r))) ++ kept).map(_.file).toSet
-        e => files(e.file)
-      }
+    val (perRef, selected) = rewriteSelection(spark, plan, preds)
     val smalls = perRef.flatMap(_._2)
       .filter(e => sizeOf(e) < targetBytes && selected(e))
     val lineage = nextRowIdOf(path, base).isDefined
@@ -6827,23 +6639,16 @@ object LakeTable {
     // re-materializes every row's durable id as physical columns
     // (the folded files drop, so derivation would be lost)
     def smallRows(keepMeta: Boolean): DataFrame = {
-      val raw = withLineageColsIf(lineage)(
-        assemblePruned(spark, smalls, Nil, eq, pos, dvs, current,
-          keepMeta = keepMeta || lineage))
-      // NB materializeLineage drops the meta columns, which the
-      // spec-path bin join still needs — re-ride them through the
-      // attach instead (the shared helper covers the plain rewrites)
+      val raw = assemble(spark, plan.only(smalls),
+        meta = keepMeta || lineage, lineageCols = lineage)
       val withL =
         if (!lineage) raw
-        else attachLineage(spark, raw, data.filter(_.nFiles > 0),
-            r => perRefMap.getOrElse(r, readManifest(r)), path)
-          .withColumn(LineageRid, col(RowIdCol))
-          .withColumn(LineageLus, col(LusCol))
-          .drop(RowIdCol, LusCol)
+        else materializeLineage(spark, raw, plan.live,
+          r => perRefMap.getOrElse(r, readManifest(r)), path, keepMeta = true)
       if (keepMeta) withL else withL.drop(FpCol, RiCol, SeqCol)
     }
     if (smalls.size <= 1)
-      return commitRefs(spark, path, base, refs, "binpack") // nothing to fold
+      return commitRefs(spark, path, base, plan.refs, "binpack") // nothing to fold
     val smallSet = smalls.map(_.file).toSet
     val nOut = math.max(1L,
       (smalls.map(sizeOf).sum + targetBytes - 1) / targetBytes).toInt
@@ -6851,7 +6656,7 @@ object LakeTable {
     // (Iceberg's rewriteDataFiles packs per partition — folding tiny
     // files ACROSS partition dirs would trade pruning for file count);
     // layoutless tables pack to the computed target count as before
-    val spec = rewriteSpec(path, data, smallSet, perRef.toMap)
+    val spec = rewriteSpec(path, plan.data, smallSet, perRefMap)
     val packed =
       if (spec.nonEmpty) {
         // pack toward targetBytes WITHIN each partition dir, not one
@@ -6908,7 +6713,29 @@ object LakeTable {
       else if (keep.size == es.size) Some(r) // untouched manifest carried as-is
       else Some(reManifestKeep(path, r, keep, es))
     }
-    commitRefs(spark, path, base, keptRefs ++ del ++ packed, "binpack")
+    commitRefs(spark, path, base, keptRefs ++ plan.eq ++ plan.pos ++ plan.dv ++ packed,
+      "binpack")
+  }
+
+  /** The live data manifests' entries a maintenance rewrite selects
+    * from, plus its optional `where`-box file selection — decided from
+    * manifest stats alone by [[prunePlan]] (the readWhere overlap rule:
+    * a file that MAY hold matching rows is selected). Shared by
+    * [[compactSmall]] and [[rewriteSorted]]. */
+  private def rewriteSelection(
+      spark: SparkSession, plan: ScanPlan, preds: Seq[(String, Double, Double)])
+      : (Seq[(ManifestRef, Seq[ManifestEntry])], ManifestEntry => Boolean) = {
+    val perRef = plan.live.map(r => r -> readManifest(r))
+    val selected: ManifestEntry => Boolean =
+      if (preds.isEmpty) _ => true
+      else {
+        val pruned = prunePlan(preds)(spark, plan)
+        val byRef = perRef.toMap
+        val files = (pruned.whole.flatMap(r => byRef.getOrElse(r, readManifest(r))) ++
+          pruned.kept).map(_.file).toSet
+        e => files(e.file)
+      }
+    (perRef, selected)
   }
 
   /** SORT-strategy data-file rewrite (round-16 #7, Iceberg's
@@ -6939,47 +6766,28 @@ object LakeTable {
       s"rewrite_data_files(strategy => 'sort') at $path: no declared " +
         "sort order — declare one first (WRITE ORDERED BY / setSortOrder)")
     val base = observedBase(spark, path)
-    val refs = listRefs(path, base)
-    val (eq, rest) = refs.partition(_.kind == "delete")
-    val (pos, rest2) = rest.partition(_.kind == "posdel")
-    val (dvs, data) = rest2.partition(_.kind == "dv")
-    val del = eq ++ pos ++ dvs
-    val current = schFor(path, base)
-    val perRef = data.filter(_.nFiles > 0).map(r => r -> readManifest(r))
-    val selected: ManifestEntry => Boolean =
-      if (preds.isEmpty) _ => true
-      else {
-        val (fullRefs, kept) = prunePlan(spark, data, current, preds)
-        val files = (fullRefs.flatMap(r =>
-          perRef.collectFirst { case (pr, es) if pr == r => es }
-            .getOrElse(readManifest(r))) ++ kept).map(_.file).toSet
-        e => files(e.file)
-      }
+    val plan = planScan(spark, path, Some(base))
+    val (perRef, selected) = rewriteSelection(spark, plan, preds)
     val chosen = perRef.flatMap(_._2).filter(selected)
     if (chosen.isEmpty)
-      return commitRefs(spark, path, base, refs, "optimize")
+      return commitRefs(spark, path, base, plan.refs, "optimize")
     val lineage = nextRowIdOf(path, base).isDefined
     val perRefMap = perRef.toMap
-    val raw = withLineageColsIf(lineage)(
-      assemblePruned(spark, chosen, Nil, eq, pos, dvs, current,
-        keepMeta = lineage))
+    val raw = assemble(spark, plan.only(chosen), meta = lineage, lineageCols = lineage)
     val rows =
       if (!lineage) raw
-      else attachLineage(spark, raw, data.filter(_.nFiles > 0),
-          r => perRefMap.getOrElse(r, readManifest(r)), path)
-        .withColumn(LineageRid, col(RowIdCol))
-        .withColumn(LineageLus, col(LusCol))
-        .drop(RowIdCol, LusCol)
-        .drop(FpCol, RiCol, SeqCol)
+      else materializeLineage(spark, raw, plan.live,
+        r => perRefMap.getOrElse(r, readManifest(r)), path)
     val chosenSet = chosen.map(_.file).toSet
-    val staged = stageRewrite(rows, path, rewriteSpec(path, data, chosenSet, perRefMap))
+    val staged = stageRewrite(rows, path, rewriteSpec(path, plan.data, chosenSet, perRefMap))
     val keptRefs = perRef.flatMap { case (r, es) =>
       val keep = es.filterNot(e => chosenSet(e.file))
       if (keep.isEmpty) None
       else if (keep.size == es.size) Some(r) // untouched manifest carries
       else Some(reManifestKeep(path, r, keep, es))
     }
-    commitRefs(spark, path, base, keptRefs ++ del ++ staged, "optimize")
+    commitRefs(spark, path, base, keptRefs ++ plan.eq ++ plan.pos ++ plan.dv ++ staged,
+      "optimize")
   }
 
   /** Is `b` a hive-partitioned commit dir (`col=value` subdirs whose
@@ -7126,8 +6934,7 @@ object LakeTable {
       fromVersion: Option[Int] = None): Int = {
     require(!path.contains("/_graft_branches/"),
       "branches fork from the main table only")
-    val v = fromVersion.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
+    val v = resolveVersion(path, fromVersion)
     require(Files.exists(Paths.get(s"${metaDir(path)}/v$v")),
       s"cannot branch from missing version $v")
     val bp = branchPath(path, name)
@@ -7255,7 +7062,7 @@ object LakeTable {
     val cons = if (base >= 0) constraintsOf(path, base) else Nil
     if (cons.nonEmpty && fresh.nonEmpty)
       enforceConstraints(
-        assemblePruned(spark, Nil, fresh, Nil, Nil, Nil, schFor(bp, v)), path)
+        assemble(spark, ScanPlan(bp, v, schFor(bp, v), fresh, fresh)), path)
     // seq -1 → main's freshSeq; firstRowId -1 → main's counter spans
     publishStaged(spark, path,
       fresh.map(_.copy(seq = -1, firstRowId = -1L)), "cherrypick", cons)
@@ -9872,14 +9679,12 @@ object LakeTable {
     * CHURN, never on table size: a 10⁷-file table with a ten-file
     * commit between the versions prefilters fine. */
   private def diffChangedFiles(
-      spark: SparkSession, path: String, fromV: Int, toV: Int,
-      bRefs: Seq[ManifestRef], aRefs: Seq[ManifestRef]): Option[DiffScope] = {
-    def eqSet(rs: Seq[ManifestRef]) =
-      rs.filter(r => r.kind == "delete" && r.nFiles > 0).map(_.manifest).toSet
-    if (eqSet(bRefs) != eqSet(aRefs)) return None
-    if (defaultsOf(path, fromV) != defaultsOf(path, toV)) return None
-    def live(rs: Seq[ManifestRef]) = rs.filter(r => r.kind == "data" && r.nFiles > 0)
-    val (bLive, aLive) = (live(bRefs), live(aRefs))
+      spark: SparkSession, b: ScanPlan, a: ScanPlan): Option[DiffScope] = {
+    def eqSet(p: ScanPlan) = p.eq.filter(_.nFiles > 0).map(_.manifest).toSet
+    if (eqSet(b) != eqSet(a)) return None
+    def defaults(p: ScanPlan) = p.current.map(_.defaults).getOrElse(Map.empty)
+    if (defaults(b) != defaults(a)) return None
+    val (bLive, aLive) = (b.live, a.live)
     if (bLive.isEmpty || aLive.isEmpty) return None
     // the delta reads ONLY the one-sided manifests: a manifest shared
     // by both versions contributes identical entries to both sides
@@ -9902,11 +9707,10 @@ object LakeTable {
         val (be, ae) = (files(bOnly), files(aOnly))
         (ae diff be) ++ (be diff ae)
       }
-    def rowDel(rs: Seq[ManifestRef]) =
-      rs.filter(r => (r.kind == "posdel" || r.kind == "dv") && r.nFiles > 0)
-    val shared = rowDel(bRefs).map(_.manifest).toSet
-      .intersect(rowDel(aRefs).map(_.manifest).toSet)
-    val oneSided = (rowDel(bRefs) ++ rowDel(aRefs))
+    def rowDel(p: ScanPlan) = (p.pos ++ p.dv).filter(_.nFiles > 0)
+    val shared = rowDel(b).map(_.manifest).toSet
+      .intersect(rowDel(a).map(_.manifest).toSet)
+    val oneSided = (rowDel(b) ++ rowDel(a))
       .filterNot(r => shared(r.manifest))
       .groupBy(_.manifest).map(_._2.head).toSeq
     val targets: Set[String] =
@@ -9945,21 +9749,20 @@ object LakeTable {
   private def stripScheme(s: String): String =
     s.replaceFirst("^[A-Za-z][A-Za-z0-9+.\\-]*:(//)?", "")
 
-  private def churnEntries(
-      spark: SparkSession, liveData: Seq[ManifestRef],
-      otherLive: Set[String], scope: DiffScope): Seq[ManifestEntry] = {
+  private def churnEntries(scope: DiffScope, other: ScanPlan)(
+      spark: SparkSession, p: ScanPlan): ScanPlan = p.only {
     import spark.implicits._
+    val otherLive = other.live.map(_.manifest).toSet
     val search =
-      if (scope.carriedTargets) liveData
-      else liveData.filterNot(r => otherLive(r.manifest))
-    if (search.isEmpty) return Nil
-    if (search.map(_.nFiles).sum <= DistributedPlanThreshold) {
+      if (scope.carriedTargets) p.live
+      else p.live.filterNot(r => otherLive(r.manifest))
+    if (search.isEmpty) Nil
+    else if (search.map(_.nFiles).sum <= DistributedPlanThreshold) {
       val mm = manifestMemo()
       search.flatMap(mm).filter(e => scope.files(stripScheme(e.file)))
     } else {
-      def mname(r: ManifestRef) = Paths.get(r.manifest).getFileName.toString
-      val byName = search.map(r => mname(r) -> r).toMap
-      val refDf = broadcast(search.map(r => (mname(r), r.seq))
+      val byName = search.map(r => manifestName(r) -> r).toMap
+      val refDf = broadcast(search.map(r => (manifestName(r), r.seq))
         .toDF("__graft_mn", "__graft_rs"))
       val want = broadcast(scope.files.toSeq.toDF("__graft_w"))
       def plainKey(c: org.apache.spark.sql.Column) =
@@ -10033,28 +9836,17 @@ object LakeTable {
         .filter(r => r.kind == "data" && r.nFiles > 0 && !prev(r.manifest))
     }
     if (fresh.isEmpty) return read(spark, path, Some(toV)).limit(0)
-    assemblePruned(spark, Nil, fresh, Nil, Nil, Nil, schFor(path, toV))
+    assemble(spark, ScanPlan(path, toV, schFor(path, toV), fresh, fresh))
   }
 
   def changes(spark: SparkSession, path: String, fromV: Int, toV: Int): DataFrame = {
-    val (bRefs, aRefs) = (listRefs(path, fromV), listRefs(path, toV))
-    val pre = diffChangedFiles(spark, path, fromV, toV, bRefs, aRefs)
-    def side(refs: Seq[ManifestRef], other: Seq[ManifestRef], v: Int): DataFrame =
-      pre match {
-        case Some(scope) =>
-          val (eq, rest) = refs.partition(_.kind == "delete")
-          val (pos, rest2) = rest.partition(_.kind == "posdel")
-          val (dv, data) = rest2.partition(_.kind == "dv")
-          val otherLive = other.filter(r => r.kind == "data" && r.nFiles > 0)
-            .map(_.manifest).toSet
-          val kept = churnEntries(spark, data.filter(_.nFiles > 0), otherLive, scope)
-          if (kept.isEmpty) // zero churn on this side: schema-ful empty
-            read(spark, path, Some(v)).limit(0)
-          else assemblePruned(spark, kept, Nil, eq, pos, dv, schFor(path, v))
-        case None => read(spark, path, Some(v))
-      }
-    val before = side(bRefs, aRefs, fromV)
-    val after = side(aRefs, bRefs, toV)
+    val (b, a) = (planScan(spark, path, Some(fromV)), planScan(spark, path, Some(toV)))
+    val pre = diffChangedFiles(spark, b, a)
+    // zero churn on a side assembles a schema-ful empty frame
+    def side(p: ScanPlan, other: ScanPlan): DataFrame =
+      assemble(spark, pre.fold(p)(scope => churnEntries(scope, other)(spark, p)))
+    val before = side(b, a)
+    val after = side(a, b)
     after.exceptAll(before).withColumn("change_type", lit("insert"))
       .unionByName(before.exceptAll(after).withColumn("change_type", lit("delete")))
   }
@@ -10079,17 +9871,12 @@ object LakeTable {
     // serve identical (id, row) pairs on both sides and pair away in
     // the full-outer join — restricting to the churn is exact, and
     // turns the per-version diff O(churn) at 100 TB
-    val (bRefs, aRefs) = (listRefs(path, fromV), listRefs(path, toV))
-    val pre = diffChangedFiles(spark, path, fromV, toV, bRefs, aRefs)
-    def liveNames(rs: Seq[ManifestRef]) =
-      rs.filter(r => r.kind == "data" && r.nFiles > 0).map(_.manifest).toSet
-    def endpoint(v: Int, other: Seq[ManifestRef]): DataFrame = pre match {
-      case Some(scope) =>
-        readWithLineageSubset(spark, path, v, liveNames(other), scope)
-      case None => readWithLineage(spark, path, Some(v))
-    }
-    val b = endpoint(fromV, aRefs)
-    val a = endpoint(toV, bRefs)
+    val (bp, ap) = (planScan(spark, path, Some(fromV)), planScan(spark, path, Some(toV)))
+    val pre = diffChangedFiles(spark, bp, ap)
+    def endpoint(p: ScanPlan, other: ScanPlan): DataFrame =
+      lineageRead(spark, pre.fold(p)(scope => churnEntries(scope, other)(spark, p)))
+    val b = endpoint(bp, ap)
+    val a = endpoint(ap, bp)
     val bCols = b.columns.filterNot(Set(RowIdCol, LusCol)).toSeq
     val aCols = a.columns.filterNot(Set(RowIdCol, LusCol)).toSeq
     // an EMPTY endpoint has no user columns at all (schema lives in

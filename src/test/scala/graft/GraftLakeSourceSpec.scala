@@ -653,4 +653,32 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     // still names the lifting fold; it is simply unreachable from a
     // session with GraftExtensions, where the lift serves instead)
   }
+
+  test("a partial hive-layout manifest lifts onto the library read") {
+    import spark.implicits._
+    val p = "/tmp/graft_test/v2_partial_hive"
+    rmdir(p)
+    // one large file under year=2020, two small ones under year=2021
+    val big = (0L until 20000L).map(k => (k, 2020, k * 1.5)).toDF("k", "year", "v")
+      .coalesce(1)
+    val small = (20000L until 20010L).map(k => (k, 2021, k * 1.5)).toDF("k", "year", "v")
+      .repartition(2)
+    LakeTable.overwritePartitioned(big.union(small), p, "year")
+    // binpack folds the two small files into a plain commit dir and
+    // re-manifests the large one as a PARTIAL hive-layout manifest;
+    // deleting the folded rows leaves that partial manifest alone
+    LakeTable.compactSmall(spark, p, 50000L)
+    LakeTable.delete(spark, p, col("year") === 2021)
+    val v = LakeTable.latestVersion(p).get
+    val refs = LakeTable.listRefs(p, v).filter(_.nFiles > 0)
+    assert(refs.size === 1 && refs.head.partial,
+      s"the snapshot must be one partial hive-layout manifest: $refs")
+    val want = LakeTable.read(spark, p).select("k", "year", "v").orderBy("k")
+      .collect().toSeq
+    assert(want.size === 20000)
+    assert(spark.sql(s"SELECT k, year, v FROM graftlake.`$p`").orderBy("k")
+      .collect().toSeq === want)
+    assert(v2(p).select("k", "year", "v").orderBy("k").collect().toSeq === want)
+  }
 }
+

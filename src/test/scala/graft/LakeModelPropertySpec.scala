@@ -241,6 +241,16 @@ class LakeModelPropertySpec extends AnyFunSuite {
         val eqF = LakeTable.read(spark, p).filter(col("id") === k)
           .collect().map(_.getLong(0)).toSeq
         assert(eqP === eqF, s"seed=$seed: id=$k probe diverged")
+        // the bloom probe serves the same key
+        val eqB = LakeTable.readWhereEquals(spark, p, "id", k.toString)
+          .collect().map(_.getLong(0)).toSeq
+        assert(eqB === eqF, s"seed=$seed: id=$k bloom probe diverged")
+        // the graftlake source — V2-served or lifted onto the library
+        // read — filters to the same rows
+        val viaSource = spark.read.format("graftlake").load(p)
+          .filter(col(valCol) >= lo && col(valCol) <= hi)
+          .collect().map(_.getLong(0)).sorted.toSeq
+        assert(viaSource === full, s"seed=$seed: graftlake read diverged for [$lo,$hi]")
       }
       checkPruned()
       for (step <- 1 to 8) {

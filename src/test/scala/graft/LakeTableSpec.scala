@@ -167,6 +167,48 @@ class LakeTableSpec extends AnyFunSuite {
     assert(dataDirs.size === 1, s"emptied commit dirs should be removed: $dataDirs")
   }
 
+  test("an expired version refuses with the same error on every read surface") {
+    import spark.implicits._
+    val p = "/tmp/graft_test/lake_expired_everywhere"
+    rmdir(p)
+    LakeTable.overwrite(Seq((1L, 10.0, "a")).toDF("id", "v", "s"), p) // v0
+    LakeTable.overwrite(Seq((2L, 20.0, "b")).toDF("id", "v", "s"), p) // v1
+    LakeTable.expireSnapshots(spark, p, retain = 1)
+    def refuses(surface: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("no such snapshot version 0")),
+        s"$surface must refuse the expired version by name: $msgs")
+    }
+    refuses("read")(LakeTable.read(spark, p, Some(0)))
+    refuses("readWhere")(LakeTable.readWhere(spark, p, Seq(("v", 0.0, 100.0)), Some(0)))
+    refuses("readWhereEquals")(LakeTable.readWhereEquals(spark, p, "s", "a", Some(0)))
+    refuses("readWhereVariant")(
+      LakeTable.readWhereVariant(spark, p, "payload", "$.x", 0.0, 1.0, Some(0)))
+    refuses("readWithLineage")(LakeTable.readWithLineage(spark, p, Some(0)))
+    refuses("changes")(LakeTable.changes(spark, p, 0, 1))
+    refuses("VERSION AS OF")(
+      spark.sql(s"SELECT * FROM graftlake.`$p` VERSION AS OF 0").collect())
+  }
+
+  test("readWhereEquals keeps the full schema when no kept file carries the column") {
+    import spark.implicits._
+    val p = "/tmp/graft_test/lake_bloom_schema"
+    rmdir(p)
+    LakeTable.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), p)
+    LakeTable.withBloom(spark, p, "s")
+    // appended after the bloom, without the column: no bloom, so the
+    // probe keeps exactly these files
+    LakeTable.append(Seq(3L, 4L).toDF("id"), p)
+    val miss = LakeTable.readWhereEquals(spark, p, "s", "zz")
+    assert(miss.schema === LakeTable.read(spark, p).filter(col("s") === "zz").schema,
+      "the pruned read's schema must not depend on which files the bloom kept")
+    assert(miss.count() === 0L)
+    assert(LakeTable.readWhereEquals(spark, p, "s", "a").select("id")
+      .collect().map(_.getLong(0)).toSeq === Seq(1L))
+  }
+
   test("expireOlderThan drops exactly the snapshots committed at or before the cutoff") {
     val p = "/tmp/graft_test/lake_expire_ts"
     rmdir(p)
@@ -385,7 +427,7 @@ class LakeTableSpec extends AnyFunSuite {
     // path list to spark.read.parquet (AnalysisException). Round-4
     // review: the empty VERSION must also stay readable (as an empty
     // frame) and visible to history — not vanish as a zero-row
-    // manifest or crash readFiles' union-reduce.
+    // manifest or crash the assembler's union-reduce.
     val p19 = "/tmp/graft_test/lake_empty_part"
     rmdir(p19)
     import spark.implicits._
