@@ -325,12 +325,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * serves it, so current- and exists-default coincide here). */
   private def withDefaultMeta(
       p: String, version: Option[Int], s: StructType): StructType =
-    version.map { v =>
-      val defs = LakeTable.defaultsOf(p, v)
-      if (defs.isEmpty) s
+    version.flatMap(LakeTable.schFor(p, _)).map { sch =>
+      if (sch.defaults.isEmpty) s
       else {
-        val names = LakeTable.schemaOf(p, v).getOrElse(Nil).toMap
-        val byName = defs.flatMap { case (id, d) => names.get(id).map(_ -> d) }
+        val names = sch.cols.toMap
+        val byName = sch.defaults.flatMap { case (id, d) => names.get(id).map(_ -> d) }
         StructType(s.fields.map(f => byName.get(f.name).map { d =>
           f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
             .withMetadata(f.metadata)
@@ -719,10 +718,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val op = if (base >= 0) "replace" else "ctas"
         LakeTable.latestVersion(sp) match {
           case Some(h) =>
+            val sch = LakeTable.schFor(sp, h)
             LakeTable.commitRefs(spark, p, base, LakeTable.listRefs(sp, h), op,
-              LakeTable.schemaOf(sp, h), Some(LakeTable.constraintsOf(sp, h)),
-              promotedTypes = Some(LakeTable.promotedOf(sp, h)),
-              defaultVals = Some(LakeTable.defaultsOf(sp, h)))
+              sch.map(_.cols), Some(LakeTable.constraintsOf(sp, h)),
+              promotedTypes = Some(sch.fold(Map.empty[Int, String])(_.promoted)),
+              defaultVals = Some(sch.fold(Map.empty[Int, String])(_.defaults)))
           case None => // empty SELECT never wrote — an empty sentinel version
             // a REPLACED table's metadata must not survive into the
             // replacement's lineage: clear promotions AND defaults

@@ -56,7 +56,7 @@ class GraftLakeStreamingWrite(
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect { case GraftFilesMessage(fs) => fs }.flatten.toSeq
     LakeTable.commitStreamEpoch(
-      SparkSession.active, path, files, queryId, epochId)
+      SparkSession.active, path, files, schema, queryId, epochId)
       // table-property-driven post-commit compaction
       // (write.auto-compact.small-file-count): the sink amortizes its
       // own small-file maintenance — see maybeAutoCompactAfterEpoch

@@ -284,9 +284,9 @@ class GraftLakeTableStream(
   // that omit the field id) and silently null-fill a post-compact
   // historical replay.
   private val pinnedDefaults: Seq[(Int, String, String)] =
-    LakeTable.latestVersion(path).toSeq.flatMap { v =>
-      val names = LakeTable.schemaOf(path, v).getOrElse(Nil).toMap
-      LakeTable.defaultsOf(path, v).toSeq.flatMap { case (id, d) =>
+    LakeTable.latestVersion(path).flatMap(LakeTable.schFor(path, _)).toSeq.flatMap { sch =>
+      val names = sch.cols.toMap
+      sch.defaults.toSeq.flatMap { case (id, d) =>
         names.get(id).filter(tableSchema.fieldNames.contains)
           .map(n => (id, n, d))
       }

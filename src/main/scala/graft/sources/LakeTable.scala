@@ -476,55 +476,48 @@ object LakeTable {
 
   // ---- table schema (field-id → current name), one file per version ----
 
-  /** The table's column schema at `version`: ordered (field id,
-    * current name) pairs — Iceberg's schema-by-field-id, minimal form.
-    * None on legacy versions (written before field ids existed):
-    * readers then pass file columns through by name, which is exactly
-    * the old behavior. */
-  private[graft] def schemaOf(path: String, version: Int): Option[Seq[(Int, String)]] = {
-    val p = Paths.get(s"${metaDir(path)}/v$version/schema.json")
-    if (!Files.exists(p)) None
-    else Some(readJsonLines(p).map(n => n.get("id").asInt -> n.get("name").asText))
-  }
-
-  /** Declared TYPE PROMOTIONS at `version` (Iceberg's widening
-    * evolution, S9a): field id → promoted Spark DDL type, from the
-    * optional "type" field of the same schema.json rows — so a
-    * promotion follows its field id through renames and dies with it
-    * on drop, with no second sidecar to keep consistent. */
-  private[graft] def promotedOf(path: String, version: Int): Map[Int, String] = {
-    val p = Paths.get(s"${metaDir(path)}/v$version/schema.json")
-    if (!Files.exists(p)) Map.empty
-    else readJsonLines(p).flatMap(n =>
-      Option(n.get("type")).filterNot(_.isNull)
-        .map(t => n.get("id").asInt -> t.asText)).toMap
-  }
-
-  /** Declared COLUMN DEFAULTS at `version` (Iceberg v3's
-    * initial-default shape, S9d): field id → default literal SQL,
-    * from the optional "default" field of the same schema.json rows.
-    * A file whose manifest predates the field id serves the default
-    * constant instead of null — metadata-only on a 100 TB table. The
-    * default rides the schema row, so it follows renames and dies
-    * with its id on drop, like a type promotion. */
-  private[graft] def defaultsOf(path: String, version: Int): Map[Int, String] = {
-    val p = Paths.get(s"${metaDir(path)}/v$version/schema.json")
-    if (!Files.exists(p)) Map.empty
-    else readJsonLines(p).flatMap(n =>
-      Option(n.get("default")).filterNot(_.isNull)
-        .map(d => n.get("id").asInt -> d.asText)).toMap
-  }
-
-  /** The read-path schema bundle: current (field id → name) pairs
-    * plus declared type promotions and column defaults — everything a
-    * per-manifest projection needs to surface a file under the
-    * CURRENT schema. */
+  /** The table's schema at `version`, from its schema.json rows:
+    * everything a per-manifest projection needs to surface a file
+    * under the CURRENT schema.
+    *
+    *  - `cols`: ordered (field id, current name) pairs — Iceberg's
+    *    schema-by-field-id, minimal form.
+    *  - `promoted`: declared TYPE PROMOTIONS (Iceberg's widening
+    *    evolution, S9a), field id → promoted Spark DDL type, from a
+    *    row's optional "type" field.
+    *  - `defaults`: declared COLUMN DEFAULTS (Iceberg v3's
+    *    initial-default shape, S9d), field id → default literal SQL,
+    *    from a row's optional "default" field. A file whose manifest
+    *    predates the field id serves the default constant instead of
+    *    null — metadata-only on a 100 TB table.
+    *
+    * A promotion or default rides its schema row, so it follows its
+    * field id through renames and dies with it on drop, with no
+    * second sidecar to keep consistent. */
   private[graft] final case class Sch(
       cols: Seq[(Int, String)], promoted: Map[Int, String] = Map.empty,
       defaults: Map[Int, String] = Map.empty)
 
-  private[graft] def schFor(path: String, version: Int): Option[Sch] =
-    schemaOf(path, version).map(Sch(_, promotedOf(path, version), defaultsOf(path, version)))
+  /** [[Sch]] at `version`, parsed from one read of its schema.json.
+    * None on legacy versions (written before field ids existed):
+    * readers then pass file columns through by name, which is exactly
+    * the old behavior. */
+  private[graft] def schFor(path: String, version: Int): Option[Sch] = {
+    val p = Paths.get(s"${metaDir(path)}/v$version/schema.json")
+    if (!Files.exists(p)) None
+    else {
+      val rows = readJsonLines(p)
+      def byId(field: String): Map[Int, String] = rows.flatMap(n =>
+        Option(n.get(field)).filterNot(_.isNull)
+          .map(v => n.get("id").asInt -> v.asText)).toMap
+      Some(Sch(rows.map(n => n.get("id").asInt -> n.get("name").asText),
+        byId("type"), byId("default")))
+    }
+  }
+
+  /** The (field id, current name) pairs of [[schFor]]. */
+  private[graft] def schemaOf(path: String, version: Int): Option[Seq[(Int, String)]] =
+    schFor(path, version).map(_.cols)
 
   /** Every field-id-addressable path of a write schema: top-level
     * names plus RECURSIVE dotted paths for struct subfields (Iceberg
@@ -976,7 +969,8 @@ object LakeTable {
     // evolution — fail loudly, never publish a mapping that would
     // silently mis-resolve files later. Carried refs may reference
     // dropped ids (their projection drops those columns on read).
-    val carried = schemaCols.orElse(if (base >= 0) schemaOf(path, base) else None)
+    lazy val baseSch = if (base >= 0) schFor(path, base) else None
+    val carried = schemaCols.orElse(baseSch.map(_.cols))
     val effective = refs.filter(_.seq < 0).flatMap(_.cols.toSeq).distinct
       .foldLeft(carried.getOrElse(Nil)) { case (sch, (n, id)) =>
         sch.find(_._1 == id) match {
@@ -994,10 +988,8 @@ object LakeTable {
             sch :+ (id -> n)
         }
       }
-    val effPromoted = promotedTypes.getOrElse(
-      if (base >= 0) promotedOf(path, base) else Map.empty[Int, String])
-    val effDefaults = defaultVals.getOrElse(
-      if (base >= 0) defaultsOf(path, base) else Map.empty[Int, String])
+    val effPromoted = promotedTypes.getOrElse(baseSch.fold(Map.empty[Int, String])(_.promoted))
+    val effDefaults = defaultVals.getOrElse(baseSch.fold(Map.empty[Int, String])(_.defaults))
     if (effective.nonEmpty)
       Files.write(staging.resolve("schema.json"),
         effective.map { case (id, n) =>
@@ -1556,10 +1548,12 @@ object LakeTable {
     * the new version, or None for a skipped replay.
     *
     * The batch files were written by sink tasks (no driver hop for
-    * data, the 100 TB shape); this driver-side step runs the SAME
+    * data, the 100 TB shape) under `schema`, so they are read under
+    * it (all nullable, as a parquet read surfaces them) and no
+    * footer-inference job runs. This driver-side step runs the SAME
     * commit-time machinery as a batch append over exactly those
-    * files: CHECK constraints (one job over the batch), the
-    * distributed stats job (per-file min/max + row counts), the
+    * files: CHECK constraints (one job over the batch), the footer
+    * stats (per-file min/max + row counts, [[collectStats]]), the
     * declared sort order (a sorted table re-sorts the batch — one
     * bounded rewrite of the micro-batch, never of the table), and the
     * retry/rebase publish protocol. The manifest is marked
@@ -1568,6 +1562,7 @@ object LakeTable {
     * the truth, whole-dir planning must not adopt the dir. */
   private[graft] def commitStreamEpoch(
       spark: SparkSession, path: String, files0: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
       queryId: String, epochId: Long): Option[Int] = {
     def replayed(base: Int): Boolean =
       base >= 0 && txnsOf(path, base).get(queryId).exists(_ >= epochId)
@@ -1585,7 +1580,7 @@ object LakeTable {
     var fresh: Option[(ManifestRef, Seq[String], Map[String, Int])] =
       if (files0.isEmpty) None
       else {
-        val batch = spark.read.option("mergeSchema", "true").parquet(files0: _*)
+        val batch = spark.read.schema(deepNullable(schema)).parquet(files0: _*)
         enforceConstraints(batch, path)
         val cols = writePaths(batch.schema)
         val (_, fieldIds) = schemaForWrite(path, base0, cols)
@@ -2208,9 +2203,12 @@ object LakeTable {
       // differs from the commit op — a subquery DELETE lowers onto a
       // merge commit but must answer to write.delete.isolation-level
       isolationKind: Option[String] = None): Int = {
-    def plane(v: Int): Seq[Any] = Seq(
-      schemaOf(path, v), constraintsOf(path, v).toSet, promotedOf(path, v),
-      defaultsOf(path, v), tablePropsOf(path, v), nextRowIdOf(path, v).isDefined)
+    def plane(v: Int): Seq[Any] = {
+      val sch = schFor(path, v)
+      Seq(sch.map(_.cols), constraintsOf(path, v).toSet,
+        sch.fold(Map.empty[Int, String])(_.promoted), sch.fold(Map.empty[Int, String])(_.defaults),
+        tablePropsOf(path, v), nextRowIdOf(path, v).isDefined)
+    }
     val planeNames = Seq("schema", "CHECK constraints", "type promotions",
       "column defaults", "table properties", "row-lineage enablement")
     val baseSet = baseRefs.toSet
@@ -4633,10 +4631,11 @@ object LakeTable {
     // constraints roll back WITH the snapshot (a bad deploy may have
     // added one; carrying the current set would leave metadata
     // half-rolled-back) — Some(Nil) clears, None would inherit
+    val sch = schFor(path, version)
     commitRefs(spark, path, base, listRefs(path, version), "rollback",
-      schemaOf(path, version), Some(constraintsOf(path, version)),
-      promotedTypes = Some(promotedOf(path, version)),
-      defaultVals = Some(defaultsOf(path, version)))
+      sch.map(_.cols), Some(constraintsOf(path, version)),
+      promotedTypes = Some(sch.fold(Map.empty[Int, String])(_.promoted)),
+      defaultVals = Some(sch.fold(Map.empty[Int, String])(_.defaults)))
   }
 
   /** Iceberg-style `refs` METADATA TABLE: every named ref of the
@@ -5643,8 +5642,9 @@ object LakeTable {
       typeDdl: String, defaultSql: String): Int = {
     import org.apache.spark.sql.types.DataType
     val base = observedBase(spark, path)
-    val schema = schemaOf(path, base).getOrElse(throw new IllegalArgumentException(
+    val sch = schFor(path, base).getOrElse(throw new IllegalArgumentException(
       s"$path has no field-id schema (pre-field-id table) — add needs one"))
+    val schema = sch.cols
     require(!schema.exists(_._2 == name), s"column '$name' already exists at $path")
     require(!name.contains("."),
       s"'$name': initial-defaults are TOP-LEVEL only — an added struct " +
@@ -5698,8 +5698,8 @@ object LakeTable {
       // the declared type rides the same "type" field a promotion
       // uses — it is the column's read type until files carry it,
       // and the base for any later lossless widening
-      promotedTypes = Some(promotedOf(path, base) + (fresh -> target.sql)),
-      defaultVals = Some(defaultsOf(path, base) + (fresh -> canonical)))
+      promotedTypes = Some(sch.promoted + (fresh -> target.sql)),
+      defaultVals = Some(sch.defaults + (fresh -> canonical)))
   }
 
   /** METADATA-ONLY type promotion (S9a, Iceberg's widening schema
@@ -5718,9 +5718,9 @@ object LakeTable {
       spark: SparkSession, path: String, name: String, newType: String): Int = {
     import org.apache.spark.sql.types._
     val base = observedBase(spark, path)
-    val schema = schemaOf(path, base).getOrElse(throw new IllegalArgumentException(
+    val sch = schFor(path, base).getOrElse(throw new IllegalArgumentException(
       s"$path has no field-id schema (pre-field-id table) — type promotion needs one"))
-    val id = schema.find(_._2 == name).map(_._1).getOrElse(
+    val id = sch.cols.find(_._2 == name).map(_._1).getOrElse(
       throw new IllegalArgumentException(s"no such column '$name' at $path"))
     require(!name.contains("."),
       s"'$name': type promotion is TOP-LEVEL only — promote the struct " +
@@ -5748,7 +5748,7 @@ object LakeTable {
         "widening (allowed: INT->BIGINT, FLOAT->DOUBLE, DECIMAL precision " +
         "increase at unchanged scale)")
     commitRefs(spark, path, base, listRefs(path, base), "promote_type",
-      Some(schema), promotedTypes = Some(promotedOf(path, base) + (id -> target.sql)))
+      Some(sch.cols), promotedTypes = Some(sch.promoted + (id -> target.sql)))
   }
 
   /** Refuse a NESTED rename/drop when a live data manifest carries
@@ -6946,10 +6946,11 @@ object LakeTable {
     Files.createDirectories(Paths.get(metaDir(bp)))
     Files.writeString(Paths.get(s"${metaDir(bp)}/fork.json"),
       s"{${jstr("version")}:$v}")
+    val sch = schFor(path, v)
     commitRefs(spark, bp, -1, listRefs(path, v), "branch_from",
-      schemaOf(path, v), Some(constraintsOf(path, v)),
-      promotedTypes = Some(promotedOf(path, v)),
-      defaultVals = Some(defaultsOf(path, v)),
+      sch.map(_.cols), Some(constraintsOf(path, v)),
+      promotedTypes = Some(sch.fold(Map.empty[Int, String])(_.promoted)),
+      defaultVals = Some(sch.fold(Map.empty[Int, String])(_.defaults)),
       // the branch adopts the source's row-id counter, so ids it
       // assigns can never collide with the fork point's
       lineageCounterOverride = nextRowIdOf(path, v))
@@ -6981,10 +6982,11 @@ object LakeTable {
     val ffCounter = (nextRowIdOf(bp, head).toSeq ++
       (if (base >= 0) nextRowIdOf(path, base).toSeq else Nil))
       .maxOption
+    val sch = schFor(bp, head)
     val next = commitRefs(spark, path, base, listRefs(bp, head), "fast_forward",
-      schemaOf(bp, head), Some(constraintsOf(bp, head)),
-      promotedTypes = Some(promotedOf(bp, head)),
-      defaultVals = Some(defaultsOf(bp, head)),
+      sch.map(_.cols), Some(constraintsOf(bp, head)),
+      promotedTypes = Some(sch.fold(Map.empty[Int, String])(_.promoted)),
+      defaultVals = Some(sch.fold(Map.empty[Int, String])(_.defaults)),
       lineageCounterOverride = ffCounter)
     Files.writeString(forkFile, s"{${jstr("version")}:$next}")
     next

@@ -186,12 +186,12 @@ class DefaultColumnSpec extends AnyFunSuite {
     // a branch forked after the add adopts the default
     LakeTable.createBranch(spark, p, "audit")
     val bp = LakeTable.branchPath(p, "audit")
-    assert(LakeTable.defaultsOf(bp, LakeTable.latestVersion(bp).get).nonEmpty)
+    assert(LakeTable.schFor(bp, LakeTable.latestVersion(bp).get).exists(_.defaults.nonEmpty))
     // rollback to before the add (first append = v0) drops the
     // default with the column
     LakeTable.rollback(spark, p, 0)
     assert(!LakeTable.read(spark, p).columns.contains("score"))
-    assert(LakeTable.defaultsOf(p, LakeTable.latestVersion(p).get).isEmpty)
+    assert(!LakeTable.schFor(p, LakeTable.latestVersion(p).get).exists(_.defaults.nonEmpty))
   }
 
   test("SQL path: ALTER TABLE ADD COLUMN ... DEFAULT through the catalog, NOT NULL honest") {

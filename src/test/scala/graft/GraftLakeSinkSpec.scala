@@ -63,6 +63,7 @@ class GraftLakeSinkSpec extends AnyFunSuite {
     val root = "/tmp/graft_sink_spec_replay"
     SparkSpec.rmdir(root)
     val table = s"$root/table"
+    val schema = corpus(0).schema
 
     def epochFiles(tag: String, rows: Seq[(Long, String, Double)]): Seq[String] = {
       val dir = s"$root/stage_$tag"
@@ -73,13 +74,13 @@ class GraftLakeSinkSpec extends AnyFunSuite {
     }
 
     val e0 = epochFiles("e0", Seq((1L, "a", 1.0), (2L, "b", 2.0)))
-    assert(LakeTable.commitStreamEpoch(spark, table, e0, "q-123", 0L) === Some(0))
+    assert(LakeTable.commitStreamEpoch(spark, table, e0, schema, "q-123", 0L) === Some(0))
     assert(LakeTable.read(spark, table).count() === 2)
 
     // the SAME epoch arrives again (restart from an older checkpoint):
     // skipped, files dropped, version unchanged
     val e0again = epochFiles("e0b", Seq((1L, "a", 1.0), (2L, "b", 2.0)))
-    assert(LakeTable.commitStreamEpoch(spark, table, e0again, "q-123", 0L) === None)
+    assert(LakeTable.commitStreamEpoch(spark, table, e0again, schema, "q-123", 0L) === None)
     assert(LakeTable.latestVersion(table) === Some(0))
     assert(LakeTable.read(spark, table).count() === 2)
     assert(e0again.forall(f => !Files.exists(Paths.get(f))), "replayed files must be deleted")
@@ -87,11 +88,11 @@ class GraftLakeSinkSpec extends AnyFunSuite {
     // an OLDER epoch than the ledger is equally a replay
     val eOld = epochFiles("eold", Seq((9L, "z", 9.0)))
     val e1 = epochFiles("e1", Seq((3L, "c", 3.0)))
-    assert(LakeTable.commitStreamEpoch(spark, table, e1, "q-123", 1L) === Some(1))
-    assert(LakeTable.commitStreamEpoch(spark, table, eOld, "q-123", 0L) === None)
+    assert(LakeTable.commitStreamEpoch(spark, table, e1, schema, "q-123", 1L) === Some(1))
+    assert(LakeTable.commitStreamEpoch(spark, table, eOld, schema, "q-123", 0L) === None)
     // a DIFFERENT query's epoch 0 is not a replay (per-query ledger)
     val eq2 = epochFiles("eq2", Seq((10L, "y", 10.0)))
-    assert(LakeTable.commitStreamEpoch(spark, table, eq2, "q-456", 0L) === Some(2))
+    assert(LakeTable.commitStreamEpoch(spark, table, eq2, schema, "q-456", 0L) === Some(2))
     assert(LakeTable.read(spark, table).count() === 4)
     val txns = LakeTable.txnsOf(table, 2)
     assert(txns === Map("q-123" -> 1L, "q-456" -> 0L))
@@ -101,6 +102,7 @@ class GraftLakeSinkSpec extends AnyFunSuite {
     val root = "/tmp/graft_sink_spec_cons"
     SparkSpec.rmdir(root)
     val table = s"$root/table"
+    val schema = Seq.empty[(Long, Double)].toDF("id", "score").schema
     import scala.jdk.CollectionConverters._
 
     def oneFile(tag: String, rows: Seq[(Long, Double)]): Seq[String] = {
@@ -110,21 +112,56 @@ class GraftLakeSinkSpec extends AnyFunSuite {
         .map(_.toString).filter(_.endsWith(".parquet")).toSeq
     }
 
-    assert(LakeTable.commitStreamEpoch(spark, table, oneFile("a", Seq((1L, 0.5))), "q", 0L).isDefined)
+    assert(LakeTable.commitStreamEpoch(spark, table, oneFile("a", Seq((1L, 0.5))), schema, "q", 0L).isDefined)
     LakeTable.addConstraint(spark, table, "score_pos", "score >= 0")
     val bad = oneFile("b", Seq((2L, -1.0)))
     val err = intercept[Exception] {
-      LakeTable.commitStreamEpoch(spark, table, bad, "q", 1L)
+      LakeTable.commitStreamEpoch(spark, table, bad, schema, "q", 1L)
     }
     assert(err.getMessage.contains("score_pos"))
     assert(LakeTable.read(spark, table).count() === 1, "violating epoch must not land")
 
     // a plain batch append between epochs carries the ledger forward
     LakeTable.append(Seq((3L, 3.0)).toDF("id", "score"), table)
-    assert(LakeTable.commitStreamEpoch(spark, table, oneFile("c", Seq((4L, 4.0))), "q", 1L).isDefined)
+    assert(LakeTable.commitStreamEpoch(spark, table, oneFile("c", Seq((4L, 4.0))), schema, "q", 1L).isDefined)
     val v = LakeTable.latestVersion(table).get
     assert(LakeTable.txnsOf(table, v) === Map("q" -> 1L))
     assert(LakeTable.read(spark, table).count() === 3)
+  }
+
+  test("an epoch commit without constraints or sort order runs no Spark job") {
+    val root = "/tmp/graft_sink_spec_jobs"
+    SparkSpec.rmdir(root)
+    val table = s"$root/table"
+    import scala.jdk.CollectionConverters._
+    val written = corpus(30, from = 1)
+    written.coalesce(2).write.parquet(s"$root/stage")
+    val files = Files.list(Paths.get(s"$root/stage")).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(files.size === 2)
+
+    // count only this thread's jobs: other suites' streams may still run
+    val group = s"sink-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "epoch commit")
+    try {
+      assert(LakeTable.commitStreamEpoch(spark, table, files, written.schema, "q", 0L) === Some(0))
+      assert(LakeTable.commitStreamEpoch(spark, table, Nil, written.schema, "q", 1L) === Some(1))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0, "the epoch's own files need no schema inference or stats job")
+    val got = LakeTable.read(spark, table)
+    assert(got.count() === 30)
+    assert(got.agg(sum("id")).head().getLong(0) === (1L to 30L).sum)
   }
 
   test("auto-compact property: small epochs trigger a fold; ledger and lineage intact") {
