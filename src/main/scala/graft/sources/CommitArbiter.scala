@@ -278,100 +278,6 @@ final class OwnedArbiter(inner: InProcessCatalogArbiter, owner: String)
 class CommitArbitrationException(msg: String, cause: Throwable = null)
   extends RuntimeException(msg, cause)
 
-/** The catalog service over a REAL wire: a loopback TCP server
-  * speaking newline-delimited JSON requests
-  * (`{"op":"tryClaim","table":"…","v":3}` → `{"ok":true}`), wrapping
-  * the same [[InProcessCatalogArbiter]] state machine — so the
-  * protocol a REST/JDBC catalog would run (claim CAS, publish,
-  * crash-steal past the grace window) is exercised including request
-  * serialization, connection lifecycle, and client timeouts, which
-  * the in-process stand-in cannot test. One instance models one
-  * catalog service; writers attach [[SocketCatalogArbiter]] clients.
-  * Loopback-only by construction (the bind address is hardcoded). */
-final class CatalogWireServer(
-    claimGraceMs: Long = 60000L,
-    clock: () => Long = () => System.currentTimeMillis())
-  extends AutoCloseable {
-
-  private val inner = new InProcessCatalogArbiter(claimGraceMs, clock)
-  private val server = new java.net.ServerSocket(
-    0, 50, java.net.InetAddress.getLoopbackAddress)
-  @volatile private var running = true
-
-  def port: Int = server.getLocalPort
-  def refusedClaims: Int = inner.refusedClaims.get
-  def stolenClaims: Int = inner.stolenClaims.get
-  def headOf(table: String): Int = inner.headOf(table)
-
-  private val acceptor = new Thread(() => {
-    var alive = true
-    while (alive && running) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => serve(sock), "graft-catalog-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch { case _: Throwable => alive = running && !server.isClosed }
-    }
-  }, "graft-catalog-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
-
-  private def serve(sock: java.net.Socket): Unit = {
-    try {
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
-      val out = new java.io.PrintWriter(
-        new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"), true)
-      var line = in.readLine()
-      while (line != null) {
-        out.println(handle(line))
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => () }
-    finally sock.close()
-  }
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def handle(line: String): String = {
-    // the three-field request grammar, parsed with the same Jackson
-    // the metadata layer uses (escapes in path-shaped table names
-    // come for free); a malformed line answers an error object, never
-    // kills the connection (the client surfaces it as a refused
-    // commit)
-    try {
-      val n = mapper.readTree(line)
-      def field(k: String): String = {
-        val f = n.get(k)
-        if (f == null || f.isNull) sys.error(s"missing $k")
-        f.asText
-      }
-      val op = field("op")
-      val table = field("table")
-      val v = field("v").toInt
-      val ok = op match {
-        case "observed" => inner.observed(table, v); true
-        case "tryClaim" => inner.tryClaim(table, v)
-        case "published" => inner.published(table, v); true
-        case "abandon" => inner.abandon(table, v); true
-        case other => sys.error(s"unknown op '$other'")
-      }
-      s"""{"ok":$ok}"""
-    } catch {
-      case e: Throwable =>
-        val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-          .replace("\\", "\\\\").replace("\"", "\\\"")
-        s"""{"error":"$m"}"""
-    }
-  }
-
-  override def close(): Unit = {
-    running = false
-    server.close()
-  }
-}
-
 /** The catalog service as an HTTP endpoint in the shape of Iceberg's
   * REST commit protocol (round-10 verdict "missing" #5): commits
   * arrive as `POST /v1/tables/{table}/commits` carrying a
@@ -384,11 +290,14 @@ final class CatalogWireServer(
   *
   * — and a failed requirement answers **409 Conflict**, the REST
   * catalog's optimistic-concurrency signal (the client rebases, same
-  * as a refused claim). The underlying state machine is the SAME
-  * [[InProcessCatalogArbiter]] the NDJSON wire server wraps: claim
-  * CAS, publish, abandon, crash-steal past the grace window — one
-  * protocol, two wire encodings. Served by the JDK's built-in HTTP
-  * server, loopback-only by construction.
+  * as a refused claim). The underlying state machine is the
+  * [[InProcessCatalogArbiter]]: claim CAS, publish, abandon,
+  * crash-steal past the grace window — so the protocol a REST catalog
+  * runs is exercised including request serialization, connection
+  * lifecycle and client timeouts, which the in-process form cannot
+  * test. This is the engine's one wire encoding of the commit
+  * protocol. Served by the JDK's built-in HTTP server, loopback-only
+  * by construction.
   *
   * Update actions: `observed-head` (adopt an externally observed
   * head), `claim-version` (CAS the next version; pairs with an
@@ -406,11 +315,10 @@ final class CatalogHttpServer(
     // stays filesystem-direct, exactly Iceberg-REST's split.
     warehouse: Option[String] = None,
     // BEARER-TOKEN auth (round-12 verdict ask #6): when set, every
-    // HTTP route (read plane + rename) requires
+    // read-plane and rename route requires
     // `Authorization: Bearer <token>` and answers 401 otherwise —
     // the pass-through half of Iceberg-REST's OAuth surface; the
-    // commit plane's raw-socket protocol is loopback-only and
-    // unchanged.
+    // commit routes stay open (loopback-only by construction).
     token: Option[String] = None)
   extends AutoCloseable {
 
@@ -924,8 +832,8 @@ final class CatalogHttpServer(
 
 /** [[CommitArbiter]] client speaking the REST commit shape against a
   * [[CatalogHttpServer]] — HTTP/1.1 over ONE persistent loopback
-  * connection, written against the raw socket so the NDJSON client's
-  * two-phase ambiguity contract carries over VERBATIM: a SEND-phase
+  * connection, written against the raw socket so it controls the
+  * two-phase ambiguity contract exactly: a SEND-phase
   * failure (connect error, broken write) is unambiguous — the server
   * accepted nothing — and gets exactly one reconnect + resend; any
   * failure AFTER the request is on the wire (timeout, connection
@@ -1076,102 +984,6 @@ final class HttpCatalogArbiter(host: String, port: Int, timeoutMs: Int = 5000,
     postRaw("/v1/transactions/commit",
       s"""{"owner":"${jEsc(writerId)}","table-changes":$changes}""",
       s"tryClaimAll(${claims.map(_._1).mkString(",")})")
-  }
-
-  override def close(): Unit =
-    if (sock != null) { sock.close(); sock = null }
-}
-
-/** [[CommitArbiter]] client over a real socket — what a writer node
-  * runs against the catalog service. One persistent connection,
-  * newline-delimited JSON, `timeoutMs` socket timeout on every round
-  * trip. Honest outage semantics: a TIMEOUT throws immediately (the
-  * server may or may not have applied the op — re-sending a claim
-  * after an ambiguous timeout could double-grant, so ambiguity
-  * surfaces to the commit loop instead); a dropped idle connection
-  * gets ONE reconnect, then throws. A commit never proceeds
-  * unarbitrated. */
-final class SocketCatalogArbiter(host: String, port: Int, timeoutMs: Int = 5000)
-  extends CommitArbiter with AutoCloseable {
-
-  private var sock: java.net.Socket = _
-  private var in: java.io.BufferedReader = _
-  private var out: java.io.PrintWriter = _
-
-  private def connect(): Unit = {
-    sock = new java.net.Socket()
-    sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
-    sock.setSoTimeout(timeoutMs)
-    in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
-    out = new java.io.PrintWriter(
-      new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"), true)
-  }
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def request(op: String, table: String, v: Int): Boolean = synchronized {
-    val line = s"""{"op":${jstr(op)},"table":${jstr(table)},"v":$v}"""
-    // SEND phase: a failure here is unambiguous (the server accepted
-    // nothing of THIS request) — connect errors throw loudly, a stale
-    // idle connection whose write fails gets exactly ONE reconnect +
-    // resend. PrintWriter latches errors instead of throwing, so the
-    // checkError probe IS the failure signal.
-    def send(): Unit = {
-      out.println(line)
-      if (out.checkError()) throw new java.io.IOException("write failed")
-    }
-    try {
-      if (sock == null || sock.isClosed) connect()
-      send()
-    } catch {
-      case _: java.io.IOException =>
-        try close() catch { case _: Throwable => () }
-        try { connect(); send() }
-        catch {
-          case e2: java.io.IOException =>
-            throw new CommitArbitrationException(
-              s"catalog unreachable for $op($table, $v)", e2)
-        }
-    }
-    // RECEIVE phase: once the request is on the wire, ANY failure is
-    // AMBIGUOUS — the server may have applied the op, so re-sending
-    // could double-claim. Discard the connection (its late answer
-    // must never pair with the next request) and refuse the commit.
-    val resp =
-      try {
-        val r = in.readLine()
-        if (r == null) throw new java.io.IOException("connection closed")
-        r
-      } catch {
-        case e: java.net.SocketTimeoutException =>
-          try close() catch { case _: Throwable => () }
-          throw new CommitArbitrationException(
-            s"catalog did not answer $op($table, $v) within ${timeoutMs}ms — " +
-              "ambiguous outcome, commit refused", e)
-        case e: java.io.IOException =>
-          try close() catch { case _: Throwable => () }
-          throw new CommitArbitrationException(
-            s"connection lost awaiting the $op($table, $v) reply — " +
-              "ambiguous outcome, commit refused", e)
-      }
-    if (resp.contains("\"ok\":true")) true
-    else if (resp.contains("\"ok\":false")) false
-    else throw new CommitArbitrationException(
-      s"catalog rejected $op($table, $v): $resp")
-  }
-
-  override def observed(table: String, head: Int): Unit = {
-    request("observed", table, head); ()
-  }
-  override def tryClaim(table: String, next: Int): Boolean =
-    request("tryClaim", table, next)
-  override def published(table: String, next: Int): Unit = {
-    request("published", table, next); ()
-  }
-  override def abandon(table: String, next: Int): Unit = {
-    request("abandon", table, next); ()
   }
 
   override def close(): Unit =

@@ -1438,7 +1438,7 @@ object LakeTable {
     val df = if (kind == "data") applySortOrder(df0, path) else df0
     // CHECK constraints gate every DATA batch before any file lands
     // (delete-key files are row SUBTRACTIONS — nothing to check)
-    if (kind == "data") enforceConstraints(df, path)
+    if (kind == "data") enforceConstraints(df, path, activeConstraints(path))
     // position-delete files carry internal (file_path, row_index)
     // columns that must never leak into the table schema
     val (_, fieldIds) =
@@ -1570,7 +1570,7 @@ object LakeTable {
       fs.foreach(f => Files.deleteIfExists(Paths.get(f)))
     val base0 = latestVersion(path).getOrElse(-1)
     if (replayed(base0)) { dropFiles(files0); return None }
-    val cons = activeConstraints(path)
+    val cons = if (base0 >= 0) constraintsOf(path, base0) else Nil
     // the manifest carries the batch's write-time (column → field id)
     // mapping; the columns ride along so a rebase can RECHECK the
     // mapping against the rebased base (round-7 ADVICE: a concurrent
@@ -1581,7 +1581,7 @@ object LakeTable {
       if (files0.isEmpty) None
       else {
         val batch = spark.read.schema(deepNullable(schema)).parquet(files0: _*)
-        enforceConstraints(batch, path)
+        enforceConstraints(batch, path, cons)
         val cols = writePaths(batch.schema)
         val (_, fieldIds) = schemaForWrite(path, base0, cols)
         if (sortOrderOf(path).nonEmpty) {
@@ -1692,13 +1692,14 @@ object LakeTable {
     }
   }
 
-  /** Reject `df` when any active constraint has a violating row —
+  /** Reject `df` when any of the constraints `cons` (the set the
+    * caller read for `path`) has a violating row —
     * ONE job over the batch (first violated constraint name wins),
     * run BEFORE any data file is written so a bad batch leaves
     * nothing behind. NULL results violate (Delta CHECK semantics:
     * the constraint must be provably true). */
-  private def enforceConstraints(df: DataFrame, path: String): Unit = {
-    val cons = latestVersion(path).map(constraintsOf(path, _)).getOrElse(Nil)
+  private def enforceConstraints(
+      df: DataFrame, path: String, cons: Seq[(String, String)]): Unit = {
     if (cons.isEmpty) return
     val violated = df.select(coalesce(
       cons.map { case (n, sql) =>
@@ -2320,7 +2321,7 @@ object LakeTable {
       audit: DataFrame => Option[String]): Either[String, Int] = {
     val spark = df.sparkSession
     val cons = activeConstraints(path) // BEFORE staging (TOCTOU guard)
-    enforceConstraints(df, path) // CHECKs gate WAP batches too
+    enforceConstraints(df, path, activeConstraints(path)) // CHECKs gate WAP batches too
     val staged = writeDataFiles(df, path)
     audit(assemble(spark, ScanPlan(path, -1, None, Nil, Nil, staged))) match {
       case None =>
@@ -2853,37 +2854,33 @@ object LakeTable {
       spark: SparkSession, pos: Seq[ManifestRef],
       dvs: Seq[ManifestRef]): DataFrame = {
     import spark.implicits._
-    val plain = (c: org.apache.spark.sql.Column) =>
-      regexp_replace(c, "^file:(//)?", "")
-    // posdel (file, index) pairs → one bitmap per file (streaming
-    // build, peak memory rows/8 — the deleteMoRVector shape)
-    val posBm: Option[org.apache.spark.sql.Dataset[(String, Array[Byte])]] =
-      if (pos.isEmpty) None
-      else Some(pos.map(r => refScan(spark, r)
-          .select(plain(col("file_path")).as("f"), col("row_index").as("i")))
-        .reduce(_.unionByName(_)).distinct()
-        .as[(String, Long)].groupByKey(_._1)
-        .mapGroups { (f, it) =>
-          var bytes = new Array[Byte](64)
-          var maxByte = -1
-          it.foreach { case (_, i) =>
-            val bi = (i >> 3).toInt
-            if (bi >= bytes.length)
-              bytes = java.util.Arrays.copyOf(bytes, math.max(bytes.length * 2, bi + 1))
-            bytes(bi) = (bytes(bi) | (1 << (i & 7))).toByte
-            if (bi > maxByte) maxByte = bi
-          }
-          (f, java.util.Arrays.copyOf(bytes, maxByte + 1))
-        })
-    val dvBm: Option[org.apache.spark.sql.Dataset[(String, Array[Byte])]] =
-      if (dvs.isEmpty) None
-      else Some(dvs.map(r => refScan(spark, r)
-          .select(plain(col("file_path")).as("f"), col("dv").as("b")))
-        .reduce(_.unionByName(_)).as[(String, Array[Byte])])
-    (posBm.toSeq ++ dvBm.toSeq).reduce(_.union(_))
+    rowDeleteBitmaps(spark, pos, dvs, regexp_replace(col("file_path"), "^file:(//)?", ""))
+      .map { case (f, bm) =>
+        var n = 0L
+        var i = 0
+        while (i < bm.length) { n += java.lang.Integer.bitCount(bm(i) & 0xff); i += 1 }
+        (f, n)
+      }.toDF("__graft_delf", "__graft_del")
+  }
+
+  /** ONE bitmap per target file over a snapshot's position-delete and
+    * deletion-vector refs: the posdel (file, index) pairs build through
+    * [[dvBitmapsOf]], then every bitmap of a file OR-folds into one (so
+    * the two representations overlapping on a row never double-count).
+    * `key` is the grouping column over the stored `file_path`: the
+    * metadata plane counts on the normalized plain path, the DV
+    * rewrite keeps the stored URI the read-side probe joins on. */
+  private def rowDeleteBitmaps(
+      spark: SparkSession, pos: Seq[ManifestRef], dvs: Seq[ManifestRef],
+      key: org.apache.spark.sql.Column): org.apache.spark.sql.Dataset[(String, Array[Byte])] = {
+    import spark.implicits._
+    val posBm = if (pos.isEmpty) None else Some(dvBitmapsOf(pos.map(r => refScan(spark, r)
+      .select(key.as("file_path"), col("row_index"))).reduce(_.unionByName(_))))
+    val dvBm = if (dvs.isEmpty) None else Some(dvs.map(r => refScan(spark, r)
+      .select(key.as("file_path"), col("dv"))).reduce(_.unionByName(_)))
+    (posBm.toSeq ++ dvBm.toSeq).reduce(_.union(_)).as[(String, Array[Byte])]
       .groupByKey(_._1)
       .mapGroups { (f, it) =>
-        // OR-fold all bitmaps of the file, popcount the union
         val acc = it.foldLeft(Array.emptyByteArray) { (a, fb) =>
           val b = fb._2
           val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
@@ -2892,11 +2889,8 @@ object LakeTable {
           while (i < small.length) { out(i) = (out(i) | small(i)).toByte; i += 1 }
           out
         }
-        var n = 0L
-        var i = 0
-        while (i < acc.length) { n += java.lang.Integer.bitCount(acc(i) & 0xff); i += 1 }
-        (f, n)
-      }.toDF("__graft_delf", "__graft_del")
+        (f, acc)
+      }
   }
 
   private val SeqCol = "__graft_seq" // internal; underscored to dodge user columns
@@ -5960,7 +5954,7 @@ object LakeTable {
     // a constraint landing between the two is checked by enforce
     // (stricter) and then refused by the subset guard below
     val cons = activeConstraints(path)
-    enforceConstraints(df, path)
+    enforceConstraints(df, path, activeConstraints(path))
     val base = observedBase(spark, path)
     val plan = planScan(spark, path, Some(base))
     val refs = plan.refs
@@ -6423,8 +6417,8 @@ object LakeTable {
   /** (file_path, row_index) rows → one growable little-endian bitset
     * per file, built streaming so a heavily-deleted file never
     * buffers its index list (peak memory = rows/8 bytes, the vector
-    * itself). Shared by [[deleteMoRVector]] and
-    * [[convertEqualityDeletes]]. */
+    * itself). Shared by [[deleteMoRVector]],
+    * [[convertEqualityDeletes]] and [[rowDeleteBitmaps]]. */
   private def dvBitmapsOf(keys: DataFrame): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
@@ -6501,51 +6495,12 @@ object LakeTable {
     val liveFiles = keep
       .filter(r => r.kind == "data" && r.nFiles > 0)
       .flatMap(readManifest).map(_.file).toSet
-    import spark.implicits._
-    val consolidated = {
-      // keep file_path AS STORED (scan-form URIs): the read-side DV
-      // probe joins on the scan's own _metadata.file_path, so a
-      // normalized path would silently match nothing
-      val posBm =
-        if (pos.isEmpty) None
-        else Some(pos.map(r => refScan(spark, r)
-            .select(col("file_path").as("f"), col("row_index").as("i")))
-          .reduce(_.unionByName(_)).distinct()
-          .as[(String, Long)].groupByKey(_._1)
-          .mapGroups { (f, it) =>
-            var bytes = new Array[Byte](64)
-            var maxByte = -1
-            it.foreach { case (_, i) =>
-              val bi = (i >> 3).toInt
-              if (bi >= bytes.length)
-                bytes = java.util.Arrays.copyOf(
-                  bytes, math.max(bytes.length * 2, bi + 1))
-              bytes(bi) = (bytes(bi) | (1 << (i & 7))).toByte
-              if (bi > maxByte) maxByte = bi
-            }
-            (f, java.util.Arrays.copyOf(bytes, maxByte + 1))
-          })
-      val dvBm =
-        if (dvs.isEmpty) None
-        else Some(dvs.map(r => refScan(spark, r)
-            .select(col("file_path").as("f"), col("dv").as("b")))
-          .reduce(_.unionByName(_)).as[(String, Array[Byte])])
-      (posBm.toSeq ++ dvBm.toSeq).reduce(_.union(_))
-        .groupByKey(_._1)
-        .mapGroups { (f, it) =>
-          val acc = it.foldLeft(Array.emptyByteArray) { (a, fb) =>
-            val b = fb._2
-            val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
-            val out = java.util.Arrays.copyOf(big, big.length)
-            var i = 0
-            while (i < small.length) { out(i) = (out(i) | small(i)).toByte; i += 1 }
-            out
-          }
-          (f, acc)
-        }
-        .filter(r => liveFiles.contains(r._1.replaceFirst("^file:(//)?", "")))
-        .toDF("file_path", "dv")
-    }
+    // keep file_path AS STORED (scan-form URIs): the read-side DV
+    // probe joins on the scan's own _metadata.file_path, so a
+    // normalized path would silently match nothing
+    val consolidated = rowDeleteBitmaps(spark, pos, dvs, col("file_path"))
+      .filter(r => liveFiles.contains(r._1.replaceFirst("^file:(//)?", "")))
+      .toDF("file_path", "dv")
     commitRefs(spark, path, base,
       keep ++ stageManifest(consolidated, path, kind = "dv"),
       "rewrite_posdeletes")
@@ -7064,7 +7019,7 @@ object LakeTable {
     val cons = if (base >= 0) constraintsOf(path, base) else Nil
     if (cons.nonEmpty && fresh.nonEmpty)
       enforceConstraints(
-        assemble(spark, ScanPlan(bp, v, schFor(bp, v), fresh, fresh)), path)
+        assemble(spark, ScanPlan(bp, v, schFor(bp, v), fresh, fresh)), path, cons)
     // seq -1 → main's freshSeq; firstRowId -1 → main's counter spans
     publishStaged(spark, path,
       fresh.map(_.copy(seq = -1, firstRowId = -1L)), "cherrypick", cons)
@@ -7357,39 +7312,61 @@ object LakeTable {
   }
 
   /** Driver query: ARBITRATED COMMITS under contention (S8ad) — the
-    * catalog-service protocol driven through the oracle gate. The
-    * seed commit lands plain; then TWO contending appends race for
-    * the next version through one [[InProcessCatalogArbiter]]: the
-    * wrapper interposes on the first claim, lets the CONTENDING
-    * writer commit first (through the same arbiter), and refuses the
-    * caller — exactly what a catalog CAS returns when a concurrent
-    * winner took the version — so the loser's rebase loop re-reads
-    * the moved head and lands on top. Deterministic by construction
-    * (the interposition serializes the race), and the final table
-    * must hold the seed and BOTH appends exactly once — which is the
-    * whole point of commit arbitration. */
+    * catalog-service protocol driven through the oracle gate, with the
+    * catalog run in-process as one [[InProcessCatalogArbiter]]. */
   def arbitratedCommitQuery(s: SparkSession, d: String): DataFrame = {
-    val path = freshWorkDir("lakearb", d)
+    val inner = new InProcessCatalogArbiter()
+    contendedCommitQuery(s, d, "lakearb", inner, inner.headOf)
+  }
+
+  /** Driver query: the same contention over the REAL WIRE (S10c):
+    * every protocol round trip — observed/claim/publish — crosses a
+    * loopback socket to a [[CatalogHttpServer]] as an Iceberg-REST
+    * commit (`POST /v1/tables/{t}/commits`, 409 = refused claim). The
+    * refused claim arrives over the wire and must drive the same
+    * rebase loop. */
+  def wireArbitratedCommitQuery(s: SparkSession, d: String): DataFrame = {
+    val srv = new CatalogHttpServer()
+    val wire = new HttpCatalogArbiter("127.0.0.1", srv.port)
+    try contendedCommitQuery(s, d, "lakewirearb", wire, srv.headOf)
+    finally { wire.close(); srv.close() }
+  }
+
+  /** The one body of both arbitrated-commit queries. The seed commit
+    * lands plain; then TWO contending appends race for the next
+    * version through `catalog`: the wrapper interposes on the first
+    * claim, lets the CONTENDING writer commit first (through the same
+    * catalog), and refuses the caller — exactly what a catalog CAS
+    * returns when a concurrent winner took the version — so the
+    * loser's rebase loop re-reads the moved head and lands on top.
+    * Deterministic by construction (the interposition serializes the
+    * race), and the final table must hold the seed and BOTH appends
+    * exactly once, with `headOf` (the catalog's own head pointer)
+    * following the published commits — which is the whole point of
+    * commit arbitration; the oracle checks no row was lost or
+    * doubled. */
+  private def contendedCommitQuery(s: SparkSession, d: String, dir: String,
+      catalog: CommitArbiter, headOf: String => Int): DataFrame = {
+    val path = freshWorkDir(dir, d)
     val ev = graft.Tables.load(s, d, "events")
       .select("event_id", "event_type", "value")
     overwrite(ev.filter(pmod(col("event_id"), lit(3L)) === 0L), path) // v0 seed
-    val inner = new InProcessCatalogArbiter()
     val contended = new java.util.concurrent.atomic.AtomicBoolean(false)
     val rebasesDriven = new java.util.concurrent.atomic.AtomicInteger(0)
     val arb: CommitArbiter = new CommitArbiter {
-      override def observed(t: String, h: Int): Unit = inner.observed(t, h)
+      override def observed(t: String, h: Int): Unit = catalog.observed(t, h)
       override def tryClaim(t: String, n: Int): Boolean = {
         if (contended.compareAndSet(false, true)) {
           // the contending writer wins this version first — its
           // append claims through this same arbiter (now delegating
-          // to the inner catalog) and publishes…
+          // to the catalog) and publishes…
           append(ev.filter(pmod(col("event_id"), lit(3L)) === 1L), path)
           rebasesDriven.incrementAndGet()
           false // …and OUR claim is refused: rebase
-        } else inner.tryClaim(t, n)
+        } else catalog.tryClaim(t, n)
       }
-      override def published(t: String, n: Int): Unit = inner.published(t, n)
-      override def abandon(t: String, n: Int): Unit = inner.abandon(t, n)
+      override def published(t: String, n: Int): Unit = catalog.published(t, n)
+      override def abandon(t: String, n: Int): Unit = catalog.abandon(t, n)
     }
     setCommitArbiter(path, arb)
     try append(ev.filter(pmod(col("event_id"), lit(3L)) === 2L), path)
@@ -7397,53 +7374,9 @@ object LakeTable {
     require(rebasesDriven.get() == 1,
       "exactly one refused claim must have driven the rebase loop")
     require(latestVersion(path).contains(2),
-      s"seed + two contending appends must land as v0..v2, " +
-        s"got ${latestVersion(path)}")
-    read(s, path).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
-      .orderBy("event_type")
-  }
-
-  /** Driver query: the catalog commit protocol over the REAL WIRE
-    * (S10c): same interposed-contention shape as
-    * [[arbitratedCommitQuery]], but every protocol round trip —
-    * observed/claim/publish — crosses a loopback TCP socket to the
-    * [[CatalogWireServer]] in newline-delimited JSON. The refused
-    * claim arrives over the wire and must drive the same rebase loop;
-    * the oracle checks no row was lost or doubled. */
-  def wireArbitratedCommitQuery(s: SparkSession, d: String): DataFrame = {
-    val path = freshWorkDir("lakewirearb", d)
-    val ev = graft.Tables.load(s, d, "events")
-      .select("event_id", "event_type", "value")
-    overwrite(ev.filter(pmod(col("event_id"), lit(3L)) === 0L), path) // v0 seed
-    val srv = new CatalogWireServer()
-    val wire = new SocketCatalogArbiter("127.0.0.1", srv.port)
-    val contended = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val rebasesDriven = new java.util.concurrent.atomic.AtomicInteger(0)
-    val arb: CommitArbiter = new CommitArbiter {
-      override def observed(t: String, h: Int): Unit = wire.observed(t, h)
-      override def tryClaim(t: String, n: Int): Boolean = {
-        if (contended.compareAndSet(false, true)) {
-          append(ev.filter(pmod(col("event_id"), lit(3L)) === 1L), path)
-          rebasesDriven.incrementAndGet()
-          false
-        } else wire.tryClaim(t, n)
-      }
-      override def published(t: String, n: Int): Unit = wire.published(t, n)
-      override def abandon(t: String, n: Int): Unit = wire.abandon(t, n)
-    }
-    setCommitArbiter(path, arb)
-    try append(ev.filter(pmod(col("event_id"), lit(3L)) === 2L), path)
-    finally {
-      setCommitArbiter(path, RenameArbiter)
-      wire.close(); srv.close()
-    }
-    require(rebasesDriven.get() == 1,
-      "exactly one wire-refused claim must have driven the rebase loop")
-    require(latestVersion(path).contains(2),
       s"seed + two contending appends must land as v0..v2, got ${latestVersion(path)}")
-    require(srv.headOf(normArbPath(path)) == 2,
-      "the wire catalog's head must have followed the published commits")
+    require(headOf(normArbPath(path)) == 2,
+      "the catalog's head must have followed the published commits")
     read(s, path).groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
       .orderBy("event_type")

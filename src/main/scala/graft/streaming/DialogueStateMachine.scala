@@ -96,6 +96,30 @@ object DialogueStateMachine {
     summaryOf(diaId, st, reason.orNull)
   }
 
+  /** ONE per-batch fold for every streaming form: the group's turns
+    * in `turn` order (events within a micro-batch arrive unordered)
+    * step the state on from `st0`; turns after termination are
+    * skipped, and the terminating turn emits the session summary. */
+  private def foldBatch(diaId: Long, st0: DialogueState, turns: Seq[TurnEvent],
+      cfg: RewardConfig): (DialogueState, Option[SessionSummary]) =
+    turns.sortBy(_.turn).foldLeft((st0, Option.empty[SessionSummary])) {
+      case (acc @ (st, _), _) if st.terminated => acc
+      case ((st, _), ev) =>
+        val (next, reason) = step(st, ev, cfg)
+        (next, reason.map(summaryOf(diaId, next, _)))
+    }
+
+  /** The timed forms' fold: [[foldBatch]] over the untimed turns, with
+    * the last-activity time the max across ALL batches (a batch-local
+    * max would let an older batch pull the timeout earlier). */
+  private def foldTimedBatch(diaId: Long, st0: DialogueState, turns: Seq[TimedTurn],
+      cfg: RewardConfig): (DialogueState, Option[SessionSummary]) = {
+    val (st, closed) = foldBatch(diaId, st0,
+      turns.map(ev => TurnEvent(ev.dia_id, ev.turn, ev.layer, ev.confidence)), cfg)
+    val lastTs = turns.foldLeft(st0.lastActivityMs)((m, ev) => math.max(m, ev.ts.getTime))
+    (st.copy(lastActivityMs = lastTs), closed)
+  }
+
   /** Driver query: batch replay of the state machine over the
     * events-derived turns table. Per-group sort is in-memory — group
     * size is bounded by the dialogue length (≤ max_turns in production;
@@ -130,15 +154,8 @@ object DialogueStateMachine {
     override def handleInputRows(
         key: Long, rows: Iterator[TurnEvent],
         timerValues: TimerValues): Iterator[SessionSummary] = {
-      var state = if (st.exists()) st.get() else initialState
-      var out: List[SessionSummary] = Nil
-      rows.toSeq.sortBy(_.turn).foreach { ev =>
-        if (!state.terminated) {
-          val (next, reason) = step(state, ev, cfg)
-          state = next
-          reason.foreach(r => out = summaryOf(key, state, r) :: out)
-        }
-      }
+      val (state, closed) =
+        foldBatch(key, if (st.exists()) st.get() else initialState, rows.toSeq, cfg)
       // terminated state is KEPT as a tombstone, not cleared: post-
       // termination turns arriving in a LATER micro-batch would
       // otherwise re-initialize the key and emit a duplicate summary,
@@ -146,7 +163,7 @@ object DialogueStateMachine {
       // batch fold simply stops consuming). Eviction belongs to the
       // timeout variant.
       st.update(state)
-      out.reverseIterator
+      closed.iterator
     }
   }
 
@@ -189,25 +206,15 @@ object DialogueStateMachine {
     override def handleInputRows(
         key: Long, rows: Iterator[TimedTurn],
         timerValues: TimerValues): Iterator[SessionSummary] = {
-      var state = if (st.exists()) st.get() else initialState
-      var out: List[SessionSummary] = Nil
-      var lastTs = state.lastActivityMs // true max across ALL batches
-      rows.toSeq.sortBy(_.turn).foreach { ev =>
-        lastTs = math.max(lastTs, ev.ts.getTime)
-        if (!state.terminated) {
-          val (next, reason) =
-            step(state, TurnEvent(ev.dia_id, ev.turn, ev.layer, ev.confidence), cfg)
-          state = next
-          reason.foreach(r => out = summaryOf(key, state, r) :: out)
-        }
-      }
+      val (state, closed) = foldTimedBatch(
+        key, if (st.exists()) st.get() else initialState, rows.toSeq, cfg)
       // re-arm: delete any previous deadline first, so a key carries
       // exactly one live timer (stale earlier deadlines would close
       // the session while it is still active)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(lastTs + timeoutMs)
-      st.update(state.copy(lastActivityMs = lastTs))
-      out.reverseIterator
+      getHandle.registerTimer(state.lastActivityMs + timeoutMs)
+      st.update(state)
+      closed.iterator
     }
 
     override def handleExpiredTimer(
@@ -265,25 +272,16 @@ object DialogueStateMachine {
             if (st.turnIndex == 0 || st.terminated) Iterator.empty
             else Iterator.single(summaryOf(diaId, st, "Timeout"))
           } else {
-            var st = state.getOption.getOrElse(initialState)
-            var out: List[SessionSummary] = Nil
-            var lastTs = st.lastActivityMs // true max across ALL batches
-            evs.toSeq.sortBy(_.turn).foreach { ev =>
-              lastTs = math.max(lastTs, ev.ts.getTime)
-              if (!st.terminated) {
-                val (next, reason) = step(st, TurnEvent(ev.dia_id, ev.turn, ev.layer, ev.confidence), cfg)
-                st = next
-                reason.foreach(r => out = summaryOf(diaId, st, r) :: out)
-              }
-            }
+            val (st, closed) = foldTimedBatch(
+              diaId, state.getOption.getOrElse(initialState), evs.toSeq, cfg)
             // terminated sessions stay as tombstones so straggler
             // turns in later batches cannot re-open the key and
             // duplicate the summary; the timeout timer still evicts
             // the tombstone once the watermark passes (silently —
             // see the timed-out branch)
-            state.update(st.copy(lastActivityMs = lastTs))
-            state.setTimeoutTimestamp(lastTs + timeoutMs)
-            out.reverseIterator
+            state.update(st)
+            state.setTimeoutTimestamp(st.lastActivityMs + timeoutMs)
+            closed.iterator
           }
       }
   }
@@ -303,20 +301,12 @@ object DialogueStateMachine {
       .flatMapGroupsWithState[DialogueState, SessionSummary](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (diaId, evs, state: GroupState[DialogueState]) =>
-          var st = state.getOption.getOrElse(initialState)
-          var out: List[SessionSummary] = Nil
-          // events within a micro-batch arrive unordered; order by turn
-          evs.toSeq.sortBy(_.turn).foreach { ev =>
-            if (!st.terminated) {
-              val (next, reason) = step(st, ev, cfg)
-              st = next
-              reason.foreach(r => out = summaryOf(diaId, st, r) :: out)
-            }
-          }
+          val (st, closed) =
+            foldBatch(diaId, state.getOption.getOrElse(initialState), evs.toSeq, cfg)
           // tombstone, not remove — see DialogueProcessor: stragglers
           // in a later batch must not re-open a terminated session
           state.update(st)
-          out.reverseIterator
+          closed.iterator
       }
   }
 }

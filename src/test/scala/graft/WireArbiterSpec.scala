@@ -1,175 +1,20 @@
 package graft
 
-import graft.sources.{CatalogWireServer, CommitArbitrationException, LakeTable, RenameArbiter, SocketCatalogArbiter}
+import graft.sources.{CatalogHttpServer, CommitArbitrationException, HttpCatalogArbiter, LakeTable, RenameArbiter}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The catalog-service commit protocol over a REAL socket (round-10,
-  * verdict "missing" #3): the loopback [[CatalogWireServer]] runs the
-  * same claim/publish/steal state machine as the in-process stand-in,
-  * but through newline-delimited JSON on TCP — exercising request
-  * serialization, connection lifecycle, reconnects, and the client
-  * timeout contract the in-process form cannot. */
+/** The catalog-service commit protocol over a REAL socket: the
+  * loopback [[CatalogHttpServer]] runs the same claim/publish/steal
+  * state machine as the in-process stand-in, but as Iceberg-REST
+  * commits (`POST /v1/tables/{t}/commits` with requirements +
+  * updates, 409 as the conflict signal) — exercising request
+  * serialization, connection lifecycle, reconnects, and the client's
+  * two-phase timeout contract the in-process form cannot; plus the
+  * multi-table transaction route and the catalog read plane. */
 class WireArbiterSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
-
-  test("protocol over the wire: exclusive claims, publish, abandon, refusal counters") {
-    val srv = new CatalogWireServer()
-    try {
-      val a = new SocketCatalogArbiter("127.0.0.1", srv.port)
-      val b = new SocketCatalogArbiter("127.0.0.1", srv.port)
-      try {
-        a.observed("t", -1)
-        assert(a.tryClaim("t", 0), "first claim of v0 must win")
-        assert(!b.tryClaim("t", 0), "a concurrent client's claim must refuse")
-        assert(srv.refusedClaims === 1)
-        a.published("t", 0)
-        assert(srv.headOf("t") === 0)
-        assert(b.tryClaim("t", 1))
-        b.abandon("t", 1)
-        assert(a.tryClaim("t", 1))
-        a.published("t", 1)
-        assert(srv.headOf("t") === 1)
-      } finally { a.close(); b.close() }
-    } finally srv.close()
-  }
-
-  test("crash-steal works across connections; table names with quotes serialize") {
-    var now = 1000L
-    val srv = new CatalogWireServer(claimGraceMs = 500L, clock = () => now)
-    try {
-      val crashed = new SocketCatalogArbiter("127.0.0.1", srv.port)
-      val successor = new SocketCatalogArbiter("127.0.0.1", srv.port)
-      try {
-        val table = """/tmp/odd "quoted"\path"""
-        crashed.observed(table, -1)
-        assert(crashed.tryClaim(table, 0))
-        crashed.close() // claimant dies holding the claim
-        now += 100L
-        assert(!successor.tryClaim(table, 0), "young claim honored across the wire")
-        now += 1000L
-        assert(successor.tryClaim(table, 0), "dangling claim stolen past grace")
-        assert(srv.stolenClaims === 1)
-        successor.published(table, 0)
-        assert(srv.headOf(table) === 0)
-      } finally successor.close()
-    } finally srv.close()
-  }
-
-  test("end-to-end: concurrent lake appends arbitrated over the socket, no loss") {
-    val path = "/tmp/graft_test/wirearb_concurrent"
-    SparkSpec.rmdir(path)
-    val srv = new CatalogWireServer()
-    val arb = new SocketCatalogArbiter("127.0.0.1", srv.port)
-    LakeTable.setCommitArbiter(path, arb)
-    try {
-      LakeTable.overwrite(Seq((0L, "seed")).toDF("k", "tag"), path)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val writes = (1 to 6).map { i =>
-        scala.concurrent.Future {
-          LakeTable.append(Seq((i.toLong, s"w$i")).toDF("k", "tag"), path)
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(writes),
-        scala.concurrent.duration.Duration(120, "s"))
-      pool.shutdown()
-      assert(LakeTable.read(spark, path).count() === 7,
-        "every arbitrated append must land exactly once")
-      assert(srv.headOf(path.replaceAll("/+$", "")) >= 6 ||
-        LakeTable.latestVersion(path).get >= 6)
-    } finally {
-      LakeTable.setCommitArbiter(path, RenameArbiter)
-      arb.close()
-      srv.close()
-    }
-  }
-
-  test("timeout is ambiguous → throws; it never silently grants") {
-    // a server that accepts but never answers
-    val stall = new java.net.ServerSocket(
-      0, 5, java.net.InetAddress.getLoopbackAddress)
-    try {
-      val c = new SocketCatalogArbiter("127.0.0.1", stall.getLocalPort,
-        timeoutMs = 300)
-      val t0 = System.nanoTime()
-      val e = intercept[CommitArbitrationException](c.tryClaim("t", 0))
-      val ms = (System.nanoTime() - t0) / 1e6
-      assert(e.getMessage.contains("ambiguous"), e.getMessage)
-      assert(ms < 5000, s"must fail within the timeout, took $ms ms")
-      c.close()
-    } finally stall.close()
-  }
-
-  test("a timeout DISCARDS the connection — the late answer can never desync") {
-    // a server whose FIRST answer arrives after the client timeout,
-    // all later answers prompt: without the discard, the retried
-    // request would consume the stale first answer and every
-    // subsequent response would be off by one
-    val srv = new java.net.ServerSocket(
-      0, 5, java.net.InetAddress.getLoopbackAddress)
-    val slowOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val t = new Thread(() => {
-      try while (true) {
-        val sock = srv.accept()
-        val h = new Thread(() => {
-          try {
-            val in = new java.io.BufferedReader(
-              new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
-            val out = new java.io.PrintWriter(sock.getOutputStream, true)
-            var line = in.readLine()
-            while (line != null) {
-              if (slowOnce.compareAndSet(true, false)) Thread.sleep(800)
-              // answer FALSE always: a desynced client would
-              // misattribute some response; a correct one sees
-              // exactly false per fresh request
-              out.println("""{"ok":false}""")
-              line = in.readLine()
-            }
-          } catch { case _: Throwable => () } finally sock.close()
-        })
-        h.setDaemon(true); h.start()
-      } catch { case _: Throwable => () }
-    })
-    t.setDaemon(true); t.start()
-    try {
-      val c = new SocketCatalogArbiter("127.0.0.1", srv.getLocalPort, timeoutMs = 300)
-      intercept[CommitArbitrationException](c.tryClaim("t", 0)) // times out
-      // fresh connection, fresh stream: the late '{"ok":false}' of the
-      // timed-out request is gone with the discarded socket
-      assert(!c.tryClaim("t", 1), "post-timeout request must pair with ITS answer")
-      assert(!c.tryClaim("t", 2))
-      c.close()
-    } finally srv.close()
-  }
-
-  test("a dropped idle connection reconnects once; a dead server throws") {
-    val srv = new CatalogWireServer()
-    val c = new SocketCatalogArbiter("127.0.0.1", srv.port)
-    try {
-      c.observed("t", -1)
-      assert(c.tryClaim("t", 0))
-      c.published("t", 0)
-      // kill the transport under the client, server stays up: the
-      // next request reconnects transparently (unambiguous failure)
-      c.close()
-      assert(c.tryClaim("t", 1))
-      c.published("t", 1)
-      assert(srv.headOf("t") === 1)
-      // server gone entirely → loud failure, never a silent grant
-      srv.close()
-      c.close()
-      intercept[CommitArbitrationException](c.tryClaim("t", 2))
-    } finally { c.close(); srv.close() }
-  }
-
-  // ---- the SAME protocol over the Iceberg-REST-shaped HTTP binding
-  // (round-11): POST /v1/tables/{t}/commits with requirements +
-  // updates, 409 as the conflict signal; claim/publish/steal state
-  // machine and the client's two-phase ambiguity contract unchanged.
 
   test("HTTP: requirements+updates commits; 409 refusal; publish/abandon") {
     val srv = new graft.sources.CatalogHttpServer()
@@ -427,6 +272,61 @@ class WireArbiterSpec extends AnyFunSuite {
     } finally stall.close()
   }
 
+  test("HTTP: a timeout DISCARDS the connection — the late answer can never desync") {
+    // a loopback HTTP server whose FIRST reply, a 200, is held until
+    // the client's request has timed out; every later request answers
+    // a prompt 409. A client that kept the connection would read the
+    // stale 200 as `true` for its next request; a correct one reads
+    // exactly `false` per fresh request.
+    val srv = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0), 5)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+    srv.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
+      val (status, body) =
+        if (first.compareAndSet(true, false)) { release.await(); (200, """{"ok":true}""") }
+        else (409, """{"error":"commit conflict"}""")
+      // the held reply's client has gone: its write may fail
+      try {
+        ex.sendResponseHeaders(status, body.length.toLong)
+        ex.getResponseBody.write(body.getBytes("UTF-8"))
+      } catch { case _: java.io.IOException => () }
+      finally ex.close()
+    })
+    srv.start()
+    try {
+      val c = new HttpCatalogArbiter("127.0.0.1", srv.getAddress.getPort, timeoutMs = 2000)
+      try {
+        val e = intercept[CommitArbitrationException](c.tryClaim("t", 0))
+        assert(e.getMessage.contains("ambiguous"), e.getMessage)
+        // only now may the stale 200 go out, on the discarded socket
+        release.countDown()
+        assert(!c.tryClaim("t", 1), "post-timeout request must pair with ITS answer")
+        assert(!c.tryClaim("t", 2))
+      } finally c.close()
+    } finally { release.countDown(); srv.stop(0) }
+  }
+
+  test("HTTP: a dropped idle connection reconnects once; a dead server throws") {
+    val srv = new CatalogHttpServer()
+    val c = new HttpCatalogArbiter("127.0.0.1", srv.port)
+    try {
+      c.observed("t", -1)
+      assert(c.tryClaim("t", 0))
+      c.published("t", 0)
+      // kill the transport under the client, server stays up: the
+      // next request reconnects transparently (unambiguous failure)
+      c.close()
+      assert(c.tryClaim("t", 1))
+      c.published("t", 1)
+      assert(srv.headOf("t") === 1)
+      // server gone entirely → loud failure, never a silent grant
+      srv.close()
+      c.close()
+      intercept[CommitArbitrationException](c.tryClaim("t", 2))
+    } finally { c.close(); srv.close() }
+  }
+
   test("TXN: multi-table claims are all-or-nothing; re-entry consumes once") {
     val inner = new graft.sources.InProcessCatalogArbiter()
     val w1 = new graft.sources.OwnedArbiter(inner, "w1")
@@ -497,6 +397,13 @@ class WireArbiterSpec extends AnyFunSuite {
         s"t1 must hold every row exactly once: $t1")
       assert(t2 === Seq(0L, 1L, 2L, 3L, 4L),
         s"t2 must hold every transaction row exactly once: $t2")
+      // a table name with a quote and a backslash serializes in the
+      // transaction body, which JSON-escapes it (the per-table routes
+      // URL-encode it instead)
+      val odd = """/tmp/odd "quoted"\path"""
+      assert(arb.tryClaimAll(Seq(odd -> 0)), "a fresh table's v0 claim must win")
+      arb.published(odd, 0)
+      assert(srv.headOf(odd) === 0)
     } finally {
       LakeTable.setCommitArbiter(p1, RenameArbiter)
       LakeTable.setCommitArbiter(p2, RenameArbiter)
