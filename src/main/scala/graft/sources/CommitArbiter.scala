@@ -363,261 +363,213 @@ final class CatalogHttpServer(
   def viewLocationOf(ns: Seq[String], name: String): Option[String] =
     Option(viewReg.get((ns, name)))
 
-  server.createContext("/v1/tables/", new com.sun.net.httpserver.HttpHandler {
-    override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-      def respond(status: Int, body: String): Unit = {
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      try {
-        // RAW path: getPath pre-decodes percent escapes, and decoding
-        // again would corrupt table names containing '%' themselves
-        val path = ex.getRequestURI.getRawPath
-        require(ex.getRequestMethod == "POST" && path.endsWith("/commits"),
-          s"unsupported route ${ex.getRequestMethod} $path")
-        val table = java.net.URLDecoder.decode(
-          path.stripPrefix("/v1/tables/").stripSuffix("/commits"), "UTF-8")
-        require(table.nonEmpty, "empty table name")
-        val doc = mapper.readTree(ex.getRequestBody)
-        def arr(k: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
-          val n = doc.get(k)
-          if (n == null || n.isNull) Nil
-          else { val it = n.elements(); Iterator.continually(it)
-            .takeWhile(_.hasNext).map(_.next()).toSeq }
+  /** JSON string literal of `s0` (quotes and backslashes escaped). */
+  private def jStr(s0: String): String =
+    "\"" + s0.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private def jArr(parts: Seq[String]): String = parts.map(jStr).mkString("[", ",", "]")
+  /** Error body. Dynamic names route through the escaper: a quote or
+    * backslash in a table name must not produce an invalid JSON body
+    * the client's parser chokes on, masking the real status. */
+  private def jErr(m: String): String = s"""{"error":${jStr(m)}}"""
+
+  private def respond(
+      ex: com.sun.net.httpserver.HttpExchange, status: Int, body: String): Unit = {
+    val bytes = body.getBytes("UTF-8")
+    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.sendResponseHeaders(status, bytes.length.toLong)
+    ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  /** Serve `prefix` with `serve`. A route under `auth` answers 401
+    * unless [[authorized]]; anything `serve` throws answers 400 with
+    * the message as the error body. */
+  private def route(prefix: String, auth: Boolean = false)(
+      serve: com.sun.net.httpserver.HttpExchange => Unit): Unit =
+    server.createContext(prefix, new com.sun.net.httpserver.HttpHandler {
+      override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit =
+        try {
+          if (auth && !authorized(ex)) respond(ex, 401, unauthorizedBody)
+          else serve(ex)
+        } catch {
+          case e: Throwable =>
+            val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+            try respond(ex, 400, jErr(m)) catch { case _: Throwable => () }
         }
-        // requirements check first (the REST contract: assertions
-        // gate the updates); assert-table-version is the only shape
-        // this catalog needs — the claim CAS re-checks it atomically
-        val required = arr("requirements").map { r =>
-          require(r.get("type").asText == "assert-table-version",
-            s"unknown requirement type ${r.get("type")}")
-          r.get("version").asInt
-        }
-        required.find(base => inner.headOf(table) != base) match {
-          case Some(base) =>
-            // a failed assertion gates the updates (the REST
-            // contract); the claim CAS below re-checks atomically
-            // anyway, this pre-check just answers the idiomatic 409
-            respond(409,
-              s"""{"error":"requirement failed: table is not at version $base"}""")
-          case None =>
-            val results = arr("updates").map { u =>
-              val v = u.get("version").asInt
-              // claims may carry the writer identity (re-entrant for
-              // its own transaction claims); absent = anonymous
-              val owner = Option(u.get("owner")).map(_.asText).getOrElse("")
-              u.get("action").asText match {
-                case "observed-head" => inner.observed(table, v); true
-                case "claim-version" => inner.tryClaim(table, v, owner)
-                case "publish-version" => inner.published(table, v); true
-                case "abandon-version" => inner.abandon(table, v); true
-                case other => sys.error(s"unknown action '$other'")
-              }
-            }
-            if (results.forall(identity)) respond(200, """{"ok":true}""")
-            else respond(409,
-              """{"error":"commit conflict: version claim refused"}""")
-        }
-      } catch {
-        case e: Throwable =>
-          val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-          try respond(400, s"""{"error":"$m"}""") catch { case _: Throwable => () }
-      }
+    })
+
+  /** The `{"namespace":[..],"name":..}` identifier under key `k` of a
+    * request body. */
+  private def identOf(
+      doc: com.fasterxml.jackson.databind.JsonNode, k: String): (Seq[String], String) = {
+    val n = doc.get(k)
+    require(n != null && !n.isNull, s"missing '$k'")
+    val nsNode = n.get("namespace")
+    require(nsNode != null && nsNode.isArray && nsNode.size > 0,
+      s"missing '$k.namespace'")
+    val it = nsNode.elements()
+    val ns = Iterator.continually(it).takeWhile(_.hasNext)
+      .map(_.next().asText).toSeq
+    val name = n.get("name")
+    require(name != null && name.asText.nonEmpty, s"missing '$k.name'")
+    (ns, name.asText)
+  }
+
+  route("/v1/tables/") { ex =>
+    // RAW path: getPath pre-decodes percent escapes, and decoding
+    // again would corrupt table names containing '%' themselves
+    val path = ex.getRequestURI.getRawPath
+    require(ex.getRequestMethod == "POST" && path.endsWith("/commits"),
+      s"unsupported route ${ex.getRequestMethod} $path")
+    val table = java.net.URLDecoder.decode(
+      path.stripPrefix("/v1/tables/").stripSuffix("/commits"), "UTF-8")
+    require(table.nonEmpty, "empty table name")
+    val doc = mapper.readTree(ex.getRequestBody)
+    def arr(k: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+      val n = doc.get(k)
+      if (n == null || n.isNull) Nil
+      else { val it = n.elements(); Iterator.continually(it)
+        .takeWhile(_.hasNext).map(_.next()).toSeq }
     }
-  })
+    // requirements check first (the REST contract: assertions
+    // gate the updates); assert-table-version is the only shape
+    // this catalog needs — the claim CAS re-checks it atomically
+    val required = arr("requirements").map { r =>
+      require(r.get("type").asText == "assert-table-version",
+        s"unknown requirement type ${r.get("type")}")
+      r.get("version").asInt
+    }
+    required.find(base => inner.headOf(table) != base) match {
+      case Some(base) =>
+        // a failed assertion gates the updates (the REST
+        // contract); the claim CAS below re-checks atomically
+        // anyway, this pre-check just answers the idiomatic 409
+        respond(ex, 409,
+          s"""{"error":"requirement failed: table is not at version $base"}""")
+      case None =>
+        val results = arr("updates").map { u =>
+          val v = u.get("version").asInt
+          // claims may carry the writer identity (re-entrant for
+          // its own transaction claims); absent = anonymous
+          val owner = Option(u.get("owner")).map(_.asText).getOrElse("")
+          u.get("action").asText match {
+            case "observed-head" => inner.observed(table, v); true
+            case "claim-version" => inner.tryClaim(table, v, owner)
+            case "publish-version" => inner.published(table, v); true
+            case "abandon-version" => inner.abandon(table, v); true
+            case other => sys.error(s"unknown action '$other'")
+          }
+        }
+        if (results.forall(identity)) respond(ex, 200, """{"ok":true}""")
+        else respond(ex, 409,
+          """{"error":"commit conflict: version claim refused"}""")
+    }
+  }
   // MULTI-TABLE TRANSACTION (Iceberg REST `/v1/transactions/commit`):
   // per-table requirements + claim updates, applied ALL-OR-NOTHING —
   // any failed assertion or contended slot answers 409 with nothing
   // taken. Only claim-version updates are transactional (the atomic
   // primitive); publishes follow per table through the standard route.
-  server.createContext("/v1/transactions/commit",
-    new com.sun.net.httpserver.HttpHandler {
-      override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        def respond(status: Int, body: String): Unit = {
-          val bytes = body.getBytes("UTF-8")
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(status, bytes.length.toLong)
-          ex.getResponseBody.write(bytes)
-          ex.close()
-        }
-        try {
-          require(ex.getRequestMethod == "POST",
-            s"unsupported method ${ex.getRequestMethod}")
-          val doc = mapper.readTree(ex.getRequestBody)
-          val owner = Option(doc.get("owner")).map(_.asText).getOrElse("")
-          require(owner.nonEmpty, "transaction needs a writer identity ('owner')")
-          val changes = {
-            val n = doc.get("table-changes")
-            require(n != null && n.isArray, "missing 'table-changes'")
-            val it = n.elements()
-            Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
-          }
-          val claims = changes.map { c =>
-            val table = c.get("table").asText
-            val ups = c.get("updates").elements()
-            val up = Iterator.continually(ups).takeWhile(_.hasNext)
-              .map(_.next()).toSeq
-            require(up.size == 1 && up.head.get("action").asText == "claim-version",
-              s"transaction updates for $table must be exactly one claim-version")
-            val next = up.head.get("version").asInt
-            // explicit base assertions must agree with the claim CAS
-            val reqs = Option(c.get("requirements")).toSeq
-              .flatMap { r => val i = r.elements()
-                Iterator.continually(i).takeWhile(_.hasNext).map(_.next()).toSeq }
-            reqs.foreach { r =>
-              require(r.get("type").asText == "assert-table-version",
-                s"unknown requirement type ${r.get("type")}")
-              require(r.get("version").asInt == next - 1,
-                s"requirement/claim mismatch for $table: " +
-                  s"assert ${r.get("version").asInt} vs claim $next")
-            }
-            table -> next
-          }
-          if (inner.tryClaimAll(owner, claims)) respond(200, """{"ok":true}""")
-          else respond(409,
-            """{"error":"transaction conflict: a table moved or is claimed"}""")
-        } catch {
-          case e: Throwable =>
-            val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-              .replace("\\", "\\\\").replace("\"", "\\\"")
-            try respond(400, s"""{"error":"$m"}""") catch { case _: Throwable => () }
-        }
+  route("/v1/transactions/commit") { ex =>
+    require(ex.getRequestMethod == "POST",
+      s"unsupported method ${ex.getRequestMethod}")
+    val doc = mapper.readTree(ex.getRequestBody)
+    val owner = Option(doc.get("owner")).map(_.asText).getOrElse("")
+    require(owner.nonEmpty, "transaction needs a writer identity ('owner')")
+    val changes = {
+      val n = doc.get("table-changes")
+      require(n != null && n.isArray, "missing 'table-changes'")
+      val it = n.elements()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+    }
+    val claims = changes.map { c =>
+      val table = c.get("table").asText
+      val ups = c.get("updates").elements()
+      val up = Iterator.continually(ups).takeWhile(_.hasNext)
+        .map(_.next()).toSeq
+      require(up.size == 1 && up.head.get("action").asText == "claim-version",
+        s"transaction updates for $table must be exactly one claim-version")
+      val next = up.head.get("version").asInt
+      // explicit base assertions must agree with the claim CAS
+      val reqs = Option(c.get("requirements")).toSeq
+        .flatMap { r => val i = r.elements()
+          Iterator.continually(i).takeWhile(_.hasNext).map(_.next()).toSeq }
+      reqs.foreach { r =>
+        require(r.get("type").asText == "assert-table-version",
+          s"unknown requirement type ${r.get("type")}")
+        require(r.get("version").asInt == next - 1,
+          s"requirement/claim mismatch for $table: " +
+            s"assert ${r.get("version").asInt} vs claim $next")
       }
-    })
+      table -> next
+    }
+    if (inner.tryClaimAll(owner, claims)) respond(ex, 200, """{"ok":true}""")
+    else respond(ex, 409,
+      """{"error":"transaction conflict: a table moved or is claimed"}""")
+  }
   // RENAME (Iceberg REST's POST /v1/tables/rename): pure registry
   // indirection — the storage location never moves, so the absolute
   // paths inside manifests stay valid. This is exactly the capability
   // the path-addressed catalog refuses by design (no indirection
   // layer); the service IS the indirection layer.
-  server.createContext("/v1/tables/rename", new com.sun.net.httpserver.HttpHandler {
-    override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-      def respond(status: Int, body: String): Unit = {
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      try {
-        if (!authorized(ex)) { respond(401, unauthorizedBody); return }
-        require(ex.getRequestMethod == "POST",
-          s"unsupported method ${ex.getRequestMethod}")
-        val doc = mapper.readTree(ex.getRequestBody)
-        def identOf(k: String): (Seq[String], String) = {
-          val n = doc.get(k)
-          require(n != null && !n.isNull, s"missing '$k'")
-          val nsNode = n.get("namespace")
-          require(nsNode != null && nsNode.isArray && nsNode.size > 0,
-            s"missing '$k.namespace'")
-          val it = nsNode.elements()
-          val ns = Iterator.continually(it).takeWhile(_.hasNext)
-            .map(_.next().asText).toSeq
-          val name = n.get("name")
-          require(name != null && name.asText.nonEmpty, s"missing '$k.name'")
-          (ns, name.asText)
-        }
-        val (sNs, sName) = identOf("source")
-        val (dNs, dName) = identOf("destination")
-        // check-then-move under the shared cross-registry monitor: two
-        // concurrent renames onto the same destination must not both
-        // win, and a racing view CREATE must not slip between the
-        // viewReg check and the table insert
-        // dynamic names route through the escaper: a quote or
-        // backslash in a table name must not produce an invalid JSON
-        // body the client's parser chokes on, masking the real status
-        def jErr(m: String): String =
-          s"""{"error":"${m.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
-        tableReg.synchronized {
-          if (!namespaces.contains(dNs))
-            respond(404, jErr(s"no such namespace: ${dNs.mkString(".")}"))
-          else Option(tableReg.get((sNs, sName))) match {
-            case None => respond(404,
-              jErr(s"no such table: ${sNs.mkString(".")}.$sName"))
-            case Some(loc) =>
-              if (viewReg.containsKey((dNs, dName)) ||
-                  tableReg.putIfAbsent((dNs, dName), loc) != null)
-                respond(409,
-                  jErr(s"table exists: ${dNs.mkString(".")}.$dName"))
-              else {
-                tableReg.remove((sNs, sName))
-                respond(200, """{"ok":true}""")
-              }
+  route("/v1/tables/rename", auth = true) { ex =>
+    require(ex.getRequestMethod == "POST",
+      s"unsupported method ${ex.getRequestMethod}")
+    val doc = mapper.readTree(ex.getRequestBody)
+    val (sNs, sName) = identOf(doc, "source")
+    val (dNs, dName) = identOf(doc, "destination")
+    // check-then-move under the shared cross-registry monitor: two
+    // concurrent renames onto the same destination must not both
+    // win, and a racing view CREATE must not slip between the
+    // viewReg check and the table insert
+    tableReg.synchronized {
+      if (!namespaces.contains(dNs))
+        respond(ex, 404, jErr(s"no such namespace: ${dNs.mkString(".")}"))
+      else Option(tableReg.get((sNs, sName))) match {
+        case None => respond(ex, 404,
+          jErr(s"no such table: ${sNs.mkString(".")}.$sName"))
+        case Some(loc) =>
+          if (viewReg.containsKey((dNs, dName)) ||
+              tableReg.putIfAbsent((dNs, dName), loc) != null)
+            respond(ex, 409,
+              jErr(s"table exists: ${dNs.mkString(".")}.$dName"))
+          else {
+            tableReg.remove((sNs, sName))
+            respond(ex, 200, """{"ok":true}""")
           }
-        }
-      } catch {
-        case e: Throwable =>
-          val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-          try respond(400, s"""{"error":"$m"}""") catch { case _: Throwable => () }
       }
     }
-  })
+  }
   // VIEW RENAME (round-16 #8): the same registry indirection as
   // /v1/tables/rename — the view's storage directory never moves (the
   // stored SQL resolves its references through the saved context, not
   // through the view's own location, so nothing dangles), only the
   // resolution row does. Same shared monitor, same cross-registry 409
   // (a destination name held by a TABLE refuses too).
-  server.createContext("/v1/views/rename", new com.sun.net.httpserver.HttpHandler {
-    override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-      def respond(status: Int, body: String): Unit = {
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      try {
-        if (!authorized(ex)) { respond(401, unauthorizedBody); return }
-        require(ex.getRequestMethod == "POST",
-          s"unsupported method ${ex.getRequestMethod}")
-        val doc = mapper.readTree(ex.getRequestBody)
-        def identOf(k: String): (Seq[String], String) = {
-          val n = doc.get(k)
-          require(n != null && !n.isNull, s"missing '$k'")
-          val nsNode = n.get("namespace")
-          require(nsNode != null && nsNode.isArray && nsNode.size > 0,
-            s"missing '$k.namespace'")
-          val it = nsNode.elements()
-          val ns = Iterator.continually(it).takeWhile(_.hasNext)
-            .map(_.next().asText).toSeq
-          val name = n.get("name")
-          require(name != null && name.asText.nonEmpty, s"missing '$k.name'")
-          (ns, name.asText)
-        }
-        val (sNs, sName) = identOf("source")
-        val (dNs, dName) = identOf("destination")
-        def jErr(m: String): String =
-          s"""{"error":"${m.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
-        tableReg.synchronized {
-          if (!namespaces.contains(dNs))
-            respond(404, jErr(s"no such namespace: ${dNs.mkString(".")}"))
-          else Option(viewReg.get((sNs, sName))) match {
-            case None => respond(404,
-              jErr(s"no such view: ${sNs.mkString(".")}.$sName"))
-            case Some(loc) =>
-              if (tableReg.containsKey((dNs, dName)) ||
-                  viewReg.putIfAbsent((dNs, dName), loc) != null)
-                respond(409,
-                  jErr(s"view exists: ${dNs.mkString(".")}.$dName"))
-              else {
-                viewReg.remove((sNs, sName))
-                respond(200, """{"ok":true}""")
-              }
+  route("/v1/views/rename", auth = true) { ex =>
+    require(ex.getRequestMethod == "POST",
+      s"unsupported method ${ex.getRequestMethod}")
+    val doc = mapper.readTree(ex.getRequestBody)
+    val (sNs, sName) = identOf(doc, "source")
+    val (dNs, dName) = identOf(doc, "destination")
+    tableReg.synchronized {
+      if (!namespaces.contains(dNs))
+        respond(ex, 404, jErr(s"no such namespace: ${dNs.mkString(".")}"))
+      else Option(viewReg.get((sNs, sName))) match {
+        case None => respond(ex, 404,
+          jErr(s"no such view: ${sNs.mkString(".")}.$sName"))
+        case Some(loc) =>
+          if (tableReg.containsKey((dNs, dName)) ||
+              viewReg.putIfAbsent((dNs, dName), loc) != null)
+            respond(ex, 409,
+              jErr(s"view exists: ${dNs.mkString(".")}.$dName"))
+          else {
+            viewReg.remove((sNs, sName))
+            respond(ex, 200, """{"ok":true}""")
           }
-        }
-      } catch {
-        case e: Throwable =>
-          val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-          try respond(400, s"""{"error":"$m"}""") catch { case _: Throwable => () }
       }
     }
-  })
+  }
 
   // ---- READ PLANE routes (Iceberg-REST's discovery/load shape) ----
   //   GET    /v1/namespaces                     → list namespaces
@@ -630,200 +582,179 @@ final class CatalogHttpServer(
   //            the server-held head pointer
   //   DELETE /v1/namespaces/{ns}/tables/{t}     → unregister (storage
   //            stays — REST drop without purge)
-  server.createContext("/v1/namespaces", new com.sun.net.httpserver.HttpHandler {
-    override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-      def respond(status: Int, body: String): Unit = {
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      def jStr(s0: String): String =
-        "\"" + s0.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      def jArr(parts: Seq[String]): String =
-        parts.map(jStr).mkString("[", ",", "]")
-      try {
-        if (!authorized(ex)) { respond(401, unauthorizedBody); return }
-        val method = ex.getRequestMethod
-        // RAW segments: decode each exactly once; the ns segment packs
-        // multi-level namespaces with the unit separator
-        val segs = ex.getRequestURI.getRawPath.stripPrefix("/v1/namespaces")
-          .split("/").filter(_.nonEmpty).toSeq
-          .map(java.net.URLDecoder.decode(_, "UTF-8"))
-        def nsOf(seg: String): Seq[String] = seg.split('\u001f').toSeq
-        lazy val qparams: Map[String, String] =
-          Option(ex.getRequestURI.getRawQuery).toSeq
-            .flatMap(_.split("&")).flatMap(_.split("=", 2) match {
-              case Array(k, v) => Some(
-                java.net.URLDecoder.decode(k, "UTF-8") ->
-                  java.net.URLDecoder.decode(v, "UTF-8"))
-              case _ => None
-            }).toMap
-        (method, segs) match {
-          case ("GET", Seq()) =>
-            // same pageToken/pageSize mechanics as the tables listing
-            val all = namespaces.iterator().asScala.toSeq
-              .sortBy(_.mkString("\u001f"))
-            val keyOf = (n: Seq[String]) => n.mkString("\u001f")
-            val after = qparams.get("pageToken")
-              .map(t => all.dropWhile(keyOf(_) <= t)).getOrElse(all)
-            val size = qparams.get("pageSize").flatMap(v =>
-              scala.util.Try(v.toInt).toOption).filter(_ > 0)
-            val page = size.map(after.take).getOrElse(after)
-            val next = size.filter(_ < after.size).flatMap(_ =>
-              page.lastOption).map(n =>
-                s""","next-page-token":${jStr(keyOf(n))}""").getOrElse("")
-            respond(200, page.map(jArr(_))
-              .mkString("""{"namespaces":[""", ",", s"]$next}"))
-          case ("POST", Seq()) =>
-            val doc = mapper.readTree(ex.getRequestBody)
-            val n = doc.get("namespace")
-            require(n != null && n.isArray && n.size > 0, "missing 'namespace'")
-            val it = n.elements()
-            val parts = Iterator.continually(it).takeWhile(_.hasNext)
-              .map(_.next().asText).toSeq
-            if (namespaces.add(parts)) respond(200, """{"ok":true}""")
-            else respond(409, s"""{"error":${jStr(s"namespace exists: ${parts.mkString(".")}")}}""")
-          case ("GET", Seq(ns, "tables")) =>
-            val parts = nsOf(ns)
-            if (!namespaces.contains(parts))
-              respond(404, s"""{"error":${jStr(s"no such namespace: ${parts.mkString(".")}")}}""")
-            else {
-              // PAGINATION (Iceberg REST's pageToken/pageSize): names
-              // sort stably, the token is the last name served — a
-              // registry of 10⁴ tables no longer ships one giant JSON
-              val all = tableReg.keySet.iterator().asScala.toSeq
-                .filter(_._1 == parts).map(_._2).sorted
-              val afterTok = all.indexWhere(qparams.get("pageToken").contains) match {
-                case -1 => qparams.get("pageToken")
-                  .map(t => all.dropWhile(_ <= t)).getOrElse(all)
-                case i => all.drop(i + 1)
-              }
-              val size = qparams.get("pageSize").flatMap(v =>
-                scala.util.Try(v.toInt).toOption).filter(_ > 0)
-              val page = size.map(afterTok.take).getOrElse(afterTok)
-              val next = size.filter(_ < afterTok.size).flatMap(_ =>
-                page.lastOption).map(t => s""","next-page-token":${jStr(t)}""")
-                .getOrElse("")
-              respond(200, page
-                .map(t => s"""{"namespace":${jArr(parts)},"name":${jStr(t)}}""")
-                .mkString("""{"identifiers":[""", ",", s"]$next}"))
-            }
-          case ("POST", Seq(ns, "tables")) =>
-            val parts = nsOf(ns)
-            require(namespaces.contains(parts),
-              s"no such namespace: ${parts.mkString(".")}")
-            val doc = mapper.readTree(ex.getRequestBody)
-            val name = {
-              val n = doc.get("name")
-              require(n != null && !n.isNull && n.asText.nonEmpty, "missing 'name'")
-              n.asText
-            }
-            val loc = Option(doc.get("location")).filterNot(_.isNull).map(_.asText)
-              .orElse(warehouse.map(w =>
-                (w.stripSuffix("/") +: parts :+ name).mkString("/")))
-              .getOrElse(sys.error(
-                "no 'location' given and the catalog service has no warehouse"))
-            // tables and views share the namespace — a name held by
-            // EITHER registry refuses the other (the view route makes
-            // the mirror check). The cross-registry check-then-insert
-            // runs under ONE shared monitor (round-15 ADVICE): without
-            // it a concurrent CREATE TABLE and CREATE VIEW of the same
-            // name could both pass the other registry's check and both
-            // succeed.
-            val taken = tableReg.synchronized {
-              viewReg.containsKey((parts, name)) ||
-                tableReg.putIfAbsent((parts, name), loc) != null
-            }
-            if (taken)
-              respond(409, s"""{"error":${jStr(s"table exists: ${parts.mkString(".")}.$name")}}""")
-            else respond(200, s"""{"metadata-location":${jStr(loc)}}""")
-          case ("GET", Seq(ns, "tables", t)) =>
-            val parts = nsOf(ns)
-            Option(tableReg.get((parts, t))) match {
-              case Some(loc) =>
-                // CONDITIONAL GET (round-12 verdict ask #6's caching
-                // half): the entity is (location, head version) — a
-                // poller re-sending the ETag gets an empty 304 until
-                // a commit moves the head, so "is there anything
-                // new?" costs zero body bytes per poll
-                val head = inner.headOf(loc)
-                val etag = "\"" + s"v$head-${loc.hashCode.toHexString}" + "\""
-                ex.getResponseHeaders.set("ETag", etag)
-                if (Option(ex.getRequestHeaders.getFirst("If-None-Match"))
-                    .contains(etag)) {
-                  ex.sendResponseHeaders(304, -1L)
-                  ex.close()
-                } else respond(200,
-                  s"""{"metadata-location":${jStr(loc)},""" +
-                    s""""version":$head}""")
-              case None => respond(404,
-                s"""{"error":${jStr(s"no such table: ${parts.mkString(".")}.$t")}}""")
-            }
-          case ("DELETE", Seq(ns, "tables", t)) =>
-            if (tableReg.remove((nsOf(ns), t)) != null) respond(200, """{"ok":true}""")
-            else respond(404, s"""{"error":${jStr(s"no such table: $t")}}""")
-          // ---- VIEWS (S16c): same registry contract as tables ----
-          case ("GET", Seq(ns, "views")) =>
-            val parts = nsOf(ns)
-            if (!namespaces.contains(parts))
-              respond(404, s"""{"error":${jStr(s"no such namespace: ${parts.mkString(".")}")}}""")
-            else respond(200, viewReg.keySet.iterator().asScala.toSeq
-              .filter(_._1 == parts).map(_._2).sorted
-              .map(v => s"""{"namespace":${jArr(parts)},"name":${jStr(v)}}""")
-              .mkString("""{"identifiers":[""", ",", "]}"))
-          case ("POST", Seq(ns, "views")) =>
-            val parts = nsOf(ns)
-            require(namespaces.contains(parts),
-              s"no such namespace: ${parts.mkString(".")}")
-            val doc = mapper.readTree(ex.getRequestBody)
-            val name = {
-              val n = doc.get("name")
-              require(n != null && !n.isNull && n.asText.nonEmpty, "missing 'name'")
-              n.asText
-            }
-            val loc = Option(doc.get("location")).filterNot(_.isNull).map(_.asText)
-              .orElse(warehouse.map(w =>
-                (w.stripSuffix("/") +: parts :+ name).mkString("/")))
-              .getOrElse(sys.error(
-                "no 'location' given and the catalog service has no warehouse"))
-            // views and tables share the namespace: a name registered
-            // as either refuses the other (the local catalog's rule) —
-            // under the SAME monitor as the table route, so the two
-            // cross-registry checks can never interleave (round-15
-            // ADVICE's TOCTOU)
-            val taken = tableReg.synchronized {
-              tableReg.containsKey((parts, name)) ||
-                viewReg.putIfAbsent((parts, name), loc) != null
-            }
-            if (taken)
-              respond(409, s"""{"error":${jStr(s"view exists: ${parts.mkString(".")}.$name")}}""")
-            else respond(200, s"""{"metadata-location":${jStr(loc)}}""")
-          case ("GET", Seq(ns, "views", v)) =>
-            val parts = nsOf(ns)
-            Option(viewReg.get((parts, v))) match {
-              case Some(loc) =>
-                // the current view version is read from shared storage
-                // (the GraftViews version files ARE the metadata plane)
-                respond(200, s"""{"metadata-location":${jStr(loc)},""" +
-                  s""""version":${GraftViews.latest(loc).getOrElse(-1)}}""")
-              case None => respond(404,
-                s"""{"error":${jStr(s"no such view: ${parts.mkString(".")}.$v")}}""")
-            }
-          case ("DELETE", Seq(ns, "views", v)) =>
-            if (viewReg.remove((nsOf(ns), v)) != null) respond(200, """{"ok":true}""")
-            else respond(404, s"""{"error":${jStr(s"no such view: $v")}}""")
-          case (m, p) => sys.error(s"unsupported route $m /v1/namespaces/${p.mkString("/")}")
+  route("/v1/namespaces", auth = true) { ex =>
+    val method = ex.getRequestMethod
+    // RAW segments: decode each exactly once; the ns segment packs
+    // multi-level namespaces with the unit separator
+    val segs = ex.getRequestURI.getRawPath.stripPrefix("/v1/namespaces")
+      .split("/").filter(_.nonEmpty).toSeq
+      .map(java.net.URLDecoder.decode(_, "UTF-8"))
+    def nsOf(seg: String): Seq[String] = seg.split('\u001f').toSeq
+    lazy val qparams: Map[String, String] =
+      Option(ex.getRequestURI.getRawQuery).toSeq
+        .flatMap(_.split("&")).flatMap(_.split("=", 2) match {
+          case Array(k, v) => Some(
+            java.net.URLDecoder.decode(k, "UTF-8") ->
+              java.net.URLDecoder.decode(v, "UTF-8"))
+          case _ => None
+        }).toMap
+    (method, segs) match {
+      case ("GET", Seq()) =>
+        // same pageToken/pageSize mechanics as the tables listing
+        val all = namespaces.iterator().asScala.toSeq
+          .sortBy(_.mkString("\u001f"))
+        val keyOf = (n: Seq[String]) => n.mkString("\u001f")
+        val after = qparams.get("pageToken")
+          .map(t => all.dropWhile(keyOf(_) <= t)).getOrElse(all)
+        val size = qparams.get("pageSize").flatMap(v =>
+          scala.util.Try(v.toInt).toOption).filter(_ > 0)
+        val page = size.map(after.take).getOrElse(after)
+        val next = size.filter(_ < after.size).flatMap(_ =>
+          page.lastOption).map(n =>
+            s""","next-page-token":${jStr(keyOf(n))}""").getOrElse("")
+        respond(ex, 200, page.map(jArr(_))
+          .mkString("""{"namespaces":[""", ",", s"]$next}"))
+      case ("POST", Seq()) =>
+        val doc = mapper.readTree(ex.getRequestBody)
+        val n = doc.get("namespace")
+        require(n != null && n.isArray && n.size > 0, "missing 'namespace'")
+        val it = n.elements()
+        val parts = Iterator.continually(it).takeWhile(_.hasNext)
+          .map(_.next().asText).toSeq
+        if (namespaces.add(parts)) respond(ex, 200, """{"ok":true}""")
+        else respond(ex, 409, jErr(s"namespace exists: ${parts.mkString(".")}"))
+      case ("GET", Seq(ns, "tables")) =>
+        val parts = nsOf(ns)
+        if (!namespaces.contains(parts))
+          respond(ex, 404, jErr(s"no such namespace: ${parts.mkString(".")}"))
+        else {
+          // PAGINATION (Iceberg REST's pageToken/pageSize): names
+          // sort stably, the token is the last name served — a
+          // registry of 10⁴ tables no longer ships one giant JSON
+          val all = tableReg.keySet.iterator().asScala.toSeq
+            .filter(_._1 == parts).map(_._2).sorted
+          val afterTok = all.indexWhere(qparams.get("pageToken").contains) match {
+            case -1 => qparams.get("pageToken")
+              .map(t => all.dropWhile(_ <= t)).getOrElse(all)
+            case i => all.drop(i + 1)
+          }
+          val size = qparams.get("pageSize").flatMap(v =>
+            scala.util.Try(v.toInt).toOption).filter(_ > 0)
+          val page = size.map(afterTok.take).getOrElse(afterTok)
+          val next = size.filter(_ < afterTok.size).flatMap(_ =>
+            page.lastOption).map(t => s""","next-page-token":${jStr(t)}""")
+            .getOrElse("")
+          respond(ex, 200, page
+            .map(t => s"""{"namespace":${jArr(parts)},"name":${jStr(t)}}""")
+            .mkString("""{"identifiers":[""", ",", s"]$next}"))
         }
-      } catch {
-        case e: Throwable =>
-          val m = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-          try respond(400, s"""{"error":"$m"}""") catch { case _: Throwable => () }
-      }
+      case ("POST", Seq(ns, "tables")) =>
+        val parts = nsOf(ns)
+        require(namespaces.contains(parts),
+          s"no such namespace: ${parts.mkString(".")}")
+        val doc = mapper.readTree(ex.getRequestBody)
+        val name = {
+          val n = doc.get("name")
+          require(n != null && !n.isNull && n.asText.nonEmpty, "missing 'name'")
+          n.asText
+        }
+        val loc = Option(doc.get("location")).filterNot(_.isNull).map(_.asText)
+          .orElse(warehouse.map(w =>
+            (w.stripSuffix("/") +: parts :+ name).mkString("/")))
+          .getOrElse(sys.error(
+            "no 'location' given and the catalog service has no warehouse"))
+        // tables and views share the namespace — a name held by
+        // EITHER registry refuses the other (the view route makes
+        // the mirror check). The cross-registry check-then-insert
+        // runs under ONE shared monitor (round-15 ADVICE): without
+        // it a concurrent CREATE TABLE and CREATE VIEW of the same
+        // name could both pass the other registry's check and both
+        // succeed.
+        val taken = tableReg.synchronized {
+          viewReg.containsKey((parts, name)) ||
+            tableReg.putIfAbsent((parts, name), loc) != null
+        }
+        if (taken)
+          respond(ex, 409, jErr(s"table exists: ${parts.mkString(".")}.$name"))
+        else respond(ex, 200, s"""{"metadata-location":${jStr(loc)}}""")
+      case ("GET", Seq(ns, "tables", t)) =>
+        val parts = nsOf(ns)
+        Option(tableReg.get((parts, t))) match {
+          case Some(loc) =>
+            // CONDITIONAL GET (round-12 verdict ask #6's caching
+            // half): the entity is (location, head version) — a
+            // poller re-sending the ETag gets an empty 304 until
+            // a commit moves the head, so "is there anything
+            // new?" costs zero body bytes per poll
+            val head = inner.headOf(loc)
+            val etag = "\"" + s"v$head-${loc.hashCode.toHexString}" + "\""
+            ex.getResponseHeaders.set("ETag", etag)
+            if (Option(ex.getRequestHeaders.getFirst("If-None-Match"))
+                .contains(etag)) {
+              ex.sendResponseHeaders(304, -1L)
+              ex.close()
+            } else respond(ex, 200,
+              s"""{"metadata-location":${jStr(loc)},""" +
+                s""""version":$head}""")
+          case None => respond(ex, 404,
+            jErr(s"no such table: ${parts.mkString(".")}.$t"))
+        }
+      case ("DELETE", Seq(ns, "tables", t)) =>
+        if (tableReg.remove((nsOf(ns), t)) != null) respond(ex, 200, """{"ok":true}""")
+        else respond(ex, 404, jErr(s"no such table: $t"))
+      // ---- VIEWS (S16c): same registry contract as tables ----
+      case ("GET", Seq(ns, "views")) =>
+        val parts = nsOf(ns)
+        if (!namespaces.contains(parts))
+          respond(ex, 404, jErr(s"no such namespace: ${parts.mkString(".")}"))
+        else respond(ex, 200, viewReg.keySet.iterator().asScala.toSeq
+          .filter(_._1 == parts).map(_._2).sorted
+          .map(v => s"""{"namespace":${jArr(parts)},"name":${jStr(v)}}""")
+          .mkString("""{"identifiers":[""", ",", "]}"))
+      case ("POST", Seq(ns, "views")) =>
+        val parts = nsOf(ns)
+        require(namespaces.contains(parts),
+          s"no such namespace: ${parts.mkString(".")}")
+        val doc = mapper.readTree(ex.getRequestBody)
+        val name = {
+          val n = doc.get("name")
+          require(n != null && !n.isNull && n.asText.nonEmpty, "missing 'name'")
+          n.asText
+        }
+        val loc = Option(doc.get("location")).filterNot(_.isNull).map(_.asText)
+          .orElse(warehouse.map(w =>
+            (w.stripSuffix("/") +: parts :+ name).mkString("/")))
+          .getOrElse(sys.error(
+            "no 'location' given and the catalog service has no warehouse"))
+        // views and tables share the namespace: a name registered
+        // as either refuses the other (the local catalog's rule) —
+        // under the SAME monitor as the table route, so the two
+        // cross-registry checks can never interleave (round-15
+        // ADVICE's TOCTOU)
+        val taken = tableReg.synchronized {
+          tableReg.containsKey((parts, name)) ||
+            viewReg.putIfAbsent((parts, name), loc) != null
+        }
+        if (taken)
+          respond(ex, 409, jErr(s"view exists: ${parts.mkString(".")}.$name"))
+        else respond(ex, 200, s"""{"metadata-location":${jStr(loc)}}""")
+      case ("GET", Seq(ns, "views", v)) =>
+        val parts = nsOf(ns)
+        Option(viewReg.get((parts, v))) match {
+          case Some(loc) =>
+            // the current view version is read from shared storage
+            // (the GraftViews version files ARE the metadata plane)
+            respond(ex, 200, s"""{"metadata-location":${jStr(loc)},""" +
+              s""""version":${GraftViews.latest(loc).getOrElse(-1)}}""")
+          case None => respond(ex, 404,
+            jErr(s"no such view: ${parts.mkString(".")}.$v"))
+        }
+      case ("DELETE", Seq(ns, "views", v)) =>
+        if (viewReg.remove((nsOf(ns), v)) != null) respond(ex, 200, """{"ok":true}""")
+        else respond(ex, 404, jErr(s"no such view: $v"))
+      case (m, p) => sys.error(s"unsupported route $m /v1/namespaces/${p.mkString("/")}")
     }
-  })
+  }
   server.setExecutor(null) // default executor: one dispatch thread
   server.start()
 

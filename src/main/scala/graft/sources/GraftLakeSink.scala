@@ -39,7 +39,12 @@ import org.apache.spark.sql.types.StructType
   *
   * Append-mode only: Complete mode would overwrite the table per
   * epoch, which is [[LakeTable.overwrite]] semantics a caller should
-  * opt into explicitly via foreachBatch. */
+  * opt into explicitly via foreachBatch.
+  *
+  * Micro-batch only: each batch's writer factory carries a fresh
+  * [[GraftParquetWriteBundle]] whose broadcast Hadoop conf is
+  * released when that epoch commits or aborts, so a continuous-mode
+  * factory reused across epochs would outlive its conf. */
 class GraftLakeStreamingWrite(
     path: String, queryId: String, schema: StructType, spark: SparkSession)
     extends StreamingWrite {
@@ -48,12 +53,24 @@ class GraftLakeStreamingWrite(
   // collide, and a dead run's half-written dirs are orphan-GC food
   private val writeId = java.util.UUID.randomUUID().toString
 
+  // bundles handed out since the last commit/abort; their broadcast
+  // confs are released once the epoch's tasks have all finished
+  private var open: List[GraftParquetWriteBundle] = Nil
+
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftLakeWriterFactory(
-      s"$path/data", writeId, new GraftParquetWriteBundle(spark, schema))
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val bundle = new GraftParquetWriteBundle(spark, schema)
+    synchronized { open ::= bundle }
+    new GraftLakeWriterFactory(s"$path/data", writeId, bundle)
+  }
+
+  private def releaseBundles(): Unit = {
+    val done = synchronized { val b = open; open = Nil; b }
+    done.foreach(_.release())
+  }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    releaseBundles()
     val files = messages.collect { case GraftFilesMessage(fs) => fs }.flatten.toSeq
     LakeTable.commitStreamEpoch(
       SparkSession.active, path, files, schema, queryId, epochId)
@@ -64,11 +81,13 @@ class GraftLakeStreamingWrite(
         LakeTable.maybeAutoCompactAfterEpoch(SparkSession.active, path, v))
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    releaseBundles()
     messages.collect { case GraftFilesMessage(fs) => fs }.flatten.foreach { f =>
       try Files.deleteIfExists(Paths.get(f))
       catch { case _: Exception => () } // best effort; orphan GC covers the rest
     }
+  }
 }
 
 /** Files one committed sink task wrote (empty for rowless tasks — an
@@ -76,7 +95,8 @@ class GraftLakeStreamingWrite(
 case class GraftFilesMessage(files: Seq[String]) extends WriterCommitMessage
 
 class GraftLakeWriterFactory(
-    dataRoot: String, writeId: String, bundle: GraftParquetWriteBundle)
+    dataRoot: String, writeId: String,
+    private[graft] val bundle: GraftParquetWriteBundle)
     extends StreamingDataWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =

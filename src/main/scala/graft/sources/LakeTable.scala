@@ -672,6 +672,12 @@ object LakeTable {
       : Iterator[(String, Map[String, Seq[Double]], Long)] =
     files.map(f => footerStatsOf(f, conf))
 
+  /** One file's footer stats. The read options are built from the
+    * caller's `conf`: `ParquetFileReader.open(InputFile)` without
+    * options builds a fresh `new Configuration()` per file, which
+    * re-parses `core-default.xml` and `core-site.xml` for every
+    * footer (a quarter of a small append's wall time) and ignores
+    * any parquet read setting the session carries. */
   private def footerStatsOf(
       file: String, conf: org.apache.hadoop.conf.Configuration)
       : (String, Map[String, Seq[Double]], Long) = {
@@ -679,7 +685,8 @@ object LakeTable {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), conf))
+        new org.apache.hadoop.fs.Path(file), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try {
       val md = reader.getFooter
       val blocks = md.getBlocks.asScala.toSeq
@@ -1414,28 +1421,27 @@ object LakeTable {
     }
   }
 
-  /** Apply the declared sort order to a data batch: range-partition +
+  /** Apply the declared sort order `order` (the table's
+    * [[sortOrderOf]], read by the caller) to a data batch: range-partition +
     * in-partition sort on the declared columns, preserving the
     * batch's own parallelism (a small append must not shatter into
     * shuffle-partition-count slivers). Batches missing a sort column
     * (older schema vintage) pass through unsorted — conservative, the
     * stats just stay loose for those files. */
-  private def applySortOrder(df: DataFrame, path: String): DataFrame = {
-    val order = sortOrderOf(path)
+  private def applySortOrder(df: DataFrame, order: Seq[String]): DataFrame =
     if (order.isEmpty || !order.forall(df.columns.contains)) df
     else {
       val n = math.max(1, df.rdd.getNumPartitions)
       df.repartitionByRange(n, order.map(col): _*)
         .sortWithinPartitions(order.map(col): _*)
     }
-  }
 
   private def stageManifest(
       df0: DataFrame, path: String,
       partitionCols: Seq[String] = Nil, kind: String = "data",
       pspec: Seq[PartitionTransform] = Nil,
       maxRecordsPerFile: Option[Long] = None): Option[ManifestRef] = {
-    val df = if (kind == "data") applySortOrder(df0, path) else df0
+    val df = if (kind == "data") applySortOrder(df0, sortOrderOf(path)) else df0
     // CHECK constraints gate every DATA batch before any file lands
     // (delete-key files are row SUBTRACTIONS — nothing to check)
     if (kind == "data") enforceConstraints(df, path, activeConstraints(path))
@@ -1470,6 +1476,11 @@ object LakeTable {
     if (!Files.exists(p)) Map.empty
     else readJsonLines(p).map(n => n.get("k").asText -> n.get("v").asText).toMap
   }
+
+  /** The table's properties at its current head (empty for a table
+    * with no version yet). */
+  private def headPropsOf(path: String): Map[String, String] =
+    latestVersion(path).map(tablePropsOf(path, _)).getOrElse(Map.empty)
 
   /** SET TBLPROPERTIES: a metadata-only commit carrying the merged
     * map. `write.sort-order` is NOT a sidecar property — it has its
@@ -1550,9 +1561,15 @@ object LakeTable {
     * The batch files were written by sink tasks (no driver hop for
     * data, the 100 TB shape) under `schema`, so they are read under
     * it (all nullable, as a parquet read surfaces them) and no
-    * footer-inference job runs. This driver-side step runs the SAME
-    * commit-time machinery as a batch append over exactly those
-    * files: CHECK constraints (one job over the batch), the footer
+    * footer-inference job runs. That read-back frame is built only
+    * when a CHECK constraint or the sort order needs the rows: an
+    * unconstrained, unsorted table takes the field-id paths from the
+    * schema itself, and building the frame anyway would list the
+    * epoch's files on every micro-batch. The constraints and retry
+    * properties are read once, from the base the epoch validated
+    * against, and the sort order once per epoch. This driver-side
+    * step runs the SAME commit-time machinery as a batch append over
+    * exactly those files: CHECK constraints (one job over the batch), the footer
     * stats (per-file min/max + row counts, [[collectStats]]), the
     * declared sort order (a sorted table re-sorts the batch — one
     * bounded rewrite of the micro-batch, never of the table), and the
@@ -1580,14 +1597,19 @@ object LakeTable {
     var fresh: Option[(ManifestRef, Seq[String], Map[String, Int])] =
       if (files0.isEmpty) None
       else {
-        val batch = spark.read.schema(deepNullable(schema)).parquet(files0: _*)
-        enforceConstraints(batch, path, cons)
-        val cols = writePaths(batch.schema)
+        // the read-back frame lists the epoch's files, so it is built
+        // only when a CHECK constraint or a sort order needs the rows;
+        // its schema is the file-source-normalized write schema
+        val readSchema = deepNullable(schema)
+        val order = sortOrderOf(path)
+        lazy val batch = spark.read.schema(readSchema).parquet(files0: _*)
+        if (cons.nonEmpty) enforceConstraints(batch, path, cons)
+        val cols = writePaths(readSchema)
         val (_, fieldIds) = schemaForWrite(path, base0, cols)
-        if (sortOrderOf(path).nonEmpty) {
+        if (order.nonEmpty) {
           // standing write order: rewrite THIS batch sorted (cost
           // bounded by the micro-batch), drop the raw epoch files
-          val entries = writeDataFiles(applySortOrder(batch, path), path)
+          val entries = writeDataFiles(applySortOrder(batch, order), path)
           dropFiles(files0)
           if (entries.isEmpty) None
           else Some((writeManifest(path, entries, "data", fieldIds), cols, fieldIds))
@@ -1605,12 +1627,10 @@ object LakeTable {
     // publish with retry/rebase; EVERY attempt rechecks the replay
     // ledger, the constraint set, AND the field-id schema against the
     // rebased base
-    // retry properties read ONCE before the loop: the plane check
-    // pins table properties as unchanged between base and head, and
-    // re-reading inside the loop costs two metadata reads per pass of
-    // the contended-commit hot path (round-13 advice)
-    val maxCommitRetries = commitRetriesOf(path)
-    val commitRetryWaitMs = commitWaitMsOf(path)
+    // retry properties read ONCE, from the base the epoch validated
+    // against (a rebase re-reads constraints, not the retry policy)
+    val (maxCommitRetries, commitRetryWaitMs) =
+      retryPolicy(if (base0 >= 0) tablePropsOf(path, base0) else Map.empty)
     var attempt = 0
     while (true) {
       val base = latestVersion(path).getOrElse(-1)
@@ -2119,8 +2139,7 @@ object LakeTable {
     // pins table properties as unchanged between base and head, and
     // re-reading inside the loop costs two metadata reads per pass of
     // the contended-commit hot path (round-13 advice)
-    val maxCommitRetries = commitRetriesOf(path)
-    val commitRetryWaitMs = commitWaitMsOf(path)
+    val (maxCommitRetries, commitRetryWaitMs) = retryPolicy(headPropsOf(path))
     var attempt = 0
     while (true) {
       val base = latestVersion(path).getOrElse(-1)
@@ -2218,8 +2237,7 @@ object LakeTable {
     // pins table properties as unchanged between base and head, and
     // re-reading inside the loop costs two metadata reads per pass of
     // the contended-commit hot path (round-13 advice)
-    val maxCommitRetries = commitRetriesOf(path)
-    val commitRetryWaitMs = commitWaitMsOf(path)
+    val (maxCommitRetries, commitRetryWaitMs) = retryPolicy(headPropsOf(path))
     var head = base
     var extra: Seq[ManifestRef] = Nil
     while (true) {
@@ -2303,8 +2321,7 @@ object LakeTable {
     * default copy-on-write. The SQL boundary routes on this; the
     * library ops stay explicit (callers of [[delete]] asked for CoW). */
   private[graft] def dmlModeOf(path: String, kind: String): String =
-    latestVersion(path).map(tablePropsOf(path, _)).getOrElse(Map.empty)
-      .getOrElse(s"write.$kind.mode", "copy-on-write")
+    headPropsOf(path).getOrElse(s"write.$kind.mode", "copy-on-write")
 
   /** WRITE-AUDIT-PUBLISH (Iceberg's WAP workflow): stage the batch as
     * data files WITHOUT committing, run the audit over exactly those
@@ -2508,23 +2525,20 @@ object LakeTable {
 
   private val MaxCommitRetries = 5
 
-  /** Iceberg's `commit.retry.num-retries` / `commit.retry.min-wait-ms`
-    * table properties, read at retry time (validated where every
-    * property enters): a contended table can buy more attempts and a
-    * gentler backoff without touching code. Defaults match the
-    * hardcoded round-2 values. */
-  private def commitRetriesOf(path: String): Int =
-    latestVersion(path).map(tablePropsOf(path, _)).getOrElse(Map.empty)
-      // validation accepts any non-negative Long; clamp here so a
-      // value in (Int.MaxValue, Long.MaxValue] means "effectively
-      // unlimited" instead of a NumberFormatException mid-retry
-      .get("commit.retry.num-retries")
+  /** (retries, min wait ms) from Iceberg's `commit.retry.num-retries`
+    * / `commit.retry.min-wait-ms` table properties in `props` (the
+    * map the caller already read; validated where every property
+    * enters): a contended table can buy more attempts and a gentler
+    * backoff without touching code. Defaults match the hardcoded
+    * round-2 values. */
+  private def retryPolicy(props: Map[String, String]): (Int, Long) = (
+    // validation accepts any non-negative Long; clamp here so a
+    // value in (Int.MaxValue, Long.MaxValue] means "effectively
+    // unlimited" instead of a NumberFormatException mid-retry
+    props.get("commit.retry.num-retries")
       .map(v => math.min(v.toLong, Int.MaxValue.toLong).toInt)
-      .getOrElse(MaxCommitRetries)
-
-  private def commitWaitMsOf(path: String): Long =
-    latestVersion(path).map(tablePropsOf(path, _)).getOrElse(Map.empty)
-      .get("commit.retry.min-wait-ms").map(_.toLong).getOrElse(20L)
+      .getOrElse(MaxCommitRetries),
+    props.get("commit.retry.min-wait-ms").map(_.toLong).getOrElse(20L))
 
   /** Read a snapshot (default: latest). Planning is METADATA-ONLY and
     * O(#manifests): each manifest covers exactly its immutable commit

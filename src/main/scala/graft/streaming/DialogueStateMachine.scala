@@ -138,6 +138,12 @@ object DialogueStateMachine {
       .orderBy("dia_id")
   }
 
+  /** The state encoder of both stateful processors, built once per
+    * JVM: `Encoders.product` derives it through Scala reflection,
+    * which serializes on a global lock, and `init` runs once per task
+    * per micro-batch. */
+  private lazy val DialogueStateEncoder = Encoders.product[DialogueState]
+
   /** Spark 4 arbitrary-state API (transformWithState): the SAME
     * transition function under a StatefulProcessor with typed
     * ValueState — the forward-looking form of T1–T5 (requires the
@@ -149,7 +155,7 @@ object DialogueStateMachine {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[DialogueState](
-        "dialogue", Encoders.product[DialogueState], TTLConfig.NONE)
+        "dialogue", DialogueStateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(
         key: Long, rows: Iterator[TurnEvent],
@@ -201,7 +207,7 @@ object DialogueStateMachine {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[DialogueState](
-        "dialogue", Encoders.product[DialogueState], TTLConfig.NONE)
+        "dialogue", DialogueStateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(
         key: Long, rows: Iterator[TimedTurn],

@@ -247,16 +247,26 @@ class GraftParquetWriter private[sql] (w: execution.datasources.OutputWriter) {
   * behind a serializable facade. This is exactly the writer the
   * engine's FileFormatWriter drives — a streaming sink task using it
   * produces files byte-identical in format to a batch write, with no
-  * reimplemented parquet layer. */
+  * reimplemented parquet layer.
+  *
+  * The job conf rides a BROADCAST, not the task closure: a streaming
+  * sink builds one bundle per micro-batch, and a conf inside the
+  * closure (a few hundred entries) would be serialized into every
+  * batch's task binary and deserialized again by every sink task. A
+  * broadcast is written once and read once per executor JVM (in
+  * local mode the driver's own copy, never deserialized). The owner
+  * calls [[release]] once the epoch the bundle wrote has committed
+  * or aborted. */
 class GraftParquetWriteBundle(
     @transient spark: SparkSession, schema: types.StructType)
     extends Serializable {
 
-  private val (factory, conf) = {
+  private[spark] val (factory, conf) = {
     val job = org.apache.hadoop.mapreduce.Job.getInstance(GraftSqlShim.hadoopConf(spark))
     val f = new execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(spark.asInstanceOf[classic.SparkSession], job, Map.empty, schema)
-    (f, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+    (f, spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)))
   }
 
   /** Open `file` for writing on this task (any JVM). */
@@ -265,7 +275,12 @@ class GraftParquetWriteBundle(
     val attempt = new TaskAttemptID(
       new TaskID(new JobID("graftlake-stream", 0), TaskType.MAP, partitionId),
       (taskId % Int.MaxValue).toInt)
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf.value, attempt)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf.value.value, attempt)
     new GraftParquetWriter(factory.newInstance(file, schema, ctx))
   }
+
+  /** Driver side, after the last task using this bundle finished:
+    * destroy the broadcast conf on the driver and every executor. */
+  def release(): Unit = conf.destroy()
 }

@@ -146,6 +146,26 @@ class FooterStatsSpec extends AnyFunSuite {
         s"row groups carry stats (got ${stats.get("v")})")
   }
 
+  test("footer reads build their parquet read options from the caller's conf") {
+    val p = "/tmp/graft_test/footer_stats_conf"
+    SparkSpec.rmdir(p)
+    spark.range(10).select(col("id").as("k")).coalesce(1).write.parquet(p)
+    val file = new java.io.File(p).listFiles()
+      .map(_.toString).filter(_.endsWith(".parquet")).head
+    // the session's conf, recording every key read through it
+    val read = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val conf = new org.apache.hadoop.conf.Configuration(
+        spark.sessionState.newHadoopConf()) {
+      override def get(name: String): String = { read.add(name); super.get(name) }
+    }
+    val (_, stats, rows) = LakeTable.footerStatsBatch(Iterator(file), conf).next()
+    assert(rows == 10L && stats("k") == Seq(0.0, 9.0))
+    // a fresh per-file Configuration would answer this key instead
+    // (and re-parse core-default.xml / core-site.xml for every footer)
+    assert(read.contains("parquet.strings.signed-min-max.enabled"),
+      s"parquet read options must come from the caller's conf; read: $read")
+  }
+
   test("the distributed branch past the driver bound agrees with the driver loop") {
     val p1 = "/tmp/graft_test/footer_stats_drv"
     val p2 = "/tmp/graft_test/footer_stats_dist"

@@ -164,6 +164,63 @@ class GraftLakeSinkSpec extends AnyFunSuite {
     assert(got.agg(sum("id")).head().getLong(0) === (1L to 30L).sum)
   }
 
+  test("the sink's task closure carries no Hadoop conf; epochs release its broadcast") {
+    val root = "/tmp/graft_sink_spec_closure"
+    SparkSpec.rmdir(root)
+    val table = s"$root/table"
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("score", "double")
+    val write = new graft.sources.GraftLakeStreamingWrite(table, "q", schema, spark)
+    val writeInfo = new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+      override def numPartitions(): Int = 1
+    }
+    def serialized(o: AnyRef): Array[Byte] = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o); out.close()
+      bytes.toByteArray
+    }
+    def deserialized[T](b: Array[Byte]): T =
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b))
+        .readObject().asInstanceOf[T]
+    val confBytes = serialized(new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())).length
+    def released(f: graft.sources.GraftLakeWriterFactory): Boolean = {
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (org.apache.spark.BroadcastShim.held(spark.sparkContext, f.bundle) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      !org.apache.spark.BroadcastShim.held(spark.sparkContext, f.bundle)
+    }
+
+    // epoch 0 commits: the factory goes through Java serialization
+    // like a task closure, and the copy writes the epoch's file
+    val f0 = write.createStreamingWriterFactory(writeInfo)
+      .asInstanceOf[graft.sources.GraftLakeWriterFactory]
+    val f0Bytes = serialized(f0)
+    info(s"serialized writer factory: ${f0Bytes.length} B; " +
+      s"one serialized Hadoop Configuration: $confBytes B")
+    assert(f0Bytes.length < confBytes / 8,
+      s"the writer factory (${f0Bytes.length} B) must not carry the job conf " +
+        s"($confBytes B serialized)")
+    val w = deserialized[graft.sources.GraftLakeWriterFactory](f0Bytes)
+      .createWriter(0, 0L, 0L)
+    (1L to 5L).foreach(i => w.write(org.apache.spark.sql.catalyst.InternalRow(i, i * 0.5)))
+    val msg = w.commit()
+    w.close()
+    assert(org.apache.spark.BroadcastShim.held(spark.sparkContext, f0.bundle))
+    write.commit(0L, Array(msg))
+    assert(released(f0), "a committed epoch must leave no live bundle broadcast")
+    val got = LakeTable.read(spark, table)
+    assert(got.count() === 5)
+    assert(got.agg(sum("id")).head().getLong(0) === 15L)
+
+    // epoch 1 aborts: its bundle is released too
+    val f1 = write.createStreamingWriterFactory(writeInfo)
+      .asInstanceOf[graft.sources.GraftLakeWriterFactory]
+    write.abort(1L, Array.empty)
+    assert(released(f1), "an aborted epoch must leave no live bundle broadcast")
+  }
+
   test("auto-compact property: small epochs trigger a fold; ledger and lineage intact") {
     val root = "/tmp/graft_sink_spec_autocompact"
     SparkSpec.rmdir(root)
