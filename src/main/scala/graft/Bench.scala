@@ -74,14 +74,8 @@ object Bench {
     // point is the opposite — full attribution per query.
     if (!cold) {
       val t0 = System.nanoTime()
-      try {
-        graft.etl.Preprocess.prestageShared(spark, sfDir)
-        graft.llm.Dedup.prestageShared(spark, sfDir)
-        graft.sources.LakeTable.prestageShared(spark, sfDir)
-        graft.llm.TextAnalysis.prestageShared(spark, sfDir)
-        graft.streaming.StreamJoin.prestageShared(spark, sfDir)
-        graft.ops.Relational.prestageShared(spark, sfDir)
-      } catch { case e: Throwable => System.err.println(s"[bench] prestage: $e") }
+      try Harness.prestageAll(spark, sfDir)
+      catch { case e: Throwable => System.err.println(s"[bench] prestage: $e") }
       System.err.println(
         f"[bench] prestage (shared frames, untimed) ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
@@ -147,14 +141,7 @@ object Bench {
       .sortBy { case (n, _) => (if (n.startsWith("stream_")) 0 else 1, n) }
       .filter(t => only.forall(_.contains(t._1)))
       .map { case (name, fn) =>
-      if (cold) {
-        graft.llm.Dedup.clearSharedCaches()
-        graft.etl.Preprocess.clearSharedCaches()
-        graft.sources.LakeTable.clearSharedCaches()
-        graft.llm.TextAnalysis.clearSharedCaches()
-        graft.streaming.StreamJoin.clearSharedCaches()
-        graft.ops.Relational.clearSharedCaches()
-      }
+      if (cold) Harness.clearAll()
       // between-query hygiene: retired streaming state never rides
       // into the next query's timing (no-op when nothing is loaded)
       graft.Util.drainStreamState()

@@ -32,4 +32,27 @@ object Harness {
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     extra.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
   }
+
+  /** Build every shared materialization the queries reuse (MinHash
+    * pairs and labels, dialogue corpus, lake lifecycle tables, ...),
+    * in dependency order, before a timed or checked pass. */
+  def prestageAll(spark: SparkSession, sfDir: String): Unit = {
+    etl.Preprocess.prestageShared(spark, sfDir)
+    llm.Dedup.prestageShared(spark, sfDir)
+    sources.LakeTable.prestageShared(spark, sfDir)
+    llm.TextAnalysis.prestageShared(spark, sfDir)
+    streaming.StreamJoin.prestageShared(spark, sfDir)
+    ops.Relational.prestageShared(spark, sfDir)
+  }
+
+  /** Drop every shared materialization, so the next consumer rebuilds
+    * it and pays its full cost (Bench's COLD mode). */
+  def clearAll(): Unit = {
+    llm.Dedup.clearSharedCaches()
+    etl.Preprocess.clearSharedCaches()
+    sources.LakeTable.clearSharedCaches()
+    llm.TextAnalysis.clearSharedCaches()
+    streaming.StreamJoin.clearSharedCaches()
+    ops.Relational.clearSharedCaches()
+  }
 }

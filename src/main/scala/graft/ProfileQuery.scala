@@ -95,14 +95,8 @@ object ProfileQuery {
         }
       }
     })
-    try { // same untimed prestage as Bench
-      graft.etl.Preprocess.prestageShared(spark, sfDir)
-      graft.llm.Dedup.prestageShared(spark, sfDir)
-      graft.sources.LakeTable.prestageShared(spark, sfDir)
-      graft.llm.TextAnalysis.prestageShared(spark, sfDir)
-      graft.streaming.StreamJoin.prestageShared(spark, sfDir)
-      graft.ops.Relational.prestageShared(spark, sfDir)
-    } catch { case e: Throwable => System.err.println(s"[profile] prestage: $e") }
+    try Harness.prestageAll(spark, sfDir) // same untimed prestage as Bench
+    catch { case e: Throwable => System.err.println(s"[profile] prestage: $e") }
     println(f"${"query"}%-30s ${"sec"}%8s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"taskSec"}%8s ${"inMB"}%8s ${"shRdMB"}%8s ${"shWrMB"}%8s")
     names.foreach { name =>

@@ -2375,8 +2375,9 @@ object SparkEntry {
       """SELECT event_type, count(*) AS n, round(sum(value), 6) AS sum_amount
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     // lake_schema_evolution: v0 = evens (no channel column), v1 =
-    // odds with the evolved column; the mergeSchema read must surface
-    // v0 rows as channel=null (folded to 'legacy')
+    // odds with the evolved column; the read's by-name union of the
+    // generations must null-extend v0 rows as channel=null (folded to
+    // 'legacy')
     "lake_schema_evolution" ->
       """WITH un AS (
         |  SELECT value, NULL AS channel FROM events WHERE event_id % 2 = 0

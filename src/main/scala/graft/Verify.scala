@@ -38,14 +38,8 @@ object Verify {
     // multi-second shared build (round-7 verdict #1 — the build
     // otherwise lands on whichever consumer the pool schedules first).
     if (only.isEmpty) {
-      try {
-        etl.Preprocess.prestageShared(spark, sfDir)
-        llm.Dedup.prestageShared(spark, sfDir)
-        sources.LakeTable.prestageShared(spark, sfDir)
-        llm.TextAnalysis.prestageShared(spark, sfDir)
-        streaming.StreamJoin.prestageShared(spark, sfDir)
-        ops.Relational.prestageShared(spark, sfDir)
-      } catch { case e: Throwable => System.err.println(s"[verify] prestage: $e") }
+      try Harness.prestageAll(spark, sfDir)
+      catch { case e: Throwable => System.err.println(s"[verify] prestage: $e") }
     }
     val futures = SparkEntry.queries.toSeq.filter(t => selected(t._1)).map { case (name, fn) =>
       scala.concurrent.Future {

@@ -103,8 +103,9 @@ class GraftLakeSource extends TableProvider with DataSourceRegister
       new StructType()
     else
       // the library read's schema IS the V2 table schema (union across
-      // commit generations, renames/drops resolved) — computed on
-      // metadata + parquet footers only, no data scan
+      // commit generations, renames/drops resolved) — computed from
+      // table metadata and each commit dir's schema record, no data
+      // scan (only a dir written without a record infers its footers)
       LakeTable.read(spark, GraftLakeSource.pathOf(options),
         GraftLakeSource.versionOf(options)).schema
   }

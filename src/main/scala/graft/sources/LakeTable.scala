@@ -254,13 +254,7 @@ object LakeTable {
     * directory; the single part file is moved out and the scaffolding
     * removed). Metadata-plane only. */
   private def writeSingleParquet(
-      spark: SparkSession, df: DataFrame, dest: java.nio.file.Path,
-      // seed the per-path schema memo only for files that are READ
-      // BACK through it (sidecars: tombstone store, partition stats);
-      // manifest/list parquet goes through its own readers, so seeding
-      // those paths is dead memo growth for the JVM's lifetime
-      // (round-16 ADVICE)
-      seedSchema: Boolean = true): Unit = {
+      spark: SparkSession, df: DataFrame, dest: java.nio.file.Path): Unit = {
     val tmp = dest.getParent.resolve(s"_pq_${java.util.UUID.randomUUID()}")
     df.coalesce(1).write.parquet(tmp.toString)
     val part = {
@@ -271,14 +265,36 @@ object LakeTable {
     }
     Files.move(part, dest)
     graft.Util.rmRecursive(tmp.toString)
-    // the writer KNOWS the file's schema — seed the memo so the very
-    // first read never pays a footer-inference job (sidecars are
-    // written once and read right back in the apply/stats planes).
-    // file-source reads surface every column nullable — RECURSIVELY
-    // (nested struct/array/map element nullability too) — so the
-    // seeded schema must match what inference would return
-    if (seedSchema) dirSchemaMemo.put(dest.toString, deepNullable(df.schema))
   }
+
+  /** Where a writer records the file schema of `target`, so no read
+    * plan opens a footer to learn it: inside a commit dir
+    * (`<dir>/_graft_schema.json`; Spark's file listing skips names
+    * starting with `_`), or next to a single parquet sidecar
+    * (`<file>.schema.json`). */
+  private def schemaRecordOf(target: String): java.nio.file.Path =
+    if (target.endsWith(".parquet")) Paths.get(s"$target.schema.json")
+    else Paths.get(target, "_graft_schema.json")
+
+  /** Record the schema of the files written at `target`. File-source
+    * reads surface every column nullable, recursively, so the record
+    * holds [[deepNullable]] of the written schema: what footer
+    * inference would return. Written before the files become
+    * reachable (a commit publishes, a sidecar moves into place). */
+  private def writeSchemaRecord(
+      target: String, schema: org.apache.spark.sql.types.StructType): Unit =
+    Files.writeString(schemaRecordOf(target), deepNullable(schema).json)
+
+  /** A parquet reader carrying the schema recorded for `target`, or an
+    * inferring one when none was recorded: commits written before
+    * records existed, and `add_files`/`snapshot` imports, whose files
+    * live outside the table (the engine never writes into such a dir). */
+  private def recordedReader(
+      spark: SparkSession, target: String): org.apache.spark.sql.DataFrameReader =
+    try spark.read.schema(org.apache.spark.sql.types.DataType
+      .fromJson(Files.readString(schemaRecordOf(target)))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+    catch { case _: java.nio.file.NoSuchFileException => spark.read }
 
   /** Recursively nullable-normalize a schema the way file-source
     * inference does (StructType.asNullable is private[spark]). */
@@ -332,7 +348,7 @@ object LakeTable {
         entries.map(e =>
           ManifestRow(e.file, e.base, e.stats, e.bytes, e.bloom, e.rows, e.frid,
             if (pinSeqs) e.seq else -1)).toDF(),
-        mf, seedSchema = false)
+        mf)
     } else {
     def jbloom(m: Map[String, Seq[Long]]): String =
       m.toSeq.sortBy(_._1).map { case (c, vs) =>
@@ -796,15 +812,11 @@ object LakeTable {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dataDir)
     val files = Files.walk(Paths.get(dataDir)).iterator().asScala
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-    // the writer KNOWS the dir's schema — seed the memo so the first
-    // cachedSchemaScan of this commit dir never pays a footer-
-    // inference job (the sidecar writer already does this; profiled:
-    // 10 residual inference jobs per 5-lifecycle profile run landed
-    // here). ONLY for unpartitioned dirs: a partitioned dir's read
-    // schema carries layout columns whose types re-derive from the
-    // directory STRINGS, which the writer schema cannot predict.
-    if (partitionCols.isEmpty)
-      dirSchemaMemo.put(dataDir, deepNullable(df.schema))
+    // the files' own columns; partition columns, hive or hidden, live
+    // in the directory names and are typed from them at read
+    if (files.nonEmpty)
+      writeSchemaRecord(dataDir, org.apache.spark.sql.types.StructType(
+        df.schema.filterNot(f => partitionCols.exists(_.equalsIgnoreCase(f.name)))))
     val stats = collectStats(df.sparkSession, files)
     files.map { f =>
       // a file absent from the stats job produced no group = zero rows
@@ -958,7 +970,7 @@ object LakeTable {
           if (r.seq < 0) freshSeq else r.seq, r.nFiles, r.ranges, r.cols,
           r.pspec.map(t => PspecRow(t.source, t.kind, t.param)), r.partial,
           r.nRows, r.firstRowId)).toDF(),
-        staging.resolve("list.parquet"), seedSchema = false)
+        staging.resolve("list.parquet"))
     } else {
     val lines =
       if (refs.isEmpty)
@@ -1565,7 +1577,9 @@ object LakeTable {
     * when a CHECK constraint or the sort order needs the rows: an
     * unconstrained, unsorted table takes the field-id paths from the
     * schema itself, and building the frame anyway would list the
-    * epoch's files on every micro-batch. The constraints and retry
+    * epoch's files on every micro-batch. `schema` is also recorded in
+    * the epoch dir ([[writeSchemaRecord]]), so a later read of the
+    * epoch plans without opening a footer. The constraints and retry
     * properties are read once, from the base the epoch validated
     * against, and the sort order once per epoch. This driver-side
     * step runs the SAME commit-time machinery as a batch append over
@@ -1614,6 +1628,8 @@ object LakeTable {
           if (entries.isEmpty) None
           else Some((writeManifest(path, entries, "data", fieldIds), cols, fieldIds))
         } else {
+          files0.map(f => Paths.get(f).getParent.toString).distinct
+            .foreach(writeSchemaRecord(_, schema))
           val stats = collectStats(spark, files0)
           val entries = files0.sorted.map { f =>
             val (st, rows) = stats.getOrElse(f, (Map.empty[String, Seq[Double]], 0L))
@@ -2379,7 +2395,7 @@ object LakeTable {
     *
     * Refusals by name, each a correctness hole otherwise:
     * schema mismatch (the import would silently null-fold under the
-    * mergeSchema read), hidden-partitioning specs (dir-borne
+    * read's by-name union of generations), hidden-partitioning specs (dir-borne
     * partition values do not survive explicit file lists — the S11a
     * rule), CHECK constraints (the import is unvalidated data; a
     * constrained table must never acquire rows that bypassed the
@@ -2636,7 +2652,7 @@ object LakeTable {
         else parts.reduce(_.unionByName(_, allowMissingColumns = true))
       if (plan.deletes.isEmpty && !meta)
         union(plan.kept.groupBy(_.base).map { case (base, es) =>
-            projectToCurrent(fileScan(spark, base, es), es.head.cols, cur) } ++
+            projectToCurrent(dirScan(spark, base, es.map(_.file)), es.head.cols, cur) } ++
           whole.map(r => projectToCurrent(refScan(spark, r), r.cols, cur)))
       else {
         val (pos, dv, eq) = (plan.pos, plan.dv, plan.eq)
@@ -2649,7 +2665,7 @@ object LakeTable {
         // subtraction must stay sequence-exact across the fold
         def files(es: Seq[ManifestEntry]) =
           es.groupBy(e => (e.base, e.seq)).map { case ((base, sq), g) =>
-            tagged(fileScan(spark, base, g), g.head.cols, sq) }
+            tagged(dirScan(spark, base, g.map(_.file)), g.head.cols, sq) }
         val parts = files(plan.kept) ++ whole.flatMap(r =>
           if (r.partial) files(readManifest(r))
           else Seq(tagged(refScan(spark, r), r.cols, r.seq)))
@@ -2911,8 +2927,7 @@ object LakeTable {
 
   /** One parquet scan per manifest, over its whole commit dir (the
     * dir is immutable and covered 1:1 by the manifest, so dir scan ≡
-    * explicit file list without materializing the list). basePath
-    * reconstructs hive partition columns. */
+    * explicit file list without materializing the list). */
   private def refScan(spark: SparkSession, ref: ManifestRef): DataFrame =
     if (ref.partial)
       // a PARTIAL manifest (binpack re-manifest, consolidation) must
@@ -2920,62 +2935,23 @@ object LakeTable {
       // folded files (older versions reference them) and a dir scan
       // would count their rows twice. Grouped per ENTRY base — a
       // consolidated manifest spans commit dirs, and each group needs
-      // its own basePath for layout-column handling
-      readManifest(ref).groupBy(_.base).map { case (base, es) => fileScan(spark, base, es) }
+      // its own basePath and schema record
+      readManifest(ref).groupBy(_.base).map { case (base, es) =>
+        dirScan(spark, base, es.map(_.file)) }
         .reduce(_.unionByName(_, allowMissingColumns = true))
-    else dropHidden(cachedSchemaScan(spark, ref.base))
+    else dirScan(spark, ref.base, Seq(ref.base))
 
-  /** One parquet read over explicit entries of one commit dir: basePath
-    * reconstructs layout columns, mergeSchema spans the files'
-    * write-time schemas. */
-  private def fileScan(spark: SparkSession, base: String, es: Seq[ManifestEntry]): DataFrame =
-    dropHidden(spark.read
-      .option("mergeSchema", "true")
-      .option("basePath", base)
-      .parquet(es.map(_.file): _*))
+  /** The one parquet read of a commit dir, whole or an explicit file
+    * list under it: the schema its writer recorded
+    * ([[recordedReader]]), so planning opens no footer; basePath
+    * reconstructs layout columns from the directory names. */
+  private def dirScan(spark: SparkSession, base: String, paths: Seq[String]): DataFrame =
+    dropHidden(recordedReader(spark, base).option("basePath", base).parquet(paths: _*))
 
-  /** Commit-dir scans with the inferred schema MEMOIZED per dir
-    * (round-16 optimization, guide §2.4/§1.2): `spark.read.parquet`
-    * without a schema runs a footer-inference SPARK JOB on every
-    * call, and a lake lifecycle re-plans the same version dirs dozens
-    * of times — lake_catalog_sql alone ran 62 such jobs (profiled:
-    * `parquet at LakeTable.scala:2762`, ~24 ms each plus the driver
-    * resolve latency around every one). A commit dir is IMMUTABLE
-    * (UUID-named, stage-then-publish; GC removes dirs whole and a
-    * path is never reused), so the first inference per dir per JVM is
-    * exact forever after. The memo stores the RAW read schema —
-    * including reconstructed hive/hidden layout columns — so the
-    * memoized reader is bit-identical to the inferring one. Metadata
-    * only (a StructType per dir), never row data; cleared with the
-    * shared caches so COLD-mode attribution stays honest. */
-  private val dirSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def cachedSchemaScan(spark: SparkSession, base: String): DataFrame = {
-    val cached = dirSchemaMemo.get(base)
-    if (cached != null)
-      spark.read.schema(cached).option("basePath", base).parquet(base)
-    else {
-      val df = spark.read.option("basePath", base).parquet(base)
-      dirSchemaMemo.put(base, df.schema)
-      df
-    }
-  }
-
-  /** Single-SIDECAR-file variant of [[cachedSchemaScan]] (tombstone
-    * store, partition-stats parquet): the file is written once per
-    * version and never mutated, so its schema memoizes the same way.
-    * No basePath — a sidecar carries no layout columns. */
-  private[sources] def cachedSchemaFileRead(
-      spark: SparkSession, file: String): DataFrame = {
-    val cached = dirSchemaMemo.get(file)
-    if (cached != null) spark.read.schema(cached).parquet(file)
-    else {
-      val df = spark.read.parquet(file)
-      dirSchemaMemo.put(file, df.schema)
-      df
-    }
-  }
+  /** A single parquet sidecar (tombstone store, partition stats), read
+    * with the schema recorded next to it. */
+  private def sidecarRead(spark: SparkSession, file: java.nio.file.Path): DataFrame =
+    recordedReader(spark, file.toString).parquet(file.toString)
 
   // ---- ROW LINEAGE (Iceberg v3 _row_id, S10d) ----
 
@@ -4708,7 +4684,7 @@ object LakeTable {
     // ONE parquet scan — the driver never materializes the domain.
     if (Files.exists(partStatsParquetFile(path, v))) {
       partitionsSourceByPath.put(path, "stats")
-      return cachedSchemaFileRead(spark, partStatsParquetFile(path, v).toString)
+      return sidecarRead(spark, partStatsParquetFile(path, v))
         .select(col("partition"), col("record_count"),
           col("file_count"), col("total_bytes"))
         .orderBy("partition")
@@ -4804,7 +4780,7 @@ object LakeTable {
     * rule). */
   private def partStatsDf(spark: SparkSession, path: String, v: Int): DataFrame =
     if (Files.exists(partStatsParquetFile(path, v)))
-      cachedSchemaFileRead(spark, partStatsParquetFile(path, v).toString)
+      sidecarRead(spark, partStatsParquetFile(path, v))
         .select("partition", "record_count", "file_count", "total_bytes")
     else {
       import spark.implicits._
@@ -4909,9 +4885,12 @@ object LakeTable {
           s"${jstr("total_bytes")}:${tb.map(_.toString).getOrElse("null")}}"
       }.mkString("\n")
       Files.writeString(partStatsFile(path, v), body)
-    } else
-      writeSingleParquet(spark, stats.orderBy("partition"),
-        partStatsParquetFile(path, v))
+    } else {
+      val dest = partStatsParquetFile(path, v)
+      val sorted = stats.orderBy("partition")
+      writeSchemaRecord(dest.toString, sorted.schema)
+      writeSingleParquet(spark, sorted, dest)
+    }
     if (basis.isDefined) "incremental" else "full"
   }
 
@@ -4947,7 +4926,7 @@ object LakeTable {
       spark: SparkSession, path: String): Option[DataFrame] =
     latestVersion(path).flatMap { v =>
       (0 to v).reverse.find(b => Files.exists(cdcTombstonesFile(path, b)))
-        .map(b => cachedSchemaFileRead(spark, cdcTombstonesFile(path, b).toString))
+        .map(b => sidecarRead(spark, cdcTombstonesFile(path, b)))
     }
 
   /** Persist the tombstone store next to version `v`'s manifest list
@@ -4957,6 +4936,7 @@ object LakeTable {
       df: DataFrame, path: String, v: Int): Unit = {
     val dest = cdcTombstonesFile(path, v)
     Files.createDirectories(dest.getParent)
+    writeSchemaRecord(dest.toString, df.schema)
     writeSingleParquet(df.sparkSession, df, dest)
   }
 
@@ -5477,7 +5457,7 @@ object LakeTable {
     val dir = Paths.get(manifestsDir(path))
     Files.createDirectories(dir)
     val mf = dir.resolve(s"m-${java.util.UUID.randomUUID()}.parquet")
-    writeSingleParquet(spark, merged, mf, seedSchema = false)
+    writeSingleParquet(spark, merged, mf)
     ManifestRef(mf.toString, r.base, r.kind, r.seq, r.nFiles, r.ranges,
       r.cols, r.pspec, r.partial, r.nRows, r.firstRowId)
   }
@@ -8588,7 +8568,7 @@ object LakeTable {
       .select("event_id", "event_type", "var")
     overwrite(ev.filter(col("event_id") % 2L === 0L), path)
     // second generation adds a SECOND variant column; generation one
-    // must null-fold it under the mergeSchema read
+    // must null-fold it under the read's by-name union
     append(ev.filter(col("event_id") % 2L =!= 0L)
       .withColumn("extra", parse_json(to_json(struct(col("event_id").as("e"))))),
       path)
@@ -8983,7 +8963,6 @@ object LakeTable {
   private[graft] def clearSharedCaches(): Unit = {
     cowShared.clear(); lineageShared.clear(); appendShared.clear()
     morCompTwinShared.clear(); spjShared.clear()
-    dirSchemaMemo.clear()
   }
 
   /** Driver query: MERGE-ON-READ UPSERT — write events (v0), then
@@ -9082,10 +9061,11 @@ object LakeTable {
 
   /** Driver query: SCHEMA EVOLUTION end to end — v0 commits the
     * original 3-column shape, v1 appends rows carrying a NEW `channel`
-    * column, and the latest snapshot reads as ONE table (the manifest
-    * read path sets mergeSchema, so old files surface the new column
-    * as null — Delta/Iceberg's add-column semantics without a rewrite
-    * of existing data). The aggregate keys on the evolved column with
+    * column, and the latest snapshot reads as ONE table (the read
+    * unions the commit generations by name, null-extending missing
+    * columns, so old files surface the new column as null —
+    * Delta/Iceberg's add-column semantics without a rewrite of
+    * existing data). The aggregate keys on the evolved column with
     * nulls folded to 'legacy', so the oracle (a UNION of the two
     * generations over the source table) hash-verifies that no row lost
     * or invented a channel across the schema boundary. */
@@ -10489,6 +10469,9 @@ object LakeTable {
         val dest = cdcTombstonesFile(path, latest)
         if (!Files.exists(dest)) {
           Files.createDirectories(dest.getParent)
+          val rec = schemaRecordOf(cdcTombstonesFile(path, sv).toString)
+          if (Files.exists(rec)) Files.copy(rec, schemaRecordOf(dest.toString),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
           Files.copy(cdcTombstonesFile(path, sv), dest)
         }
       }

@@ -48,6 +48,12 @@ class AddFilesSpec extends AnyFunSuite {
       "v0 predates the import")
     // the stats job populated per-file rows → metadata count serves
     assert(out.agg(sum("k")).head().getLong(0) === (0L until 80L).sum)
+    // the import's dir lives outside the table: the engine records no
+    // schema there, and its files read by footer inference
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ext, "_graft_schema.json")))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+      LakeTable.entriesOf(p, 0).head.base, "_graft_schema.json")))
+    assert(out.schema.fieldNames.toSeq === Seq("k", "g", "v"))
   }
 
   test("ownership transfers: expire GC deletes imported files in place") {

@@ -107,4 +107,23 @@ class DynamicOverwriteSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("ambiguous"))
   }
+
+  test("hive-layout partition columns keep the types their directory names infer") {
+    val p = fresh("hive_types")
+    import spark.implicits._
+    // the files record only their own columns; `day` and `code` come
+    // back from the `col=value` dir names, typed by Spark's partition
+    // inference exactly as before records existed
+    LakeTable.overwritePartitioned(
+      Seq((1L, 20240101L, "007", 1.5), (2L, 20240102L, "010", 2.5))
+        .toDF("k", "day", "code", "v"), p, "day", "code")
+    val back = LakeTable.read(spark, p)
+    val types = back.schema.fields.map(f => f.name -> f.dataType).toMap
+    import org.apache.spark.sql.types._
+    assert(types === Map("k" -> LongType, "v" -> DoubleType,
+      "day" -> IntegerType, "code" -> IntegerType))
+    assert(back.select("k", "day", "code").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet ===
+      Set((1L, 20240101, 7), (2L, 20240102, 10)))
+  }
 }

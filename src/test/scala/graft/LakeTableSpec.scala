@@ -454,7 +454,7 @@ class LakeTableSpec extends AnyFunSuite {
       Seq((3L, 30.0, "web"), (4L, 40.0, "app")).toDF("k", "v", "channel"), p20) // v1: 3 cols
     val latest = LakeTable.read(spark, p20)
     assert(latest.columns.toSet === Set("k", "v", "channel"),
-      "mergeSchema read must surface the evolved column")
+      "the read's by-name union must surface the evolved column")
     val byK = latest.collect().map(r => r.getLong(0) -> Option(r.getString(2))).toMap
     assert(byK === Map(1L -> None, 2L -> None, 3L -> Some("web"), 4L -> Some("app")),
       s"old-generation rows must read channel=null, got $byK")
@@ -2402,5 +2402,102 @@ class LakeTableSpec extends AnyFunSuite {
     // the walk starts at main by contract
     val e = intercept[IllegalArgumentException](LakeTable.expireByPolicy(spark, bp))
     assert(e.getMessage.contains("main table"), e.getMessage)
+  }
+
+  test("planning a many-commit table reads schema records: no Spark job") {
+    val p = "/tmp/graft_test/lake_plan_jobs"
+    rmdir(p)
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    def jobsOf(body: => Unit): Int = {
+      val group = s"plan-jobs-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "lake read planning")
+      try body
+      finally {
+        spark.sparkContext.clearJobGroup()
+        org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+    def parquetIn(dir: String): Seq[String] = {
+      val ls = Files.list(Paths.get(dir))
+      try ls.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+      finally ls.close()
+    }
+    // model: id -> (grp, v)
+    val model = scala.collection.mutable.Map(0L -> ("a", 0.0))
+    LakeTable.overwrite(Seq((0L, "a", 0.0)).toDF("id", "grp", "v"), p) // v0
+    // 55 streaming epochs, sink-shaped: one epoch dir each, committed
+    // as a partial manifest (v1..v55); written by one job, then moved
+    val nEpochs = 55
+    val stage = "/tmp/graft_test/lake_plan_jobs_stage"
+    rmdir(stage)
+    (1 to nEpochs).map(e => (e.toLong, "s", e * 1.0, e)).toDF("id", "grp", "v", "e")
+      .repartition(col("e")).write.partitionBy("e").parquet(stage)
+    val epochSchema = new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("grp", "string").add("v", "double")
+    (1 to nEpochs).foreach { e =>
+      val dir = s"$p/data/stream-spec-e$e"
+      Files.move(Paths.get(s"$stage/e=$e"), Paths.get(dir))
+      assert(LakeTable.commitStreamEpoch(spark, p, parquetIn(dir), epochSchema, "q", e.toLong)
+        .isDefined)
+      model(e.toLong) = ("s", e * 1.0)
+    }
+    // appends under a hidden identity spec: the first carries one big
+    // and one tiny partition file, the rest one tiny file each
+    LakeTable.setPartitionSpec(p, Seq(LakeTable.PartitionTransform("grp", "identity")))
+    val first = (1000L until 3000L).map(i => (i, "big", i * 0.5)) :+ ((3000L, "t", 1.0))
+    LakeTable.append(first.toDF("id", "grp", "v"), p)
+    first.foreach { case (i, g, v) => model(i) = (g, v) }
+    (1 to 9).foreach { i =>
+      val row = (3000L + i, "t", i * 2.0)
+      LakeTable.append(Seq(row).toDF("id", "grp", "v"), p)
+      model(row._1) = (row._2, row._3)
+    }
+    // binpack only the appended range: the first append's manifest is
+    // re-manifested partially (its big file stays), the epochs are untouched
+    LakeTable.compactSmall(spark, p, 8192L, preds = Seq(("id", 1000.0, 1e9)))
+    LakeTable.deleteMoR(spark, p, "id", col("id") === 7L || col("id") === 3005L)
+    model -= 7L; model -= 3005L
+    val head = LakeTable.latestVersion(p).get
+    assert(head >= 65, s"the table needs at least 65 commits, has ${head + 1}")
+    val refs = LakeTable.listRefs(p, head)
+    assert(refs.count(r => r.partial && r.base.contains("stream-spec-e")) === nEpochs)
+    assert(refs.exists(r => r.partial && r.kind == "data" && !r.base.contains("stream-spec-e")),
+      "the binpack must leave a partial re-manifest")
+    assert(refs.exists(_.kind == "delete"))
+    assert(refs.exists(_.pspec.nonEmpty))
+
+    var all: org.apache.spark.sql.DataFrame = null
+    var tiny: org.apache.spark.sql.DataFrame = null
+    val planJobs = jobsOf {
+      all = LakeTable.read(spark, p)
+      assert(all.schema.fieldNames.toSeq === Seq("id", "grp", "v"))
+      tiny = LakeTable.readWhereEquals(spark, p, "grp", "t")
+    }
+    assert(planJobs === 0, "planning must read schema records, never infer footers")
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, (String, Double)] =
+      df.select("id", "grp", "v").collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
+    assert(rowsOf(all) === model.toMap)
+    assert(rowsOf(tiny) === model.toMap.filter(_._2._1 == "t"))
+
+    // a dir without a record (a commit written before records existed)
+    // still reads the same rows; only its own read pays inference
+    val legacy = Paths.get(s"$p/data/stream-spec-e3/_graft_schema.json")
+    assert(Files.exists(legacy))
+    Files.delete(legacy)
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { again = LakeTable.read(spark, p) } >= 1,
+      "a dir without a record falls back to footer inference")
+    assert(rowsOf(again) === model.toMap)
   }
 }
