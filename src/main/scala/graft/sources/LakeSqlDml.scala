@@ -1677,9 +1677,11 @@ object LakeDmlStrategy extends SparkStrategy {
   * lowerings and the write builder need it); only genuine read
   * positions lift. Snapshots the V2 scan can serve stay on it
   * (pushdown, runtime filtering, exact stats). Trade-off (SCALE.md):
-  * a lifted read is the library's union/anti-join plan — parquet
-  * filter pushdown still applies inside it; manifest-stats skipping
-  * does not, the same cost [[LakeTable.read]] always had. */
+  * a lifted read is the library's plan — one parquet scan per schema
+  * generation with the deletes anti-joined on top, so its width
+  * follows the generations, not the commits; parquet filter pushdown
+  * still applies inside it, manifest-stats skipping does not, the same
+  * cost [[LakeTable.read]] always had. */
 class MorReadLiftRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // collect write/DML target relations BY REFERENCE — the same

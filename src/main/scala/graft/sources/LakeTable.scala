@@ -291,10 +291,14 @@ object LakeTable {
     * live outside the table (the engine never writes into such a dir). */
   private def recordedReader(
       spark: SparkSession, target: String): org.apache.spark.sql.DataFrameReader =
-    try spark.read.schema(org.apache.spark.sql.types.DataType
+    schemaRecord(target).fold(spark.read)(spark.read.schema)
+
+  /** The schema recorded for `target`, if its writer left one. */
+  private def schemaRecord(target: String): Option[org.apache.spark.sql.types.StructType] =
+    try Some(org.apache.spark.sql.types.DataType
       .fromJson(Files.readString(schemaRecordOf(target)))
       .asInstanceOf[org.apache.spark.sql.types.StructType])
-    catch { case _: java.nio.file.NoSuchFileException => spark.read }
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   /** Recursively nullable-normalize a schema the way file-source
     * inference does (StructType.asNullable is private[spark]). */
@@ -411,6 +415,28 @@ object LakeTable {
         Option(n.get("bytes")).map(_.asLong(-1L)).getOrElse(-1L),
         Option(n.get("rows")).map(_.asLong(-1L)).getOrElse(-1L),
         Option(n.get("frid")).map(_.asLong(-1L)).getOrElse(-1L))
+    }
+
+  /** A manifest's entries as a read needs them (file, base, sequence,
+    * field ids; no stats), parsed in process whatever the encoding:
+    * a parquet manifest reads through parquet-hadoop, never through a
+    * Spark job as [[readManifest]] does. */
+  private def manifestFiles(ref: ManifestRef): Seq[ManifestEntry] =
+    if (!ref.manifest.endsWith(".parquet")) readManifest(ref)
+    else {
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport,
+          new org.apache.hadoop.fs.Path(ref.manifest))
+        .withConf(SparkSession.active.sparkContext.hadoopConfiguration).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        // the per-entry seq pin of a consolidated manifest wins, as in readManifest
+        val pinned =
+          if (g.getType.containsField("seq") && g.getFieldRepetitionCount("seq") > 0)
+            g.getInteger("seq", 0) else -1
+        ManifestEntry(g.getString("file", 0), g.getString("base", 0), Map.empty, ref.kind,
+          if (pinned >= 0) pinned else ref.seq, ref.cols)
+      }.toList
+      finally reader.close()
     }
 
   /** Manifest entries of `refs` as ONE distributed frame under
@@ -2558,11 +2584,14 @@ object LakeTable {
 
   /** Read a snapshot (default: latest). Planning is METADATA-ONLY and
     * O(#manifests): each manifest covers exactly its immutable commit
-    * dir, so the scan is built from the manifest LIST's base dirs —
-    * no per-file entry is ever deserialized for a full-snapshot read.
-    * Pushdown and pruning apply unchanged (plain parquet scans);
-    * schema evolution on read comes from the allowMissingColumns
-    * union across commit generations. */
+    * dir, so the scan is built from the manifest LIST's base dirs — no
+    * per-file entry of a whole manifest is deserialized — and runs no
+    * Spark job. The files read as ONE parquet scan per schema
+    * generation (field ids plus recorded schema), not one per commit,
+    * over a file index the manifests build ([[LakeFileIndex]]).
+    * Pushdown and pruning apply unchanged (plain parquet scans); schema
+    * evolution on read comes from the allowMissingColumns union across
+    * generations. */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame =
     assemble(spark, planScan(spark, path, version))
 
@@ -2624,20 +2653,21 @@ object LakeTable {
       refs.filterNot(r => DeleteKinds(r.kind))))
   }
 
-  /** Assemble a plan into one frame — the ONE read assembler. Whole
-    * manifests scan their commit dir ([[refScan]]), explicit entries
-    * their file lists grouped per commit dir; every frame projects to
-    * the current schema by field id and the union null-extends across
-    * generations. With no delete and no `meta` that union IS the read.
-    * Otherwise each frame rides its commit sequence (plus the scan-time
-    * file path and row index when position deletes, DVs or `meta` need
-    * them) and the deletes apply: position deletes, deletion vectors,
-    * then equality deletes under the sequence rule. `meta` keeps the
-    * file identity riding (DML classification, lineage); `lineageCols`
-    * keeps the physical lineage columns; `suppressed` serves the rows
-    * the equality deletes REMOVE instead of the rows they keep
-    * ([[convertEqualityDeletes]]). A prune that kept nothing serves the
-    * snapshot's schema with zero rows. */
+  /** Assemble a plan into one frame — the ONE read assembler. The
+    * plan's files read as ONE scan per schema generation
+    * ([[generationScans]]: whole manifests as their commit dirs,
+    * explicit entries as their files), each projected ONCE to the
+    * current schema by field id; the union null-extends across
+    * generations. Every row rides its commit sequence (a partition
+    * value of the generation's file index), plus the scan-time file
+    * path and row index when position deletes, DVs or `meta` need
+    * them, and the deletes apply on top: position deletes, deletion
+    * vectors, then equality deletes under the sequence rule. `meta`
+    * keeps the file identity riding (DML classification, lineage);
+    * `lineageCols` keeps the physical lineage columns; `suppressed`
+    * serves the rows the equality deletes REMOVE instead of the rows
+    * they keep ([[convertEqualityDeletes]]). A prune that kept nothing
+    * serves the snapshot's schema with zero rows. */
   private def assemble(
       spark: SparkSession, plan: ScanPlan,
       meta: Boolean = false, lineageCols: Boolean = false,
@@ -2646,40 +2676,20 @@ object LakeTable {
       assemble(spark, plan.unpruned, meta, lineageCols, suppressed).limit(0)
     else keepLineageCols.withValue(lineageCols) {
       val cur = plan.current
-      val whole = plan.whole.filter(_.nFiles > 0)
-      def union(parts: Iterable[DataFrame]): DataFrame =
-        if (parts.isEmpty) spark.emptyDataFrame
-        else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      if (plan.deletes.isEmpty && !meta)
-        union(plan.kept.groupBy(_.base).map { case (base, es) =>
-            projectToCurrent(dirScan(spark, base, es.map(_.file)), es.head.cols, cur) } ++
-          whole.map(r => projectToCurrent(refScan(spark, r), r.cols, cur)))
+      val (pos, dv, eq) = (plan.pos, plan.dv, plan.eq)
+      val withPos = pos.nonEmpty || dv.nonEmpty || meta
+      val parts = generationScans(spark, plan.whole.filter(_.nFiles > 0), plan.kept, SeqCol)
+        .map { case (scan, cols) => projectToCurrent(if (withPos) posMeta(scan) else scan, cols, cur) }
+      if (parts.isEmpty) spark.emptyDataFrame
       else {
-        val (pos, dv, eq) = (plan.pos, plan.dv, plan.eq)
-        val withPos = pos.nonEmpty || dv.nonEmpty || meta
-        def tagged(scan: DataFrame, cols: Map[String, Int], seq: Int) =
-          projectToCurrent(if (withPos) posMeta(scan) else scan, cols, cur)
-            .withColumn(SeqCol, lit(seq))
-        // entries group per (commit dir, sequence): a CONSOLIDATED
-        // manifest's entries pin different commit sequences, and MoR
-        // subtraction must stay sequence-exact across the fold
-        def files(es: Seq[ManifestEntry]) =
-          es.groupBy(e => (e.base, e.seq)).map { case ((base, sq), g) =>
-            tagged(dirScan(spark, base, g.map(_.file)), g.head.cols, sq) }
-        val parts = files(plan.kept) ++ whole.flatMap(r =>
-          if (r.partial) files(readManifest(r))
-          else Seq(tagged(refScan(spark, r), r.cols, r.seq)))
-        if (parts.isEmpty) spark.emptyDataFrame
-        else {
-          val all = union(parts)
-          val afterPos = if (pos.nonEmpty) applyPosDeletes(spark, all, pos) else all
-          val afterDv = if (dv.nonEmpty) applyDvDeletes(spark, afterPos, dv) else afterPos
-          val afterEq =
-            if (eq.nonEmpty) applyMorDeletes(spark, afterDv, eq, cur,
-              if (suppressed) "left_semi" else "left_anti")
-            else afterDv.drop(SeqCol)
-          if (meta) afterEq else afterEq.drop(FpCol, RiCol)
-        }
+        val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
+        val afterPos = if (pos.nonEmpty) applyPosDeletes(spark, all, pos) else all
+        val afterDv = if (dv.nonEmpty) applyDvDeletes(spark, afterPos, dv) else afterPos
+        val afterEq =
+          if (eq.nonEmpty) applyMorDeletes(spark, afterDv, eq, cur,
+            if (suppressed) "left_semi" else "left_anti")
+          else afterDv.drop(SeqCol)
+        if (meta) afterEq else afterEq.drop(FpCol, RiCol)
       }
     }
 
@@ -2830,9 +2840,8 @@ object LakeTable {
   private def applyPosDeletes(
       spark: SparkSession, dataWithMeta: DataFrame,
       pos: Seq[ManifestRef]): DataFrame = {
-    val keys = pos.map(r => refScan(spark, r).select(
-      col("file_path").as("__graft_dfp"), col("row_index").as("__graft_dri")))
-      .reduce(_.unionByName(_)).distinct()
+    val keys = scanRefs(spark, pos).select(
+      col("file_path").as("__graft_dfp"), col("row_index").as("__graft_dri")).distinct()
     dataWithMeta.join(keys,
       dataWithMeta(FpCol) === col("__graft_dfp") &&
         dataWithMeta(RiCol) === col("__graft_dri"),
@@ -2844,27 +2853,26 @@ object LakeTable {
     * (file, index) pair — the representation that survives a heavily-
     * updated 100 TB table, where a file's accumulated posdel set
     * grows with every delete while its DV stays ≤ rows/8 bytes.
-    * Applied as a broadcast left join per DV manifest (DV frames are
-    * metadata-sized: ≤ one row per data file) with a codegen'd bit
-    * probe ([[graft.functions.DvContainsExpr]]) — the filter stays
-    * inside the scan's whole-stage pipeline, no explode back to
-    * per-row pairs. Several DV manifests for one file compose by
-    * chaining (deleted = union of set bits), so writers never need a
+    * Applied as ONE broadcast anti-join over every DV file (DV frames
+    * are metadata-sized: ≤ one row per data file and manifest) whose
+    * condition is a codegen'd bit probe
+    * ([[graft.functions.DvContainsExpr]]) — the probe stays inside the
+    * scan's whole-stage pipeline, no explode back to per-row pairs.
+    * Several DV manifests for one file compose (a row goes when ANY of
+    * its file's vectors sets its bit), so writers never need a
     * read-modify-write of earlier vectors. */
   private def applyDvDeletes(
       spark: SparkSession, dataWithMeta: DataFrame,
-      dv: Seq[ManifestRef]): DataFrame =
-    dv.foldLeft(dataWithMeta) { (df, ref) =>
-      val m = refScan(spark, ref).select(
-        col("file_path").as("__graft_dvf"), col("dv").as("__graft_dvb"))
-      val hit = org.apache.spark.sql.GraftSqlShim.column(
-        graft.functions.DvContainsExpr(
-          org.apache.spark.sql.GraftSqlShim.expression(col("__graft_dvb")),
-          org.apache.spark.sql.GraftSqlShim.expression(col(RiCol))))
-      df.join(broadcast(m), df(FpCol) === col("__graft_dvf"), "left")
-        .filter(col("__graft_dvb").isNull || !hit)
-        .drop("__graft_dvf", "__graft_dvb")
-    }
+      dv: Seq[ManifestRef]): DataFrame = {
+    val m = scanRefs(spark, dv).select(
+      col("file_path").as("__graft_dvf"), col("dv").as("__graft_dvb"))
+    val hit = org.apache.spark.sql.GraftSqlShim.column(
+      graft.functions.DvContainsExpr(
+        org.apache.spark.sql.GraftSqlShim.expression(col("__graft_dvb")),
+        org.apache.spark.sql.GraftSqlShim.expression(dataWithMeta(RiCol))))
+    dataWithMeta.join(broadcast(m), dataWithMeta(FpCol) === col("__graft_dvf") && hit,
+      "left_anti")
+  }
 
   /** Per-file DELETED-ROW COUNTS of a snapshot's position-delete and
     * deletion-vector manifests — EXACT from the delete files alone
@@ -2904,10 +2912,10 @@ object LakeTable {
       spark: SparkSession, pos: Seq[ManifestRef], dvs: Seq[ManifestRef],
       key: org.apache.spark.sql.Column): org.apache.spark.sql.Dataset[(String, Array[Byte])] = {
     import spark.implicits._
-    val posBm = if (pos.isEmpty) None else Some(dvBitmapsOf(pos.map(r => refScan(spark, r)
-      .select(key.as("file_path"), col("row_index"))).reduce(_.unionByName(_))))
-    val dvBm = if (dvs.isEmpty) None else Some(dvs.map(r => refScan(spark, r)
-      .select(key.as("file_path"), col("dv"))).reduce(_.unionByName(_)))
+    val posBm = if (pos.isEmpty) None else Some(dvBitmapsOf(scanRefs(spark, pos)
+      .select(key.as("file_path"), col("row_index"))))
+    val dvBm = if (dvs.isEmpty) None else Some(scanRefs(spark, dvs)
+      .select(key.as("file_path"), col("dv")))
     (posBm.toSeq ++ dvBm.toSeq).reduce(_.union(_)).as[(String, Array[Byte])]
       .groupByKey(_._1)
       .mapGroups { (f, it) =>
@@ -2925,26 +2933,67 @@ object LakeTable {
 
   private val SeqCol = "__graft_seq" // internal; underscored to dodge user columns
 
-  /** One parquet scan per manifest, over its whole commit dir (the
-    * dir is immutable and covered 1:1 by the manifest, so dir scan ≡
-    * explicit file list without materializing the list). */
-  private def refScan(spark: SparkSession, ref: ManifestRef): DataFrame =
-    if (ref.partial)
-      // a PARTIAL manifest (binpack re-manifest, consolidation) must
-      // read its explicit file list: the commit dir still holds the
-      // folded files (older versions reference them) and a dir scan
-      // would count their rows twice. Grouped per ENTRY base — a
-      // consolidated manifest spans commit dirs, and each group needs
-      // its own basePath and schema record
-      readManifest(ref).groupBy(_.base).map { case (base, es) =>
-        dirScan(spark, base, es.map(_.file)) }
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    else dirScan(spark, ref.base, Seq(ref.base))
+  /** The scans a set of lake files reads through: ONE parquet scan per
+    * SCHEMA GENERATION — the files' write-time field-id map plus the
+    * schema their commit dir recorded — whatever the number of commit
+    * dirs. A whole manifest contributes its commit dir (immutable and
+    * covered 1:1, so no entry is read); a PARTIAL manifest (binpack
+    * re-manifest, consolidation) and `entries` contribute their files,
+    * since the dir still holds files folded away for older versions.
+    * Each generation reads over a [[LakeFileIndex]] that carries every
+    * file's commit sequence (a consolidated manifest's per-entry pins
+    * included) under `seqCol`. Hive-layout dirs (their partition values
+    * are typed from the dir names) and dirs without a record (pre-record
+    * commits, `add_files`/`snapshot` imports) keep one scan per
+    * (dir, sequence), the sequence a literal. Returns each frame with
+    * the write-time field ids its caller projects by, in first-seen
+    * order (the union's column order follows the first frame). */
+  private def generationScans(
+      spark: SparkSession, refs: Seq[ManifestRef], entries: Seq[ManifestEntry],
+      seqCol: String): Seq[(DataFrame, Map[String, Int])] = {
+    // a dir's generation schema: its record, unless it has none or is hive
+    val schemas = scala.collection.mutable.HashMap.empty[String, Option[org.apache.spark.sql.types.StructType]]
+    def schemaOf(base: String) =
+      schemas.getOrElseUpdate(base, schemaRecord(base).filterNot(_ => hiveLayoutDir(base)))
+    val roots = (entries ++ refs.filter(_.partial).flatMap(manifestFiles))
+      .map(e => (e.base, e.cols, e.seq, e.file)) ++
+      refs.filterNot(_.partial).map(r => (r.base, r.cols, r.seq, r.base))
+    // a generation groups by (field ids, schema); a per-dir scan by
+    // (field ids, dir, sequence)
+    val keyed = roots.map { case (base, cols, seq, root) =>
+      val schema = schemaOf(base)
+      (cols, schema, if (schema.isEmpty) Some((base, seq)) else None) ->
+        LakeFileIndex.Root(root, seq)
+    }
+    val rootsOf = keyed.groupMap(_._1)(_._2)
+    keyed.map(_._1).distinct.map { case key @ (cols, schema, perDir) =>
+      val rs = rootsOf(key)
+      val frame = perDir match {
+        case Some((base, seq)) =>
+          dirScan(spark, base, rs.map(_.path)).withColumn(seqCol, lit(seq))
+        case None =>
+          val index = new LakeFileIndex(spark, rs, seqCol)
+          dropHidden(spark.baseRelationToDataFrame(
+            org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+              index, index.partitionSchema, schema.get, None,
+              new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+              Map.empty)(spark)))
+      }
+      frame -> cols
+    }
+  }
 
-  /** The one parquet read of a commit dir, whole or an explicit file
-    * list under it: the schema its writer recorded
-    * ([[recordedReader]]), so planning opens no footer; basePath
-    * reconstructs layout columns from the directory names. */
+  /** The files of `refs` read without projection (position-delete and
+    * DV files) as one frame: [[generationScans]] unioned, each row's
+    * commit sequence under `__graft_dseq`. */
+  private def scanRefs(spark: SparkSession, refs: Seq[ManifestRef]): DataFrame =
+    generationScans(spark, refs, Nil, "__graft_dseq").map(_._1)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** A per-dir parquet read of a commit dir, whole or an explicit file
+    * list under it, for the dirs [[generationScans]] cannot group: the
+    * schema its writer recorded ([[recordedReader]]) when there is one;
+    * basePath reconstructs layout columns from the directory names. */
   private def dirScan(spark: SparkSession, base: String, paths: Seq[String]): DataFrame =
     dropHidden(recordedReader(spark, base).option("basePath", base).parquet(paths: _*))
 
@@ -3241,23 +3290,21 @@ object LakeTable {
     // the key columns must fail LOUDLY here — anti-joining every key
     // list against one arbitrary group's columns would silently drop
     // or keep wrong rows (round-4 ADVICE, medium).
-    val groups = del.map { ref =>
+    val groups = generationScans(spark, del, Nil, "__graft_dseq").map { case (scan, cols) =>
       // delete-key files resolve through the same field-id projection
       // as data files: a renamed key column surfaces under its
       // CURRENT name, matching the projected data frame
-      val k = projectToCurrent(refScan(spark, ref), ref.cols, current,
-        injectDefaults = false)
-      (k.columns.toSeq,
-        k.select(k.columns.toSeq.zipWithIndex.map {
-            case (c, i) => col(c).as(s"__graft_dkey$i") }: _*).distinct()
-          .withColumn("__graft_dseq", lit(ref.seq)))
+      val k = projectToCurrent(scan, cols, current, injectDefaults = false)
+      val names = k.columns.toSeq.filter(_ != "__graft_dseq")
+      (names, k.select(names.zipWithIndex.map {
+          case (c, i) => col(c).as(s"__graft_dkey$i") } :+ col("__graft_dseq"): _*))
     }
     val keyLists = groups.map(_._1).distinct
     require(keyLists.size == 1,
       "merge-on-read delete files must all share ONE key column list " +
         s"per table; found $keyLists")
     val keyNames = keyLists.head
-    val keys = groups.map(_._2).reduce(_.unionByName(_))
+    val keys = groups.map(_._2).reduce(_.unionByName(_)).distinct()
     dataWithSeq
       // null-SAFE key equality per column: a NULL-keyed row selected
       // by the delete predicate must be removed exactly as CoW
@@ -4246,7 +4293,7 @@ object LakeTable {
     val survivors =
       if (touched.isEmpty) cur.limit(0).drop(FpCol, RiCol, SeqCol)
       else {
-        val surv = rowsInFiles(cur, touched)
+        val surv = rowsOfFiles(spark, plan, touched, mm, lineage)
           .join(srcKeys, col(keyCol) === col("__graft_uk"), "left_anti")
         if (!lineage) surv.drop(FpCol, RiCol, SeqCol)
         else materializeLineage(spark, surv,
@@ -4512,10 +4559,11 @@ object LakeTable {
             if (d.columns.contains(c)) d
             else d.withColumn(c, lit(null).cast("long")))
         }
-        else if (!lineage)
-          rowsInFiles(cur, touched).drop(FpCol, RiCol, SeqCol)
-        else materializeLineage(spark, rowsInFiles(cur, touched),
-          plan.live, mm, path)
+        else {
+          val rows = rowsOfFiles(spark, plan, touched, mm, lineage)
+          if (!lineage) rows.drop(FpCol, RiCol, SeqCol)
+          else materializeLineage(spark, rows, plan.live, mm, path)
+        }
       }
       val (survivors, inserts, affected) =
         mergeRows(targetTouched, source, keyCols, matched, notMatchedInsert,
@@ -5129,31 +5177,40 @@ object LakeTable {
       org.apache.spark.sql.types.StructType.fromDDL(
         "file_path STRING, pos LONG, delete_file STRING, " +
           "kind STRING, seq INT"))
+    def live(kind: String) = Some(refs.filter(r => r.kind == kind && r.nFiles > 0))
+      .filter(_.nonEmpty).map(scanRefs(spark, _).withColumnRenamed("__graft_dseq", "seq"))
     val parts =
-      refs.filter(r => r.kind == "posdel" && r.nFiles > 0).map { r =>
-        refScan(spark, r).select(
+      live("posdel").map(_.select(
           plain(col("file_path")).as("file_path"),
           col("row_index").as("pos"),
           plain(input_file_name()).as("delete_file"),
-          lit("posdel").as("kind"), lit(r.seq).as("seq"))
-      } ++
-      refs.filter(r => r.kind == "dv" && r.nFiles > 0).map { r =>
-        refScan(spark, r)
+          lit("posdel").as("kind"), col("seq"))).toSeq ++
+      live("dv").map(_
           .select(plain(col("file_path")).as("f"), col("dv").as("b"),
-            plain(input_file_name()).as("df"))
-          .as[(String, Array[Byte], String)]
-          .flatMap { case (f, b, df) =>
+            plain(input_file_name()).as("df"), col("seq"))
+          .as[(String, Array[Byte], String, Int)]
+          .flatMap { case (f, b, df, sq) =>
             for {
               i <- b.indices if b(i) != 0
               bit <- 0 until 8 if (b(i) & (1 << bit)) != 0
-            } yield (f, (i.toLong << 3) | bit, df)
+            } yield (f, (i.toLong << 3) | bit, df, sq)
           }
-          .toDF("file_path", "pos", "delete_file")
+          .toDF("file_path", "pos", "delete_file", "seq")
           .select(col("file_path"), col("pos"), col("delete_file"),
-            lit("dv").as("kind"), lit(r.seq).as("seq"))
-      }
+            lit("dv").as("kind"), col("seq"))).toSeq
     parts.foldLeft(empty)(_.unionByName(_)).orderBy("file_path", "pos", "seq")
   }
+
+  /** The live data files of `plan`, projected to its current schema,
+    * each row tagged with its file (`__graft_f`) and NO delete applied:
+    * the per-file pass of [[withBloom]] and [[analyzeNdv]]. Partial
+    * (binpack) manifests read their own files only — a whole-dir read
+    * would hash folded files' rows only to discard them. */
+  private def fileTaggedScan(spark: SparkSession, plan: ScanPlan): DataFrame =
+    generationScans(spark, plan.live, Nil, SeqCol).map { case (scan, cols) =>
+        projectToCurrent(scan.withColumn("__graft_f", input_file_name()), cols, plan.current)
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true)).drop(SeqCol)
 
   /** Driver-side probe positions of `value` for a (bits, k) bloom —
     * must agree bit-for-bit with [[withBloom]]'s distributed
@@ -5188,19 +5245,12 @@ object LakeTable {
       bits: Int = 4096, k: Int = 3): Int = {
     val base = observedBase(spark, path)
     val plan = planScan(spark, path, Some(base))
-    val (live, current) = (plan.live, plan.current)
+    val live = plan.live
     require(live.nonEmpty, s"no data to bloom at $path")
     val key = bloomKey(path, base, column)
     // ONE distributed job: per file, the distinct bloom bit positions
     // of the column's values (bounded by `bits` per file)
-    // refScan honors partial (binpack) manifests — a whole-dir read
-    // would hash folded files' rows only to discard them
-    val posByFile = live.map { r =>
-        projectToCurrent(
-          refScan(spark, r).withColumn("__graft_f", input_file_name()),
-          r.cols, current)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val posByFile = fileTaggedScan(spark, plan)
       .filter(col(column).isNotNull)
       .select(col("__graft_f"),
         explode(array((0 until k).map(j =>
@@ -5339,15 +5389,9 @@ object LakeTable {
     require(columns.nonEmpty, "analyzeNdv needs at least one column")
     val base = observedBase(spark, path)
     val plan = planScan(spark, path, Some(base))
-    val (live, current) = (plan.live, plan.current)
+    val live = plan.live
     require(live.nonEmpty, s"no data to analyze at $path")
-    // refScan honors partial (binpack) manifests, as withBloom
-    val scan = live.map { r =>
-        projectToCurrent(
-          refScan(spark, r).withColumn("__graft_f", input_file_name()),
-          r.cols, current)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val scan = fileTaggedScan(spark, plan)
     columns.foreach { c =>
       require(scan.columns.contains(c), s"analyzeNdv at $path: no such column '$c'")
       require(ndvSketchable(scan.schema(c).dataType),
@@ -5858,20 +5902,21 @@ object LakeTable {
         conflictFilter = Some(matches))
       case Some(cur) =>
         val touched = touchedFiles(cur, matches)
+        val mm = manifestMemo()
+        def rowsOf(files: Set[String]) = rowsOfFiles(spark, plan, files, mm, lineage)
         val counts =
           if (touched.isEmpty) Map.empty[String, (Long, Long)]
-          else fileMatchCounts(rowsInFiles(cur, touched), matches)
+          else fileMatchCounts(rowsOf(touched), matches)
         val boundary = counts.collect {
           case (f, (vis, hit)) if hit < vis => f
         }.toSet
         val dropped = touched -- boundary
-        val mm = manifestMemo()
         // survivors of boundary files only — the sole data rewrite,
         // re-landing under the table's layout (never degrading pruning).
         // Under row lineage the survivors RE-MATERIALIZE their ids
         // (the boundary files drop, so derivation would be lost).
         def survivors: DataFrame = {
-          val raw = rowsInFiles(cur, boundary).filter(!matches)
+          val raw = rowsOf(boundary).filter(!matches)
           if (!lineage) raw.drop(FpCol, RiCol, SeqCol)
           else materializeLineage(spark, raw,
             plan.live, mm, path)
@@ -5966,16 +6011,17 @@ object LakeTable {
           conflictFilter = Some(matches))
       case Some(cur) =>
         val touched = touchedFiles(cur, matches)
+        val mm = manifestMemo()
+        def rowsOf(files: Set[String]) = rowsOfFiles(spark, plan, files, mm, lineage)
         val counts =
           if (touched.isEmpty) Map.empty[String, (Long, Long)]
-          else fileMatchCounts(rowsInFiles(cur, touched), matches)
+          else fileMatchCounts(rowsOf(touched), matches)
         val boundary = counts.collect {
           case (f, (vis, hit)) if hit < vis => f
         }.toSet
         val dropped = touched -- boundary
-        val mm = manifestMemo()
         def survivors: DataFrame = {
-          val raw = rowsInFiles(cur, boundary).filter(!matches)
+          val raw = rowsOf(boundary).filter(!matches)
           if (!lineage) raw.drop(FpCol, RiCol, SeqCol)
           else materializeLineage(spark, raw,
             plan.live, mm, path)
@@ -6098,14 +6144,16 @@ object LakeTable {
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-  /** Rows of the assembled frame belonging to `files` (scan-time file
-    * identity): a broadcast semi-join against the O(#files) planning
-    * set, so only the selected files' partitions survive the scan. */
-  private def rowsInFiles(cur: DataFrame, files: Set[String]): DataFrame = {
-    val spark = cur.sparkSession
-    import spark.implicits._
-    cur.join(broadcast(files.toSeq.toDF("__graft_cf")),
-      col(FpCol) === col("__graft_cf"), "left_semi")
+  /** The visible rows of `files` (scan-time URIs), file identity
+    * riding: the re-read of the file-granular DML planners' per-file
+    * counts and survivor passes. `plan` narrows to exactly those files'
+    * entries, its deletes still applying, so the scan opens only them. */
+  private def rowsOfFiles(
+      spark: SparkSession, plan: ScanPlan, files: Set[String],
+      entriesOf: ManifestRef => Seq[ManifestEntry], lineage: Boolean): DataFrame = {
+    val want = files.map(plainPath)
+    assemble(spark, plan.only(plan.live.flatMap(entriesOf).filter(e => want(e.file))),
+      meta = true, lineageCols = lineage)
   }
 
   /** The layout a DML rewrite lands under: the table's STANDING spec
@@ -6227,7 +6275,7 @@ object LakeTable {
         // (Iceberg's UPDATE rule), and an UPDATED row's last-updated
         // goes NULL so it inherits the rewriting commit's sequence
         def projected: DataFrame = {
-          val tr = rowsInFiles(cur, touched)
+          val tr = rowsOfFiles(spark, plan, touched, mm, lineage)
           val selCols = visible.map { c =>
             set.get(c).map(v => when(p, v).otherwise(col(c)).as(c)).getOrElse(col(c))
           }
@@ -6561,9 +6609,11 @@ object LakeTable {
     * commits. File sizes come from manifest metadata (recorded at
     * write; stat'd lazily for legacy entries). The rewritten subset
     * is read WITH merge-on-read deletes applied and takes the new
-    * commit's sequence, so carried delete files stop applying to it
-    * but keep subtracting from the untouched older files — the
-    * sequence rule keeps the mix exact. Untouched manifests are
+    * commit's sequence, so the delete files stop applying to it. An
+    * equality delete still sequenced above some untouched file carries
+    * and keeps subtracting from it; one that is not deletes nothing and
+    * is dropped ([[neededEqDeletes]]); position deletes and DVs carry
+    * — the sequence rule keeps the mix exact. Untouched manifests are
     * carried as-is (zero metadata rewrite); partially-kept ones are
     * re-manifested with their sequence/field-ids/spec preserved. */
   def compactSmall(spark: SparkSession, path: String, targetBytes: Long,
@@ -6662,7 +6712,8 @@ object LakeTable {
       else if (keep.size == es.size) Some(r) // untouched manifest carried as-is
       else Some(reManifestKeep(path, r, keep, es))
     }
-    commitRefs(spark, path, base, keptRefs ++ plan.eq ++ plan.pos ++ plan.dv ++ packed,
+    commitRefs(spark, path, base,
+      keptRefs ++ neededEqDeletes(plan, perRef, smallSet) ++ plan.pos ++ plan.dv ++ packed,
       "binpack")
   }
 
@@ -6702,8 +6753,8 @@ object LakeTable {
     * partition layout — so post-rewrite skipping equals what
     * declared-order appends would have produced. Untouched manifests
     * carry as-is; the rewritten subset takes the new commit's
-    * sequence (carried delete files stop applying to it, exactly the
-    * binpack contract). Commits as op `optimize` — it IS the scoped,
+    * sequence (delete files stop applying to it and dangling equality
+    * deletes drop, exactly the binpack contract). Commits as op `optimize` — it IS the scoped,
     * lineage-aware form of [[optimizeBy]], and every maintenance-
     * transparency classification already knows that name. Refuses by
     * name when no order is declared: a 'sort' rewrite without an
@@ -6735,8 +6786,22 @@ object LakeTable {
       else if (keep.size == es.size) Some(r) // untouched manifest carries
       else Some(reManifestKeep(path, r, keep, es))
     }
-    commitRefs(spark, path, base, keptRefs ++ plan.eq ++ plan.pos ++ plan.dv ++ staged,
+    commitRefs(spark, path, base,
+      keptRefs ++ neededEqDeletes(plan, perRef, chosenSet) ++ plan.pos ++ plan.dv ++ staged,
       "optimize")
+  }
+
+  /** The equality-delete manifests a data-file rewrite must carry. A
+    * delete with sequence s removes rows only from files with a lower
+    * sequence, and the rewritten files take the new commit's, so one
+    * whose sequence is not above every data file left untouched
+    * deletes nothing any more: it is dropped (Iceberg's dangling-delete
+    * rule). Position deletes and DVs carry as they are. */
+  private def neededEqDeletes(
+      plan: ScanPlan, perRef: Seq[(ManifestRef, Seq[ManifestEntry])],
+      rewritten: Set[String]): Seq[ManifestRef] = {
+    val keptSeqs = perRef.flatMap(_._2).filterNot(e => rewritten(e.file)).map(_.seq)
+    if (keptSeqs.isEmpty) Nil else plan.eq.filter(_.seq > keptSeqs.min)
   }
 
   /** Is `b` a hive-partitioned commit dir (`col=value` subdirs whose
@@ -9644,8 +9709,7 @@ object LakeTable {
       .groupBy(_.manifest).map(_._2.head).toSeq
     val targets: Set[String] =
       if (oneSided.isEmpty) Set.empty
-      else oneSided.map(r => refScan(spark, r).select("file_path"))
-        .reduce(_.unionByName(_)).distinct()
+      else scanRefs(spark, oneSided).select("file_path").distinct()
         .collect().map(r => stripScheme(r.getString(0))).toSet
     if (targets.size > DistributedPlanThreshold) return None // churn guard
     Some(DiffScope(delta ++ targets, (targets diff delta).nonEmpty))

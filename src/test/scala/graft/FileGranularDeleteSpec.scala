@@ -61,6 +61,49 @@ class FileGranularDeleteSpec extends AnyFunSuite {
     assert(out.filter(col("day") === 2L && col("k") < 100L).count() == 0)
   }
 
+  test("CoW delete's survivor pass scans exactly the boundary file") {
+    val p = "/tmp/graft_test/fgdel_survivor_scan"
+    SparkSpec.rmdir(p)
+    val nFiles = 6
+    // six files in ONE commit; the string predicate implies no
+    // interval, so classification cannot prune any file by stats
+    val df = (0 until 600).map(i =>
+      (i.toLong, if (i == 250) "hit" else "miss", i * 1.0)).toDF("k", "tag", "v")
+    LakeTable.overwrite(df.repartitionByRange(nFiles, col("k")), p)
+    assert(files(p, 0).size === nFiles)
+    val writes = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.execution.SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.exists(
+            _.isInstanceOf[org.apache.spark.sql.execution.command.DataWritingCommandExec]))
+          writes.synchronized(writes += qe.executedPlan)
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    // AQE off so the executed plan exposes FileSourceScanExec directly
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try {
+      LakeTable.delete(spark, p, col("tag") === "hit")
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    assert(writes.size === 1, s"one survivor write expected, got ${writes.size}")
+    val scanned = writes.head.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metrics("numFiles").value
+    }.sum
+    assert(scanned === 1, s"the survivor pass must scan only the boundary file, scanned $scanned")
+    val after = files(p, 1)
+    assert((files(p, 0) -- after).size === 1 && (after -- files(p, 0)).size === 1)
+    val out = LakeTable.read(spark, p)
+    assert(out.count() === 599)
+    assert(out.filter(col("tag") === "hit").count() === 0)
+  }
+
   test("carried files keep their older MoR deletes subtracting") {
     val p = "/tmp/graft_test/fgdel_mor"
     SparkSpec.rmdir(p)

@@ -1913,6 +1913,40 @@ class LakeTableSpec extends AnyFunSuite {
     assert(LakeTable.read(spark, p, Some(4)).count() === 5001)
   }
 
+  test("binpack retires equality deletes no kept file is older than; a kept older file keeps its delete") {
+    import spark.implicits._
+    def eqDeletes(p: String): Int =
+      LakeTable.listRefs(p, LakeTable.latestVersion(p).get).count(_.kind == "delete")
+    def keys(p: String): Set[Long] =
+      LakeTable.read(spark, p).select("k").as[Long].collect().toSet
+    // full fold: every data file is small, so every file rewrites under
+    // the new sequence and no equality delete can apply any more
+    val p1 = "/tmp/graft_test/lake_binpack_dangling"
+    rmdir(p1)
+    LakeTable.overwrite(Seq((1L, 1.0)).toDF("k", "v").coalesce(1), p1)
+    (2 to 4).foreach(i => LakeTable.append(Seq((i.toLong, i * 1.0)).toDF("k", "v").coalesce(1), p1))
+    LakeTable.deleteMoR(spark, p1, "k", col("k") === 2L)
+    LakeTable.deleteMoR(spark, p1, "k", col("k") === 4L)
+    assert(eqDeletes(p1) === 2)
+    LakeTable.compactSmall(spark, p1, 1024L * 1024)
+    assert(eqDeletes(p1) === 0, "a full fold leaves no equality delete to apply")
+    assert(keys(p1) === Set(1L, 3L))
+    // a right-sized file older than the delete is kept: the delete
+    // still subtracts from it, so it carries
+    val p2 = "/tmp/graft_test/lake_binpack_dangling_kept"
+    rmdir(p2)
+    LakeTable.overwrite(spark.range(0, 5000).select(col("id").as("k"), (col("id") * 1.0).as("v"))
+      .coalesce(1), p2)
+    (1 to 3).foreach(i =>
+      LakeTable.append(Seq((10000L + i, i.toDouble)).toDF("k", "v").coalesce(1), p2))
+    LakeTable.deleteMoR(spark, p2, "k", col("k") === 42L || col("k") === 10001L)
+    val sizes = LakeTable.entriesOf(p2, LakeTable.latestVersion(p2).get)
+      .filter(_.kind == "data").map(e => java.nio.file.Files.size(java.nio.file.Paths.get(e.file)))
+    LakeTable.compactSmall(spark, p2, (sizes.min + sizes.max) / 2)
+    assert(eqDeletes(p2) === 1, "the kept older file's delete must carry")
+    assert(keys(p2) === ((0L until 5000L).toSet - 42L) ++ Set(10002L, 10003L))
+  }
+
   test("binpack of a mixed-size commit dir: partial re-manifest never double-counts") {
     // ONE commit (one manifest, one dir) holding a big and a tiny
     // file: the fold must re-manifest the kept big file as PARTIAL so
@@ -2404,34 +2438,37 @@ class LakeTableSpec extends AnyFunSuite {
     assert(e.getMessage.contains("main table"), e.getMessage)
   }
 
+  /** Spark jobs `body` starts (counted after the listener bus drains). */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"plan-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "lake read planning")
+    try body
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  private def parquetIn(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(Paths.get(dir))
+    try ls.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    finally ls.close()
+  }
+
   test("planning a many-commit table reads schema records: no Spark job") {
     val p = "/tmp/graft_test/lake_plan_jobs"
     rmdir(p)
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    def jobsOf(body: => Unit): Int = {
-      val group = s"plan-jobs-${java.util.UUID.randomUUID()}"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobGroup(group, "lake read planning")
-      try body
-      finally {
-        spark.sparkContext.clearJobGroup()
-        org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      jobs.get
-    }
-    def parquetIn(dir: String): Seq[String] = {
-      val ls = Files.list(Paths.get(dir))
-      try ls.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-      finally ls.close()
-    }
     // model: id -> (grp, v)
     val model = scala.collection.mutable.Map(0L -> ("a", 0.0))
     LakeTable.overwrite(Seq((0L, "a", 0.0)).toDF("id", "grp", "v"), p) // v0
@@ -2499,5 +2536,58 @@ class LakeTableSpec extends AnyFunSuite {
     assert(jobsOf { again = LakeTable.read(spark, p) } >= 1,
       "a dir without a record falls back to footer inference")
     assert(rowsOf(again) === model.toMap)
+  }
+
+  test("a 200-commit table reads as one scan per schema generation: no Spark job at plan time") {
+    val p = "/tmp/graft_test/lake_generations"
+    rmdir(p)
+    import spark.implicits._
+    val model = scala.collection.mutable.Map(0L -> 0.0)
+    LakeTable.overwrite(Seq((0L, "a", 0.0)).toDF("id", "grp", "v"), p) // v0
+    // sink-shaped epochs (one commit dir each), all one generation
+    // with v0: same field ids, same recorded schema
+    val nEpochs = 199
+    val stage = "/tmp/graft_test/lake_generations_stage"
+    rmdir(stage)
+    (1 to nEpochs).map(e => (e.toLong, "s", e * 1.0, e)).toDF("id", "grp", "v", "e")
+      .repartition(col("e")).write.partitionBy("e").parquet(stage)
+    val epochSchema = new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("grp", "string").add("v", "double")
+    def scanLeaves(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+      }.size
+    def planned(): (Int, Int, org.apache.spark.sql.DataFrame) = {
+      var df: org.apache.spark.sql.DataFrame = null
+      var leaves = 0
+      val jobs = jobsOf { df = LakeTable.read(spark, p); leaves = scanLeaves(df) }
+      (jobs, leaves, df)
+    }
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.select("id", "v").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    (1 to nEpochs).foreach { e =>
+      val dir = s"$p/data/gen-spec-e$e"
+      Files.move(Paths.get(s"$stage/e=$e"), Paths.get(dir))
+      assert(LakeTable.commitStreamEpoch(spark, p, parquetIn(dir), epochSchema, "q", e.toLong)
+        .isDefined)
+      model(e.toLong) = e * 1.0
+      if (e == 49) {
+        val (jobs, leaves, df) = planned()
+        assert(jobs === 0 && leaves === 1, s"50 commits: $jobs jobs, $leaves scan leaves")
+        assert(rowsOf(df) === model.toMap)
+      }
+    }
+    assert(LakeTable.latestVersion(p).get === nEpochs)
+    val (jobs1, leaves1, df1) = planned()
+    assert(jobs1 === 0, "planning must not grow jobs with the commit count")
+    assert(leaves1 === 1, "one generation reads as one scan, whatever the commit count")
+    assert(rowsOf(df1) === model.toMap)
+    // an added column starts a second generation: two scans, not two hundred
+    LakeTable.append(Seq((500L, "w", 5.0, 7L)).toDF("id", "grp", "v", "w"), p)
+    model(500L) = 5.0
+    val (jobs2, leaves2, df2) = planned()
+    assert(jobs2 === 0 && leaves2 === 2, s"two generations: $jobs2 jobs, $leaves2 scan leaves")
+    assert(rowsOf(df2) === model.toMap)
+    assert(df2.filter(col("w").isNotNull).count() === 1)
   }
 }
