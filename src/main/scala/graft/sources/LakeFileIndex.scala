@@ -12,10 +12,11 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * [[FileIndex]] built from the lake's own metadata.
   *
   *  - A root is a whole commit dir (a manifest that covers its dir) or
-  *    one file (an explicit manifest entry). Dirs are listed here, at
-  *    planning time, with Spark's visibility rule (`_`/`.` names are
-  *    skipped unless they hold `=`); nothing lists through Spark, so no
-  *    parallel-listing job ever starts, whatever the root count.
+  *    one file (an explicit manifest entry). Each root is listed once,
+  *    on the driver at planning time ([[LakeFileIndex.listed]]), with
+  *    Spark's visibility rule (`_`/`.` names are skipped unless they
+  *    hold `=`); nothing lists through Spark, so no parallel-listing
+  *    job ever starts, whatever the root count.
   *  - Each file's commit sequence is its one partition value, under
   *    `seqCol`: the sequence-number rule of merge-on-read deletes reads
   *    it per row, exactly, without a literal per file in the plan.
@@ -26,8 +27,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * Statuses come from the same Hadoop filesystem Spark's own listing
   * uses, so `_metadata.file_path` spells every file exactly as a
   * listed scan would (position deletes join on that spelling). */
-private[sources] final class LakeFileIndex(
-    spark: SparkSession, roots: Seq[LakeFileIndex.Root], seqCol: String)
+private[sources] final class LakeFileIndex(roots: Seq[LakeFileIndex.Root], seqCol: String)
     extends FileIndex {
 
   override val partitionSchema: StructType =
@@ -35,17 +35,7 @@ private[sources] final class LakeFileIndex(
 
   override val rootPaths: Seq[Path] = roots.map(r => new Path(r.path))
 
-  private val files: Seq[(FileStatus, Int)] = {
-    val fs = rootPaths.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def visible(name: String): Boolean =
-      !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-        name.endsWith("._COPYING_"))
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq.filter(s => visible(s.getPath.getName)).flatMap(leaves)
-    roots.zip(rootPaths).flatMap { case (r, p) =>
-      leaves(fs.getFileStatus(fs.makeQualified(p))).map(_ -> r.seq) }
-  }
+  private val files: Seq[(FileStatus, Int)] = roots.flatMap(r => r.files.map(_ -> r.seq))
 
   private val partitions: Seq[PartitionDirectory] =
     files.groupBy(_._2).toSeq.sortBy(_._1).map { case (seq, fs) =>
@@ -75,6 +65,21 @@ private[sources] final class LakeFileIndex(
 }
 
 private[sources] object LakeFileIndex {
-  /** A whole commit dir or one lake file, read at commit sequence `seq`. */
-  final case class Root(path: String, seq: Int)
+  /** A whole commit dir or one lake file, read at commit sequence
+    * `seq`, with the visible files under it. */
+  final case class Root(path: String, seq: Int, files: Seq[FileStatus])
+
+  /** `path` (a commit dir, listed recursively, or one file) listed on
+    * the driver with Spark's visibility rule. */
+  def listed(spark: SparkSession, path: String, seq: Int): Root = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible(name: String): Boolean =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_"))
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(s => visible(s.getPath.getName)).flatMap(leaves)
+    Root(path, seq, leaves(fs.getFileStatus(fs.makeQualified(p))))
+  }
 }

@@ -380,29 +380,48 @@ object LakeTable {
   }
 
   /** The entries of one manifest, stamped with its list row's
-    * kind/seq/cols (sequence-number and field-id inheritance).
-    * Driver-side Jackson parse for JSON manifests; a one-file spark
-    * read for parquet ones — used for small plans and GC; large
-    * plans go through [[distributedPlan]] instead. */
+    * kind/seq/cols (sequence-number and field-id inheritance), parsed
+    * driver-side whatever the encoding — Jackson for JSON manifests,
+    * parquet-hadoop for parquet ones — so reading a manifest never
+    * starts a Spark job. Used for small plans, DML and GC; large plans
+    * go through [[distributedPlan]] instead. */
   private[graft] def readManifest(ref: ManifestRef): Seq[ManifestEntry] =
     if (ref.manifest.endsWith(".parquet")) {
-      SparkSession.active.read.parquet(ref.manifest).collect().toSeq.map { r =>
-        def mapOf[T](name: String): Map[String, Seq[T]] =
-          Option(r.getAs[scala.collection.Map[String, scala.collection.Seq[T]]](name))
-            .map(_.map { case (k, v) => k -> v.toSeq }.toMap)
-            .getOrElse(Map.empty)
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport,
+          new org.apache.hadoop.fs.Path(ref.manifest))
+        .withConf(SparkSession.active.sparkContext.hadoopConfiguration).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        // manifests written before rows/frid/seq were recorded lack the field
+        def has(name: String) =
+          g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0
+        def long(name: String) = if (has(name)) g.getLong(name, 0) else -1L
+        // MAP<STRING, ARRAY<T>> as Spark writes it: key_value(key, value: list(element))
+        def mapOf[T](name: String)(elem: org.apache.parquet.example.data.Group => T)
+            : Map[String, Seq[T]] =
+          if (!has(name)) Map.empty
+          else {
+            val m = g.getGroup(name, 0)
+            (0 until m.getFieldRepetitionCount(0)).map { i =>
+              val kv = m.getGroup(0, i)
+              val vs =
+                if (kv.getFieldRepetitionCount(1) == 0) Nil
+                else {
+                  val l = kv.getGroup(1, 0)
+                  (0 until l.getFieldRepetitionCount(0)).map(j => elem(l.getGroup(0, j)))
+                }
+              kv.getString(0, 0) -> vs
+            }.toMap
+          }
         // per-entry seq PIN (consolidated manifests) wins over list-row
         // inheritance — the same stored-beats-derived rule as frid
-        val pinned =
-          if (r.schema.fieldNames.contains("seq")) r.getAs[Int]("seq") else -1
-        ManifestEntry(r.getAs[String]("file"), r.getAs[String]("base"),
-          mapOf[Double]("stats"), ref.kind,
+        val pinned = if (has("seq")) g.getInteger("seq", 0) else -1
+        ManifestEntry(g.getString("file", 0), g.getString("base", 0),
+          mapOf("stats")(_.getDouble(0, 0)), ref.kind,
           if (pinned >= 0) pinned else ref.seq, ref.cols,
-          mapOf[Long]("bloom"), r.getAs[Long]("bytes"),
-          // manifests written before rows were recorded lack the column
-          if (r.schema.fieldNames.contains("rows")) r.getAs[Long]("rows") else -1L,
-          if (r.schema.fieldNames.contains("frid")) r.getAs[Long]("frid") else -1L)
-      }
+          mapOf("bloom")(_.getLong(0, 0)), long("bytes"), long("rows"), long("frid"))
+      }.toList
+      finally reader.close()
     } else readJsonLines(Paths.get(ref.manifest)).map { n =>
       val bloom = Option(n.get("bloom")).filter(_.isObject).map { o =>
         o.properties().asScala.map(e =>
@@ -415,28 +434,6 @@ object LakeTable {
         Option(n.get("bytes")).map(_.asLong(-1L)).getOrElse(-1L),
         Option(n.get("rows")).map(_.asLong(-1L)).getOrElse(-1L),
         Option(n.get("frid")).map(_.asLong(-1L)).getOrElse(-1L))
-    }
-
-  /** A manifest's entries as a read needs them (file, base, sequence,
-    * field ids; no stats), parsed in process whatever the encoding:
-    * a parquet manifest reads through parquet-hadoop, never through a
-    * Spark job as [[readManifest]] does. */
-  private def manifestFiles(ref: ManifestRef): Seq[ManifestEntry] =
-    if (!ref.manifest.endsWith(".parquet")) readManifest(ref)
-    else {
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport,
-          new org.apache.hadoop.fs.Path(ref.manifest))
-        .withConf(SparkSession.active.sparkContext.hadoopConfiguration).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        // the per-entry seq pin of a consolidated manifest wins, as in readManifest
-        val pinned =
-          if (g.getType.containsField("seq") && g.getFieldRepetitionCount("seq") > 0)
-            g.getInteger("seq", 0) else -1
-        ManifestEntry(g.getString("file", 0), g.getString("base", 0), Map.empty, ref.kind,
-          if (pinned >= 0) pinned else ref.seq, ref.cols)
-      }.toList
-      finally reader.close()
     }
 
   /** Manifest entries of `refs` as ONE distributed frame under
@@ -2943,27 +2940,41 @@ object LakeTable {
     * Each generation reads over a [[LakeFileIndex]] that carries every
     * file's commit sequence (a consolidated manifest's per-entry pins
     * included) under `seqCol`. Hive-layout dirs (their partition values
-    * are typed from the dir names) and dirs without a record (pre-record
-    * commits, `add_files`/`snapshot` imports) keep one scan per
-    * (dir, sequence), the sequence a literal. Returns each frame with
-    * the write-time field ids its caller projects by, in first-seen
-    * order (the union's column order follows the first frame). */
+    * are typed from the dir names; told from the same listing the index
+    * is built from) and dirs without a record (pre-record commits,
+    * `add_files`/`snapshot` imports) keep one scan per (dir, sequence),
+    * the sequence a literal. Returns each frame with the write-time
+    * field ids its caller projects by, in first-seen order (the union's
+    * column order follows the first frame). */
   private def generationScans(
       spark: SparkSession, refs: Seq[ManifestRef], entries: Seq[ManifestEntry],
       seqCol: String): Seq[(DataFrame, Map[String, Int])] = {
-    // a dir's generation schema: its record, unless it has none or is hive
-    val schemas = scala.collection.mutable.HashMap.empty[String, Option[org.apache.spark.sql.types.StructType]]
-    def schemaOf(base: String) =
-      schemas.getOrElseUpdate(base, schemaRecord(base).filterNot(_ => hiveLayoutDir(base)))
-    val roots = (entries ++ refs.filter(_.partial).flatMap(manifestFiles))
+    val dirs = scala.collection.mutable.HashMap.empty[String,
+      Option[(org.apache.spark.sql.types.StructType, String)]]
+    // a dir's recorded schema, with its qualified path the listing spells
+    def recorded(base: String) = dirs.getOrElseUpdate(base, schemaRecord(base).map { sch =>
+      val p = new org.apache.hadoop.fs.Path(base)
+      sch -> p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+        .toUri.getPath
+    })
+    val roots = (entries ++ refs.filter(_.partial).flatMap(readManifest))
       .map(e => (e.base, e.cols, e.seq, e.file)) ++
       refs.filterNot(_.partial).map(r => (r.base, r.cols, r.seq, r.base))
     // a generation groups by (field ids, schema); a per-dir scan by
     // (field ids, dir, sequence)
-    val keyed = roots.map { case (base, cols, seq, root) =>
-      val schema = schemaOf(base)
-      (cols, schema, if (schema.isEmpty) Some((base, seq)) else None) ->
-        LakeFileIndex.Root(root, seq)
+    def underHiveDir(dir: String, f: org.apache.hadoop.fs.FileStatus) = {
+      val rel = f.getPath.toUri.getPath.stripPrefix(dir + "/").split('/')
+      rel.length > 1 && hiveLayoutName(rel.head)
+    }
+    val keyed = roots.map { case (base, cols, seq, path) =>
+      val grouped = recorded(base).flatMap { case (sch, dir) =>
+        val root = LakeFileIndex.listed(spark, path, seq)
+        if (root.files.exists(underHiveDir(dir, _))) None else Some(sch -> root)
+      }
+      grouped match {
+        case Some((sch, root)) => (cols, Some(sch), None) -> root
+        case None => (cols, None, Some((base, seq))) -> LakeFileIndex.Root(path, seq, Nil)
+      }
     }
     val rootsOf = keyed.groupMap(_._1)(_._2)
     keyed.map(_._1).distinct.map { case key @ (cols, schema, perDir) =>
@@ -2972,7 +2983,7 @@ object LakeTable {
         case Some((base, seq)) =>
           dirScan(spark, base, rs.map(_.path)).withColumn(seqCol, lit(seq))
         case None =>
-          val index = new LakeFileIndex(spark, rs, seqCol)
+          val index = new LakeFileIndex(rs, seqCol)
           dropHidden(spark.baseRelationToDataFrame(
             org.apache.spark.sql.execution.datasources.HadoopFsRelation(
               index, index.partitionSchema, schema.get, None,
@@ -4293,7 +4304,7 @@ object LakeTable {
     val survivors =
       if (touched.isEmpty) cur.limit(0).drop(FpCol, RiCol, SeqCol)
       else {
-        val surv = rowsOfFiles(spark, plan, touched, mm, lineage)
+        val surv = rowsOfFiles(spark, plan, cur, touched, mm, lineage)
           .join(srcKeys, col(keyCol) === col("__graft_uk"), "left_anti")
         if (!lineage) surv.drop(FpCol, RiCol, SeqCol)
         else materializeLineage(spark, surv,
@@ -4560,7 +4571,7 @@ object LakeTable {
             else d.withColumn(c, lit(null).cast("long")))
         }
         else {
-          val rows = rowsOfFiles(spark, plan, touched, mm, lineage)
+          val rows = rowsOfFiles(spark, plan, cur, touched, mm, lineage)
           if (!lineage) rows.drop(FpCol, RiCol, SeqCol)
           else materializeLineage(spark, rows, plan.live, mm, path)
         }
@@ -5903,7 +5914,7 @@ object LakeTable {
       case Some(cur) =>
         val touched = touchedFiles(cur, matches)
         val mm = manifestMemo()
-        def rowsOf(files: Set[String]) = rowsOfFiles(spark, plan, files, mm, lineage)
+        def rowsOf(files: Set[String]) = rowsOfFiles(spark, plan, cur, files, mm, lineage)
         val counts =
           if (touched.isEmpty) Map.empty[String, (Long, Long)]
           else fileMatchCounts(rowsOf(touched), matches)
@@ -6012,7 +6023,7 @@ object LakeTable {
       case Some(cur) =>
         val touched = touchedFiles(cur, matches)
         val mm = manifestMemo()
-        def rowsOf(files: Set[String]) = rowsOfFiles(spark, plan, files, mm, lineage)
+        def rowsOf(files: Set[String]) = rowsOfFiles(spark, plan, cur, files, mm, lineage)
         val counts =
           if (touched.isEmpty) Map.empty[String, (Long, Long)]
           else fileMatchCounts(rowsOf(touched), matches)
@@ -6144,16 +6155,22 @@ object LakeTable {
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-  /** The visible rows of `files` (scan-time URIs), file identity
-    * riding: the re-read of the file-granular DML planners' per-file
-    * counts and survivor passes. `plan` narrows to exactly those files'
-    * entries, its deletes still applying, so the scan opens only them. */
+  /** The visible rows of `files` (scan-time URIs) under the columns of
+    * `cur`, the frame they were picked from, file identity riding: the
+    * re-read of the file-granular DML planners' per-file counts and
+    * survivor passes. `plan` narrows to exactly those files' entries,
+    * its deletes still applying, so the scan opens only them. The
+    * files may all predate a column `cur` carries (their generations
+    * alone would not null-extend it), so the re-read unions under an
+    * empty `cur`, which the optimizer folds away. */
   private def rowsOfFiles(
-      spark: SparkSession, plan: ScanPlan, files: Set[String],
+      spark: SparkSession, plan: ScanPlan, cur: DataFrame, files: Set[String],
       entriesOf: ManifestRef => Seq[ManifestEntry], lineage: Boolean): DataFrame = {
     val want = files.map(plainPath)
-    assemble(spark, plan.only(plan.live.flatMap(entriesOf).filter(e => want(e.file))),
-      meta = true, lineageCols = lineage)
+    cur.limit(0).unionByName(
+      assemble(spark, plan.only(plan.live.flatMap(entriesOf).filter(e => want(e.file))),
+        meta = true, lineageCols = lineage),
+      allowMissingColumns = true)
   }
 
   /** The layout a DML rewrite lands under: the table's STANDING spec
@@ -6275,7 +6292,7 @@ object LakeTable {
         // (Iceberg's UPDATE rule), and an UPDATED row's last-updated
         // goes NULL so it inherits the rewriting commit's sequence
         def projected: DataFrame = {
-          val tr = rowsOfFiles(spark, plan, touched, mm, lineage)
+          val tr = rowsOfFiles(spark, plan, cur, touched, mm, lineage)
           val selCols = visible.map { c =>
             set.get(c).map(v => when(p, v).otherwise(col(c)).as(c)).getOrElse(col(c))
           }
@@ -6814,11 +6831,13 @@ object LakeTable {
     Files.isDirectory(bp) && {
       val ls = Files.list(bp)
       try ls.iterator().asScala.exists { p =>
-        val n = p.getFileName.toString
-        Files.isDirectory(p) && n.contains('=') && !n.startsWith(HiddenPrefix)
+        Files.isDirectory(p) && hiveLayoutName(p.getFileName.toString)
       } finally ls.close()
     }
   }
+
+  /** A commit dir's subdir name that holds a hive partition value. */
+  private def hiveLayoutName(n: String): Boolean = n.contains('=') && !n.startsWith(HiddenPrefix)
 
   /** MANIFEST CONSOLIDATION — Iceberg's `rewrite_manifests` (round-10
     * verdict "missing" #1), METADATA-ONLY: every commit appends a

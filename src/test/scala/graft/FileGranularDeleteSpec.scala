@@ -104,6 +104,52 @@ class FileGranularDeleteSpec extends AnyFunSuite {
     assert(out.filter(col("tag") === "hit").count() === 0)
   }
 
+  test("re-reading only an older generation's files keeps the table's columns") {
+    val p = "/tmp/graft_test/fgdel_two_gen"
+    // generation 0 (id, grp, v) in ONE file; generation 1 adds `w`.
+    // Every statement below touches only the generation-0 file, while
+    // its predicate or assignment names `w`.
+    def twoGenerations(): Unit = {
+      SparkSpec.rmdir(p)
+      LakeTable.overwrite(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0))
+        .toDF("id", "grp", "v").coalesce(1), p)
+      LakeTable.append(Seq((10L, "b", 10.0, 7L)).toDF("id", "grp", "v", "w"), p)
+    }
+    type R = (Long, String, Double, Option[Long])
+    val model: Set[R] = Set((1L, "a", 1.0, None), (2L, "b", 2.0, None),
+      (3L, "a", 3.0, None), (10L, "b", 10.0, Some(7L)))
+    def rows(): Set[R] = LakeTable.read(spark, p).select("id", "grp", "v", "w").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
+        Option(r.get(3)).map(_.asInstanceOf[Long]))).toSet
+    def replacedFiles(): Set[String] =
+      files(p, LakeTable.latestVersion(p).get - 1) -- files(p, LakeTable.latestVersion(p).get)
+
+    twoGenerations()
+    // a string predicate implies no interval: classification spans both generations
+    LakeTable.update(spark, p, Map("v" -> lit(0.0)), col("grp") === "a")
+    assert(replacedFiles() === files(p, 0))
+    assert(rows() === model.map { case (i, g, v, w) => (i, g, if (g == "a") 0.0 else v, w) })
+
+    twoGenerations()
+    LakeTable.delete(spark, p, col("w").isNull && col("grp") === "b")
+    assert(replacedFiles() === files(p, 0))
+    assert(rows() === model - ((2L, "b", 2.0, None)))
+
+    twoGenerations()
+    LakeTable.upsert(Seq((3L, "a", 30.0, 5L)).toDF("id", "grp", "v", "w"), p, "id")
+    assert(replacedFiles() === files(p, 0))
+    assert(rows() === model - ((3L, "a", 3.0, None)) + ((3L, "a", 30.0, Some(5L))))
+
+    twoGenerations()
+    LakeTable.mergeConditional(Seq((1L, "a", 1.0, 9L)).toDF("id", "grp", "v", "w"), p, "id",
+      matched = Seq(LakeTable.MatchedUpdate(None, Map("w" -> (col("t.w") + col("s.w"))))))
+    assert(replacedFiles() === files(p, 0))
+    assert(rows() === model)  // NULL + 9 stays NULL
+    LakeTable.mergeConditional(Seq((1L, "a", 1.0, 9L)).toDF("id", "grp", "v", "w"), p, "id",
+      matched = Seq(LakeTable.MatchedUpdate(Some(col("t.w").isNull), Map("w" -> col("s.w")))))
+    assert(rows() === model - ((1L, "a", 1.0, None)) + ((1L, "a", 1.0, Some(9L))))
+  }
+
   test("carried files keep their older MoR deletes subtracting") {
     val p = "/tmp/graft_test/fgdel_mor"
     SparkSpec.rmdir(p)

@@ -1397,6 +1397,33 @@ class LakeTableSpec extends AnyFunSuite {
     assert(ops === Seq("overwrite", "append"), ops.toString)
   }
 
+  test("columnar metadata: a parquet manifest decodes every entry field as JSON does") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val df = spark.range(0, 400).select(col("id").as("k"), (col("id") * 2.0).as("v"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+    def build(p: String): Seq[LakeTable.ManifestEntry] = {
+      rmdir(p)
+      LakeTable.overwrite(df, p)
+      LakeTable.enableRowLineage(spark, p)
+      LakeTable.append(Seq((1000L, 1.0)).toDF("k", "v"), p)
+      LakeTable.withBloom(spark, p, "k")
+      // one consolidated manifest over both commits: per-entry seq pins
+      LakeTable.rewriteManifests(spark, p, targetFiles = 100)
+      LakeTable.entriesOf(p, LakeTable.latestVersion(p).get)
+    }
+    def fields(es: Seq[LakeTable.ManifestEntry]) =
+      es.map(e => (e.stats, e.bytes, e.rows, e.frid, e.seq, e.kind, e.bloom)).toSet
+    val eJ = build("/tmp/graft_test/meta_fields_json")
+    val eP = LakeTable.withColumnarMetaThreshold(0)(build("/tmp/graft_test/meta_fields_pq"))
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(
+      "/tmp/graft_test/meta_fields_pq/_graft_meta/manifests")).iterator().asScala
+      .exists(_.toString.endsWith(".parquet")), "threshold 0 must write parquet manifests")
+    assert(eJ.map(_.seq).distinct.size === 2 && eJ.forall(_.bloom.nonEmpty) &&
+      eJ.forall(e => e.rows > 0 && e.frid >= 0 && e.stats.nonEmpty), eJ.toString)
+    assert(fields(eP) === fields(eJ))
+  }
+
   test("declared sort order keeps append skipping as tight as OPTIMIZE") {
     import spark.implicits._
     val df = spark.range(0, 400).select(col("id").as("k"), (col("id") * 2.0).as("v"))
