@@ -13,6 +13,24 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+object GraftCatalog {
+
+  /** The most rows a driver-local metadata table (`entries`,
+    * `position_deletes`, `all_files`) serves: its LocalScan holds them
+    * all in driver memory. */
+  private[graft] val DriverLocalBound = 10000L
+
+  /** Refuse the driver-local metadata table `surface` of `table` when
+    * it would hold more than [[DriverLocalBound]] rows, naming the
+    * library frame (`LakeTable.<frame>`) that serves any size. */
+  private[graft] def requireDriverLocal(
+      table: String, surface: String, rows: Long, what: String, frame: String): Unit =
+    require(rows <= DriverLocalBound,
+      s"$table claims $rows $what — the `$surface` SQL surface is " +
+        s"driver-local and stops at $DriverLocalBound rows; read " +
+        s"LakeTable.$frame(spark, path) instead (one distributed job)")
+}
+
 /** A DataSourceV2 [[TableCatalog]] over a lake warehouse directory —
   * the Iceberg-SparkCatalog-shaped surface that makes lake tables
   * first-class SQL objects instead of paths:
@@ -459,36 +477,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case "entries" =>
         // per-manifest-entry debug rows (seqs, delete kinds, lineage
         // spans). O(#files) — a LocalScan materializes on the driver,
-        // so past the distributed-plan threshold this surface refuses
-        // by name and points at the distributed library frame (the
-        // same honesty rule that keeps `files` off the LocalScan path)
+        // so past its bound this surface refuses by name and points at
+        // the distributed library frame (the same honesty rule that
+        // keeps `files` off the LocalScan path)
         import org.apache.spark.sql.functions.{coalesce, lit, sum}
         val claimed = LakeTable.manifests(spark, parent)
           .agg(coalesce(sum("n_files"), lit(0L))).head().getLong(0)
-        require(claimed <= LakeTable.DistributedPlanThreshold,
-          s"$parent claims $claimed files — the `entries` SQL surface is " +
-            "driver-local and stops at the distributed-plan threshold " +
-            s"(${LakeTable.DistributedPlanThreshold}); read " +
-            "LakeTable.entries(spark, path) instead (one distributed job)")
+        GraftCatalog.requireDriverLocal(parent, "entries", claimed, "files", "entries")
         Some(new GraftLocalTable(
           s"${ident.namespace.mkString(".")}.entries",
           LakeTable.entries(spark, parent)))
       case "position_deletes" =>
         // one row per deleted position (posdel rows + expanded DV
         // bits). O(deleted rows) — the same LocalScan honesty rule:
-        // refuse past the threshold by the claimed delete-row bound
-        // a DV manifest's n_rows counts BITMAPS, not set bits, so the
+        // refuse past the bound by the claimed delete-row count.
+        // A DV manifest's n_rows counts BITMAPS, not set bits, so the
         // honest bound is a distributed count of the frame itself
         // (O(delete files) work, one small job — never driver rows)
         val pd = LakeTable.positionDeletes(spark, parent)
-        val claimed = pd.count()
-        require(claimed <= LakeTable.DistributedPlanThreshold,
-          s"$parent claims $claimed position-delete rows — the " +
-            "`position_deletes` SQL surface is driver-local and stops at " +
-            s"the distributed-plan threshold " +
-            s"(${LakeTable.DistributedPlanThreshold}); read " +
-            "LakeTable.positionDeletes(spark, path) instead (one " +
-            "distributed job)")
+        GraftCatalog.requireDriverLocal(parent, "position_deletes", pd.count(),
+          "position-delete rows", "positionDeletes")
         Some(new GraftLocalTable(
           s"${ident.namespace.mkString(".")}.position_deletes", pd))
       case "all_manifests" =>
@@ -502,11 +510,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         import org.apache.spark.sql.functions.{coalesce, lit, sum}
         val claimed = LakeTable.allManifests(spark, parent)
           .agg(coalesce(sum("n_files"), lit(0L))).head().getLong(0)
-        require(claimed <= LakeTable.DistributedPlanThreshold,
-          s"$parent claims $claimed (snapshot, file) rows across its history " +
-            "— the `all_files` SQL surface is driver-local and stops at the " +
-            s"distributed-plan threshold (${LakeTable.DistributedPlanThreshold}); " +
-            "read LakeTable.allFiles(spark, path) instead (one distributed job)")
+        GraftCatalog.requireDriverLocal(parent, "all_files", claimed,
+          "(snapshot, file) rows across its history", "allFiles")
         Some(new GraftLocalTable(
           s"${ident.namespace.mkString(".")}.all_files",
           LakeTable.allFiles(spark, parent)))

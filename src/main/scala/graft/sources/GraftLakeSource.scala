@@ -35,8 +35,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * whole-stage codegen, columnar batches, and parquet row-group
   * pushdown all come from the engine, exactly as a Spark-first design
   * wants. At 100 TB the scan-side cost model is unchanged from the
-  * library path: the prune runs on manifest metadata (distributed past
-  * `DistributedPlanThreshold`), never on data files.
+  * library path: the prune runs on manifest metadata, read on the
+  * driver, never on data files.
   *
   * Scope: ONE servability rule of the plan (`LakeTable.v2Refusal`)
   * names the snapshots a file-level scan cannot serve — live

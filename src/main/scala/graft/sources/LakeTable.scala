@@ -34,11 +34,8 @@ import org.apache.spark.sql.functions._
   * the parquet reader without ever deserializing a per-file entry, and
   * a stats-pruned scan ([[readWhere]]) eliminates whole manifests by
   * their aggregated column ranges BEFORE any entry row is touched —
-  * only range-overlapping manifests have their entries read, driver-
-  * side when small, as ONE distributed Spark job when the surviving
-  * manifests claim more than [[DistributedPlanThreshold]] files (the
-  * 10⁷-file posture: the driver never materializes a full file list,
-  * it collects only the pruned survivors).
+  * only range-overlapping manifests have their entries read, on the
+  * driver ([[readManifest]]), without a Spark job.
   *
   * Manifests and lists are written by the DRIVER (tiny JSON-lines
   * files, like Iceberg's avro metadata — commits are client-side
@@ -236,10 +233,10 @@ object LakeTable {
     * lists) is written as PARQUET instead of JSON lines — the
     * SCALE.md crossover: a 10⁵-entry manifest as JSON pays per-row
     * Jackson parsing and 3-5× the bytes; as parquet it is column-
-    * pruned, predicate-pushed and splittable for the distributed
-    * planner. Below the threshold JSON keeps metadata human-readable
-    * and zero-job. Readers accept BOTH encodings side by side
-    * (discriminated by extension), so the crossover needs no
+    * pruned and splittable for the metadata-table jobs. Below the
+    * threshold JSON keeps metadata human-readable. Both encodings
+    * decode on the driver without a job, and readers accept BOTH side
+    * by side (discriminated by extension), so the crossover needs no
     * migration and old commits stay readable forever. Mutate only
     * through [[withColumnarMetaThreshold]]. */
   @volatile private[graft] var ColumnarMetaThreshold = 10000L
@@ -383,46 +380,20 @@ object LakeTable {
     * kind/seq/cols (sequence-number and field-id inheritance), parsed
     * driver-side whatever the encoding — Jackson for JSON manifests,
     * parquet-hadoop for parquet ones — so reading a manifest never
-    * starts a Spark job. Used for small plans, DML and GC; large plans
-    * go through [[distributedPlan]] instead. */
+    * starts a Spark job. Every planner, DML, GC and metadata fold reads
+    * entries through it. */
   private[graft] def readManifest(ref: ManifestRef): Seq[ManifestEntry] =
-    if (ref.manifest.endsWith(".parquet")) {
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport,
-          new org.apache.hadoop.fs.Path(ref.manifest))
-        .withConf(SparkSession.active.sparkContext.hadoopConfiguration).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        // manifests written before rows/frid/seq were recorded lack the field
-        def has(name: String) =
-          g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0
-        def long(name: String) = if (has(name)) g.getLong(name, 0) else -1L
-        // MAP<STRING, ARRAY<T>> as Spark writes it: key_value(key, value: list(element))
-        def mapOf[T](name: String)(elem: org.apache.parquet.example.data.Group => T)
-            : Map[String, Seq[T]] =
-          if (!has(name)) Map.empty
-          else {
-            val m = g.getGroup(name, 0)
-            (0 until m.getFieldRepetitionCount(0)).map { i =>
-              val kv = m.getGroup(0, i)
-              val vs =
-                if (kv.getFieldRepetitionCount(1) == 0) Nil
-                else {
-                  val l = kv.getGroup(1, 0)
-                  (0 until l.getFieldRepetitionCount(0)).map(j => elem(l.getGroup(0, j)))
-                }
-              kv.getString(0, 0) -> vs
-            }.toMap
-          }
-        // per-entry seq PIN (consolidated manifests) wins over list-row
-        // inheritance — the same stored-beats-derived rule as frid
-        val pinned = if (has("seq")) g.getInteger("seq", 0) else -1
-        ManifestEntry(g.getString("file", 0), g.getString("base", 0),
-          mapOf("stats")(_.getDouble(0, 0)), ref.kind,
-          if (pinned >= 0) pinned else ref.seq, ref.cols,
-          mapOf("bloom")(_.getLong(0, 0)), long("bytes"), long("rows"), long("frid"))
-      }.toList
-      finally reader.close()
-    } else readJsonLines(Paths.get(ref.manifest)).map { n =>
+    if (ref.manifest.endsWith(".parquet")) parquetRows(ref.manifest)(_.map { g =>
+      // per-entry seq PIN (consolidated manifests) wins over list-row
+      // inheritance — the same stored-beats-derived rule as frid
+      val pinned = g.int("seq")
+      ManifestEntry(g.str("file"), g.str("base"),
+        g.mapOf("stats")(g.listIn(_)(_.getDouble(0, 0))), ref.kind,
+        if (pinned >= 0) pinned else ref.seq, ref.cols,
+        g.mapOf("bloom")(g.listIn(_)(_.getLong(0, 0))),
+        g.long("bytes"), g.long("rows"), g.long("frid"))
+    }.toList)
+    else readJsonLines(Paths.get(ref.manifest)).map { n =>
       val bloom = Option(n.get("bloom")).filter(_.isObject).map { o =>
         o.properties().asScala.map(e =>
           e.getKey -> e.getValue.elements().asScala.map(_.asLong).toSeq).toMap
@@ -436,10 +407,55 @@ object LakeTable {
         Option(n.get("frid")).map(_.asLong(-1L)).getOrElse(-1L))
     }
 
+  /** One row of a driver-written parquet metadata file (a manifest or
+    * a manifest list), as parquet-hadoop's example Group API decodes
+    * it. A field the writer predates, or a null, reads as absent. */
+  private final class MetaRow(g: org.apache.parquet.example.data.Group) {
+    private type G = org.apache.parquet.example.data.Group
+    def has(name: String): Boolean =
+      g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0
+    def str(name: String): String = g.getString(name, 0)
+    def int(name: String): Int = if (has(name)) g.getInteger(name, 0) else -1
+    def long(name: String): Long = if (has(name)) g.getLong(name, 0) else -1L
+    def bool(name: String): Boolean = has(name) && g.getBoolean(name, 0)
+    /** field `i` of `parent` as a LIST the way Spark writes it:
+      * list(element), one `elem` per element group */
+    def listIn[T](parent: G, i: Int = 1)(elem: G => T): Seq[T] =
+      if (parent.getFieldRepetitionCount(i) == 0) Nil
+      else {
+        val l = parent.getGroup(i, 0)
+        (0 until l.getFieldRepetitionCount(0)).map(j => elem(l.getGroup(0, j)))
+      }
+    def seqOf[T](name: String)(elem: G => T): Seq[T] =
+      if (!has(name)) Nil else listIn(g, g.getType.getFieldIndex(name))(elem)
+    /** a MAP<STRING, V> the way Spark writes it: key_value(key, value),
+      * `value` reading each key_value group */
+    def mapOf[V](name: String)(value: G => V): Map[String, V] =
+      if (!has(name)) Map.empty
+      else {
+        val m = g.getGroup(name, 0)
+        (0 until m.getFieldRepetitionCount(0)).map { i =>
+          val kv = m.getGroup(0, i)
+          kv.getString(0, 0) -> value(kv)
+        }.toMap
+      }
+  }
+
+  /** Decode a parquet metadata file on the driver, without a Spark job:
+    * `f` consumes its rows and may stop early. */
+  private def parquetRows[A](file: String)(f: Iterator[MetaRow] => A): A = {
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport,
+        new org.apache.hadoop.fs.Path(file))
+      .withConf(SparkSession.active.sparkContext.hadoopConfiguration).build()
+    try f(Iterator.continually(reader.read()).takeWhile(_ != null).map(new MetaRow(_)))
+    finally reader.close()
+  }
+
   /** Manifest entries of `refs` as ONE distributed frame under
     * `schema`, whatever mix of JSON and parquet encodings the refs
-    * carry — the shared scan for the distributed planner and the
-    * bloom probe job. */
+    * carry — the shared scan of the metadata tables (`files`,
+    * `entries`, `allFiles`, `snapshots`, the partitions fold). */
   private def entriesFrameOf(
       spark: SparkSession, refs: Seq[ManifestRef], schema: String): DataFrame = {
     val (pq, js) = refs.partition(_.manifest.endsWith(".parquet"))
@@ -482,24 +498,16 @@ object LakeTable {
     * O(#files)). Sentinel rows (empty snapshot) carry no manifest. */
   private[graft] def listRefs(path: String, version: Int): Seq[ManifestRef] = {
     val p = listFile(path, version).getOrElse(return Nil)
-    if (p.getFileName.toString.endsWith(".parquet"))
-      SparkSession.active.read.parquet(p.toString).collect().toSeq.map { r =>
-        def mapOf[T](name: String): Map[String, Seq[T]] =
-          Option(r.getAs[scala.collection.Map[String, scala.collection.Seq[T]]](name))
-            .map(_.map { case (k, v) => k -> v.toSeq }.toMap).getOrElse(Map.empty)
-        ManifestRef(r.getAs[String]("manifest"), r.getAs[String]("base"),
-          r.getAs[String]("kind"), r.getAs[Int]("seq"),
-          r.getAs[Long]("n_files"), mapOf[Double]("ranges"),
-          Option(r.getAs[scala.collection.Map[String, Int]]("cols"))
-            .map(_.toMap).getOrElse(Map.empty),
-          Option(r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("pspec"))
-            .map(_.toSeq.map(t => PartitionTransform(
-              t.getAs[String]("src"), t.getAs[String]("kind"), t.getAs[Long]("param"))))
-            .getOrElse(Nil),
-          r.getAs[Boolean]("partial"),
-          if (r.schema.fieldNames.contains("n_rows")) r.getAs[Long]("n_rows") else -1L,
-          if (r.schema.fieldNames.contains("first_row_id")) r.getAs[Long]("first_row_id") else -1L)
-      }
+    if (p.getFileName.toString.endsWith(".parquet")) parquetRows(p.toString)(_.map { r =>
+      ManifestRef(r.str("manifest"), r.str("base"), r.str("kind"), r.int("seq"),
+        r.long("n_files"), r.mapOf("ranges")(r.listIn(_)(_.getDouble(0, 0))),
+        r.mapOf("cols")(_.getInteger(1, 0)),
+        r.seqOf("pspec") { l =>
+          val t = l.getGroup(0, 0)
+          PartitionTransform(t.getString("src", 0), t.getString("kind", 0), t.getLong("param", 0))
+        },
+        r.bool("partial"), r.long("n_rows"), r.long("first_row_id"))
+    }.toList)
     else readJsonLines(p)
       .filter(n => n.hasNonNull("manifest"))
       .map { n =>
@@ -2451,7 +2459,7 @@ object LakeTable {
     // Iceberg's check_duplicate_files default: a file the live version
     // already references must not register twice — that silently
     // duplicates every one of its rows. One O(#live files) metadata
-    // read, the same cost any DML plan pays below the threshold.
+    // read, the same cost any DML plan pays.
     if (base >= 0) {
       val live = listRefs(path, base)
         .filter(r => r.kind == "data" && r.nFiles > 0)
@@ -3125,48 +3133,16 @@ object LakeTable {
     // lineage values override per row, so a rewritten file's null
     // slots (freshly inserted rows) INHERIT base + row index and
     // null last-updated inherits the commit's sequence — exactly
-    // Iceberg v3's inheritance rule. Below the plan threshold the map
-    // is a driver-built broadcast; past it, ONE metadata job derives
-    // the same (explicit frid pins win, else manifest base +
-    // file-ordered cumulative rows — the fridMapOf rule in SQL), so
-    // the driver never materializes a 10⁷-file id map.
-    val claimed = live.map(_.nFiles).sum
-    val m: DataFrame =
-      if (claimed <= DistributedPlanThreshold) {
-        val rows: Seq[(String, java.lang.Long, Int)] = live.flatMap { r =>
-          val es = entriesOf(r)
-          val m = fridMapOf(r, es)
-          // per-ENTRY seq (pin-or-inherited, as readManifest stamps
-          // it): a consolidated manifest's null last-updated inherits
-          // the entry's ORIGINATING commit sequence, not the fold's
-          es.map(e => (e.file, java.lang.Long.valueOf(m(e.file)), e.seq))
-        }
-        broadcast(rows.toDF("__graft_lf", "__graft_lb", "__graft_ls"))
-      } else {
-        val refDf = broadcast(live
-          .map(r => (manifestName(r), r.firstRowId, r.seq))
-          .toDF("__graft_mn", "__graft_fr", "__graft_rs"))
-        val ent = entriesFrameOf(spark, live,
-            "file STRING, rows LONG, frid LONG, seq INT")
-          .withColumn("__graft_mn", element_at(split(input_file_name(), "/"), -1))
-        require(ent.filter(col("rows").isNull || col("rows") < 0L)
-            .limit(1).count() == 0L,
-          s"row lineage at $path: entries without row counts — " +
-            "id derivation impossible (compact the legacy vintage)")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("__graft_mn").orderBy("file")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        ent.join(refDf, Seq("__graft_mn"))
-          .withColumn("__graft_off", sum(col("rows")).over(w) - col("rows"))
-          .select(col("file").as("__graft_lf"),
-            when(coalesce(col("frid"), lit(-1L)) >= 0, col("frid"))
-              .otherwise(col("__graft_fr") + col("__graft_off")).as("__graft_lb"),
-            // entry seq pin wins (consolidated manifests), matching
-            // the driver branch's per-entry rule exactly
-            when(coalesce(col("seq"), lit(-1)) >= 0, col("seq"))
-              .otherwise(col("__graft_rs")).as("__graft_ls"))
-      }
+    // Iceberg v3's inheritance rule. The map is a driver-built
+    // broadcast.
+    val m: DataFrame = broadcast(live.flatMap { r =>
+      val es = entriesOf(r)
+      val m = fridMapOf(r, es)
+      // per-ENTRY seq (pin-or-inherited, as readManifest stamps
+      // it): a consolidated manifest's null last-updated inherits
+      // the entry's ORIGINATING commit sequence, not the fold's
+      es.map(e => (e.file, java.lang.Long.valueOf(m(e.file)), e.seq))
+    }.toDF("__graft_lf", "__graft_lb", "__graft_ls"))
     // SCHEME-AWARE join key (round-10 verdict "wrong" #2): the scan's
     // `_metadata.file_path` is a URI (file:///p locally, s3a://b/k on
     // an object store) while manifest entries may carry either form —
@@ -3244,9 +3220,7 @@ object LakeTable {
     * `_last_updated_sequence_number` (the sequence of the commit that
     * last wrote the row — UPDATE bumps it via NULL-inheritance from
     * the rewriting manifest). MoR deletes subtract as everywhere.
-    * O(#files) driver planning metadata for the id map (the
-    * sub-threshold posture; a distributed map is the 10⁷-file
-    * follow-up). */
+    * O(#files) driver planning metadata for the id map. */
   def readWithLineage(
       spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame =
@@ -3255,8 +3229,8 @@ object LakeTable {
   /** [[readWithLineage]] of a plan — pruned by the lineage diff to its
     * churn files, so only the changed files are listed in the scan at
     * all. The id map still derives over ALL live manifests (ids must be
-    * globally consistent — one metadata job past the plan threshold,
-    * inside [[attachLineage]]); the data read is O(kept files). */
+    * globally consistent, see [[attachLineage]]); the data read is
+    * O(kept files). */
   private def lineageRead(spark: SparkSession, plan: ScanPlan): DataFrame = {
     require(nextRowIdOf(plan.path, plan.version).isDefined,
       s"row lineage is not enabled at ${plan.path} — " +
@@ -3342,38 +3316,16 @@ object LakeTable {
       }
     }
 
-  /** Above this many CLAIMED files, entry-level pruning runs as one
-    * distributed Spark job that collects only the survivors — the
-    * driver never materializes a 10⁶-row file list. Below it, a
-    * driver-side parse of the few surviving manifests is cheaper than
-    * a job launch. A var so the spec can lower it and drive the
-    * distributed path end-to-end with HONEST small-table metadata —
-    * mutate ONLY through [[withPlanThreshold]], which restores the
-    * prior value; production code never writes it. */
-  @volatile private[graft] var DistributedPlanThreshold = 10000L
-
-  /** Run `body` with the planner threshold lowered to `t`, restoring
-    * the prior value even on failure — the only sanctioned way to
-    * touch [[DistributedPlanThreshold]] (a bare assignment that skips
-    * the restore would silently change planning for the rest of the
-    * JVM). */
-  private[graft] def withPlanThreshold[A](t: Long)(body: => A): A = {
-    val saved = DistributedPlanThreshold
-    DistributedPlanThreshold = t
-    try body finally DistributedPlanThreshold = saved
-  }
-
   /** How the last [[readWhere]] planned: (manifests in the list,
     * manifests surviving the range prune, files they claim, files
-    * kept, distributed?, manifests planned as whole dirs by the
-    * weak-selectivity fallback). Observability for specs and SCALE.md
-    * — a plan that deserialized a range-excluded manifest is a bug
-    * the spec catches by corrupting one. */
+    * kept, manifests planned as whole dirs — the V2 hive-layout path,
+    * which stops at the range prune). Observability for specs and
+    * SCALE.md — a plan that deserialized a range-excluded manifest is
+    * a bug the spec catches by corrupting one. */
   final case class PlanAudit(
       manifestsTotal: Int, manifestsScanned: Int,
-      filesClaimed: Long, filesKept: Long, distributed: Boolean,
-      manifestsWhole: Int = 0)
-  @volatile private[graft] var lastPlanAudit: PlanAudit = PlanAudit(0, 0, 0, 0, false)
+      filesClaimed: Long, filesKept: Long, manifestsWhole: Int = 0)
+  @volatile private[graft] var lastPlanAudit: PlanAudit = PlanAudit(0, 0, 0, 0)
 
   // per-TABLE audit alongside the global: Verify/Bench run queries from
   // a thread pool, so a concurrent scan of ANOTHER table can clobber
@@ -3403,99 +3355,11 @@ object LakeTable {
     auditByPath.put(normAuditPath(tablePath), a)
   }
   private[graft] def auditOf(path: String): PlanAudit =
-    auditByPath.getOrDefault(normAuditPath(path), PlanAudit(0, 0, 0, 0, false))
-
-  /** Entry-level stats prune as distributed jobs over the surviving
-    * manifests' JSON: filter in Spark SQL, collect only what planning
-    * needs. Returns (whole manifests, pruned entries): a manifest
-    * keeping ≥90% of its files is read as its WHOLE commit dir (one
-    * list row, zero per-file rows to the driver) — on a weakly-
-    * selective predicate over a 10⁷-file snapshot, collecting each
-    * surviving entry would re-materialize ~the full file list on the
-    * driver, the exact posture the distributed plan exists to avoid
-    * (round-5 ADVICE); the row filter after the skip keeps results
-    * exact either way. Job 1 collects per-manifest survivor COUNTS
-    * (O(#manifests) rows); job 2 collects per-file rows only for the
-    * selectively-pruned manifests. Manifests are joined back to their
-    * list rows by FILENAME (a UUID — unique by construction) to
-    * re-attach seq/kind, which entries inherit rather than store. */
-  private def distributedPlan(
-      spark: SparkSession, refs: Seq[ManifestRef],
-      preds: Seq[(String, Double, Double)],
-      nameFor: (ManifestRef, String) => String): (Seq[ManifestRef], Seq[ManifestEntry]) = {
-    import spark.implicits._
-    // each manifest's stats are keyed by ITS write-time column names
-    // (field-id schema evolution) — the per-manifest predicate-key
-    // translation rides in as an array column, joined in BEFORE the
-    // stats filter so one job serves manifests of any schema vintage
-    // BUCKET-equality hidden-partition constraints ride into the job
-    // as (dir-segment, required-value) pairs per manifest: interval
-    // transforms (day/truncate/identity) already prune distributed
-    // via per-file SOURCE-column stats, but bucket hashes scatter the
-    // source values, so the dir name is the only pruning signal
-    def bucketCons(r: ManifestRef): Seq[(String, String)] =
-      r.pspec.filter(_.kind == "bucket").flatMap { t =>
-        // match on the TRANSLATED predicate name: transform sources
-        // are write-time names, predicates arrive in current names
-        preds.filter(p =>
-            nameFor(r, p._1) == t.source && p._2 == p._3 && p._2.isWhole)
-          .map(p => hiddenColName(t) -> bucketOf(p._2.toLong, t.param).toString)
-      }
-    val refDf = refs.map(r =>
-      (manifestName(r), r.kind, r.seq,
-        preds.map { case (c, _, _) => nameFor(r, c) }, bucketCons(r)))
-      .toDF("mname", "kind", "seq", "pnames", "hcons")
-    val entries = entriesFrameOf(spark, refs,
-      "file STRING, base STRING, stats MAP<STRING, ARRAY<DOUBLE>>, seq INT")
-      // per-entry seq PINS (consolidated manifests) win over the list
-      // row's seq — same stored-beats-inherited rule as readManifest
-      .withColumnRenamed("seq", "__graft_eseq")
-      .withColumn("mname", element_at(split(input_file_name(), "/"), -1))
-      .join(broadcast(refDf), Seq("mname"))
-      .withColumn("seq",
-        when(coalesce(col("__graft_eseq"), lit(-1)) >= 0, col("__graft_eseq"))
-          .otherwise(col("seq")))
-      .filter(aggregate(col("hcons"), lit(true), (acc, e) =>
-        acc && col("file").contains(concat(
-          lit("/"), e.getField("_1"), lit("="), e.getField("_2"), lit("/")))))
-    val kept = preds.zipWithIndex.foldLeft(entries) {
-      case (df, ((_, lower, upper), i)) =>
-        // try_element_at: missing key → null (ANSI element_at throws);
-        // a null bounds array coalesces to TRUE = conservatively kept
-        val bounds = try_element_at(col("stats"), element_at(col("pnames"), i + 1))
-        df.filter(coalesce(
-          element_at(bounds, 2) >= lower && element_at(bounds, 1) <= upper,
-          lit(true)))
-    }
-    wholeOrListed(refs, kept)
-  }
-
-  /** The survivors of a distributed prune (`kept`: one row per kept
-    * entry with its manifest's file name, kind and seq), as planning
-    * collects them: job 1 counts survivors per manifest; a manifest
-    * keeping ≥90% of its files is read WHOLE from its list row, and
-    * job 2 collects per-file rows only for the selectively-pruned
-    * rest. Shared by [[distributedPlan]] and [[bloomPrune]]. */
-  private def wholeOrListed(refs: Seq[ManifestRef], kept: DataFrame)
-      : (Seq[ManifestRef], Seq[ManifestEntry]) = {
-    val counts = kept.groupBy("mname").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val survivors = refs.filter(r => counts.getOrElse(manifestName(r), 0L) > 0L)
-    val (full, partial) = survivors.partition(r =>
-      counts(manifestName(r)) * 10L >= r.nFiles * 9L)
-    if (partial.isEmpty) return (full, Nil)
-    val byName = partial.map(r => manifestName(r) -> r).toMap
-    val collected = kept
-      .filter(col("mname").isInCollection(byName.keys.toSeq))
-      .select("file", "base", "kind", "seq", "mname")
-      .collect().toSeq
-      .map(r => ManifestEntry(r.getString(0), r.getString(1), Map.empty,
-        r.getString(2), r.getInt(3), byName(r.getString(4)).cols))
-    (full, collected)
-  }
+    auditByPath.getOrDefault(normAuditPath(path), PlanAudit(0, 0, 0, 0))
 
   /** A manifest's file name — a UUID, unique by construction, which is
-    * how distributed planning joins entries back to their list rows. */
+    * how a metadata job over manifest files joins entries back to their
+    * list rows. */
   private def manifestName(r: ManifestRef): String =
     Paths.get(r.manifest).getFileName.toString
 
@@ -3518,12 +3382,11 @@ object LakeTable {
 
   /** The shared two-level prune behind [[readWhere]] AND the
     * DataSourceV2 read path ([[planV2]]): manifest-range first (from
-    * the list alone), then entry-level stats within the survivors —
-    * driver-side under [[DistributedPlanThreshold]], one Spark job
-    * past it. ONE definition so the two paths can never diverge on
-    * skip behavior, and [[lastPlanAudit]] counts are identical by
-    * construction. Keeps whole manifests plus pruned explicit
-    * entries. */
+    * the list alone), then entry-level stats within the survivors,
+    * read on the driver. ONE definition so the two paths can never
+    * diverge on skip behavior, and [[lastPlanAudit]] counts are
+    * identical by construction. Keeps whole manifests plus pruned
+    * explicit entries. */
   private def prunePlan(
       preds: Seq[(String, Double, Double)],
       // false = stop after the manifest-range level and plan every
@@ -3587,23 +3450,11 @@ object LakeTable {
       }
     }
     // LEVEL 2: entry-level stats prune within surviving manifests —
-    // producing whole manifests read by their commit dir (weakly- or
-    // un-pruned) plus an explicit file list for the selectively-pruned
+    // producing an explicit file list (or, without it, every surviving
+    // manifest read whole by its commit dir)
     val claimed = candidates.map(_.nFiles).sum
-    val distributed = entryLevel && claimed > DistributedPlanThreshold
     val (fullRefs, kept) =
       if (!entryLevel) (candidates, Seq.empty[ManifestEntry])
-      else if (distributed) distributedPlan(spark, candidates, preds,
-        // a candidate kept by a DEFAULT decision has no write-time
-        // name for that column — hand the stats probe a SENTINEL no
-        // stats map can carry, so its entries are conservatively kept
-        // (level 1 already decided that predicate exactly). The
-        // current NAME would be wrong here: after a rename frees a
-        // name and a defaulted re-add takes it, an old manifest still
-        // carries stats under that name for the DIFFERENT (renamed)
-        // field id, and probing them would prune rows the default
-        // serves.
-        (r, c) => writeTimeName(r, c).getOrElse("\u0000__graft_default_kept"))
       else (Nil, candidates.flatMap { r =>
         val named = preds.flatMap { case (c, lo, hi) =>
           writeTimeName(r, c).map((_, lo, hi)) }
@@ -3617,7 +3468,7 @@ object LakeTable {
       })
     recordAudit(p.path, PlanAudit(
       dataRefs.size, candidates.size, claimed,
-      fullRefs.map(_.nFiles).sum + kept.size.toLong, distributed, fullRefs.size))
+      fullRefs.map(_.nFiles).sum + kept.size.toLong, fullRefs.size))
     p.copy(whole = fullRefs, kept = kept)
   }
 
@@ -3718,8 +3569,8 @@ object LakeTable {
     val listedEntries = listed.flatMap(readManifest)
     val all = plan.kept ++ listedEntries
     // exact survivor stats: only when the plan is fully file-listed
-    // (whole-dir and distributed plans skip per-entry metadata by
-    // design — conservative None, Spark falls back to listing sizes)
+    // (whole-dir plans skip per-entry metadata by design —
+    // conservative None, Spark falls back to listing sizes)
     val planStats =
       if (whole.isEmpty && all.forall(e => e.bytes >= 0L && e.rows >= 0L))
         Some((all.map(_.bytes).sum, all.map(_.rows).sum))
@@ -3757,27 +3608,6 @@ object LakeTable {
       count: Option[Long],
       mins: Map[String, Option[Double]], maxes: Map[String, Option[Double]])
 
-  /** Metadata-only global aggregate over snapshot `v` — the
-    * Iceberg-style trick where `SELECT count(*), min(c), max(c)` never
-    * touches a data file: per-file row counts and [min,max] stats were
-    * harvested at commit time, so the answer folds over manifest rows.
-    * Returns None (caller falls back to a real scan) unless the answer
-    * is provably EXACT:
-    *   - the snapshot is pure appended data — any merge-on-read
-    *     manifest (equality/position deletes, deletion vectors)
-    *     subtracts rows the manifests cannot count;
-    *   - no live field-id rename (stats keys are write-time names);
-    *   - `needCount` requires every file to carry a recorded row count
-    *     (legacy entries predate recording);
-    *   - each min/max column requires stats on EVERY file: a file
-    *     missing them may hide NaN/±Inf (whose Spark max would be NaN)
-    *     or be an older-schema vintage — refusal preserves exactness,
-    *     and all-finite stats coverage proves no NaN exists at all.
-    * Below [[DistributedPlanThreshold]] claimed files the fold is a
-    * driver-side manifest read (same cost class as planning); past it,
-    * ONE Spark job over the manifest files aggregates O(#files)
-    * METADATA rows — at 100 TB this answers count(*) in manifest time
-    * while a data scan would read every row. */
   /** One group of a metadata-answered GROUP BY aggregate. */
   private[graft] final case class MetaGroupRow(
       key: Seq[Long], count: Option[Long],
@@ -3792,10 +3622,9 @@ object LakeTable {
     * with min==max can still hold null rows that SQL groups
     * separately). Every refusal returns None and the caller falls
     * back to the real scan, so this path can be absent but never
-    * wrong. Driver-side fold below [[DistributedPlanThreshold]]
-    * claimed files; ONE metadata job over the manifests past it.
-    * Output size is O(#distinct partition values) — the same bounded
-    * plane as any pushed-aggregate result. */
+    * wrong. A driver-side fold over the manifests. Output size is
+    * O(#distinct partition values) — the same bounded plane as any
+    * pushed-aggregate result. */
   private[graft] def metadataGroupAggregate(
       spark: SparkSession, path: String, v: Int, groupCols: Seq[String],
       minCols: Seq[String], maxCols: Seq[String], needCount: Boolean)
@@ -3827,94 +3656,61 @@ object LakeTable {
         .flatMap(_.toLongOption))
       if (vals.exists(_.isEmpty)) None else Some(vals.flatten)
     }
-    val claimed = live.map(_.nFiles).sum
-    val statCols = (minCols ++ maxCols).distinct
-    if (claimed <= DistributedPlanThreshold) {
-      val entries = live.flatMap(readManifest)
-      if (needCount && entries.exists(_.rows < 0L)) return None
-      // per-file pos/DV subtraction counts (O(#touched files) driver
-      // map — only paid below the plan threshold on a MoR snapshot)
-      val delByFile: Map[String, Long] =
-        if (posRefs.isEmpty && dvRefs.isEmpty) Map.empty
-        else morDeletedCounts(spark, posRefs, dvRefs).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val valued = entries.filter(_.rows != 0L)
-      val keyed = valued.map(e => keyOf(e.file) match {
-        case Some(k) => (k, e)
-        case None => return None // null/unparseable dir value
-      })
-      val groups = keyed.groupBy(_._1).toSeq.sortBy(_._1.mkString(","))
-      val out = groups.map { case (k, kes) =>
-        val es = kes.map(_._2)
-        val cnt =
-          if (needCount)
-            Some(es.map(e => e.rows - delByFile.getOrElse(e.file, 0L)).sum)
-          else None
-        def fold(cs: Seq[String], pick: Seq[Double] => Double,
-            reduce: (Double, Double) => Double): Option[Map[String, Option[Double]]] = {
-          val m = cs.distinct.map { c =>
-            val bs = es.map(_.stats.get(c))
-            if (bs.exists(_.isEmpty)) return None // incomplete coverage
-            c -> bs.flatten.map(pick).reduceOption(reduce)
-          }
-          Some(m.toMap)
+    val entries = live.flatMap(readManifest)
+    if (needCount && entries.exists(_.rows < 0L)) return None
+    // per-file pos/DV subtraction counts (O(#touched files) driver
+    // map — only paid on a MoR snapshot)
+    val delByFile: Map[String, Long] =
+      if (posRefs.isEmpty && dvRefs.isEmpty) Map.empty
+      else morDeletedCounts(spark, posRefs, dvRefs).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val valued = entries.filter(_.rows != 0L)
+    val keyed = valued.map(e => keyOf(e.file) match {
+      case Some(k) => (k, e)
+      case None => return None // null/unparseable dir value
+    })
+    val groups = keyed.groupBy(_._1).toSeq.sortBy(_._1.mkString(","))
+    val out = groups.map { case (k, kes) =>
+      val es = kes.map(_._2)
+      val cnt =
+        if (needCount)
+          Some(es.map(e => e.rows - delByFile.getOrElse(e.file, 0L)).sum)
+        else None
+      def fold(cs: Seq[String], pick: Seq[Double] => Double,
+          reduce: (Double, Double) => Double): Option[Map[String, Option[Double]]] = {
+        val m = cs.distinct.map { c =>
+          val bs = es.map(_.stats.get(c))
+          if (bs.exists(_.isEmpty)) return None // incomplete coverage
+          c -> bs.flatten.map(pick).reduceOption(reduce)
         }
-        for {
-          mins <- fold(minCols, _.head, math.min)
-          maxes <- fold(maxCols, _.last, math.max)
-        } yield MetaGroupRow(k, cnt, mins, maxes)
+        Some(m.toMap)
       }
-      if (out.exists(_.isEmpty)) None else Some(out.flatten.toSeq)
-    } else {
-      // ONE metadata job: parse each file's dir key, group on it, and
-      // carry per-group coverage proofs (files with a stat / files)
-      val base0 = entriesFrameOf(spark, live,
-        "file STRING, stats MAP<STRING, ARRAY<DOUBLE>>, rows LONG")
-        .filter(col("rows").isNull || col("rows") =!= 0L)
-      val base =
-        if (posRefs.isEmpty && dvRefs.isEmpty)
-          base0.withColumn("__graft_del", lit(0L))
-        else base0
-          .join(morDeletedCounts(spark, posRefs, dvRefs),
-            col("file") === col("__graft_delf"), "left")
-          .withColumn("__graft_del", coalesce(col("__graft_del"), lit(0L)))
-      val withKeys = prefixes.zipWithIndex.foldLeft(base) { case (df, (p, i)) =>
-        df.withColumn(s"__k$i", expr(
-          s"try_cast(substring(element_at(filter(split(file, '/'), " +
-            s"s -> startswith(s, '$p')), 1), ${p.length + 1}) AS LONG)"))
-      }
-      val keyCols = prefixes.indices.map(i => col(s"__k$i"))
-      val aggs = Seq(
-        count(lit(1)).as("__n"),
-        count(col("rows")).as("__rows_known"),
-        min(col("rows")).as("__rows_min"),
-        (sum(col("rows")) - sum(col("__graft_del"))).as("__rows")) ++
-        statCols.flatMap { c =>
-          val b = try_element_at(col("stats"), lit(c))
-          Seq(count(b).as(s"__has_$c"),
-            min(element_at(b, 1)).as(s"__mn_$c"),
-            max(element_at(b, 2)).as(s"__mx_$c"))
-        }
-      val rs = withKeys.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*).collect()
-      val out = rs.toSeq.map { r =>
-        if (prefixes.indices.exists(r.isNullAt)) return None // unparseable key
-        val key = prefixes.indices.map(r.getLong)
-        val n = r.getAs[Long]("__n")
-        val cnt =
-          if (!needCount) None
-          else if (r.getAs[Long]("__rows_known") == n && r.getAs[Long]("__rows_min") >= 0L)
-            Some(r.getAs[Long]("__rows"))
-          else return None
-        if (statCols.exists(c => r.getAs[Long](s"__has_$c") != n)) return None
-        def side(cs: Seq[String], pfx: String): Map[String, Option[Double]] =
-          cs.distinct.map(c => c -> Option(r.getAs[Any](s"${pfx}_$c"))
-            .map(_.asInstanceOf[Double])).toMap
-        MetaGroupRow(key, cnt, side(minCols, "__mn"), side(maxCols, "__mx"))
-      }
-      Some(out.sortBy(_.key.mkString(",")))
+      for {
+        mins <- fold(minCols, _.head, math.min)
+        maxes <- fold(maxCols, _.last, math.max)
+      } yield MetaGroupRow(k, cnt, mins, maxes)
     }
+    if (out.exists(_.isEmpty)) None else Some(out.flatten.toSeq)
   }
 
+  /** Metadata-only global aggregate over snapshot `v` — the
+    * Iceberg-style trick where `SELECT count(*), min(c), max(c)` never
+    * touches a data file: per-file row counts and [min,max] stats were
+    * harvested at commit time, so the answer folds over manifest rows.
+    * Returns None (caller falls back to a real scan) unless the answer
+    * is provably EXACT:
+    *   - the snapshot is pure appended data — any merge-on-read
+    *     manifest (equality/position deletes, deletion vectors)
+    *     subtracts rows the manifests cannot count;
+    *   - no live field-id rename (stats keys are write-time names);
+    *   - `needCount` requires every file to carry a recorded row count
+    *     (legacy entries predate recording);
+    *   - each min/max column requires stats on EVERY file: a file
+    *     missing them may hide NaN/±Inf (whose Spark max would be NaN)
+    *     or be an older-schema vintage — refusal preserves exactness,
+    *     and all-finite stats coverage proves no NaN exists at all.
+    * The fold is a driver-side manifest read, the same cost class as
+    * planning. */
   private[graft] def metadataAggregate(
       spark: SparkSession, path: String, v: Int,
       minCols: Seq[String], maxCols: Seq[String], needCount: Boolean)
@@ -3934,90 +3730,45 @@ object LakeTable {
       current.flatMap(_.cols.find(_._1 == id)).exists(_._2 != n) })
     if (renamed) return None
     val live = refs.filter(r => r.kind == "data" && r.nFiles > 0)
-    val claimed = live.map(_.nFiles).sum
-    if (claimed == 0L)
+    if (live.isEmpty)
       return Some(MetaAggAnswer(
         if (needCount) Some(0L) else None,
         minCols.map(_ -> None).toMap, maxCols.map(_ -> None).toMap))
     // total pos/DV-deleted rows across the snapshot's LIVE data files
     // (stale delete rows referencing since-dropped files excluded),
     // computed lazily — only a counting pushdown over a MoR snapshot
-    // pays the O(delete bytes) job. The sub-threshold branch filters
-    // against the driver-parsed entry set it already holds; only the
-    // distributed branch pays the manifest-scan semi-join.
+    // pays the O(delete bytes) job
     val hasMor = posRefs.nonEmpty || dvRefs.nonEmpty
-    if (claimed <= DistributedPlanThreshold) {
-      val entries = live.flatMap(readManifest)
-      lazy val deleted: Long =
-        if (!hasMor) 0L
-        else {
-          val liveFiles = entries.map(_.file).toSet
-          morDeletedCounts(spark, posRefs, dvRefs).collect()
-            .filter(r => liveFiles(r.getString(0))).map(_.getLong(1)).sum
-        }
-      val cnt =
-        if (!needCount) None
-        else if (entries.forall(_.rows >= 0L))
-          Some(entries.map(_.rows).sum - deleted)
-        else return None
-      // a PROVABLY-empty file (recorded rows == 0, e.g. an empty
-      // writer-partition part) contributes no value and is exactly
-      // skippable; an UNKNOWN one (-1) stays and must carry stats
-      val valued = entries.filter(_.rows != 0L)
-      def fold(cs: Seq[String], pick: Seq[Double] => Double,
-          reduce: (Double, Double) => Double): Option[Map[String, Option[Double]]] = {
-        val m = cs.distinct.map { c =>
-          val bs = valued.map(_.stats.get(c))
-          if (bs.exists(_.isEmpty)) return None // incomplete coverage
-          c -> bs.flatten.map(pick).reduceOption(reduce) // None = no rows → SQL null
-        }
-        Some(m.toMap)
+    val entries = live.flatMap(readManifest)
+    lazy val deleted: Long =
+      if (!hasMor) 0L
+      else {
+        val liveFiles = entries.map(_.file).toSet
+        morDeletedCounts(spark, posRefs, dvRefs).collect()
+          .filter(r => liveFiles(r.getString(0))).map(_.getLong(1)).sum
       }
-      for {
-        mins <- fold(minCols, _.head, math.min)
-        maxes <- fold(maxCols, _.last, math.max)
-      } yield MetaAggAnswer(cnt, mins, maxes)
-    } else {
-      // one metadata job: per-column coverage counts prove every file
-      // participates before a bound is trusted
-      val cols = (minCols ++ maxCols).distinct
-      val base = entriesFrameOf(spark, live,
-        "file STRING, stats MAP<STRING, ARRAY<DOUBLE>>, rows LONG")
-      // a PROVABLY-empty file (rows == 0) is exactly skippable for
-      // bounds/coverage; unknown rows (null in JSON, -1 sentinel in
-      // parquet encodings) must still carry stats to participate
-      val nz = col("rows").isNull || col("rows") =!= 0L
-      val aggs = Seq(
-        count(lit(1)).as("__n"),
-        count(when(nz, lit(1))).as("__nz"),
-        count(col("rows")).as("__rows_known"),
-        min(col("rows")).as("__rows_min"), sum(col("rows")).as("__rows")) ++
-        cols.flatMap { c =>
-          val b = try_element_at(col("stats"), lit(c))
-          Seq(count(when(nz, b)).as(s"__has_$c"),
-            min(when(nz, element_at(b, 1))).as(s"__mn_$c"),
-            max(when(nz, element_at(b, 2))).as(s"__mx_$c"))
-        }
-      lazy val deleted: Long =
-        if (!hasMor) 0L
-        else morDeletedCounts(spark, posRefs, dvRefs)
-          .join(entriesFrameOf(spark, live, "file STRING").select("file"),
-            col("__graft_delf") === col("file"), "left_semi")
-          .agg(coalesce(sum("__graft_del"), lit(0L))).head.getLong(0)
-      val r = base.agg(aggs.head, aggs.tail: _*).collect().head
-      val n = r.getAs[Long]("__n")
-      val cnt =
-        if (!needCount) None
-        else if (r.getAs[Long]("__rows_known") == n && r.getAs[Long]("__rows_min") >= 0L)
-          Some(r.getAs[Long]("__rows") - deleted)
-        else return None
-      if (cols.exists(c => r.getAs[Long](s"__has_$c") != r.getAs[Long]("__nz")))
-        return None
-      def side(cs: Seq[String], pfx: String): Map[String, Option[Double]] =
-        cs.distinct.map(c => c -> Option(r.getAs[Any](s"${pfx}_$c"))
-          .map(_.asInstanceOf[Double])).toMap
-      Some(MetaAggAnswer(cnt, side(minCols, "__mn"), side(maxCols, "__mx")))
+    val cnt =
+      if (!needCount) None
+      else if (entries.forall(_.rows >= 0L))
+        Some(entries.map(_.rows).sum - deleted)
+      else return None
+    // a PROVABLY-empty file (recorded rows == 0, e.g. an empty
+    // writer-partition part) contributes no value and is exactly
+    // skippable; an UNKNOWN one (-1) stays and must carry stats
+    val valued = entries.filter(_.rows != 0L)
+    def fold(cs: Seq[String], pick: Seq[Double] => Double,
+        reduce: (Double, Double) => Double): Option[Map[String, Option[Double]]] = {
+      val m = cs.distinct.map { c =>
+        val bs = valued.map(_.stats.get(c))
+        if (bs.exists(_.isEmpty)) return None // incomplete coverage
+        c -> bs.flatten.map(pick).reduceOption(reduce) // None = no rows → SQL null
+      }
+      Some(m.toMap)
     }
+    for {
+      mins <- fold(minCols, _.head, math.min)
+      maxes <- fold(maxCols, _.last, math.max)
+    } yield MetaAggAnswer(cnt, mins, maxes)
   }
 
   /** Live data-file count of the latest snapshot (from list rows
@@ -4034,8 +3785,7 @@ object LakeTable {
     * the manifest list's aggregated ranges eliminate whole manifests
     * first (their entry files are never deserialized — spec-enforced
     * by corrupting one), then per-entry stats prune files within the
-    * survivors, driver-side when they claim few files and as one
-    * distributed Spark job past [[DistributedPlanThreshold]].
+    * survivors, on the driver.
     * Files without stats for a column (written before the column
     * existed, or before stats were recorded) are conservatively kept.
     * The precise row filter still applies after the skip, so results
@@ -5108,8 +4858,8 @@ object LakeTable {
     * carry). The table you read when a MoR subtraction or a lineage
     * id looks wrong. ONE distributed job over manifest files, zero
     * data files opened; O(#files) result rows, so the SQL surface
-    * ([[GraftCatalog]] `t.entries`) serves it only below the
-    * distributed-plan threshold — at 10⁷ files, consume THIS frame. */
+    * ([[GraftCatalog]] `t.entries`) serves it only up to its
+    * driver-local bound — past it, consume THIS frame. */
   def entries(
       spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     import spark.implicits._
@@ -5302,49 +5052,22 @@ object LakeTable {
     prunedRead(spark, planScan(spark, path, version, bloomPrune(column, value)),
       Seq(column -> (_ => col(column) === value)))
 
-  /** The bloom prune behind [[readWhereEquals]]: below the plan
-    * threshold a driver-side probe over the entries; past it ONE Spark
-    * job evaluates the same probes against the manifests' bloom JSON
-    * (identical xxhash64 expression — the 10⁷-file posture, mirroring
-    * [[prunePlan]]'s distributed plan, with the same ≥90%-kept
-    * whole-manifest fallback). */
+  /** The bloom prune behind [[readWhereEquals]]: a driver-side probe
+    * over the live entries. */
   private def bloomPrune(column: String, value: String)(
       spark: SparkSession, p: ScanPlan): ScanPlan = {
     val key = bloomKey(p.path, p.version, column)
-    val live = p.live
-    val claimed = live.map(_.nFiles).sum
-    val distributed = claimed > DistributedPlanThreshold
-    val (fullRefs, kept) =
-      if (!distributed)
-        (Nil, live.flatMap(readManifest).filter { e =>
-          e.bloom.get(key) match {
-            case Some(bits +: k +: positions) if bits > 0 =>
-              val set = positions.toSet
-              bloomProbes(value, bits, k).forall(set.contains)
-            case _ => true // no bloom → cannot prune
-          }
-        })
-      else {
-        import spark.implicits._
-        val refDf = live.map(r => (manifestName(r), r.kind, r.seq))
-          .toDF("mname", "kind", "seq")
-        val arr = try_element_at(col("bloom"), lit(key))
-        val positions = slice(arr, lit(3), greatest(size(arr) - 2, lit(0)))
-        val keepCond = arr.isNull ||
-          (element_at(arr, lit(1)) > 0 && forall(
-            sequence(lit(0), element_at(arr, lit(2)).cast("int") - 1),
-            j => array_contains(positions,
-              pmod(xxhash64(lit(value), j), element_at(arr, lit(1))))))
-        wholeOrListed(live, entriesFrameOf(spark, live,
-            "file STRING, base STRING, bloom MAP<STRING, ARRAY<LONG>>")
-          .withColumn("mname", element_at(split(input_file_name(), "/"), -1))
-          .join(broadcast(refDf), Seq("mname"))
-          .filter(keepCond))
+    val kept = p.live.flatMap(readManifest).filter { e =>
+      e.bloom.get(key) match {
+        case Some(bits +: k +: positions) if bits > 0 =>
+          val set = positions.toSet
+          bloomProbes(value, bits, k).forall(set.contains)
+        case _ => true // no bloom → cannot prune
       }
+    }
     recordAudit(p.path, PlanAudit(
-      p.data.size, p.data.size, claimed,
-      fullRefs.map(_.nFiles).sum + kept.size.toLong, distributed, fullRefs.size))
-    p.copy(whole = fullRefs, kept = kept)
+      p.data.size, p.data.size, p.live.map(_.nFiles).sum, kept.size.toLong))
+    p.only(kept)
   }
 
   // ---- per-file NDV sketches (Iceberg's Puffin-stats analogue) ----
@@ -5535,7 +5258,6 @@ object LakeTable {
   def approxCountDistinct(
       spark: SparkSession, path: String, column: String,
       version: Option[Int] = None): Long = {
-    import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
     val v = resolveVersion(path, version)
     val refs = listRefs(path, v)
     val mor = refs.filter(r => r.kind != "data" && r.nFiles > 0)
@@ -5545,34 +5267,11 @@ object LakeTable {
         "cannot subtract deleted rows; compact first")
     val key = ndvKey(path, v, column)
     val live = refs.filter(r => r.kind == "data" && r.nFiles > 0)
-    val claimed = live.map(_.nFiles).sum
-    if (claimed <= DistributedPlanThreshold) {
-      val sketches = live.flatMap(readManifest).map { e =>
-        e.bloom.getOrElse(key, throw new IllegalArgumentException(
-          s"approxCountDistinct at $path: file ${e.file} has no NDV " +
-            s"sketch for '$column' — run analyzeNdv after appends"))
-      }
-      foldNdvSketches(sketches)
-    } else {
-      // past the plan threshold the sketches never reach the driver:
-      // ONE metadata job decodes the packed arrays back to binary in
-      // SQL (byte-wise hex) and unions through Spark's own
-      // hll_union_agg — the same Union(HLL_8) fold foldNdvSketches
-      // mirrors, so both paths answer identically
-      val arr = try_element_at(col("bloom"), lit(key))
-      val bin = unhex(concat_ws("", transform(
-        slice(arr, lit(2), element_at(arr, lit(1)).cast("int")),
-        x => lpad(hex(x), 2, "0"))))
-      val row = entriesFrameOf(spark, live,
-          "file STRING, bloom MAP<STRING, ARRAY<LONG>>")
-        .agg(count(lit(1)).as("n"), count(arr).as("has"),
-          hll_sketch_estimate(hll_union_agg(bin)).as("est")).head()
-      require(row.getAs[Long]("has") == row.getAs[Long]("n"),
-        s"approxCountDistinct at $path: " +
-          s"${row.getAs[Long]("n") - row.getAs[Long]("has")} live files have " +
-          s"no NDV sketch for '$column' — run analyzeNdv after appends")
-      row.getAs[Long]("est")
-    }
+    foldNdvSketches(live.flatMap(readManifest).map { e =>
+      e.bloom.getOrElse(key, throw new IllegalArgumentException(
+        s"approxCountDistinct at $path: file ${e.file} has no NDV " +
+          s"sketch for '$column' — run analyzeNdv after appends"))
+    })
   }
 
   /** METADATA-ONLY column rename (Iceberg's field-id schema
@@ -6118,22 +5817,35 @@ object LakeTable {
   }
 
   /** The classification frame for a predicate DML: the visible read,
-    * restricted to the data manifests the predicate's implied
-    * intervals ADMIT — refuted manifests never reach the scan (their
-    * files are carried by construction). MoR deletes always ride.
-    * None = every data manifest is refuted (or the table is empty):
-    * nothing can match, the DML is a carry-forward commit. */
+    * restricted to the data files the predicate's implied intervals
+    * ADMIT — refuted files never reach the scan (they are carried by
+    * construction). MoR deletes always ride. The frame keeps the
+    * table's full column set: a zero-row frame per refuted generation,
+    * built from the schema record its commit dir holds (no refuted dir
+    * is listed), unions onto it, so the DML can still name a column
+    * only refuted generations carry. None = every data file is refuted
+    * (or the table is empty): nothing can match, the DML is a
+    * carry-forward commit. */
   private def classificationFrame(
       spark: SparkSession, plan: ScanPlan,
       pred: org.apache.spark.sql.Column, lineage: Boolean): Option[DataFrame] = {
     // FILE-granular pass 0 — the same two-level (manifest ranges →
-    // per-entry stats, distributed past the plan threshold) prune the
-    // reads use; refuted files never reach the scan and carry by
-    // construction
+    // per-entry stats) prune the reads use
     val intervals = impliedIntervals(pred)
     val pruned = if (intervals.isEmpty) plan else prunePlan(intervals)(spark, plan)
     if (pruned.empty) None
-    else Some(assemble(spark, pruned, meta = true, lineageCols = lineage))
+    else {
+      val frame = assemble(spark, pruned, meta = true, lineageCols = lineage)
+      val scanned = (pruned.whole.map(r => (r.cols, r.base)) ++
+        pruned.kept.map(e => (e.cols, e.base))).toSet
+      val refuted = plan.live.map(r => (r.cols, r.base)).distinct.filterNot(scanned)
+      val empties = refuted.flatMap { case (cols, base) =>
+        schemaRecord(base).map(cols -> _) }.distinct.map { case (cols, sch) =>
+        projectToCurrent(dropHidden(spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row], sch)), cols, plan.current)
+      }
+      Some((frame +: empties).reduce(_.unionByName(_, allowMissingColumns = true)))
+    }
   }
 
   /** `_metadata.file_path` spells `file:` URIs while manifests store
@@ -6853,8 +6565,8 @@ object LakeTable {
     * What a consolidated manifest must PRESERVE, and how:
     *  - data-sequence numbers: entries from different commits pin
     *    their originating seq per entry (the stored pin beats list-row
-    *    inheritance everywhere — readManifest, the distributed
-    *    planner, lineage last-updated inheritance), so an equality
+    *    inheritance everywhere — readManifest, lineage last-updated
+    *    inheritance), so an equality
     *    delete between the source commits still subtracts from
     *    exactly the older entries;
     *  - row-lineage spans: every entry pins its first-row-id
@@ -9677,20 +9389,14 @@ object LakeTable {
     * rows on both sides, so it can contribute nothing to the diff;
     * restricting both reads to the CHANGED files turns an
     * O(table)-per-version diff into O(churn). Changed = the
-    * symmetric file-set delta (computed DISTRIBUTED over the two
-    * entry frames, collecting only the churn — never a full file
-    * list) plus the target files of any row-level delete manifest
-    * present on one side only (a new posdel/DV reaches INTO carried
-    * files). Returns None — no prefilter, full diff — when the
+    * symmetric file-set delta (read on the driver from the one-sided
+    * manifests only) plus the target files of any row-level delete
+    * manifest present on one side only (a new posdel/DV reaches INTO
+    * carried files). Returns None — no prefilter, full diff — when the
     * bounds cannot be proven by file identity: equality-delete sets
     * differ (key-granular reach), declared defaults differ (a carried
-    * pre-default file would serve different constants), an endpoint
-    * is empty (schema shapes short-circuit elsewhere), or the CHURN
-    * itself exceeds the plan threshold (a near-full rewrite — the
-    * prefiltered diff would approach the full diff, and the churn
-    * set would not be driver-affordable). The guards are on the
-    * CHURN, never on table size: a 10⁷-file table with a ten-file
-    * commit between the versions prefilters fine. */
+    * pre-default file would serve different constants), or an
+    * endpoint is empty (schema shapes short-circuit elsewhere). */
   private def diffChangedFiles(
       spark: SparkSession, b: ScanPlan, a: ScanPlan): Option[DiffScope] = {
     def eqSet(p: ScanPlan) = p.eq.filter(_.nFiles > 0).map(_.manifest).toSet
@@ -9703,14 +9409,10 @@ object LakeTable {
     // by both versions contributes identical entries to both sides
     // (each version lists each live file exactly once, so a shared
     // manifest's file cannot be churn) — O(churn manifests), not
-    // O(table), whatever the table size. Bounded by the churn guard
-    // above, the driver-memoized read is affordable by the same rule
-    // that sanctions driver planning below the plan threshold, and
+    // O(table), whatever the table size. The driver-memoized read
     // costs ZERO Spark jobs; identical manifest sets cost nothing.
     val bOnly = bLive.filterNot(r => aLive.exists(_.manifest == r.manifest))
     val aOnly = aLive.filterNot(r => bLive.exists(_.manifest == r.manifest))
-    if ((bOnly ++ aOnly).map(_.nFiles).sum > DistributedPlanThreshold)
-      return None
     val delta: Set[String] =
       if (bOnly.isEmpty && aOnly.isEmpty) Set.empty
       else {
@@ -9730,7 +9432,6 @@ object LakeTable {
       if (oneSided.isEmpty) Set.empty
       else scanRefs(spark, oneSided).select("file_path").distinct()
         .collect().map(r => stripScheme(r.getString(0))).toSet
-    if (targets.size > DistributedPlanThreshold) return None // churn guard
     Some(DiffScope(delta ++ targets, (targets diff delta).nonEmpty))
   }
 
@@ -9742,54 +9443,28 @@ object LakeTable {
   private final case class DiffScope(
       files: Set[String], carriedTargets: Boolean)
 
-  /** The manifest entries of `scope.files` within one version's live
-    * data manifests — the prefiltered diff's scan list. Search space:
-    * the version's ONE-SIDED manifests when no churn file is carried
-    * (a shared manifest's file exists in both versions and cannot be
-    * add/remove churn), ALL live manifests when a one-sided row-level
-    * delete reaches into carried files. Driver-memoized below the
-    * plan threshold; past it ONE metadata job (never a data file)
-    * joins the entries against the broadcast churn set — entry seq
-    * pins win over the list row's seq, exactly [[distributedPlan]]'s
-    * stored-beats-inherited rule. */
   /** ONE normalization for every path the diff prefilter compares —
     * the scheme-strip rule (identical to the lineage join key), NOT
     * [[plainPath]]: URI.getPath drops an object-store AUTHORITY
     * (s3a://bucket/k → /k), so mixing the two rules would compare
-    * bucket-less against bucket-ful paths. Driver form here, SQL form
-    * in [[churnEntries]]' distributed branch — same regex. */
+    * bucket-less against bucket-ful paths. */
   private def stripScheme(s: String): String =
     s.replaceFirst("^[A-Za-z][A-Za-z0-9+.\\-]*:(//)?", "")
 
+  /** The manifest entries of `scope.files` within one version's live
+    * data manifests — the prefiltered diff's scan list, read through
+    * the driver-memoized manifests. Search space: the version's
+    * ONE-SIDED manifests when no churn file is carried (a shared
+    * manifest's file exists in both versions and cannot be add/remove
+    * churn), ALL live manifests when a one-sided row-level delete
+    * reaches into carried files. */
   private def churnEntries(scope: DiffScope, other: ScanPlan)(
       spark: SparkSession, p: ScanPlan): ScanPlan = p.only {
-    import spark.implicits._
     val otherLive = other.live.map(_.manifest).toSet
     val search =
       if (scope.carriedTargets) p.live
       else p.live.filterNot(r => otherLive(r.manifest))
-    if (search.isEmpty) Nil
-    else if (search.map(_.nFiles).sum <= DistributedPlanThreshold) {
-      val mm = manifestMemo()
-      search.flatMap(mm).filter(e => scope.files(stripScheme(e.file)))
-    } else {
-      val byName = search.map(r => manifestName(r) -> r).toMap
-      val refDf = broadcast(search.map(r => (manifestName(r), r.seq))
-        .toDF("__graft_mn", "__graft_rs"))
-      val want = broadcast(scope.files.toSeq.toDF("__graft_w"))
-      def plainKey(c: org.apache.spark.sql.Column) =
-        regexp_replace(c, "^[A-Za-z][A-Za-z0-9+.\\-]*:(//)?", "")
-      entriesFrameOf(spark, search, "file STRING, base STRING, seq INT")
-        .withColumn("__graft_mn", element_at(split(input_file_name(), "/"), -1))
-        .join(want, plainKey(col("file")) === col("__graft_w"))
-        .join(refDf, Seq("__graft_mn"))
-        .select(col("file"), col("base"),
-          when(coalesce(col("seq"), lit(-1)) >= 0, col("seq"))
-            .otherwise(col("__graft_rs")).as("seq"),
-          col("__graft_mn"))
-        .collect().toSeq.map(r => ManifestEntry(r.getString(0), r.getString(1),
-          Map.empty, "data", r.getInt(2), byName(r.getString(3)).cols))
-    }
+    search.flatMap(manifestMemo()).filter(e => scope.files(stripScheme(e.file)))
   }
 
   /** INCREMENTAL APPEND SCAN (Iceberg's incremental read): exactly
@@ -10026,8 +9701,7 @@ object LakeTable {
     val p = listFile(path, version).getOrElse(throw new IllegalArgumentException(
       s"no list for version $version at $path"))
     if (p.getFileName.toString.endsWith(".parquet"))
-      SparkSession.active.read.parquet(p.toString)
-        .select("operation").head().getString(0)
+      parquetRows(p.toString)(_.next().str("operation"))
     else readJsonLines(p).head.get("operation").asText
   }
 

@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * serves the identical row multiset on both sides and cancels in the
   * diff, so pruning it is exact. These specs pin (a) the pruning is
   * visible in the scan's input files, (b) a one-sided row-level
-  * delete pulls its TARGET files back into the diff, (c) the guards
-  * (equality-delete drift, plan threshold) fall back to the full diff
-  * with identical answers. */
+  * delete pulls its TARGET files back into the diff, (c) the guard
+  * (equality-delete drift) falls back to the full diff with identical
+  * answers. */
 class ChangesPrefilterSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
@@ -76,7 +76,7 @@ class ChangesPrefilterSpec extends AnyFunSuite {
       s"full-diff fallback under equality-delete drift stays exact: $rows")
   }
 
-  test("CHURN past the plan threshold stands the prefilter down, same rows") {
+  test("a multi-file churn prefilters to exactly the model's rows") {
     val p = "/tmp/graft_test/cp_threshold"
     SparkSpec.rmdir(p)
     LakeTable.overwrite(
@@ -88,13 +88,7 @@ class ChangesPrefilterSpec extends AnyFunSuite {
     val pruned = LakeTable.changes(spark, p, 0, 1).collect()
       .map(r => (r.getAs[String]("change_type"), r.getAs[Long]("k"))).toSet
     val want = (100L until 104L).map(("insert", _)).toSet
-    // threshold 1 < the 2-file churn: full-diff fallback, same answer
-    val full = LakeTable.withPlanThreshold(1) {
-      LakeTable.changes(spark, p, 0, 1).collect()
-        .map(r => (r.getAs[String]("change_type"), r.getAs[Long]("k"))).toSet
-    }
-    assert(pruned === full && full === want,
-      s"churn-guard fallback must answer identically: pruned=$pruned full=$full")
+    assert(pruned === want, s"prefiltered diff must equal the model: $pruned")
   }
 
   test("a big table with small churn STILL prefilters past the threshold") {
@@ -105,16 +99,13 @@ class ChangesPrefilterSpec extends AnyFunSuite {
         .repartition(8), p) // v0: 8 carried files
     LakeTable.append(Seq((500L, 5.5)).toDF("k", "v"), p) // v1: 1-file churn
     val carried = dataFiles(p, 0)
-    // table (9 live files) is past threshold 3; churn (1 file) is not:
-    // the guards are on CHURN, so the diff still prunes to one file
-    LakeTable.withPlanThreshold(3) {
-      val ch = LakeTable.changes(spark, p, 0, 1)
-      val rows = ch.collect()
-      assert(rows.map(r => (r.getAs[String]("change_type"),
-        r.getAs[Long]("k"))).toSet === Set(("insert", 500L)))
-      assert(ch.inputFiles.toSet.intersect(carried).isEmpty,
-        "carried files must stay out of the scan on a past-threshold table")
-    }
+    // the table holds 9 live files, the churn 1: the diff prunes to it
+    val ch = LakeTable.changes(spark, p, 0, 1)
+    val rows = ch.collect()
+    assert(rows.map(r => (r.getAs[String]("change_type"),
+      r.getAs[Long]("k"))).toSet === Set(("insert", 500L)))
+    assert(ch.inputFiles.toSet.intersect(carried).isEmpty,
+      "carried files must stay out of the scan")
   }
 
   test("posdel into a carried file on a past-threshold table: one metadata job") {
@@ -122,21 +113,20 @@ class ChangesPrefilterSpec extends AnyFunSuite {
     SparkSpec.rmdir(p)
     LakeTable.overwrite(
       (0 until 80).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
-        .repartition(8), p) // v0: 8 files, past threshold 3
+        .repartition(8), p) // v0: 8 files
     val target = LakeTable.read(spark, p, Some(0))
       .filter(col("k") === 42L).select(input_file_name()).head().getString(0)
     LakeTable.deleteMoRPositional(spark, p, col("k") === 42L) // v1
-    LakeTable.withPlanThreshold(3) {
-      val ch = LakeTable.changes(spark, p, 0, 1)
-      val rows = ch.collect()
-      assert(rows.map(r => (r.getAs[String]("change_type"),
-        r.getAs[Long]("k"))).toSet === Set(("delete", 42L)))
-      // the target sits in a SHARED manifest, so the entry lookup runs
-      // distributed — the scan must still restrict to the target file
-      val scannedData = ch.inputFiles.toSet.intersect(dataFiles(p, 0))
-      assert(scannedData === Set(target),
-        s"distributed churn lookup must isolate the target: $scannedData")
-    }
+    val ch = LakeTable.changes(spark, p, 0, 1)
+    val rows = ch.collect()
+    assert(rows.map(r => (r.getAs[String]("change_type"),
+      r.getAs[Long]("k"))).toSet === Set(("delete", 42L)))
+    // the target sits in a SHARED manifest, so the entry lookup
+    // searches every live manifest — the scan must still restrict to
+    // the target file
+    val scannedData = ch.inputFiles.toSet.intersect(dataFiles(p, 0))
+    assert(scannedData === Set(target),
+      s"the churn lookup must isolate the target: $scannedData")
   }
 
   test("lineage diff scans only the rewritten file's two vintages") {
@@ -170,14 +160,8 @@ class ChangesPrefilterSpec extends AnyFunSuite {
   test("lineage diff prefilters past the plan threshold (distributed id map)") {
     val p = "/tmp/graft_test/cp_biglineage"
     SparkSpec.rmdir(p)
-    // 8 one-file MANIFESTS (separate appends): the churn guard counts
-    // ONE-SIDED manifest entries, and an update into a 1-file manifest
-    // churns 2 entries — so the prefilter engages even at threshold 3,
-    // while the table's 8 claimed files push the id map distributed.
-    // (A single 8-file manifest would make the partial carry itself
-    // threshold-scale churn at 3 — the guard correctly stands down
-    // there; at the production threshold of 10⁴ that needs a 10⁴-file
-    // manifest, which rewrite_manifests sizing bounds.)
+    // 8 one-file MANIFESTS (separate appends): an update into a
+    // 1-file manifest churns 2 entries, and the id map spans all 8
     (0 until 8).foreach { g =>
       LakeTable.append(
         (g * 10 until (g + 1) * 10).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
@@ -187,19 +171,17 @@ class ChangesPrefilterSpec extends AnyFunSuite {
     val old = LakeTable.read(spark, p, Some(8))
       .filter(col("k") === 11L).select(input_file_name()).head().getString(0)
     LakeTable.update(spark, p, Map("v" -> lit(-5.0)), col("k") === 11L) // v9
-    LakeTable.withPlanThreshold(3) {
-      val ch = LakeTable.changesWithLineage(spark, p, 8, 9)
-      val rows = ch.collect().map(r => (r.getAs[String]("change_type"),
-        r.getAs[Long]("k"), r.getAs[Double]("v"))).toSet
-      assert(rows === Set(
-        ("update_preimage", 11L, 11.0), ("update_postimage", 11L, -5.0)),
-        s"got $rows")
-      val untouched = dataFiles(p, 8) - old
-      val scanned = ch.inputFiles.toSet
-      assert(scanned.intersect(untouched).isEmpty,
-        s"carried data files leaked past the threshold: " +
-          s"${scanned.intersect(untouched)}")
-    }
+    val ch = LakeTable.changesWithLineage(spark, p, 8, 9)
+    val rows = ch.collect().map(r => (r.getAs[String]("change_type"),
+      r.getAs[Long]("k"), r.getAs[Double]("v"))).toSet
+    assert(rows === Set(
+      ("update_preimage", 11L, 11.0), ("update_postimage", 11L, -5.0)),
+      s"got $rows")
+    val untouched = dataFiles(p, 8) - old
+    val scanned = ch.inputFiles.toSet
+    assert(scanned.intersect(untouched).isEmpty,
+      s"carried data files leaked into the lineage diff: " +
+        s"${scanned.intersect(untouched)}")
   }
 
   test("appendsBetween serves exactly the appended rows, never lists old files") {

@@ -150,6 +150,35 @@ class FileGranularDeleteSpec extends AnyFunSuite {
     assert(rows() === model - ((1L, "a", 1.0, None)) + ((1L, "a", 1.0, Some(9L))))
   }
 
+  test("a predicate refuting the newer generation can still name its columns") {
+    val p = "/tmp/graft_test/fgdel_refuted_gen"
+    // generation 0 (id, grp, v); generation 1 adds `w`. `id < 2`
+    // implies an interval that refutes generation 1's manifest, so the
+    // classification scan reads only generation 0 — which lacks `w`.
+    def twoGenerations(): Unit = {
+      SparkSpec.rmdir(p)
+      LakeTable.overwrite(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0))
+        .toDF("id", "grp", "v").coalesce(1), p)
+      LakeTable.append(Seq((10L, "b", 10.0, 7L)).toDF("id", "grp", "v", "w"), p)
+    }
+    type R = (Long, String, Double, Option[Long])
+    val model: Set[R] = Set((1L, "a", 1.0, None), (2L, "b", 2.0, None),
+      (3L, "a", 3.0, None), (10L, "b", 10.0, Some(7L)))
+    def rows(): Set[R] = LakeTable.read(spark, p).select("id", "grp", "v", "w").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
+        Option(r.get(3)).map(_.asInstanceOf[Long]))).toSet
+
+    twoGenerations()
+    LakeTable.update(spark, p, Map("w" -> lit(5L)), col("id") < 2L)
+    assert(LakeTable.auditOf(p).filesKept === 1L, s"${LakeTable.auditOf(p)}")
+    assert(rows() === model - ((1L, "a", 1.0, None)) + ((1L, "a", 1.0, Some(5L))))
+    assert(LakeTable.read(spark, p).columns.toSeq === Seq("id", "grp", "v", "w"))
+
+    twoGenerations()
+    LakeTable.delete(spark, p, col("id") < 2L && col("w").isNull)
+    assert(rows() === model - ((1L, "a", 1.0, None)))
+  }
+
   test("carried files keep their older MoR deletes subtracting") {
     val p = "/tmp/graft_test/fgdel_mor"
     SparkSpec.rmdir(p)

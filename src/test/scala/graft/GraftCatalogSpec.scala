@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.LakeTable
+import graft.sources.{GraftCatalog, LakeTable}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -508,7 +508,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(ids === expected,
       "the lineage read must serve exactly the union of declared spans")
 
-    // SQL surface serves the same rows below the plan threshold
+    // SQL surface serves the same rows within its driver-local bound
     val viaSql = sql("SELECT kind, count(*) AS n FROM graft.db7.t.entries GROUP BY kind")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(viaSql("data") === data.length.toLong)
@@ -542,11 +542,14 @@ class GraftCatalogSpec extends AnyFunSuite {
     val post = LakeTable.allFiles(spark, p)
       .select("snapshot").distinct().collect().map(_.getInt(0)).toSeq
     assert(post === Seq(2), s"expired snapshots must leave the domain: $post")
-    // the SQL all_files surface refuses past the plan threshold by name
-    LakeTable.withPlanThreshold(1) {
-      val e = intercept[Exception](sql("SELECT * FROM graft.db8.h.all_files").collect())
-      assert(e.getMessage.contains("allFiles"), e.getMessage)
-    }
+    // the driver-local SQL surfaces refuse past their bound by name
+    val e = intercept[IllegalArgumentException](GraftCatalog.requireDriverLocal(
+      p, "all_files", GraftCatalog.DriverLocalBound + 1, "rows", "allFiles"))
+    assert(e.getMessage.contains("allFiles") && e.getMessage.contains("all_files"),
+      e.getMessage)
+    GraftCatalog.requireDriverLocal(p, "all_files", GraftCatalog.DriverLocalBound,
+      "rows", "allFiles") // at the bound it serves
+    assert(sql("SELECT * FROM graft.db8.h.all_files").count() === 3L)
   }
 
   test("TBLPROPERTIES are versioned commits: SET/UNSET/SHOW, time travel, functional target") {

@@ -248,16 +248,14 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     assert(scansData(qn), "a null-keyed partition dir must refuse the metadata path")
   }
 
-  test("metadata aggregate goes DISTRIBUTED past the plan threshold, same answers") {
+  test("metadata aggregate folds a multi-file manifest without opening data") {
     val p = "/tmp/graft_test/v2_aggpush_dist"
     rmdir(p)
     val df = spark.range(0, 400).select(col("id").as("k"), (col("id") * 2.0).as("v"))
     LakeTable.overwrite(df.repartitionByRange(4, col("k")).sortWithinPartitions("k"), p)
-    LakeTable.withPlanThreshold(2) { // 4 claimed > 2 → the one-job metadata fold
-      val q = v2(p).agg(count(lit(1)).as("n"), min("v").as("mn"), max("k").as("mx"))
-      assert(q.head === org.apache.spark.sql.Row(400L, 0.0, 399L))
-      assert(!scansData(q), "metadata fold must not open a data file")
-    }
+    val q = v2(p).agg(count(lit(1)).as("n"), min("v").as("mn"), max("k").as("mx"))
+    assert(q.head === org.apache.spark.sql.Row(400L, 0.0, 399L))
+    assert(!scansData(q), "metadata fold must not open a data file")
   }
 
   test("V2 scan reports EXACT statistics from manifests (rows and bytes)") {

@@ -325,7 +325,7 @@ class LakeTableSpec extends AnyFunSuite {
     val audit = LakeTable.lastPlanAudit
     assert(audit.manifestsTotal === 2 && audit.manifestsScanned === 1,
       s"level-1 prune must scan exactly the overlapping manifest: $audit")
-    assert(audit.filesClaimed === 1 && audit.filesKept === 1 && !audit.distributed, s"$audit")
+    assert(audit.filesClaimed === 1 && audit.filesKept === 1, s"$audit")
     // sanity: an unpruned plan DOES open it and fails loudly — the
     // corruption is real, the level-1 skip is what saved the read
     intercept[Exception] {
@@ -333,12 +333,10 @@ class LakeTableSpec extends AnyFunSuite {
     }
   }
 
-  test("claimed files past the threshold plan distributed, collecting only survivors") {
-    // a snapshot claiming more files than DistributedPlanThreshold
-    // must plan entry-level pruning as a Spark job (audit.distributed)
-    // and hand the driver only the pruned survivors — the spec lowers
-    // the threshold so a real 4-file table drives the 10⁷-file code
-    // path with honest metadata (round-5 verdict item #2b)
+  test("entry-level prune of a multi-file manifest keeps only the survivors") {
+    // one 4-file manifest: the entry-level stats prune keeps exactly
+    // the files whose ranges overlap the predicate (round-5 verdict
+    // item #2b)
     val p = "/tmp/graft_test/lake_distplan"
     rmdir(p)
     val df = spark.range(0, 400).select(
@@ -347,25 +345,19 @@ class LakeTableSpec extends AnyFunSuite {
       df.repartitionByRange(4, col("k")).sortWithinPartitions("k"), p) // v0
     val refs = LakeTable.listRefs(p, 0)
     assert(refs.size === 1 && refs.head.nFiles === 4)
-    LakeTable.withPlanThreshold(3) { // 4 claimed > 3 → distributed
-      // selective predicate: one of the four clustered files survives
-      val got = LakeTable.readWhereBetween(spark, p, "k", 0, 50)
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(got === (0L to 50L).toSeq)
-      val audit = LakeTable.lastPlanAudit
-      assert(audit.distributed, s"claim past threshold must plan distributed: $audit")
-      assert(audit.filesClaimed === 4 && audit.filesKept === 1,
-        s"driver must receive only the pruned survivor, never the full list: $audit")
-      assert(audit.manifestsWhole === 0, s"$audit")
-      // weakly-selective predicate (all 4 files kept): the planner
-      // must FALL BACK to the whole-dir scan for that manifest instead
-      // of collecting ~every per-file row driver-side (round-5 ADVICE)
-      val all = LakeTable.readWhereBetween(spark, p, "k", 0, 399)
-      assert(all.count() === 400)
-      val audit2 = LakeTable.lastPlanAudit
-      assert(audit2.distributed && audit2.filesKept === 4 && audit2.manifestsWhole === 1,
-        s"≥90%-kept manifest must be planned whole, zero per-file rows collected: $audit2")
-    }
+    // selective predicate: one of the four clustered files survives
+    val got = LakeTable.readWhereBetween(spark, p, "k", 0, 50)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got === (0L to 50L).toSeq)
+    val audit = LakeTable.lastPlanAudit
+    assert(audit.filesClaimed === 4 && audit.filesKept === 1,
+      s"the plan must keep only the pruned survivor: $audit")
+    assert(audit.manifestsWhole === 0, s"$audit")
+    // weakly-selective predicate: all 4 files kept, exact rows
+    val all = LakeTable.readWhereBetween(spark, p, "k", 0, 399)
+    assert(all.count() === 400)
+    val audit2 = LakeTable.lastPlanAudit
+    assert(audit2.filesKept === 4, s"$audit2")
   }
 
   test("append metadata is O(1): one new list row per commit, prior manifests untouched") {
@@ -759,17 +751,13 @@ class LakeTableSpec extends AnyFunSuite {
     assert(aR.filesKept < aR.filesClaimed,
       s"bucket pruning must survive the source rename: $aR")
     LakeTable.renameColumn(spark, p, "kk", "k") // restore for the rest
-    // the DISTRIBUTED plan path prunes bucket equalities too (dir
-    // constraints ride into the Spark job — per-file k stats span
-    // every bucket, so only the dir name can prune here)
-    LakeTable.withPlanThreshold(3) {
-      val k5d = LakeTable.readWhere(spark, p, Seq(("k", 5, 5)))
-      assert(k5d.count() === 4)
-      val a3 = LakeTable.lastPlanAudit
-      assert(a3.distributed, s"must have planned distributed: $a3")
-      assert(a3.filesKept < a3.filesClaimed,
-        s"bucket constraint must prune inside the distributed job: $a3")
-    }
+    // after the rename round trip, bucket equalities still prune (per-
+    // file k stats span every bucket, so only the dir name can prune)
+    val k5d = LakeTable.readWhere(spark, p, Seq(("k", 5, 5)))
+    assert(k5d.count() === 4)
+    val a3 = LakeTable.lastPlanAudit
+    assert(a3.filesKept < a3.filesClaimed,
+      s"bucket constraint must prune after the rename round trip: $a3")
   }
 
   test("history() version parse is anchored to the meta dir") {
@@ -1377,14 +1365,6 @@ class LakeTableSpec extends AnyFunSuite {
     assert(LakeTable.lastPlanAudit === aJ,
       s"parquet metadata must plan like JSON: $aJ vs ${LakeTable.lastPlanAudit}")
     assert(aJ.filesKept === 1, s"$aJ")
-    // identical prune plans, DISTRIBUTED path (the parquet manifests
-    // feed the planning job through the same frame)
-    LakeTable.withPlanThreshold(3) {
-      assert(LakeTable.readWhereBetween(spark, pJ, "k", 0, 50).count() === 51)
-      val dJ = LakeTable.lastPlanAudit
-      assert(LakeTable.readWhereBetween(spark, pP, "k", 0, 50).count() === 51)
-      assert(LakeTable.lastPlanAudit === dJ && dJ.distributed, s"$dJ")
-    }
     // ENCODINGS MIX within one table: a later JSON commit on top of
     // the parquet v0 — every reader (history, time travel, reads)
     // spans both
@@ -2035,15 +2015,6 @@ class LakeTableSpec extends AnyFunSuite {
     assert(got2.count() === 25, "bloom lookup must follow the rename by field id")
     assert(LakeTable.lastPlanAudit.filesKept === 2, // matching file + unbloated v2 file
       s"renamed lookup must still prune: ${LakeTable.lastPlanAudit}")
-    // past the claimed-file threshold the SAME probes run as one
-    // Spark job (identical xxhash64 expression both sides)
-    LakeTable.withPlanThreshold(2) {
-      val d = LakeTable.readWhereEquals(spark, p, "label", "tag_2")
-      assert(d.count() === 25)
-      val a2 = LakeTable.lastPlanAudit
-      assert(a2.distributed && a2.filesKept === 2,
-        s"distributed bloom prune must agree with the driver path: $a2")
-    }
   }
 
   test("conditional CoW merge agrees with the MoR merge on the same clauses") {
@@ -2542,17 +2513,21 @@ class LakeTableSpec extends AnyFunSuite {
 
     var all: org.apache.spark.sql.DataFrame = null
     var tiny: org.apache.spark.sql.DataFrame = null
+    var range: org.apache.spark.sql.DataFrame = null
     val planJobs = jobsOf {
       all = LakeTable.read(spark, p)
       assert(all.schema.fieldNames.toSeq === Seq("id", "grp", "v"))
       tiny = LakeTable.readWhereEquals(spark, p, "grp", "t")
+      range = LakeTable.readWhereBetween(spark, p, "id", 1500, 3003)
     }
-    assert(planJobs === 0, "planning must read schema records, never infer footers")
+    assert(planJobs === 0,
+      "planning must read schema records and manifests on the driver, never start a job")
     def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, (String, Double)] =
       df.select("id", "grp", "v").collect()
         .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
     assert(rowsOf(all) === model.toMap)
     assert(rowsOf(tiny) === model.toMap.filter(_._2._1 == "t"))
+    assert(rowsOf(range) === model.toMap.filter { case (id, _) => id >= 1500 && id <= 3003 })
 
     // a dir without a record (a commit written before records existed)
     // still reads the same rows; only its own read pays inference
@@ -2563,6 +2538,48 @@ class LakeTableSpec extends AnyFunSuite {
     assert(jobsOf { again = LakeTable.read(spark, p) } >= 1,
       "a dir without a record falls back to footer inference")
     assert(rowsOf(again) === model.toMap)
+  }
+
+  test("parquet manifest lists and manifests decode on the driver: no Spark job") {
+    import spark.implicits._
+    // the same commits under both encodings: a hidden spec, row
+    // lineage, a consolidated manifest (per-entry seq pins) and stats
+    def build(p: String): Unit = {
+      rmdir(p)
+      val spec = Seq(LakeTable.PartitionTransform("k", "bucket", 2))
+      LakeTable.overwriteHiddenPartitioned(
+        Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "g", "v"), p, spec) // v0
+      LakeTable.enableRowLineage(spark, p) // v1
+      LakeTable.appendHiddenPartitioned(
+        Seq((3L, "c", 3.0)).toDF("k", "g", "v"), p, spec) // v2
+      LakeTable.rewriteManifests(spark, p) // v3
+    }
+    val (pJ, pP) = ("/tmp/graft_test/lake_meta_json", "/tmp/graft_test/lake_meta_pq")
+    build(pJ)
+    LakeTable.withColumnarMetaThreshold(0)(build(pP))
+    val head = LakeTable.latestVersion(pP).get
+    assert(Files.exists(Paths.get(s"$pP/_graft_meta/v$head/list.parquet")))
+    var refs: Seq[LakeTable.ManifestRef] = Nil
+    var ops: Seq[String] = Nil
+    var entries: Seq[LakeTable.ManifestEntry] = Nil
+    val jobs = jobsOf {
+      refs = (0 to head).flatMap(LakeTable.listRefs(pP, _))
+      ops = (0 to head).map(LakeTable.operationOf(pP, _))
+      entries = LakeTable.listRefs(pP, head).flatMap(LakeTable.readManifest)
+    }
+    assert(jobs === 0, "a parquet list or manifest must decode without a Spark job")
+    assert(refs.exists(_.manifest.endsWith(".parquet")))
+    // every decoded field but the paths equals the JSON twin's
+    def fields(r: LakeTable.ManifestRef) =
+      (r.kind, r.seq, r.nFiles, r.ranges, r.cols, r.pspec, r.partial, r.nRows, r.firstRowId)
+    assert(refs.map(fields) === (0 to head).flatMap(LakeTable.listRefs(pJ, _)).map(fields))
+    assert(refs.exists(_.pspec.nonEmpty) && refs.exists(_.partial) &&
+      refs.exists(_.firstRowId >= 0), s"$refs")
+    assert(ops === (0 to head).map(LakeTable.operationOf(pJ, _)))
+    def entryFields(e: LakeTable.ManifestEntry) = (e.stats, e.kind, e.seq, e.rows, e.frid)
+    assert(entries.map(entryFields).sortBy(_.toString) ===
+      LakeTable.entriesOf(pJ, head).map(entryFields).sortBy(_.toString))
+    assert(LakeTable.read(spark, pP).count() === 3)
   }
 
   test("a 200-commit table reads as one scan per schema generation: no Spark job at plan time") {

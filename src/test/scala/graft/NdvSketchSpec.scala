@@ -28,10 +28,10 @@ class NdvSketchSpec extends AnyFunSuite {
   }
 
   test("columnar-scale ANALYZE rewrites manifests distributed; fold answers distributed too") {
-    // force BOTH big-table paths on honest small data: manifests go
-    // columnar past 10 entries (so ANALYZE takes the distributed
-    // per-manifest rewrite — driver never collects the sketches) and
-    // the read-side fold goes distributed past 5 claimed files
+    // force the big-table ANALYZE path on honest small data: manifests
+    // go columnar past 10 entries (so ANALYZE takes the distributed
+    // per-manifest rewrite — driver never collects the sketches); the
+    // read-side fold decodes the columnar manifests on the driver
     val p = "/tmp/graft_test/ndv_distributed"
     SparkSpec.rmdir(p)
     LakeTable.withColumnarMetaThreshold(10) {
@@ -45,11 +45,6 @@ class NdvSketchSpec extends AnyFunSuite {
       val driverFoldU = LakeTable.approxCountDistinct(spark, p, "user")
       assert(driverFold == 300L, s"coupon-mode estimate must be exact: $driverFold")
       assert(driverFoldU == 97L)
-      LakeTable.withPlanThreshold(5) {
-        assert(LakeTable.approxCountDistinct(spark, p, "k") === driverFold,
-          "the distributed hll_union_agg fold must answer exactly like the driver fold")
-        assert(LakeTable.approxCountDistinct(spark, p, "user") === driverFoldU)
-      }
       // a second ANALYZE (re-sketch) over already-sketched columnar
       // manifests must replace, not duplicate or collide
       LakeTable.analyzeNdv(spark, p, Seq("k"))
